@@ -130,10 +130,11 @@ def _pandas_cluster_pairs(
             # HALF_UP to 6 decimals, away from zero (Spark F.round)
             cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
             ok = (denom != 0) & (cos >= threshold)
-            # unordered index pairs only (j > global i)
+            # unordered index pairs only (j > global i), and never a
+            # duplicated id with itself (the join's id_a < id_b drops it)
             cols = np.arange(m)[None, :]
             rows_g = np.arange(i0, i1)[:, None]
-            ok &= cols > rows_g
+            ok &= (cols > rows_g) & (ids[None, :] != ids[i0:i1, None])
             ri, ci = np.nonzero(ok)
             if ri.size:
                 ia, ib = ids[ri + i0], ids[ci]

@@ -182,7 +182,6 @@ def converge(
     seed: DataFrame,
     threshold: float = 1e-15,
     max_iterations: int = 1000,
-    verbose: bool = False,
     checkpoint_every: int = 5,
 ) -> IPFResult:
     """Iterate IPF sweeps until the x-marginal loss drops below
@@ -229,15 +228,13 @@ def converge(
         # Cut lineage: without this the plan nests one window+join pair
         # deeper per sweep and planning time dominates execution.
         # Rotating the checkpoint releases the superseded sweep's
-        # blocks (round-13 storage-hygiene fix).
+        # blocks.
         if (iteration + 1) % checkpoint_every == 0:
             nxt, _owned = rotate_local_checkpoint(nxt, _owned)
         new_loss, new_y_loss = _marginal_losses(nxt, x_marginal, y_marginal)
         plateaued = abs(loss - new_loss) < threshold
         current, loss, y_loss = nxt, new_loss, new_y_loss
         iteration += 1
-        if verbose:
-            print(f"ipf iteration={iteration} x_loss={loss} y_loss={y_loss}")
         if loss < threshold or plateaued:
             break
 

@@ -114,7 +114,6 @@ def converge_dense(
     seed: DataFrame,
     threshold: float = 1e-15,
     max_iterations: int = 1000,
-    verbose: bool = False,
     seed_fill: float = 0.0,
     x_total: float | None = None,
     n_rows: int | None = None,
@@ -129,16 +128,17 @@ def converge_dense(
 
     ``seed_fill`` > 0 is the fused densify+Laplace path (A9): pass the
     SPARSE seed plus ``seed_fill=alpha`` instead of pre-densifying —
-    equivalent to :func:`plans.cost_allocation.smoothed_seed_from` for
-    every row that appears in the seed, but skips materializing and
-    re-shuffling the |rows|x|cols| dense coordinate form. (A row with
-    NO seed cells at all gets no state row this way — callers whose
-    x-marginal can contain such rows must densify explicitly.)
+    equivalent to densifying over the x-rows × y-columns domain and
+    adding ``alpha`` (:func:`matrix.laplace_smooth`) for every row that
+    appears in the seed, but skips materializing and re-shuffling the
+    |rows|x|cols| dense coordinate form. (A row with NO seed cells at
+    all gets no state row this way — callers whose x-marginal can
+    contain such rows must densify explicitly.)
 
     ``x_total`` skips the precondition aggregate when the caller has
     already computed Σx; ``n_rows`` likewise skips the layout-sizing
     count when the caller already knows |x| (allocate_costs reads both
-    off its x-checkpoint observe metrics — r18).
+    off its x-checkpoint observe metrics).
     """
     y_rows = y_marginal.select(M.ID, M.V).collect()
     if len(y_rows) > MAX_DRIVER_COLS:
@@ -204,9 +204,8 @@ def converge_dense(
     # ONE Spark job per sweep: the eager checkpoint that materializes
     # the new state also carries ``observe`` metrics computing (a) the
     # post-step x-loss of that state and (b) the column sums of its
-    # row-scaled successor — everything the NEXT loop turn needs. The
-    # former separate aggregate job per sweep is gone; its results ride
-    # the checkpoint scan for free.
+    # row-scaled successor — everything the NEXT loop turn needs, read
+    # off the checkpoint scan instead of a separate aggregate job.
     #
     # The column-sum metrics deliberately avoid higher-order functions:
     # ``element_at(vals, p) * x / rsum`` is a scalar expression chain
@@ -236,7 +235,7 @@ def converge_dense(
 
     obs = Observation()
     # rotation-owned: each sweep's checkpoint pins a full dense-matrix
-    # copy; release the superseded generation (r13 storage hygiene)
+    # copy; release the superseded generation
     state, _owned = rotate_local_checkpoint(
         state.observe(obs, *sweep_metrics), None
     )
@@ -252,10 +251,6 @@ def converge_dense(
             new_loss = metrics["_xss"] ** 0.5
             plateaued = abs(loss - new_loss) < threshold
             loss = new_loss
-            if verbose:
-                print(
-                    f"ipf-dense iteration={iteration} x_loss={loss} y_loss={y_loss}"
-                )
             if loss < threshold or plateaued or iteration >= max_iterations:
                 break
         colsums = [metrics[f"c{p}"] for p in range(n)]

@@ -28,112 +28,15 @@ plan per output, materialized once by the IPF loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators import matrix as M
-from alternating_least_squares_spark.operators.ipf import IPFResult, converge
+from alternating_least_squares_spark.operators.ipf import IPFResult, rake_fixed
 from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 from alternating_least_squares_spark.sources import load_table
 
 HOURS = 24
-
-
-def part_cost_marginal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x-marginal: discounted revenue per part (keyword costs analog,
-    ``core.clj:149-155``). Filter-out of zero-revenue parts mirrors the
-    zero-click filter (C2, ``core.clj:146``)."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return (
-        lineitem.groupBy(F.col("l_partkey").alias(M.ID))
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(M.V)
-        )
-        .filter(F.col(M.V) != 0)
-    )
-
-
-def _hourly_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNSCALED hourly event-value aggregate — the single spelling of
-    the y-marginal's group/filter, shared by :func:`hour_cost_marginal`
-    and :func:`allocate_costs` (ADVICE r18: the two inline copies
-    could silently diverge; one definition is the `_support_edges`
-    discipline)."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.hour("ts").cast("long").alias(M.ID))
-        .agg(F.sum("value").alias(M.V))
-        .filter(F.col(M.V) != 0)
-    )
-
-
-def hour_cost_marginal(
-    spark: SparkSession, sf_dir: str, rescale_to: float | None = None
-) -> DataFrame:
-    """y-marginal: event value per hour-of-day (hour costs analog,
-    ``core.clj:159-165``). Optionally rescaled so Σy == Σx (IPF
-    precondition)."""
-    hourly = _hourly_base(spark, sf_dir)
-    if rescale_to is not None:
-        total = hourly.agg(F.sum(M.V)).first()[0]
-        if not total:  # empty/all-zero events table: nothing to rescale
-            raise ValueError(
-                "hour marginal is empty or sums to 0 — cannot rescale to "
-                f"{rescale_to} (IPF needs both marginals on a shared total)"
-            )
-        hourly = hourly.withColumn(M.V, F.col(M.V) * F.lit(rescale_to / total))
-    return hourly
-
-
-def visit_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seed: visit counts by (part, pseudo-hour). Coordinate form
-    ``(r=part, c=hour, v=count)`` — the analog of ``visits.csv`` after
-    the reference's unpivot at ``core.clj:180-185``."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return (
-        lineitem.groupBy(
-            F.col("l_partkey").alias(M.R),
-            (F.col("l_orderkey") % HOURS).alias(M.C),
-        )
-        .agg(F.count("*").cast("double").alias(M.V))
-    )
-
-
-def smoothed_seed_from(
-    visits: DataFrame,
-    x_marginal: DataFrame,
-    y_marginal: DataFrame,
-    alpha: float = 1e-15,
-) -> DataFrame:
-    """E2 tail: densify the sparse visit matrix over the full
-    part×hour domain of the marginals (C6 zero-padding), then Laplace
-    smooth (A9, α=1e-15 as at ``core.clj:187``) so IPF's divisions are
-    well-defined even for all-zero rows.
-
-    Takes the already-built marginals so callers pay for each marginal
-    scan exactly once (the round-1 version re-derived both marginals
-    internally — three extra full lineitem/events scans per run).
-    """
-    parts = x_marginal.select(F.col(M.ID).alias(M.R))
-    hours = y_marginal.select(F.col(M.ID).alias(M.C))
-    dense = (
-        parts.crossJoin(F.broadcast(hours))
-        .join(visits, [M.R, M.C], "left")
-        .select(M.R, M.C, F.coalesce(F.col(M.V), F.lit(0.0)).alias(M.V))
-    )
-    return M.laplace_smooth(dense, alpha)
-
-
-def smoothed_seed(
-    spark: SparkSession, sf_dir: str, alpha: float = 1e-15
-) -> DataFrame:
-    """Convenience wrapper building the seed from the raw tables."""
-    return smoothed_seed_from(
-        visit_matrix(spark, sf_dir),
-        part_cost_marginal(spark, sf_dir),
-        hour_cost_marginal(spark, sf_dir),
-        alpha,
-    )
 
 
 def part_hour_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,9 +90,8 @@ def allocate_costs(
     """
     if base is None:
         base = part_hour_base(spark, sf_dir).localCheckpoint(eager=True)
-    # Σx and |x| ride the x checkpoint as observe metrics (r18, the
-    # ipf_dense sweep pattern) — the former separate agg + count
-    # actions are gone; same values by construction.
+    # Σx and |x| ride the x checkpoint as observe metrics (the
+    # ipf_dense sweep pattern), so no separate agg or count action.
     obs_x = Observation()
     x = (
         base.groupBy(F.col(M.R).alias(M.ID))
@@ -210,12 +112,18 @@ def allocate_costs(
     n_rows = obs_x.get["_nr"]
     # y is read exactly once downstream (converge_dense collects it to
     # driver literals), so no checkpoint; the rescale total rides the
-    # SAME aggregate plan instead of a separate pre-scan (r18 — the
-    # former shape paid an agg action + a checkpoint action here).
-    y_raw = _hourly_base(spark, sf_dir).agg(
-        F.collect_list(F.struct(M.ID, M.V)).alias("_rows"),
-        F.sum(M.V).alias("_yt"),
-    ).first()
+    # SAME aggregate plan instead of a separate pre-scan.
+    y_raw = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.hour("ts").cast("long").alias(M.ID))
+        .agg(F.sum("value").alias(M.V))
+        .filter(F.col(M.V) != 0)
+        .agg(
+            F.collect_list(F.struct(M.ID, M.V)).alias("_rows"),
+            F.sum(M.V).alias("_yt"),
+        )
+        .first()
+    )
     if not y_raw or not y_raw["_yt"]:
         raise ValueError(
             "hour marginal is empty or sums to 0 — cannot rescale to "
@@ -229,7 +137,7 @@ def allocate_costs(
     # SPARSE seed + fused alpha-fill: every x part has >= 1 base row
     # (x is an aggregate OF base), so the seed_fill fast path is exact
     # here — no part can lose its state row, and the dense |part|x24
-    # coordinate seed (smoothed_seed_from) never materializes.
+    # coordinate seed never materializes.
     visits = base.select(M.R, M.C, F.col("visits").alias(M.V))
     return converge_dense(
         x,
@@ -268,10 +176,10 @@ def cost_per_visit_fixed(
       exactly-representable (or identically-rounded) BIGINT casts;
     * the seed is ``visits·1e6 + 1`` over the dense x-parts × y-hours
       domain (add-1µ Laplace, A9 analog), all integer arithmetic;
-    * each half-sweep is ``floor(v/rowsum·marginal)`` in micro-units —
-      one division + one multiply on deterministic doubles, re-floored
-      to BIGINT before the next half-sweep (no rounding-mode
-      ambiguity);
+    * the sweeps are :func:`ipf.rake_fixed` over the (part, hour)
+      axes: each half-sweep is ``floor(v/rowsum·marginal)`` in
+      micro-units, re-floored to BIGINT before the next half-sweep (no
+      rounding-mode ambiguity);
     * the finale divides cost by visits with the C10 zero-guard,
       floored to BIGINT micro-units.
 
@@ -303,14 +211,14 @@ def cost_per_visit_fixed(
         )
         .localCheckpoint(eager=True)  # x, seed, and finale all read it
     )
-    # Σx / Σy ride the marginal checkpoints as observe metrics (r18) —
-    # the former separate agg actions are gone; same BIGINT sums.
+    # Σx / Σy ride the marginal checkpoints as observe metrics, so no
+    # separate agg action; same BIGINT sums.
     obs_x = Observation()
     x = (
-        base.groupBy(F.col(M.R).alias("id"))
-        .agg(F.sum("rev_us").alias("g_us"))
-        .filter(F.col("g_us") != 0)
-        .observe(obs_x, F.sum("g_us").alias("_xt"))
+        base.groupBy(M.R)
+        .agg(F.sum("rev_us").alias("m_us"))
+        .filter(F.col("m_us") != 0)
+        .observe(obs_x, F.sum("m_us").alias("_xt"))
         .localCheckpoint(eager=True)
     )
     x_total = obs_x.get["_xt"]
@@ -322,7 +230,7 @@ def cost_per_visit_fixed(
     )
     obs_y = Observation()
     yr = (
-        ev.groupBy(hour.alias("id"))
+        ev.groupBy(hour.alias(M.C))
         .agg(F.sum(F.floor(F.col("value") * F.lit(1e6))).alias("raw_us"))
         .filter(F.col("raw_us") != 0)
         .observe(obs_y, F.sum("raw_us").alias("_yt"))
@@ -335,13 +243,12 @@ def cost_per_visit_fixed(
     # oracle's CAST(raw AS DOUBLE) * (CAST(xt AS DOUBLE)/CAST(yt AS DOUBLE))
     ratio = float(x_total) / float(y_total)
     y = yr.select(
-        "id",
-        F.floor(F.col("raw_us").cast("double") * F.lit(ratio)).alias("g_us"),
+        M.C,
+        F.floor(F.col("raw_us").cast("double") * F.lit(ratio)).alias("m_us"),
     )
-    parts = x.select(F.col("id").alias(M.R))
-    hours = y.select(F.col("id").alias(M.C))
     mat = (
-        parts.crossJoin(F.broadcast(hours))
+        x.select(M.R)
+        .crossJoin(F.broadcast(y.select(M.C)))
         .join(base.select(M.R, M.C, "visits"), [M.R, M.C], "left")
         .select(
             M.R,
@@ -351,22 +258,7 @@ def cost_per_visit_fixed(
             ),
         )
     )
-    wr = Window.partitionBy(M.R)
-    wc = Window.partitionBy(M.C)
-    for _ in range(sweeps):
-        for marg, key, w in ((x, M.R, wr), (y, M.C, wc)):
-            mat = (
-                mat.join(marg.withColumnRenamed("id", key), key)
-                .withColumn(
-                    "v_us",
-                    F.floor(
-                        F.col("v_us").cast("double")
-                        / F.sum("v_us").over(w).cast("double")
-                        * F.col("g_us").cast("double")
-                    ),
-                )
-                .select(M.R, M.C, "v_us")
-            )
+    mat = rake_fixed(mat, [(M.R, x), (M.C, y)], sweeps)
     return mat.join(base.select(M.R, M.C, "visits"), [M.R, M.C], "left").select(
         F.col(M.R).alias("part"),
         F.col(M.C).alias("hour"),

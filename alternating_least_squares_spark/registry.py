@@ -534,6 +534,40 @@ def q_a22_rake3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rake_fixed_ctes(
+    start: str, cols: tuple[str, ...], marginals: list[tuple[str, str]],
+    sweeps: int,
+) -> tuple[list[str], str]:
+    """:func:`ipf.rake_fixed`'s arithmetic as unrolled SQL, the one
+    spelling every raking oracle shares. ``start`` is a relation of
+    ``cols`` plus ``v_us`` (the cell mass in micro-units); each
+    marginal is ``(axis, relation of (axis, m_us))``. Every axis pass
+    is ``floor(v / Σv · m)`` over the axis slice, and a zero slice
+    keeps mass 0. Returns the pass CTEs and the name of the last one.
+
+    AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and an
+    unrolled chain would then re-evaluate every predecessor pass."""
+    sel = ", ".join(f"t.{col}" for col in cols)
+    ctes, prev = [], start
+    for _ in range(sweeps):
+        for axis, marg in marginals:
+            name = f"rake{len(ctes) + 1}"
+            ctes.append(f"""{name} AS MATERIALIZED (
+  SELECT {sel},
+         CAST(CASE WHEN SUM(t.v_us) OVER (PARTITION BY t.{axis}) = 0
+                   THEN 0
+                   ELSE floor(CAST(t.v_us AS DOUBLE)
+                              / CAST(SUM(t.v_us)
+                                     OVER (PARTITION BY t.{axis})
+                                     AS DOUBLE)
+                              * CAST(m.m_us AS DOUBLE))
+              END AS BIGINT) AS v_us
+  FROM {prev} t JOIN {marg} m ON m.{axis} = t.{axis}
+)""")
+            prev = name
+    return ctes, prev
+
+
 def _a22_sql() -> str:
     head = """
 WITH base AS MATERIALIZED (
@@ -548,46 +582,26 @@ c0 AS MATERIALIZED (
   FROM base GROUP BY 1, 2, 3
 ),
 m_flag AS MATERIALIZED (
-  SELECT flag AS k, CAST(floor(SUM(qty) * 1000000) AS BIGINT) AS m_us
+  SELECT flag, CAST(floor(SUM(qty) * 1000000) AS BIGINT) AS m_us
   FROM base GROUP BY 1
 ),
 m_status AS MATERIALIZED (
-  SELECT status AS k, CAST(floor(SUM(qty) * 1000000) AS BIGINT) AS m_us
+  SELECT status, CAST(floor(SUM(qty) * 1000000) AS BIGINT) AS m_us
   FROM base GROUP BY 1
 ),
 m_ship_month AS MATERIALIZED (
-  SELECT ship_month AS k,
+  SELECT ship_month,
          CAST(floor(SUM(qty) * 1000000) AS BIGINT) AS m_us
   FROM base GROUP BY 1
 )"""
-    # AS MATERIALIZED is load-bearing: each pass references its
-    # predecessor more than once and DuckDB inlines plain CTEs
-    # (the a17/gr01 unrolled-oracle lesson).
-    step = """,
-c{n} AS MATERIALIZED (
-  SELECT c.flag, c.status, c.ship_month,
-         CAST(CASE WHEN SUM(c.v_us) OVER (PARTITION BY c.{axis}) = 0
-                   THEN 0
-                   ELSE floor(CAST(c.v_us AS DOUBLE)
-                              / CAST(SUM(c.v_us)
-                                     OVER (PARTITION BY c.{axis})
-                                     AS DOUBLE)
-                              * CAST(m.m_us AS DOUBLE))
-              END AS BIGINT) AS v_us
-  FROM c{p} c JOIN m_{axis} m ON m.k = c.{axis}
-)"""
-    n = 0
-    parts = [head]
-    for _ in range(RAKE3_SWEEPS):
-        for axis in RAKE3_AXES:
-            n += 1
-            parts.append(step.format(n=n, p=n - 1, axis=axis))
-    parts.append(f"""
+    passes, last = _rake_fixed_ctes(
+        "c0", RAKE3_AXES, [(a, f"m_{a}") for a in RAKE3_AXES], RAKE3_SWEEPS
+    )
+    return head + ",\n" + ",\n".join(passes) + f"""
 SELECT flag, status, ship_month, v_us,
        round(CAST(v_us AS DOUBLE) / 1000000.0, 6) AS alloc
-FROM c{n}
-""")
-    return "".join(parts)
+FROM {last}
+"""
 
 
 SQL_A22 = _a22_sql()
@@ -13727,44 +13741,35 @@ def _ipf_fixed_oracle(sweeps: int = 2) -> str:
         "CAST(SUM(CAST(floor(l_extendedprice * (1 - l_discount) "
         "* 1000000.0) AS BIGINT)) AS BIGINT) AS rev_us "
         "FROM lineitem GROUP BY 1, 2)",
-        "x AS (SELECT r AS id, CAST(SUM(rev_us) AS BIGINT) AS g_us "
+        "x AS (SELECT r, CAST(SUM(rev_us) AS BIGINT) AS m_us "
         "FROM base GROUP BY 1 HAVING CAST(SUM(rev_us) AS BIGINT) != 0)",
-        "xt AS (SELECT CAST(SUM(g_us) AS BIGINT) AS t FROM x)",
-        f"yr AS (SELECT {hour} AS id, "
+        "xt AS (SELECT CAST(SUM(m_us) AS BIGINT) AS t FROM x)",
+        f"yr AS (SELECT {hour} AS c, "
         "CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) "
         "AS raw_us FROM events GROUP BY 1 "
         "HAVING CAST(SUM(CAST(floor(value * 1000000.0) AS BIGINT)) "
         "AS BIGINT) != 0)",
         "yt AS (SELECT CAST(SUM(raw_us) AS BIGINT) AS t FROM yr)",
-        "y AS (SELECT yr.id, CAST(floor(CAST(yr.raw_us AS DOUBLE) * "
-        "(CAST(xt.t AS DOUBLE) / CAST(yt.t AS DOUBLE))) AS BIGINT) AS g_us "
+        "y AS (SELECT yr.c, CAST(floor(CAST(yr.raw_us AS DOUBLE) * "
+        "(CAST(xt.t AS DOUBLE) / CAST(yt.t AS DOUBLE))) AS BIGINT) AS m_us "
         "FROM yr, xt, yt)",
-        "m0 AS (SELECT x.id AS r, y.id AS c, "
+        "m0 AS (SELECT x.r, y.c, "
         "COALESCE(b.visits, 0) * 1000000 + 1 AS v_us "
         "FROM x CROSS JOIN y "
-        "LEFT JOIN base b ON b.r = x.id AND b.c = y.id)",
+        "LEFT JOIN base b ON b.r = x.r AND b.c = y.c)",
     ]
-    prev = "m0"
-    for i in range(sweeps):
-        for half, (marg, key) in (("r", ("x", "r")), ("c", ("y", "c"))):
-            name = f"s{i}{half}"
-            ctes.append(
-                f"{name} AS (SELECT m.r, m.c, CAST(floor("
-                f"CAST(m.v_us AS DOUBLE) / CAST(SUM(m.v_us) OVER "
-                f"(PARTITION BY m.{key}) AS DOUBLE) * CAST(g.g_us AS DOUBLE)"
-                f") AS BIGINT) AS v_us "
-                f"FROM {prev} m JOIN {marg} g ON g.id = m.{key})"
-            )
-            prev = name
+    passes, last = _rake_fixed_ctes(
+        "m0", ("r", "c"), [("r", "x"), ("c", "y")], sweeps
+    )
     return (
-        "WITH " + ",\n".join(ctes) + f"""
+        "WITH " + ",\n".join(ctes + passes) + f"""
 SELECT m.r AS part, m.c AS hour, m.v_us AS cost_us,
        CAST(COALESCE(b.visits, 0) AS BIGINT) AS visits,
        CASE WHEN COALESCE(b.visits, 0) = 0 THEN 0
             ELSE CAST(floor(CAST(m.v_us AS DOUBLE) /
                             CAST(b.visits AS DOUBLE)) AS BIGINT)
        END AS cost_per_visit_us
-FROM {prev} m LEFT JOIN base b ON b.r = m.r AND b.c = m.c
+FROM {last} m LEFT JOIN base b ON b.r = m.r AND b.c = m.c
 """
     )
 

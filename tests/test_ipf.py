@@ -63,7 +63,7 @@ def test_converge_rejects_mismatched_totals(make_matrix, make_vector):
 
 def test_marginal_losses_count_unserved_ids(spark, make_vector):
     """Full-outer loss join: a marginal id with no matrix row must
-    contribute its full residual (round-1 defect, VERDICT #5)."""
+    contribute its full residual."""
     m = spark.createDataFrame([(0, 0, 1.0)], "r long, c long, v double")
     x = make_vector([1.0, 5.0])  # id 1 absent from the matrix
     y = make_vector([1.0])
@@ -140,19 +140,38 @@ def test_converge_dense_zero_row_stays_zero(make_matrix, make_vector):
 
 def test_converge_dense_matches_coordinate_on_real_data(spark):
     """Layout equivalence on the actual flagship inputs (sf0.001
-    marginals + smoothed seed), not just literals: same matrix to
-    1e-6 relative after 3 sweeps."""
+    marginals + dense Laplace-smoothed seed), not just literals: same
+    matrix to 1e-6 relative after 3 sweeps."""
     from alternating_least_squares_spark.operators.ipf_dense import converge_dense
     from alternating_least_squares_spark.plans import cost_allocation as CA
     from tests.conftest import SF_SMALL
     from pyspark.sql import functions as F
 
-    x = CA.part_cost_marginal(spark, SF_SMALL).localCheckpoint(eager=True)
-    x_total = x.agg(F.sum("v")).first()[0]
-    y = CA.hour_cost_marginal(spark, SF_SMALL, rescale_to=x_total).localCheckpoint(
-        eager=True
+    base = CA.part_hour_base(spark, SF_SMALL).localCheckpoint(eager=True)
+    x = (
+        base.groupBy(F.col("r").alias("id"))
+        .agg(F.sum("revenue").alias("v"))
+        .filter(F.col("v") != 0)
+        .localCheckpoint(eager=True)
     )
-    seed = CA.smoothed_seed_from(CA.visit_matrix(spark, SF_SMALL), x, y)
+    x_total = x.agg(F.sum("v")).first()[0]
+    hourly = (
+        CA.load_table(spark, SF_SMALL, "events")
+        .groupBy(F.hour("ts").cast("long").alias("id"))
+        .agg(F.sum("value").alias("v"))
+        .filter(F.col("v") != 0)
+    )
+    y_total = hourly.agg(F.sum("v")).first()[0]
+    y = hourly.withColumn(
+        "v", F.col("v") * F.lit(x_total / y_total)
+    ).localCheckpoint(eager=True)
+    dense = (
+        x.select(F.col("id").alias("r"))
+        .crossJoin(y.select(F.col("id").alias("c")))
+        .join(base.select("r", "c", F.col("visits").alias("v")), ["r", "c"], "left")
+        .select("r", "c", F.coalesce("v", F.lit(0.0)).alias("v"))
+    )
+    seed = M.laplace_smooth(dense, 1e-15)
     r1 = converge(x, y, seed, threshold=0.0, max_iterations=3)
     r2 = converge_dense(x, y, seed, threshold=0.0, max_iterations=3)
     a = {(r["r"], r["c"]): r["v"] for r in r1.matrix.collect()}
@@ -181,7 +200,7 @@ def test_converge_dense_result_plan_is_shuffle_free(make_matrix, make_vector):
 
 def test_converge_dense_ignores_out_of_domain_seed_columns(spark):
     """Seed cells whose column id is absent from the y-marginal are
-    IGNORED per the documented contract — previously the NULL map
+    IGNORED per the documented contract — otherwise the NULL map
     position crashed the whole flagship with NULL_MAP_KEY whenever an
     hour had no event value (zero-value hours are filtered from y)."""
     from alternating_least_squares_spark.operators.ipf_dense import converge_dense
@@ -253,8 +272,8 @@ def test_converge_single_cell_rows_fixed_point(spark):
 
 
 def test_cost_per_visit_fixed_chain_invariants(spark):
-    """The flagship's deterministic fixed-sweep twin (round-5 oracle
-    entry): dense domain coverage, micro-unit conservation after the
+    """The flagship's deterministic fixed-sweep twin: dense domain
+    coverage, micro-unit conservation after the
     closing column pass, and the C10 zero-guard on the finale."""
     from alternating_least_squares_spark.plans import cost_allocation as CA
     from tests.conftest import SF_SMALL
@@ -298,6 +317,76 @@ def test_cost_per_visit_fixed_chain_invariants(spark):
         )
     ).count()
     assert bad == 0
+
+
+def test_cost_per_visit_fixed_matches_python_replay(spark):
+    """The flagship's fixed-sweep twin must equal a sequential Python
+    replay of the same micro-unit chain, cell for cell: per-row
+    quantized marginals, the y rescale to the x total, the add-1µ seed
+    over the dense x-parts × y-hours grid, floored row and column
+    passes, and the zero-guarded finale."""
+    import math
+    from collections import defaultdict
+
+    from alternating_least_squares_spark.plans import cost_allocation as CA
+    from tests.conftest import SF_SMALL
+
+    sweeps = 2
+    visits: dict = defaultdict(int)
+    rev: dict = defaultdict(int)
+    for r in CA.load_table(spark, SF_SMALL, "lineitem").collect():
+        key = (r["l_partkey"], r["l_orderkey"] % CA.HOURS)
+        visits[key] += 1
+        rev[key] += math.floor(
+            r["l_extendedprice"] * (1 - r["l_discount"]) * 1e6
+        )
+    x: dict = defaultdict(int)
+    for (p, _), v in rev.items():
+        x[p] += v
+    x = {p: v for p, v in x.items() if v != 0}
+    raw: dict = defaultdict(int)
+    for r in CA.load_table(spark, SF_SMALL, "events").select(
+        "ts_ns", "value"
+    ).collect():
+        raw[(r["ts_ns"] // CA.NS_PER_HOUR) % 24] += math.floor(
+            r["value"] * 1e6
+        )
+    raw = {h: v for h, v in raw.items() if v != 0}
+    ratio = float(sum(x.values())) / float(sum(raw.values()))
+    y = {h: math.floor(float(v) * ratio) for h, v in raw.items()}
+
+    cells = {(p, h): visits[(p, h)] * CA.US + 1 for p in x for h in y}
+    for _ in range(sweeps):
+        for i, marg in enumerate((x, y)):
+            sums: dict = defaultdict(int)
+            for key, v in cells.items():
+                sums[key[i]] += v
+            cells = {
+                key: (
+                    0 if sums[key[i]] == 0
+                    else math.floor(
+                        float(v) / float(sums[key[i]]) * float(marg[key[i]])
+                    )
+                )
+                for key, v in cells.items()
+            }
+    want = {
+        key: (
+            v,
+            visits[key],
+            0 if visits[key] == 0 else math.floor(float(v) / float(visits[key])),
+        )
+        for key, v in cells.items()
+    }
+
+    got = {
+        (r["part"], r["hour"]): (
+            r["cost_us"], r["visits"], r["cost_per_visit_us"]
+        )
+        for r in CA.cost_per_visit_fixed(spark, SF_SMALL, sweeps).collect()
+    }
+    assert len(got) > 1000
+    assert got == want
 
 
 def test_rake3_matches_python_reference_and_converges(spark):
@@ -444,7 +533,7 @@ def test_rake_fixed_matches_sequential_replay(spark, raw, margs, sweeps):
 
 
 def test_rake_fixed_rejects_missing_or_mistyped_v_us(spark):
-    """ADVICE r11: a cells frame without the required v_us long column
+    """A cells frame without the required v_us long column
     must fail at the validation boundary with a ValueError naming the
     contract, not three joins deep with an AnalysisException."""
     import pytest

@@ -124,6 +124,32 @@ def test_pandas_pairs_bit_identical_to_join(spark):
     assert got == exp and len(got) > 0
 
 
+def test_pandas_pairs_duplicate_id_never_self_pairs(spark):
+    """A vec_id that appears twice in one cluster must not pair with
+    itself: the pandas path emits no (id, id) row and the same multiset
+    of rows as the join spelling, whose id_a < id_b filter drops it."""
+    base = _corpus(spark)
+    emb = base.unionByName(base.filter(F.col("vec_id") == 10))
+    got = sorted(
+        map(
+            tuple,
+            semantic_dup_pairs(
+                emb, threshold=0.5, centroids=[C0, C1]
+            ).collect(),
+        )
+    )
+    exp = sorted(
+        map(
+            tuple,
+            semantic_dup_pairs(
+                emb, threshold=0.5, centroids=[C0, C1], use_pandas=False
+            ).collect(),
+        )
+    )
+    assert not any(r[0] == r[1] for r in got)
+    assert got == exp and len(got) > 0
+
+
 def test_trained_centroids_path_recall_floor(spark):
     """End-to-end with MLlib-trained centroids (no pinned vocabulary):
     planted exact duplicates MUST still be caught — identical vectors

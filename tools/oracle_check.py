@@ -92,6 +92,53 @@ def frame_sig(cols: list[str], rows: list[tuple]) -> tuple:
     return names, body
 
 
+def connect(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare(spark, con, name: str, fn, oracle: str | None,
+            sf_dir: str = SF_DIR) -> tuple[str, str]:
+    """Run one query on Spark and its oracle SQL on DuckDB and compare
+    row count, column names, types and order-insensitive values.
+    Returns ``(status, detail)`` with status ``ok``, ``rows`` (no
+    oracle: row count only) or ``FAIL``."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as ex:
+        return "FAIL", f"spark error: {str(ex)[:300]}"
+    if oracle is None:
+        return "rows", f"rows={len(srows)} ({time.time()-t0:.1f}s) [rows-only]"
+    try:
+        rel = con.sql(oracle)
+        ocols = list(rel.columns)
+        otypes = list(rel.types)
+        orows = rel.fetchall()
+    except Exception as ex:
+        return "FAIL", f"duckdb error: {str(ex)[:300]}"
+    sn, sb = frame_sig(scols, srows)
+    on, ob = frame_sig(ocols, orows)
+    problems = type_problems(otypes, ocols, sdf.schema)
+    if len(srows) != len(orows):
+        problems.append(f"rows {len(srows)} vs {len(orows)}")
+    if sn != on:
+        problems.append(f"schema {sn} vs {on}")
+    if not problems and sb != ob:
+        diffs = [(a, b) for a, b in zip(sb, ob) if a != b][:3]
+        problems.append(f"values differ, first: {diffs}")
+    if problems:
+        return "FAIL", "; ".join(problems)
+    return "ok", f"rows={len(srows)} ({time.time()-t0:.1f}s)"
+
+
 def main() -> int:
     only = set(sys.argv[1:])
     from pyspark.sql import SparkSession
@@ -104,61 +151,22 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = connect()
 
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
+    counts = {"ok": 0, "FAIL": 0, "rows": 0}
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as ex:
-            print(f"FAIL  {name}: spark error: {str(ex)[:300]}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: rows={len(srows)} ({time.time()-t0:.1f}s) [rows-only]")
-            n_rows_only += 1
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            ocols = list(rel.columns)
-            otypes = list(rel.types)
-            orows = rel.fetchall()
-        except Exception as ex:
-            print(f"FAIL  {name}: duckdb error: {str(ex)[:300]}")
-            n_fail += 1
-            continue
-        sn, sb = frame_sig(scols, srows)
-        on, ob = frame_sig(ocols, orows)
-        problems = type_problems(otypes, ocols, sdf.schema)
-        if len(srows) != len(orows):
-            problems.append(f"rows {len(srows)} vs {len(orows)}")
-        if sn != on:
-            problems.append(f"schema {sn} vs {on}")
-        if not problems and sb != ob:
-            diffs = [(a, b) for a, b in zip(sb, ob) if a != b][:3]
-            problems.append(f"values differ, first: {diffs}")
-        if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
-            n_fail += 1
-        else:
-            print(f"ok    {name}: rows={len(srows)} ({time.time()-t0:.1f}s)")
-            n_pass += 1
-    print(f"\n{n_pass} ok, {n_fail} fail, {n_rows_only} rows-only")
+        status, detail = compare(spark, con, name, fn, oracles.get(name))
+        print(f"{status:<5} {name}: {detail}")
+        counts[status] += 1
+    print(f"\n{counts['ok']} ok, {counts['FAIL']} fail, "
+          f"{counts['rows']} rows-only")
     spark.stop()
-    return 1 if n_fail else 0
+    return 1 if counts["FAIL"] else 0
 
 
 if __name__ == "__main__":
