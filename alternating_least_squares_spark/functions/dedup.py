@@ -1,12 +1,13 @@
 """Deduplication operators for the training-data pipeline.
 
-All hot-path expressions are native ``pyspark.sql.functions`` (JVM
-codegen, no Python UDFs). The scalable shape is always bucket-join,
-never all-pairs:
+Hot-path expressions are native ``pyspark.sql.functions`` (JVM
+codegen, no Python UDFs), except the MinHash signature pass, which is
+vectorized NumPy behind ``mapInArrow``. The scalable shape is always
+bucket-join, never all-pairs:
 
 * **exact dedup** — hash-groupBy on md5(text): one shuffle.
 * **near-dup (MinHash + LSH)** — Broder 1997 / Indyk–Motwani 1998:
-  n-permutation MinHash signatures (hash family = salted md5),
+  n-permutation MinHash signatures (hash family = xxhash64),
   banded into b bands of r rows; docs sharing any band hash become
   candidate pairs (one equi-join on the band hash), then an exact
   Jaccard filter prunes false positives. At 100 TB the band join is
@@ -31,73 +32,6 @@ from alternating_least_squares_spark.functions.textfns import shingles, tokens
 from alternating_least_squares_spark.functions.width import spread_if_narrow
 
 HEX_DIGITS = "0123456789abcdef"
-
-
-def minhash_signature(
-    shingle_col: Column, n_hashes: int = 32, prehashed: bool = False
-) -> Column:
-    """n-permutation MinHash signature → array<long> of length
-    ``n_hashes`` over a (distinct) shingle array column.
-
-    Hash family: native ``xxhash64`` with the permutation index as an
-    extra hashed column — 64-bit, JVM-side, no string concatenation on
-    the hot path. P[min_j(A) == min_j(B)] = Jaccard(A, B) per
-    permutation (Broder 1997), so signature agreement estimates
-    Jaccard.
-
-    Built as one NESTED transform over a permutation-index sequence,
-    not ``n_hashes`` unrolled branches: the unrolled form duplicated
-    the whole shingle-hash subtree 32× and its one-time Janino compile
-    dominated small runs (~7 s of the cold-start wall-clock).
-
-    Each permutation is a full 64-bit rehash of the (already hashed)
-    shingle long with the permutation index mixed in:
-    ``h_j(x) = xxhash64(j, x)`` — JVM-side, two longs per call, no
-    strings on the hot path. The full rehash is LOAD-BEARING, not a
-    nicety (round-13 fix): the previous arithmetic family
-    ``a_j * x + b_j`` (no modulus, to stay under ANSI mode's
-    long-overflow error) is MONOTONE in x, so every permutation's
-    argmin was the same minimum-top-32-bits shingle — the signature
-    was rank-1, all 32 slots agreed or disagreed together, and
-    banding amplified nothing (P[any band collides] degenerates to J
-    itself instead of the 1-(1-J^r)^b S-curve; measured: 8 of 50
-    planted J=0.875 twins missed candidate generation, matching the
-    degenerate 1-J rate). A mod-(2^61-1) repair is NOT enough
-    either: products ≤ 2^62 wrap at most twice, leaving the map
-    piecewise-monotone in ~3 segments and the slots still heavily
-    correlated (3 of 50 planted twins still missed). Min-wise
-    hashing needs real per-permutation mixing; xxhash64 over
-    fixed-width longs costs ~1 hash of 16 bytes per (shingle,
-    permutation) and restores slot independence.
-
-    Pass ``prehashed=True`` when ``shingle_col`` already holds
-    xxhash64 longs (materialize it with one ``transform`` first) —
-    that skips re-hashing the shingle strings once per permutation."""
-    base = (
-        shingle_col
-        if prehashed
-        else F.transform(shingle_col, lambda s: F.xxhash64(s))
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda j: F.array_min(
-            F.transform(base, lambda h: F.xxhash64(j, h))
-        ),
-    )
-
-
-def band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """LSH banding: split the signature into ``bands`` groups of
-    ``rows_per_band`` values; each band hashes to one bucket key
-    (band index mixed in so band 0 and band 1 never collide).
-    Two docs with Jaccard s share ≥1 band with probability
-    1 − (1 − s^r)^b — the classic S-curve."""
-    return F.array(
-        *[
-            F.xxhash64(F.lit(b), F.slice(signature, b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)
-        ]
-    )
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -357,47 +291,41 @@ def simhash_near_dup_pairs(
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup via hash-groupBy: (h, n_docs, keep_id) with
-    ``keep_id`` = min doc id (the canonical survivor)."""
+    """Exact dedup via hash-groupBy: (h, n_docs, keep_doc_id) with
+    ``keep_doc_id`` = min doc id (the canonical survivor). NULL text
+    hashes as '' so it groups with empty text, as the t05 oracle's
+    ``md5(coalesce(text, ''))`` does."""
     return docs.groupBy(
         F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("h")
     ).agg(
-        F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id")
+        F.count("*").alias("n_docs"), F.min(id_col).alias("keep_doc_id")
     )
 
 
 def _arrow_minhash_bands(
-    narrow: DataFrame, keep: str, n_hashes: int, bands: int,
-    rows_per_band: int,
+    narrow: DataFrame, n_hashes: int, bands: int, rows_per_band: int
 ) -> DataFrame:
-    """``(_id, <keep>, _hs)`` → ``(_id, <keep>, _bands)`` via ONE
-    ``mapInArrow`` pass — the vectorized-NumPy twin of
-    ``band_hashes(minhash_signature(_hs, prehashed=True))``.
+    """``(_id, _hs)`` → ``(_id, _hs, _bands)`` via ONE ``mapInArrow``
+    pass: the ``n_hashes``-permutation MinHash of each doc's
+    shingle-hash longs, folded into ``bands`` LSH band hashes, in
+    vectorized uint64 NumPy (an expression spelling would run
+    n_hashes × |shingles| interpreted ``xxhash64`` lambdas).
 
-    Why (guide §4.2): the expression spelling is a nested
-    higher-order ``transform``, and HOF lambdas run INTERPRETED in
-    Spark — 32 permutations × |shingles| interpreted ``xxhash64``
-    evaluations was the single largest interpreted cost on the
-    headline (~2.7 s of d11's ~4 s at sf0.1). Here the same
-    arithmetic runs as ~a dozen vectorized uint64 NumPy ops per
-    permutation over the batch's flattened shingle-hash buffer.
+    Hash family: permutation ``j`` maps a shingle hash ``h`` to
+    ``xxhash64(j, h)`` and keeps the signed minimum, so each slot is
+    an independent min-wise draw and P[slot agrees] = Jaccard. Band
+    ``b`` is ``xxhash64(b, slice(sig, b·r + 1, r))``.
+    ``functions.xxh`` replicates Spark's ``XXH64`` short-input paths,
+    so these are the longs the Spark expressions
+    ``array_min(transform(_hs, h -> xxhash64(j, h)))`` and
+    ``xxhash64(b, slice(...))`` produce. An empty ``_hs`` (all-NULL
+    signature, every element skipped in the fold) bands to
+    ``hashInt(b, 42)``. The expression spelling lives in
+    ``tests/pair_references.py`` and parity is pinned by
+    ``tests/test_r19_optimizations.py``.
 
-    Bit-exactness (the correctness contract — candidate PAIRS depend
-    on these hashes): ``functions.xxh`` replicates Spark's
-    ``XXH64.hashInt/hashLong`` short-input paths exactly, so
-    ``sig[j] = min_h xxhash64(j, h)`` and the banded fold
-    ``xxhash64(b, slice(sig, ...))`` (= hashInt(b, 42) folded through
-    hashLong per element, NULLs skipped) produce the same longs the
-    expression path produced. Empty shingle sets (⇒ all-NULL
-    signature ⇒ every element skipped in the fold) yield
-    ``hashInt(b, 42)`` per band — the same constant the expression
-    path yields. Parity is pinned by
-    tests/test_r19_optimizations.py on the full pipeline AND on raw
-    random longs.
-
-    Plan shape: still the narrow zero-shuffle pass (PythonMapInArrow
-    replaces the projection; no Exchange added); only ``_id``,
-    ``keep`` and ``_hs`` cross the Python boundary.
+    Plan shape: one narrow zero-shuffle pass; only ``_id`` and
+    ``_hs`` cross the Python boundary.
     """
     import pyarrow as pa
 
@@ -405,7 +333,7 @@ def _arrow_minhash_bands(
 
     in_schema = narrow.schema
     out_schema = StructType(
-        [in_schema["_id"], in_schema[keep]]
+        [in_schema["_id"], in_schema["_hs"]]
         + [StructField("_bands", ArrayType(LongType()), False)]
     )
 
@@ -468,10 +396,10 @@ def _arrow_minhash_bands(
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(cols["_id"]),
-                    batch.column(cols[keep]),
+                    batch.column(cols["_hs"]),
                     bands_arr,
                 ],
-                names=["_id", keep, "_bands"],
+                names=["_id", "_hs", "_bands"],
             )
 
     return narrow.mapInArrow(bands_batches, out_schema)
@@ -484,54 +412,29 @@ def lsh_signatures(
     n_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    keep: str = "_hs",
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """One narrow pass per doc → ``(_id, <keep>, _bands)``: distinct
-    k-shingles, xxhash64 them once, MinHash over the longs, LSH band
-    hashes. ``keep`` chooses the verify payload carried forward:
-    ``"_hs"`` (the shingle-hash longs — the scale path) or ``"_sh"``
-    (the raw shingle strings — the oracle-friendly twin). Shared by
+    """One narrow pass per doc → ``(_id, _hs, _bands)``: the distinct
+    k-shingles hashed once to xxhash64 longs (``_hs``, the Jaccard
+    verify payload), and their MinHash LSH band hashes (``_bands``,
+    see :func:`_arrow_minhash_bands`). Shared by
     :func:`near_dup_pairs` (self-dedup) and
     :func:`incremental_near_dup_admission` (batch-vs-corpus).
-
-    ``use_arrow=True`` (default) computes the 32-permutation MinHash
-    + band fold in vectorized NumPy behind ``mapInArrow``
-    (:func:`_arrow_minhash_bands`) — bit-identical to the expression
-    path (``use_arrow=False``, kept as the dependency-light twin and
-    the parity oracle) but without 32×|shingles| interpreted HOF
-    lambda evaluations. Same narrow no-shuffle shape either way."""
-    if keep not in ("_hs", "_sh"):
-        raise ValueError(f"keep must be '_hs' or '_sh': {keep}")
+    ``tests/pair_references.py`` holds the expression spelling the
+    parity tests compare against."""
     rows_per_band = n_hashes // bands
     # The signature pass is narrow but compute-heavy; spread a narrow
     # input (small source read as one split) before it — but ONLY
     # then: see functions.width.spread_if_narrow for why an
     # unconditional repartition is a scale bug.
     docs = spread_if_narrow(docs, id_col)
-    # hash each shingle string once; the 32 permutations then mix
-    # cheap longs instead of re-hashing strings
-    base = docs.select(
+    narrow = docs.select(
         F.col(id_col).alias("_id"),
-        F.array_distinct(shingles(F.col(text_col), k)).alias("_sh"),
-    ).withColumn("_hs", F.transform("_sh", lambda s: F.xxhash64(s)))
-    if use_arrow:
-        narrow = base.select("_id", keep, "_hs") if keep == "_sh" else (
-            base.select("_id", "_hs")
-        )
-        return _arrow_minhash_bands(
-            narrow, keep, n_hashes, bands, rows_per_band
-        )
-    return (
-        base.withColumn(
-            "_sig", minhash_signature(F.col("_hs"), n_hashes, prehashed=True)
-        )
-        .select(
-            "_id",
-            keep,
-            band_hashes(F.col("_sig"), bands, rows_per_band).alias("_bands"),
-        )
+        F.transform(
+            F.array_distinct(shingles(F.col(text_col), k)),
+            lambda s: F.xxhash64(s),
+        ).alias("_hs"),
     )
+    return _arrow_minhash_bands(narrow, n_hashes, bands, rows_per_band)
 
 
 def near_dup_pairs(
@@ -542,12 +445,18 @@ def near_dup_pairs(
     bands: int = 8,
     k: int = 3,
     threshold: float = 0.5,
-    verify_on: str = "hash",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash LSH + exact Jaccard
     verification. Returns (id_a, id_b, jaccard) with id_a < id_b and
-    jaccard ≥ threshold.
+    jaccard ≥ threshold, rounded to 6 decimals.
+
+    Jaccard is computed on the xxhash64 shingle longs the signature
+    pass already built: set-identical to the k-word shingle strings
+    unless two distinct shingles collide in 64 bits (≈ n²/2⁶⁵,
+    negligible against LSH's own false-negative rate), at ~8 bytes per
+    shingle through the verify joins. ``tests/pair_references.py``
+    recomputes it on the strings for the parity test.
 
     ``max_bucket_size`` is the hot-bucket skew guard (opt-in): band
     buckets holding more than this many docs are DROPPED from
@@ -559,16 +468,6 @@ def near_dup_pairs(
       2. explode bands → equi-join on band hash (THE shuffle; never
          an all-pairs crossJoin)
       3. distinct candidate pairs → exact Jaccard on the shingle sets
-
-    ``verify_on`` picks the Jaccard verify payload: ``"hash"``
-    (default) carries the ``xxhash64`` shingle longs already computed
-    for the signature through the two verify joins — ~8 bytes per
-    shingle instead of a k-word string, a several-fold shuffle cut at
-    scale; set-identical to the string path unless two distinct
-    shingles collide in 64 bits (≈ n²/2⁶⁵ — negligible against LSH's
-    own false-negative rate). ``"string"`` verifies on the raw shingle
-    sets — the oracle-friendly twin an ANSI-SQL reimplementation can
-    reproduce without xxhash64.
     """
     if bands <= 0 or bands > n_hashes or n_hashes % bands:
         raise ValueError(
@@ -576,12 +475,7 @@ def near_dup_pairs(
             f"n_hashes={n_hashes}); bands > n_hashes would make every "
             "band slice empty and the bucket join all-pairs"
         )
-    if verify_on not in ("hash", "string"):
-        raise ValueError(f"verify_on must be 'hash' or 'string': {verify_on}")
-    verify_col = "_hs" if verify_on == "hash" else "_sh"
-    sig = lsh_signatures(
-        docs, id_col, text_col, n_hashes, bands, k, keep=verify_col
-    )
+    sig = lsh_signatures(docs, id_col, text_col, n_hashes, bands, k)
     # Materialize once: three consumers below (bucket join build side,
     # probe side, and the Jaccard verification) would otherwise each
     # recompute the full shingle+signature pipeline.
@@ -597,12 +491,8 @@ def near_dup_pairs(
         )
         .distinct()
     )
-    left = sig.select(
-        F.col("_id").alias("id_a"), F.col(verify_col).alias("_v_a")
-    )
-    right = sig.select(
-        F.col("_id").alias("id_b"), F.col(verify_col).alias("_v_b")
-    )
+    left = sig.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_v_a"))
+    right = sig.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_v_b"))
     return (
         cand.join(left, "id_a")
         .join(right, "id_b")

@@ -6,9 +6,10 @@ LSH d03 → semantic).
 
 Scale shape at 100 TB:
 
-* clustering bounds candidate generation — the only pair join is an
-  equi-join on ``cluster``; there is never an all-pairs comparison
-  across clusters. Fan-out per cluster is (cluster size)², so
+* clustering bounds candidate generation — pairs are scored only
+  inside one ``cluster`` group (one exchange keyed on cluster); there
+  is never an all-pairs comparison across clusters. Fan-out per
+  cluster is (cluster size)², so
   ``n_centroids`` must grow with the corpus (the SemDeDup paper uses
   ~110k clusters for LAION-440M; the default here is sized for the
   test tables).
@@ -19,9 +20,8 @@ Scale shape at 100 TB:
   after any observe() query has run (see ml/classifier.py for the
   same fix pattern), and the literal form keeps the scoring path
   whole-stage-codegen with a deterministic (dist, index) tie-break.
-* vectors are unit-normalized ONCE before the pair join, so the
-  verify payload is one normalized array per row and cosine is a
-  plain dot product.
+* each vector's norm is computed ONCE before the exchange, so the
+  payload is one raw array plus a scalar norm per row.
 """
 
 from __future__ import annotations
@@ -29,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from alternating_least_squares_spark.functions.similarity import (
-    _safe_ratio,
-    vec_dot,
-    vec_norm,
-)
+from alternating_least_squares_spark.functions.similarity import vec_norm
 
 
 def assign_clusters(
@@ -71,34 +67,50 @@ def assign_clusters(
 def _pandas_cluster_pairs(
     assigned: DataFrame, threshold: float
 ) -> DataFrame:
-    """Per-cluster pairwise cosine via ``applyInPandas`` — the
-    vectorized twin of the self-join spelling (guide §4.2: the join
-    evaluated one interpreted 64-element HOF dot per candidate PAIR —
-    |cluster|² lambda-fold evaluations, ~4 s of sm01's ~4.8 s at
-    sf0.1 — where NumPy does the same arithmetic at C speed on the
-    |cluster|×dim matrix).
+    """``(_id, cluster, _v, _n)`` → ``(id_a, id_b, cluster, cosine)``:
+    every intra-cluster pair with ``id_a < id_b`` and
+    ``round(dot(v_a, v_b) / (n_a · n_b), 6) ≥ threshold``, scored per
+    cluster with NumPy behind ``applyInPandas``.
 
-    Arithmetic parity with the join path (pinned by
-    tests/test_r19_optimizations.py): the dot accumulates over k in
+    The cosines are bit-identical to Spark's ``round(_safe_ratio(
+    vec_dot(...), n_a * n_b), 6)``: the dot accumulates over k in
     ascending order as ``acc = acc + (a_k · b_k)`` with one rounding
-    per multiply and per add — exactly the fold order of
-    ``vec_dot``'s ``aggregate(zip_with(...))`` — the denominator is
-    the same single ``na·nb`` multiply, and rounding replicates
-    Spark's HALF_UP (away from zero), so the emitted cosines are
-    bit-identical, not merely close. Zero-norm vectors (denominator
-    0) emit no pairs, matching ``_safe_ratio``'s NULL semantics.
+    per multiply and per add (the fold order of ``vec_dot``'s
+    ``aggregate(zip_with(...))``), the denominator is the same single
+    ``n_a · n_b`` multiply, and rounding is Spark's ``round(x, 6)``:
+    HALF_UP (away from zero) on the decimal of ``Double.toString(x)``.
+    Zero-norm and NULL vectors emit no pairs; rows with a NULL
+    cluster are dropped; a duplicated ``_id`` never pairs with
+    itself. ``tests/pair_references.py`` holds the self-join spelling
+    the parity tests compare against.
 
     Shuffle shape: ONE exchange keyed on ``cluster`` shipping each
-    vector once (the join shipped every vector twice and fanned
-    |cluster|² pair rows through the filter); pairs are generated in
-    row blocks so a task holds a (block × |cluster|) score matrix,
-    never |cluster|² at once."""
+    vector once; pairs are generated in row blocks so a task holds a
+    (block × |cluster|) score matrix, never |cluster|² at once."""
     import numpy as np
     import pandas as pd
 
+    def round6(x: "np.ndarray") -> "np.ndarray":
+        # sign·⌊|x|·1e6 + 0.5⌋/1e6 agrees with Spark except within a
+        # few ulps of a .5 boundary, where the binary product can land
+        # on the wrong side (0.0005045·1e6 = 504.49999999999994);
+        # re-round those from the shortest repr, the string Spark's
+        # BigDecimal.valueOf reads
+        from decimal import ROUND_HALF_UP, Decimal
+
+        s = np.abs(x) * 1e6
+        out = np.sign(x) * np.floor(s + 0.5) / 1e6
+        for i in np.flatnonzero(np.abs(s - np.floor(s) - 0.5) < 1e-6):
+            out.flat[i] = float(
+                Decimal(repr(float(x.flat[i]))).quantize(
+                    Decimal("1e-6"), ROUND_HALF_UP
+                )
+            )
+        return out
+
     def pairs_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # NULL vectors can never pair (their cosine is NULL on the
-        # join path); drop them before stacking
+        # NULL vectors can never pair (their cosine is NULL); drop
+        # them before stacking
         pdf = pdf[pdf["_v"].notna()]
         m = len(pdf)
         if m < 2:
@@ -127,11 +139,10 @@ def _pandas_cluster_pairs(
             denom = norms[i0:i1, None] * norms[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = C / denom
-            # HALF_UP to 6 decimals, away from zero (Spark F.round)
-            cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
+            cos = round6(cos)
             ok = (denom != 0) & (cos >= threshold)
             # unordered index pairs only (j > global i), and never a
-            # duplicated id with itself (the join's id_a < id_b drops it)
+            # duplicated id with itself
             cols = np.arange(m)[None, :]
             rows_g = np.arange(i0, i1)[:, None]
             ok &= (cols > rows_g) & (ids[None, :] != ids[i0:i1, None])
@@ -162,8 +173,7 @@ def _pandas_cluster_pairs(
             }
         )
 
-    # an equi-join drops NULL keys; groupBy would keep a NULL-cluster
-    # group — filter it so both spellings agree on unassignable rows
+    # groupBy keeps a NULL-cluster group; unassignable rows never pair
     return (
         assigned.filter(F.col("cluster").isNotNull())
         .groupBy("cluster")
@@ -181,23 +191,16 @@ def semantic_dup_pairs(
     threshold: float = 0.95,
     seed: int = 42,
     centroids: list[list[float]] | None = None,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Intra-cluster semantic duplicate pairs:
-    ``(id_a, id_b, cluster, cosine)`` with ``id_a < id_b`` and
-    cosine ≥ ``threshold``. Zero-norm vectors have undefined cosine
-    and can never appear in a pair (NULL fails the ≥ filter) — they
-    are never flagged as duplicates of anything.
+    ``(id_a, id_b, cluster, cosine)`` with ``id_a < id_b`` and cosine
+    (rounded to 6 decimals as Spark's ``round``) ≥ ``threshold``.
+    Zero-norm vectors have undefined cosine and never appear in a
+    pair. Scoring is :func:`_pandas_cluster_pairs`: one exchange on
+    ``cluster``, no join.
 
     Pass ``centroids`` to reuse/pin a vocabulary (tests plant them);
-    otherwise MLlib KMeans trains one on ``emb``.
-
-    ``use_pandas=True`` (default) scores each cluster's pairs with
-    vectorized NumPy behind ``applyInPandas``
-    (:func:`_pandas_cluster_pairs`) — bit-identical cosines to the
-    self-join spelling (``use_pandas=False``, kept as the parity
-    twin), one exchange instead of two join sides, no interpreted
-    per-pair HOF dot."""
+    otherwise MLlib KMeans trains one on ``emb``."""
     if centroids is None:
         from alternating_least_squares_spark.functions.ivf import (
             train_centroids,
@@ -212,47 +215,17 @@ def semantic_dup_pairs(
         )
         centroids = [[float(x) for x in c] for c in model.clusterCenters()]
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # carry the RAW double vector plus its norm as a SCALAR column and
-    # divide in the pair join — element-wise unit normalization
-    # (transform(v, x -> x / norm(v))) re-evaluates the O(d) norm
-    # aggregate per ELEMENT on the interpreted HOF path, an O(d²)
-    # per-row blowup that measured ~2× on sm01's bench entry
+    # carry the RAW double vector plus its norm as a SCALAR column —
+    # element-wise unit normalization (transform(v, x -> x / norm(v)))
+    # re-evaluates the O(d) norm aggregate per ELEMENT on the
+    # interpreted HOF path
     narrow = assign_clusters(emb, centroids, vec_col).select(
         F.col(id_col).alias("_id"),
         "cluster",
         vec_d.alias("_v"),
         vec_norm(F.col(vec_col)).alias("_n"),
     )
-    if use_pandas:
-        # single consumer (the grouped pandas pass) — no checkpoint
-        return _pandas_cluster_pairs(narrow, threshold)
-    # one materialization: the self-join below reads it twice
-    assigned = narrow.localCheckpoint(eager=True)
-    a = assigned.select(
-        F.col("_id").alias("id_a"), "cluster",
-        F.col("_v").alias("_va"), F.col("_n").alias("_na"),
-    )
-    b = assigned.select(
-        F.col("_id").alias("id_b"), "cluster",
-        F.col("_v").alias("_vb"), F.col("_n").alias("_nb"),
-    )
-    return (
-        a.join(b, "cluster")  # THE bounded shuffle: intra-cluster only
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            "cluster",
-            F.round(
-                _safe_ratio(
-                    vec_dot(F.col("_va"), F.col("_vb")),
-                    F.col("_na") * F.col("_nb"),
-                ),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _pandas_cluster_pairs(narrow, threshold)
 
 
 def semantic_dedup(

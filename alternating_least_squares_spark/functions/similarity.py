@@ -28,12 +28,6 @@ from pyspark.sql import functions as F
 from alternating_least_squares_spark.functions.width import spread_if_narrow
 
 
-def _spread_if_narrow(df: DataFrame) -> DataFrame:
-    """Re-spread a DataFrame that arrived narrower than the cluster —
-    see :func:`..width.spread_if_narrow` (shared with dedup)."""
-    return spread_if_narrow(df)
-
-
 def _vec_double(a: Column) -> Column:
     return F.transform(a, lambda x: x.cast("double"))
 
@@ -242,7 +236,7 @@ def lsh_topk(
         F.col(vec_col).alias("_en"),
         vec_norm(F.col(vec_col)).alias("_nn"),
     )
-    corpus = _spread_if_narrow(corpus)
+    corpus = spread_if_narrow(corpus)
     cb = with_lsh_buckets(corpus, "_en", n_tables, n_planes, dim, seed)
     cand = (
         qb.join(cb, ["table", "bucket"])
@@ -334,7 +328,7 @@ def pca_topk(
             red_q, "_eq", n_tables, n_planes, n_components, seed
         )
         cb = with_lsh_buckets(
-            _spread_if_narrow(red_c), "_en", n_tables, n_planes,
+            spread_if_narrow(red_c), "_en", n_tables, n_planes,
             n_components, seed,
         )
         cand = (
@@ -378,7 +372,7 @@ def embedding_near_dup_pairs(
         F.col(vec_col).alias("_e"),
         vec_norm(F.col(vec_col)).alias("_n"),
     )
-    base = _spread_if_narrow(base)
+    base = spread_if_narrow(base)
     b = with_lsh_buckets(base, "_e", n_tables, n_planes, dim, seed)
     pairs = (
         b.alias("a")
@@ -495,7 +489,7 @@ def exact_cosine_threshold_join(
     base = vectors.select(
         F.col(id_col).alias("_id"), qlong.alias("_q")
     ).withColumn("_n2", int_vec_dot(F.col("_q"), F.col("_q")))
-    base = _spread_if_narrow(base.filter(F.col("_n2") > 0))
+    base = spread_if_narrow(base.filter(F.col("_n2") > 0))
     # three consumers (centroid sample, probe pass, two verify joins)
     base, _own = local_checkpoint_owned(base)
     if owned_out is not None:

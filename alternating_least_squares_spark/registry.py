@@ -2523,14 +2523,12 @@ FROM tk
 
 
 def q_t05_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    # coalesce mirrors the oracle: md5(NULL) is NULL on Spark but the
-    # SQL twin hashes '', so a NULL-text doc would land in a different
-    # group than an empty-text doc on exactly one engine
-    return (
-        docs.groupBy(F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("h"))
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
+    from alternating_least_squares_spark.functions.dedup import (
+        exact_dup_groups,
     )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return exact_dup_groups(docs, "doc_id", "text")
 
 
 SQL_T05 = """

@@ -69,16 +69,11 @@ class RangeGenReader(DataSourceReader):
         Source API accepts ``pyarrow.RecordBatch`` yields, which skip
         per-row pickling entirely (one columnar buffer per batch
         crosses the Python↔JVM boundary). Rows stay a pure function of
-        the row id, so output is identical to the tuple path — kept as
-        the fallback for a pyarrow-less environment."""
+        the row id."""
+        import numpy as np
+        import pyarrow as pa
+
         lo, hi = partition.value
-        try:
-            import numpy as np
-            import pyarrow as pa
-        except ImportError:
-            for i in range(lo, hi):
-                yield (i, i % 24, (i * _MIX % 1_000_000) / 1_000_000.0)
-            return
         # bounded chunks, not one partition-sized batch: the streaming
         # row iterator this replaces had O(1) task memory and a
         # billion-row partition must not regress to an O(partition)
@@ -86,8 +81,7 @@ class RangeGenReader(DataSourceReader):
         chunk = 1_000_000
         # (i * _MIX) % 1e6 computed in modular form: i * _MIX overflows
         # int64 for i >= ~3.47e9 and numpy WRAPS silently, which would
-        # fork the Arrow path's scores from the pure-Python fallback
-        # (arbitrary precision) and the SQL oracle. (i % 1e6) *
+        # fork the scores from the SQL oracle's. (i % 1e6) *
         # (_MIX % 1e6) % 1e6 is congruent and peaks at ~4.4e11.
         mix_mod = _MIX % 1_000_000
         for start in range(lo, hi, chunk):

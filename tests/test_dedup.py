@@ -50,7 +50,7 @@ def test_keep_one_filter_drops_higher_ids(spark):
 def test_exact_dup_groups_counts(spark):
     docs = _corpus(spark)
     groups = {
-        r["keep_id"]: r["n_docs"]
+        r["keep_doc_id"]: r["n_docs"]
         for r in exact_dup_groups(docs, "doc_id", "text").collect()
     }
     assert groups[0] == 2  # docs 0 and 1 identical
@@ -127,9 +127,10 @@ def test_t16_registry_row_is_not_vacuous(spark):
 
 def test_verify_on_hash_matches_string_pairs(spark):
     """The scale path (Jaccard on xxhash64 shingle longs) must return
-    a byte-identical (id_a, id_b, jaccard) set to the oracle-friendly
-    string path — distinct shingles map to distinct longs, so the set
-    algebra is unchanged."""
+    the same jaccard for every pair as Jaccard recomputed on the raw
+    shingle strings (``tests/pair_references.string_jaccard``) —
+    distinct shingles map to distinct longs, so the set algebra is
+    unchanged."""
     # near replaces every 50th token: 2 substitutions kill ≤6 of ~98
     # k=3 shingles, so shingle-level J ≈ 0.89 — deep in the S-curve's
     # near-certain zone (P[no band] ≈ 1e-4), and xxhash64 is
@@ -143,14 +144,11 @@ def test_verify_on_hash_matches_string_pairs(spark):
         [(0, base), (1, base), (2, near), (3, "one two three")],
         "doc_id long, text string",
     )
-    def pairs(mode):
-        return sorted(
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in near_dup_pairs(
-                docs, threshold=0.0, verify_on=mode
-            ).collect()
-        )
-    got_h, got_s = pairs("hash"), pairs("string")
+    from tests.pair_references import string_jaccard
+
+    pairs = near_dup_pairs(docs, threshold=0.0)
+    got_h = sorted(map(tuple, pairs.collect()))
+    got_s = sorted(map(tuple, string_jaccard(docs, pairs).collect()))
     assert got_h == got_s and len(got_h) >= 3
 
 
@@ -401,10 +399,10 @@ def test_minhash_slots_are_independent_not_rank_one(spark):
     match fraction must approximate the true Jaccard (each slot is a
     Bernoulli(J) draw under proper min-wise hashing). xxhash64 is
     deterministic, so these counts are constants, not a flaky
-    sample."""
-    from alternating_least_squares_spark.functions.dedup import (
-        minhash_signature,
-    )
+    sample. The signature is the expression reference, which the
+    production Arrow pass matches bit for bit
+    (test_r19_optimizations)."""
+    from tests.pair_references import minhash_signature
 
     n_hashes = 32
     pairs = []

@@ -6,8 +6,9 @@ Three operator rewrites changed HOW results are computed (never what):
   expressions to vectorized NumPy behind ``mapInArrow`` — bit-exact
   because ``functions.xxh`` replicates Spark's ``XXH64`` short-input
   paths; asserted here both at the hash level (random longs/ints vs
-  the JVM expression) and at the pipeline level (arrow path ==
-  expression path, including empty/NULL-text documents);
+  the JVM expression) and at the pipeline level (arrow path == the
+  expression reference in ``tests/pair_references.py``, including
+  empty/NULL-text documents);
 * the triangle contribution streams (triangle_counts /
   _edge_common_counts / clustering_coefficients) dropped their
   interpreted struct-building ``transform`` for plain codegen
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.functions import xxh
 from alternating_least_squares_spark.functions.dedup import lsh_signatures
+from tests import pair_references as ref
 from alternating_least_squares_spark.operators.graph import (
     edge_support,
     kcore,
@@ -103,26 +105,18 @@ DOCS = [
 
 def test_lsh_signatures_arrow_matches_expression_path(spark):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    for keep in ("_hs", "_sh"):
-        arrow = {
-            r["_id"]: (r[keep], r["_bands"])
-            for r in lsh_signatures(
-                docs, "doc_id", "text", keep=keep, use_arrow=True
-            ).collect()
-        }
-        expr = {
-            r["_id"]: (r[keep], r["_bands"])
-            for r in lsh_signatures(
-                docs, "doc_id", "text", keep=keep, use_arrow=False
-            ).collect()
-        }
-        assert arrow == expr
-    # exact dups share every band; NULL/empty/whitespace docs all
-    # shingle to the single empty-string shingle, so they agree too
-    bands = {
-        r["_id"]: tuple(r["_bands"])
+    arrow = {
+        r["_id"]: (r["_hs"], r["_bands"])
         for r in lsh_signatures(docs, "doc_id", "text").collect()
     }
+    expr = {
+        r["_id"]: (r["_hs"], r["_bands"])
+        for r in ref.lsh_signatures(docs, "doc_id", "text").collect()
+    }
+    assert arrow == expr
+    # exact dups share every band; NULL/empty/whitespace docs all
+    # shingle to the single empty-string shingle, so they agree too
+    bands = {i: tuple(b) for i, (_, b) in arrow.items()}
     assert bands[1] == bands[3]
     assert bands[5] == bands[6] == bands[7]
     assert bands[1] != bands[4]
@@ -136,8 +130,6 @@ def test_arrow_bands_empty_array_matches_expression(spark):
     # skipped in the fold -> hashInt(b, 42) per band).
     from alternating_least_squares_spark.functions.dedup import (
         _arrow_minhash_bands,
-        band_hashes,
-        minhash_signature,
     )
 
     df = spark.createDataFrame(
@@ -146,14 +138,14 @@ def test_arrow_bands_empty_array_matches_expression(spark):
     )
     arrow = {
         r["_id"]: tuple(r["_bands"])
-        for r in _arrow_minhash_bands(df, "_hs", 32, 8, 4).collect()
+        for r in _arrow_minhash_bands(df, 32, 8, 4).collect()
     }
     expr = {
         r["_id"]: tuple(r["_bands"])
         for r in df.select(
             "_id",
-            band_hashes(
-                minhash_signature(F.col("_hs"), 32, prehashed=True), 8, 4
+            ref.band_hashes(
+                ref.minhash_signature(F.col("_hs"), 32, prehashed=True), 8, 4
             ).alias("_bands"),
         ).collect()
     }

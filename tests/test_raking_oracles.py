@@ -1,9 +1,15 @@
-"""Spark-vs-DuckDB value gate for the raking family at sf0.001.
+"""Spark-vs-DuckDB value gate at sf0.001 for the raking family and
+the pair-scoring entries.
 
-Every fixed-sweep IPF entry is compared against its unrolled DuckDB
-oracle with the same compare ``tools/oracle_check.py`` runs at sf0.01,
-so the shared ``ipf.rake_fixed`` kernel and its SQL template stay
-bit-identical under pytest, not only under the out-of-band sweep."""
+Each entry is compared against its DuckDB oracle with the same compare
+``tools/oracle_check.py`` runs at sf0.01, so results stay
+bit-identical under pytest, not only under the out-of-band sweep:
+
+* every fixed-sweep IPF entry, against its unrolled oracle (the shared
+  ``ipf.rake_fixed`` kernel and its SQL template);
+* exact dedup (t05), the MinHash near-dup entries (d03, d11, d12), LSH
+  top-k (s01) and semantic dedup (sm01), whose operators each keep one
+  production path (Arrow MinHash bands, pandas cluster pairs)."""
 
 from __future__ import annotations
 
@@ -20,6 +26,14 @@ RAKING = (
     "a22_rake3",
     "ipf_cost_per_visit_fixed",
 )
+PAIRS = (
+    "t05_exact_dup_groups",
+    "d03_minhash_near_dup",
+    "d11_neardup_keep_one",
+    "d12_threshold_near_dup",
+    "s01_lsh_topk",
+    "sm01_semantic_dedup",
+)
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +43,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", RAKING)
+@pytest.mark.parametrize("name", RAKING + PAIRS)
 def test_raking_entry_matches_oracle(spark, duck, name):
     fn = registry.queries()[name]
     status, detail = oracle_check.compare(

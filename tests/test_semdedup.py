@@ -13,6 +13,7 @@ from alternating_least_squares_spark.functions.semdedup import (
     semantic_dedup,
     semantic_dup_pairs,
 )
+from tests import pair_references as ref
 
 DIM = 8
 # two well-separated planted centroids plus an origin-ish decoy
@@ -83,71 +84,72 @@ def test_semantic_dedup_keeps_lowest_id(spark):
 
 
 def test_no_all_pairs_outside_clusters(spark):
-    """Candidate generation is bounded by cluster in BOTH spellings:
-    the pandas path groups on cluster with NO join at all; the join
-    twin is exactly one equi-join on cluster. Neither plans a
+    """Candidate generation is bounded by cluster: the pandas path
+    groups on cluster with NO join at all and never plans a
     CartesianProduct."""
     emb = _corpus(spark)
     pairs = semantic_dup_pairs(emb, threshold=0.9, centroids=[C0, C1])
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan and "Cartesian" not in plan
     assert "FlatMapGroupsInPandas" in plan
-    join_pairs = semantic_dup_pairs(
-        emb, threshold=0.9, centroids=[C0, C1], use_pandas=False
-    )
-    jplan = join_pairs._jdf.queryExecution().optimizedPlan().toString()
-    assert jplan.count("Join") == 1 and "Cartesian" not in jplan
 
 
-def test_pandas_pairs_bit_identical_to_join(spark):
-    """The r19 pandas pair path must emit the SAME (id_a, id_b,
-    cluster, cosine) rows as the join spelling — including equal
-    cosine doubles (the sequential-k accumulation replicates the HOF
-    fold's rounding order)."""
-    emb = _corpus(spark)
+def _pairs_vs_reference(emb, threshold, centroids):
     got = sorted(
         map(
             tuple,
             semantic_dup_pairs(
-                emb, threshold=0.5, centroids=[C0, C1]
+                emb, threshold=threshold, centroids=centroids
             ).collect(),
         )
     )
     exp = sorted(
         map(
             tuple,
-            semantic_dup_pairs(
-                emb, threshold=0.5, centroids=[C0, C1], use_pandas=False
+            ref.semantic_dup_pairs(
+                emb, threshold=threshold, centroids=centroids
             ).collect(),
         )
     )
+    return got, exp
+
+
+def test_pandas_pairs_bit_identical_to_join(spark):
+    """The pandas pair path must emit the SAME (id_a, id_b, cluster,
+    cosine) rows as the self-join reference in
+    ``tests/pair_references.py`` — including equal cosine doubles (the
+    sequential-k accumulation replicates the HOF fold's rounding
+    order)."""
+    got, exp = _pairs_vs_reference(_corpus(spark), 0.5, [C0, C1])
     assert got == exp and len(got) > 0
 
 
 def test_pandas_pairs_duplicate_id_never_self_pairs(spark):
     """A vec_id that appears twice in one cluster must not pair with
     itself: the pandas path emits no (id, id) row and the same multiset
-    of rows as the join spelling, whose id_a < id_b filter drops it."""
+    of rows as the self-join reference, whose id_a < id_b filter drops
+    it."""
     base = _corpus(spark)
     emb = base.unionByName(base.filter(F.col("vec_id") == 10))
-    got = sorted(
-        map(
-            tuple,
-            semantic_dup_pairs(
-                emb, threshold=0.5, centroids=[C0, C1]
-            ).collect(),
-        )
-    )
-    exp = sorted(
-        map(
-            tuple,
-            semantic_dup_pairs(
-                emb, threshold=0.5, centroids=[C0, C1], use_pandas=False
-            ).collect(),
-        )
-    )
+    got, exp = _pairs_vs_reference(emb, 0.5, [C0, C1])
     assert not any(r[0] == r[1] for r in got)
     assert got == exp and len(got) > 0
+
+
+def test_pandas_pairs_round_half_up_on_decimal_tie(spark):
+    """Cosine 0.0005045 is a decimal tie at 6 places, but
+    0.0005045·1e6 = 504.49999999999994 in binary. Spark's round(x, 6)
+    applies HALF_UP to the decimal string and gives 0.000505, so the
+    pair meets threshold 0.000505; a binary floor(|x|·1e6 + 0.5)
+    rounding gives 0.000504 and would drop it."""
+    c = 0.0005045
+    a = [1.0] + [0.0] * (DIM - 1)
+    b = [c, math.sqrt(1.0 - c * c)] + [0.0] * (DIM - 2)
+    emb = spark.createDataFrame(
+        [(1, a), (2, b)], "vec_id long, embedding array<double>"
+    )
+    got, exp = _pairs_vs_reference(emb, 0.000505, [C0])
+    assert got == exp == [(1, 2, 0, 0.000505)]
 
 
 def test_trained_centroids_path_recall_floor(spark):
