@@ -74,10 +74,9 @@ def release_local_checkpoint(
     """Release a rotation's blocks explicitly — for input/seed
     checkpoints a loop no longer reads once it returns, and for loops
     where the superseded generation is still READ after the new
-    checkpoint is created (e.g. label_propagation's changed-count
-    join against the old labels), so the release must happen later
-    than :func:`rotate_local_checkpoint` would do it. ``df`` only
-    supplies the session; ``owned=None`` is a no-op."""
+    checkpoint is created, so the release must happen later than
+    :func:`rotate_local_checkpoint` would do it. ``df`` only supplies
+    the session; ``owned=None`` is a no-op."""
     if not owned:
         return
     live = df.sparkSession.sparkContext._jsc.getPersistentRDDs()

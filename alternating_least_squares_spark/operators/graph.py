@@ -112,8 +112,8 @@ def vertex_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-#: auto-gate for broadcasting the adjacency table in
-#: :func:`triangle_counts`: broadcast when |E| (== total out-neighbor
+#: The one selector of the adjacency join strategy in
+#: :func:`_oriented_intersections`: broadcast when |E| (== total out-neighbor
 #: array elements under the degree orientation) is at most this many.
 #: 8M edges ≈ 64 MB of array longs + |V| row overhead — comfortably
 #: inside executor/driver budgets at any cluster size, and ~7× the
@@ -125,7 +125,6 @@ BROADCAST_EDGE_LIMIT = 8_000_000
 def _oriented_intersections(
     edges: DataFrame,
     max_degree: int | None,
-    broadcast_adjacency: bool | None,
     owned_out: list[int] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared core of :func:`triangle_counts` and
@@ -136,8 +135,8 @@ def _oriented_intersections(
     oriented edge whose endpoints share ≥1 common out-neighbor — each
     triangle {x ≺ y ≺ z} appears exactly once, at base edge (x, y)
     with z ∈ ``_ws``. See :func:`triangle_counts` for the scale
-    contract (array width ≤ √(2|E|); size-gated broadcast vs
-    shuffled-hash joins)."""
+    contract (array width ≤ √(2|E|); broadcast vs shuffled-hash joins,
+    chosen by |E| against :data:`BROADCAST_EDGE_LIMIT`)."""
     if max_degree is not None:
         if max_degree < 2:
             raise ValueError(
@@ -160,25 +159,22 @@ def _oriented_intersections(
     # materialized — one-shot callers (gr03/gr04) leave them pinned
     # for the session, the same accepted cost as their final result.
     # |E| for the broadcast gate rides the checkpoint materialization
-    # as an observe metric (r19, the kcore/ipf pattern) — no separate
-    # count job.
+    # as an observe metric — no separate count job.
     obs_e = Observation()
     e, _own_e = local_checkpoint_owned(
         edges.select("a", "b").observe(
             obs_e, F.count(F.lit(1)).alias("_n")
         )
     )
-    if broadcast_adjacency is None:
-        # |E| == total out-array elements, exactly the thing being
-        # shipped
-        broadcast_adjacency = obs_e.get["_n"] <= BROADCAST_EDGE_LIMIT
+    # |E| == total out-array elements, exactly the thing being shipped
+    broadcast = obs_e.get["_n"] <= BROADCAST_EDGE_LIMIT
     deg = vertex_degrees(e)
 
     def _attach_deg(df: DataFrame, side: str) -> DataFrame:
         d = deg.select(
             F.col("vertex").alias(side), F.col("degree").alias(f"_d{side}")
         )
-        d = F.broadcast(d) if broadcast_adjacency else d.hint("SHUFFLE_HASH")
+        d = F.broadcast(d) if broadcast else d.hint("SHUFFLE_HASH")
         return df.join(d, side)
 
     # orient low-(degree, id) → high; a < b already, so ties keep a→b
@@ -202,7 +198,7 @@ def _oriented_intersections(
 
     def _probe(side: str, out: str) -> DataFrame:
         a = adj.select(F.col("u").alias(side), F.col("nbrs").alias(out))
-        return F.broadcast(a) if broadcast_adjacency else a.hint("SHUFFLE_HASH")
+        return F.broadcast(a) if broadcast else a.hint("SHUFFLE_HASH")
 
     per_edge = (
         oriented.join(_probe("u", "_nu"), "u")
@@ -214,9 +210,7 @@ def _oriented_intersections(
 
 
 def triangle_counts(
-    edges: DataFrame,
-    max_degree: int | None = None,
-    broadcast_adjacency: bool | None = None,
+    edges: DataFrame, max_degree: int | None = None
 ) -> DataFrame:
     """Per-vertex triangle counts over an oriented edge list
     (columns ``a``, ``b``, a < b, distinct) → ``(part, n_triangles)``
@@ -234,26 +228,20 @@ def triangle_counts(
     is exact without any ÷2: the base endpoints each gain |ws| and
     every w ∈ ws gains 1.
 
-    Why degree ordering (VERDICT r8): under it every out-array is
-    STRUCTURALLY bounded at √(2|E|) elements — an out-degree of d
-    implies d neighbors of degree ≥ d, so d² ≤ 2|E| — with no cap
-    needed, and the total intersect work drops from Σ deg² to
-    Σ_{(u,v)∈E} min(deg u, deg v) ≤ O(|E|^1.5), the arboricity
-    bound. The previous undirected-adjacency form relied on
-    ``max_degree`` alone to bound array width, which bounded nothing
-    at 10⁹ vertices.
+    Degree ordering bounds every out-array STRUCTURALLY at √(2|E|)
+    elements — an out-degree of d implies d neighbors of degree ≥ d,
+    so d² ≤ 2|E| — and the total intersect work at
+    Σ_{(u,v)∈E} min(deg u, deg v) ≤ O(|E|^1.5), the arboricity bound.
 
-    Join strategy is SIZE-GATED (``broadcast_adjacency=None`` = auto):
-    the adjacency table broadcasts only while |E| ≤
-    :data:`BROADCAST_EDGE_LIMIT` (both probes then run in one codegen
-    stage and the arrays never serialize — measured 6 s vs 22 s at
-    sf0.1 when AQE picked sort-merge instead). Beyond the gate both
-    probes take a ``SHUFFLE_HASH`` hint: the adjacency side builds a
-    hash map per partition and the edge stream hash-partitions WITHOUT
-    sorting, so the array-carrying rows between the probes are never
-    buffered through a sort — the specific failure mode of a
-    sort-merge plan here. Nothing in the scale path is bounded by
-    driver or single-executor memory.
+    The join strategy is chosen by size alone: the adjacency table
+    broadcasts while |E| ≤ :data:`BROADCAST_EDGE_LIMIT` (both probes
+    then run in one codegen stage and the arrays never serialize —
+    measured 6 s vs 22 s at sf0.1 against a sort-merge plan). Beyond
+    the gate both probes take a ``SHUFFLE_HASH`` hint: the adjacency
+    side builds a hash map per partition and the edge stream
+    hash-partitions WITHOUT sorting, so the array-carrying rows are
+    never buffered through a sort. Nothing in the scale path is
+    bounded by driver or single-executor memory.
 
     ``max_degree`` remains the hub SEMANTICS guard: vertices whose
     total degree exceeds the cap are dropped up front, bounding the
@@ -264,18 +252,13 @@ def triangle_counts(
     deterministic, SQL-expressible semantics (the gr03 oracle
     replicates the cap), and the hub set is reportable via
     :func:`vertex_degrees`."""
-    e, _deg, per_edge = _oriented_intersections(
-        edges, max_degree, broadcast_adjacency
-    )
-    # r19 (guide §4.1): the contribution stage used to build
-    # struct arrays with a higher-order ``transform`` — HOF lambdas
-    # run INTERPRETED, so every triangle paid interpreted
-    # struct-construction. Same attribution, HOF-free: explode the
-    # intersection into one row per TRIANGLE (u, v, w), then explode
-    # the plain 3-element vertex array — two codegen Generates, each
-    # triangle contributes exactly +1 to each corner (endpoints'
-    # previous +|ws| ≡ one +1 per member row), and the map-side
-    # partial count collapses the rows before the single exchange.
+    e, _deg, per_edge = _oriented_intersections(edges, max_degree)
+    # HOF-free attribution (higher-order lambdas run interpreted):
+    # explode the intersection into one row per TRIANGLE (u, v, w),
+    # then explode the plain 3-element vertex array — two codegen
+    # Generates, each triangle contributes exactly +1 to each corner,
+    # and the map-side partial count collapses the rows before the
+    # single exchange.
     tri = per_edge.select("u", "v", F.explode("_ws").alias("w"))
     return (
         tri.select(F.explode(F.array("u", "v", "w")).alias("part"))
@@ -285,9 +268,7 @@ def triangle_counts(
 
 
 def edge_neighborhood_scores(
-    edges: DataFrame,
-    max_degree: int | None = None,
-    broadcast_adjacency: bool | None = None,
+    edges: DataFrame, max_degree: int | None = None
 ) -> DataFrame:
     """Per-EDGE neighborhood similarity over an oriented edge list
     (columns ``a``, ``b``, a < b, distinct) → ``(a, b, common,
@@ -302,17 +283,12 @@ def edge_neighborhood_scores(
 
     Shares :func:`triangle_counts`'s degree-ordered machinery (same
     √(2|E|) array bound, same size-gated broadcast / shuffled-hash
-    strategy): each triangle found once at its base edge contributes
-    +1 embeddedness to all THREE of its edges — the base edge gains
-    |ws| and the two (endpoint, w) edges gain 1 — so common-neighbor
-    counts come from the bounded out-arrays without ever joining full
-    undirected neighborhoods. Edges in no triangle report common = 0
-    via the left join back to the edge list. ``max_degree`` is the
-    same hub-cap semantics as gr03 (dropped hubs vanish from edges,
-    degrees, and neighborhoods alike)."""
-    e, deg, per_edge = _oriented_intersections(
-        edges, max_degree, broadcast_adjacency
-    )
+    strategy) and counts common neighbors through
+    :func:`_edge_common_counts`. Edges in no triangle report
+    common = 0 via the left join back to the edge list.
+    ``max_degree`` is the same hub-cap semantics as gr03 (dropped
+    hubs vanish from edges, degrees, and neighborhoods alike)."""
+    e, deg, per_edge = _oriented_intersections(edges, max_degree)
     cn = _edge_common_counts(per_edge)
     da = deg.select(F.col("vertex").alias("a"), F.col("degree").alias("_da"))
     db = deg.select(F.col("vertex").alias("b"), F.col("degree").alias("_db"))
@@ -351,11 +327,9 @@ def _edge_common_counts(per_edge: DataFrame) -> DataFrame:
             F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
         )
 
-    # r19 (guide §4.1): HOF-free twin of the old transform-built
-    # struct stream (HOF lambdas run interpreted): one row per
+    # HOF-free (higher-order lambdas run interpreted): one row per
     # TRIANGLE via a codegen explode, then each triangle contributes
-    # +1 to its three edges through a plain 3-struct array — the base
-    # edge's previous +|ws| is one +1 per member row, identical sum.
+    # +1 to its three edges through a plain 3-struct array.
     tri = per_edge.select("u", "v", F.explode("_ws").alias("w"))
     contrib = tri.select(
         F.explode(
@@ -376,7 +350,6 @@ def _edge_common_counts(per_edge: DataFrame) -> DataFrame:
 def edge_support(
     edges: DataFrame,
     max_degree: int | None = None,
-    broadcast_adjacency: bool | None = None,
     owned_out: list[int] | None = None,
 ) -> DataFrame:
     """Triangle SUPPORT per edge over an oriented edge list (columns
@@ -390,9 +363,7 @@ def edge_support(
     minus the degree arithmetic. ``owned_out`` forwards to
     :func:`_oriented_intersections` so loop callers can release the
     two internal checkpoints each round."""
-    e, _deg, per_edge = _oriented_intersections(
-        edges, max_degree, broadcast_adjacency, owned_out
-    )
+    e, _deg, per_edge = _oriented_intersections(edges, max_degree, owned_out)
     cn = _edge_common_counts(per_edge)
     return e.join(cn, ["a", "b"], "left").select(
         "a",
@@ -401,61 +372,41 @@ def edge_support(
     )
 
 
-# Live fixpoint loops consult the data-derived runaway bound only
-# after this many rounds: shallow fixpoints (the common case) never
-# pay the extra count() job the bound costs, and a genuinely deep
-# graph pays it once, long before |V| rounds of wasted actions.
-_GUARD_CHECK_AT = 60
-
-
 def ktruss(
     edges: DataFrame,
     k: int,
-    rounds: int | None = None,
-    max_rounds: int | None = None,
+    rounds: int,
     max_degree: int | None = None,
-    broadcast_adjacency: bool | None = None,
 ) -> DataFrame:
     """k-truss decomposition by support peeling (Cohen 2008, the
     standard community-core refinement of k-core: every edge of the
     k-truss lies in ≥ k−2 triangles WITHIN the truss, so each
     surviving tie is socially reinforced by k−2 mutual contacts):
     repeatedly compute per-edge triangle support and drop every edge
-    whose support is < k−2 until the edge set is stable. Input is an
-    oriented undirected edge list (columns ``a``, ``b``, a < b;
-    deduplicated here). Returns ``(a, b, support)`` — the surviving
-    edges with their support INSIDE the surviving edge set.
+    whose support is < k−2. Input is an oriented undirected edge list
+    (columns ``a``, ``b``, a < b; deduplicated here). Returns ``(a,
+    b, support)`` — the surviving edges with their support INSIDE the
+    surviving edge set.
 
-    This is to :func:`edge_support` exactly what :func:`kcore` is to
-    :func:`vertex_degrees` — same two modes, same guard discipline:
-
-    - ``rounds=None`` (live): peel to the FIXPOINT, detected by the
-      edge count not shrinking. ``max_rounds=None`` derives the
-      runaway guard from the data — every non-terminal round removes
-      ≥ 1 edge, so (surviving |E|)+1 further rounds is a structural
-      upper bound — priced lazily after ``_GUARD_CHECK_AT`` rounds,
-      and released-before-raise like every loop here.
-    - ``rounds=N`` (fixed sweep): N peel rounds, well-defined whether
-      or not the fixpoint has been reached — the gr01/ipf twin
-      discipline that makes the registry entry hash-checkable against
-      an unrolled oracle. Rounds after the fixpoint are SKIPPED: the
-      peel only removes edges, so an unchanged edge count means the
-      filter is a no-op from then on and the result is bit-identical
-      to running all N rounds (which is exactly what the unrolled
-      oracle states) — one cheap count() per round on checkpointed
-      data buys up to N−1 saved support passes (sf0.001 converges in
-      1 round; paying 8 passes there was pure waste).
+    Runs at most ``rounds`` peel rounds — well-defined whether or not
+    the fixpoint has been reached, so an unrolled-SQL oracle states
+    the result exactly, and when ``rounds`` ≥ the data's peel depth
+    it IS the k-truss (``len(edges) + 1`` is always enough: every
+    non-terminal round removes ≥ 1 edge). Rounds after the fixpoint
+    are skipped: the peel only removes edges, so an unchanged edge
+    count makes every remaining round a no-op and the result equals
+    the full sweep bit for bit. The edge counts ride the input and
+    per-round checkpoints as ``observe`` metrics — no count jobs.
 
     Scale shape: each round is one :func:`edge_support` pass over a
     SHRINKING edge set — the degree-ordered intersection bounds the
-    round at O(|E|^1.5) work with √(2|E|)-bounded arrays, and rounds
-    needed is the peel depth (single digits on real co-purchase
-    data), so the whole decomposition is R bounded shuffle rounds
-    with per-round rotating checkpoints (no lineage growth, ≤ 1
-    superseded generation pinned at a time). ``max_degree`` is the
-    gr03 hub-cap semantics, applied ONCE to the input (dropped hubs
-    vanish from the graph before the first peel; the oracle
-    replicates the cap)."""
+    round at O(|E|^1.5) work with √(2|E|)-bounded arrays, and the
+    peel depth is single digits on real co-purchase data, so the
+    decomposition is R bounded shuffle rounds with per-round rotating
+    checkpoints (no lineage growth, ≤ 1 superseded generation pinned
+    at a time). ``max_degree`` is the gr03 hub-cap semantics, applied
+    ONCE to the input (dropped hubs vanish from the graph before the
+    first peel; the oracle replicates the cap)."""
     if k < 3:
         raise ValueError(
             f"k must be >= 3 (got {k}): a 2-truss is the whole graph "
@@ -473,90 +424,53 @@ def ktruss(
         e = e.join(
             hubs.withColumnRenamed("vertex", "a"), "a", "left_anti"
         ).join(hubs.withColumnRenamed("vertex", "b"), "b", "left_anti")
-    e, _owned = local_checkpoint_owned(e)
-    n_prev = e.count()
-    limit = max_rounds
-    r = 0
-    while True:
-        if rounds is not None and r >= rounds:
-            break
-        if rounds is None and limit is None and r >= _GUARD_CHECK_AT:
-            # lazy structural bound: a non-terminal peel removes >= 1
-            # edge, so |E|+1 further rounds is an upper bound
-            limit = e.count() + r + 1
-        if rounds is None and limit is not None and r >= limit:
-            # release before raise (see kcore)
-            _release(e, _owned)
-            raise RuntimeError(
-                f"ktruss: no fixpoint after {limit} rounds "
-                f"(edges remaining: {n_prev})"
-            )
+    obs0 = Observation()
+    e, _owned = local_checkpoint_owned(
+        e.observe(obs0, F.count(F.lit(1)).alias("_n"))
+    )
+    n_prev = obs0.get["_n"]
+    for _ in range(rounds):
         _own_round: list[int] = []
-        sup = edge_support(e, None, broadcast_adjacency, _own_round)
+        sup = edge_support(e, None, _own_round)
+        obs = Observation()
         e, _owned = rotate_local_checkpoint(
-            sup.filter(F.col("support") >= min_support).select("a", "b"),
+            sup.filter(F.col("support") >= min_support)
+            .select("a", "b")
+            .observe(obs, F.count(F.lit(1)).alias("_n")),
             _owned,
         )
         # the new edge set is materialized; this round's internal
-        # signature checkpoints (oriented edges + input copy) are no
-        # longer read by anything
+        # checkpoints (oriented edges + input copy) are no longer read
         _release(e, set(_own_round))
-        r += 1
-        n_new = e.count()
+        n_new = obs.get["_n"]
         if n_new == n_prev:
-            # fixpoint: in live mode this is the exit; in fixed mode
-            # the remaining rounds are no-ops (monotone peel), so the
-            # result equals the full sweep bit for bit
-            break
+            break  # fixpoint: the remaining rounds are no-ops
         n_prev = n_new
     # score the survivors within the truss; the final generation and
     # this last pass's internal checkpoints stay pinned — the
     # returned DataFrame reads them (the kcore/gr03 discipline)
-    return edge_support(e, None, broadcast_adjacency)
+    return edge_support(e)
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    rounds: int | None = None,
-    max_rounds: int | None = None,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983 /
     Batagelj–Zaveršnik, the degeneracy workhorse behind community
     cores, fraud-ring triage, and graph sparsification): repeatedly
-    drop every vertex whose current degree is < ``k`` until the
-    survivor set is stable. Input is an oriented undirected edge list
-    (columns ``a``, ``b``, a < b; deduplicated here). Returns
-    ``(vertex, core_degree)`` — the surviving vertices with their
-    degree inside the surviving edge set.
+    drop every vertex whose current degree is < ``k``. Input is an
+    oriented undirected edge list (columns ``a``, ``b``, a < b;
+    deduplicated here). Returns ``(vertex, core_degree)`` — the
+    surviving vertices with their degree inside the surviving edge
+    set.
 
-    Two modes, the gr01/ipf twin discipline:
-
-    - ``rounds=None`` (live): peel to the FIXPOINT, detected by the
-      edge count not shrinking (no edge lost ⇔ every surviving vertex
-      already has degree ≥ k). One ``count()`` action per round — the
-      rc01 fixpoint pattern — and a loud RuntimeError instead of
-      spinning when given an adversarial input. ``max_rounds=None``
-      (the default) derives the guard from the DATA: every
-      non-terminal peel round removes ≥ 1 vertex, so (surviving
-      |V|)+1 further rounds is a structural upper bound and any
-      overrun is a driver-side bug, never a legitimate deep graph
-      (ADVICE r9: the old fixed default of 60 rejected e.g. a
-      ~130-vertex path at k=2, which peels from both ends and
-      legitimately needs >60 rounds). The bound is priced LAZILY —
-      its count() job runs only if the loop passes
-      ``_GUARD_CHECK_AT`` rounds, so shallow peels never pay it.
-      Pass an int to cap cheaper when the peel depth is known.
-    - ``rounds=R`` (fixed sweep): exactly R peels — the result is
-      well-defined whether or not the fixpoint was reached, so an
-      unrolled-SQL oracle can state it exactly (and when R ≥ the
-      data's peel depth it IS the k-core). Peels after the fixpoint
-      are SKIPPED (r18, mirroring ktruss's fixed mode): the peel is
-      monotone (edges only leave), so an unchanged edge count means
-      every remaining round is a no-op and the result equals the full
-      sweep bit for bit. The per-round edge count rides the rotation
-      checkpoint as an ``observe`` metric — no extra jobs in either
-      mode (live mode's separate ``count()`` action folded in too).
+    Runs at most ``rounds`` peels — well-defined whether or not the
+    fixpoint was reached, so an unrolled-SQL oracle states the result
+    exactly, and when ``rounds`` ≥ the data's peel depth it IS the
+    k-core (``|V| + 1`` is always enough: every non-terminal peel
+    removes ≥ 1 vertex). Peels after the fixpoint are skipped: the
+    peel is monotone (edges only leave), so an unchanged edge count
+    makes every remaining round a no-op and the result equals the
+    full sweep bit for bit. The edge counts ride the input and
+    per-round checkpoints as ``observe`` metrics — no count jobs.
 
     Distributed shape: each round is one union-degree aggregation
     plus two semi-joins on the vertex key — all hash-partitioned on
@@ -568,10 +482,6 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    # the initial edge count rides the input checkpoint's
-    # materialization as an observe metric (r19, ADVICE r18: fixed
-    # mode briefly paid this as a separate count() job) — zero count
-    # actions in either mode now.
     obs0 = Observation()
     e, _owned = local_checkpoint_owned(
         edges.select("a", "b")
@@ -579,26 +489,7 @@ def kcore(
         .observe(obs0, F.count(F.lit(1)).alias("_n"))
     )
     n_prev = obs0.get["_n"]
-    limit = max_rounds
-    r = 0
-    while True:
-        if rounds is not None and r >= rounds:
-            break
-        if rounds is None and limit is None and r >= _GUARD_CHECK_AT:
-            # Derive the structural bound LAZILY: a non-terminal peel
-            # removes >= 1 vertex, so |V|+1 rounds is an upper bound —
-            # but the count() that prices it is only worth paying once
-            # the loop has already run unusually long (shallow peels,
-            # the common case, never reach here).
-            limit = vertex_degrees(e).count() + r + 1
-        if rounds is None and limit is not None and r >= limit:
-            # release before raise: callers that catch the error must
-            # not inherit this loop's pinned checkpoint generations
-            _release(e, _owned)
-            raise RuntimeError(
-                f"kcore: no fixpoint after {limit} rounds "
-                f"(edges remaining: {n_prev})"
-            )
+    for _ in range(rounds):
         deg = vertex_degrees(e)
         keep = deg.filter(F.col("degree") >= k).select("vertex")
         obs = Observation()
@@ -612,7 +503,6 @@ def kcore(
             .observe(obs, F.count(F.lit(1)).alias("_n")),
             _owned,
         )
-        r += 1
         n_new = obs.get["_n"]
         if n_new == n_prev:
             break  # fixpoint: no edge left this round, none ever will
@@ -623,10 +513,7 @@ def kcore(
 
 
 def bfs_distances(
-    edges: DataFrame,
-    sources: DataFrame,
-    rounds: int | None = None,
-    max_rounds: int | None = None,
+    edges: DataFrame, sources: DataFrame, rounds: int
 ) -> DataFrame:
     """Multi-source BFS hop distances — "distance to the nearest
     seed", the level-synchronous frontier expansion behind
@@ -636,23 +523,14 @@ def bfs_distances(
     column. Returns ``(vertex, hops)`` for every vertex reached —
     unreached vertices are absent, not NULL-padded.
 
-    Modes (the gr05/gr01/ipf twin discipline): ``rounds=None`` runs
-    to frontier exhaustion (one count per round), with a loud
-    runaway guard: ``max_rounds=None`` (default) derives the bound
-    from the DATA — every continuing level reaches ≥ 1 new vertex,
-    so |V|+1 levels is structural and any overrun is a driver bug,
-    never a legitimately deep graph (ADVICE r9: the old fixed 60
-    rejected seed eccentricity > 60, which is normal in large sparse
-    graphs); the bound's count() is priced lazily, only once the
-    loop passes ``_GUARD_CHECK_AT`` levels, so shallow expansions
-    never pay it; ``rounds=R`` expands exactly R levels — well-defined
-    at any R, equal to the fixpoint once R ≥ the graph's seed
-    eccentricity, and exactly what an unrolled-SQL oracle states.
-    Levels after frontier exhaustion are SKIPPED in fixed mode too
-    (r18, the ktruss discipline: an empty frontier makes every
-    remaining level a no-op, bit-identical result); the frontier size
-    rides each level's checkpoint as an ``observe`` metric, so neither
-    mode pays a separate count job.
+    Expands at most ``rounds`` levels — well-defined at any budget,
+    equal to the fixpoint once ``rounds`` ≥ the seeds' eccentricity
+    (``|V| + 1`` is always enough: every continuing level reaches
+    ≥ 1 new vertex), and exactly what an unrolled-SQL oracle states.
+    Levels after frontier exhaustion are skipped: an empty frontier
+    makes every remaining level a no-op, so the result is
+    bit-identical. The frontier size rides each level's checkpoint as
+    an ``observe`` metric — no count jobs.
 
     Distributed shape: each level is ONE frontier→edges equi-join +
     distinct + ONE anti-join against the visited set — all
@@ -675,28 +553,8 @@ def bfs_distances(
         .withColumn("hops", F.lit(0).cast("long"))
     )
     frontier = dist.select("vertex")
-    limit = max_rounds
     _owned_f: set[int] | None = None
-    r = 0
-    while True:
-        if rounds is not None and r >= rounds:
-            break
-        if rounds is None and limit is None and r >= _GUARD_CHECK_AT:
-            # lazy structural bound: a continuing level reaches >= 1
-            # new vertex, so |V|+1 total levels suffices; priced only
-            # once the loop has run unusually long
-            limit = sym.select("u").distinct().count() + 1
-        if rounds is None and limit is not None and r >= limit:
-            # release before raise (see kcore)
-            _release(
-                dist,
-                (_own_sym or set())
-                | (_owned_d or set())
-                | (_owned_f or set()),
-            )
-            raise RuntimeError(
-                f"bfs_distances: frontier alive after {limit} rounds"
-            )
+    for r in range(1, rounds + 1):
         obs = Observation()
         nxt, _owned_f = rotate_local_checkpoint(
             sym.join(
@@ -705,17 +563,11 @@ def bfs_distances(
             .select(F.col("v").alias("vertex"))
             .distinct()
             .join(dist.select("vertex"), "vertex", "left_anti")
-            # frontier size rides the checkpoint materialization (r18:
-            # replaces live mode's separate count() job and lets FIXED
-            # mode stop at exhaustion too — an empty frontier makes
-            # every remaining level a no-op, so the result equals the
-            # full R-level sweep bit for bit)
             .observe(obs, F.count(F.lit(1)).alias("_n")),
             _owned_f,
         )
-        r += 1
         if not obs.get["_n"]:
-            break
+            break  # frontier exhausted: the remaining levels are no-ops
         dist, _owned_d = rotate_local_checkpoint(
             dist.unionByName(
                 nxt.withColumn("hops", F.lit(r).cast("long"))
@@ -729,39 +581,27 @@ def bfs_distances(
     return dist
 
 
-def sssp(
-    edges: DataFrame,
-    sources: DataFrame,
-    rounds: int | None = None,
-    max_rounds: int | None = None,
-) -> DataFrame:
+def sssp(edges: DataFrame, sources: DataFrame, rounds: int) -> DataFrame:
     """Weighted multi-source single-source shortest paths by
     level-synchronous Bellman-Ford relaxation — :func:`bfs_distances`
-    with an integer edge cost in place of the unit hop (the classic
-    graph primitive the reachability/components/communities/cores/
-    trusses family still lacked). ``edges`` is an oriented undirected
-    edge list (``a``, ``b``, ``weight`` — positive integers, validated
-    loudly: a non-positive weight breaks both Bellman-Ford's
-    termination bound and the runaway guard); ``sources`` a DataFrame
-    with a ``vertex`` column. Returns ``(vertex, dist)`` — the
-    minimum total weight to the nearest seed — for every vertex
-    reached; unreached vertices are absent, never NULL-padded.
-    Parallel edges keep their cheapest weight (min on symmetrize).
+    with an integer edge cost in place of the unit hop. ``edges`` is
+    an oriented undirected edge list (``a``, ``b``, ``weight`` —
+    positive integers, validated loudly: a non-positive weight breaks
+    Bellman-Ford's termination bound); ``sources`` a DataFrame with a
+    ``vertex`` column. Returns ``(vertex, dist)`` — the minimum total
+    weight to the nearest seed — for every vertex reached; unreached
+    vertices are absent, never NULL-padded. Parallel edges keep their
+    cheapest weight (min on symmetrize).
 
-    Modes (the gr05/gr06 twin discipline): ``rounds=None`` relaxes to
-    the FIXPOINT, detected by a round improving or adding nothing
-    (the improved-count rides each round's checkpoint as an
-    ``observe`` metric — r18 folded away the former separate
-    anti-join count job); with positive weights every non-terminal
-    round finalizes ≥ 1 vertex, so the data-derived runaway bound is
-    |V|+1 rounds, priced lazily after ``_GUARD_CHECK_AT``.
-    ``rounds=R`` relaxes exactly R times — well-defined at any R,
-    equal to the fixpoint once R ≥ the hop depth of the shortest-path
-    forest (which can exceed the BFS eccentricity: a cheaper path may
-    use more hops), and exactly what the unrolled-SQL oracle states;
-    rounds past the fixpoint are SKIPPED (min-plus relaxation is
-    idempotent there, so the result equals the full sweep bit for
-    bit — the ktruss fixed-mode discipline).
+    Relaxes at most ``rounds`` times — well-defined at any budget,
+    equal to the fixpoint once ``rounds`` ≥ the hop depth of the
+    shortest-path forest (which can exceed the BFS eccentricity: a
+    cheaper path may use more hops; ``|V| + 1`` is always enough under
+    positive weights), and exactly what the unrolled-SQL oracle
+    states. Rounds past the fixpoint are skipped: min-plus relaxation
+    is idempotent there, so the result equals the full sweep bit for
+    bit. The improved-count rides each round's checkpoint as an
+    ``observe`` metric — no count jobs.
 
     Distributed shape: each round is ONE frontier→edges equi-join +
     ONE min-groupBy on the vertex key — linear in touched edges, all
@@ -772,7 +612,7 @@ def sssp(
     ``localCheckpoint`` keeps lineage flat and storage bounded."""
     # materialize the (possibly expensive) edge derivation ONCE: the
     # validation scan and the symmetrize both read this checkpoint,
-    # not two executions of the caller's plan (review r16)
+    # not two executions of the caller's plan
     e0, _own_e = local_checkpoint_owned(
         edges.select("a", "b", "weight")
     )
@@ -789,8 +629,7 @@ def sssp(
         raise ValueError(
             "sssp requires positive non-NULL integer weights: a "
             "non-positive weight voids Bellman-Ford's termination "
-            "bound and the |V|+1 runaway guard, and a fractional one "
-            "would be silently truncated"
+            "bound, and a fractional one would be silently truncated"
         )
     sym, _own_sym = local_checkpoint_owned(
         e0.select(
@@ -810,20 +649,7 @@ def sssp(
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
     )
-    r = 0
-    limit = max_rounds
-    while True:
-        if rounds is not None and r >= rounds:
-            break
-        if rounds is None and limit is None and r >= _GUARD_CHECK_AT:
-            # lazy structural bound: every non-terminal relaxation
-            # round finalizes >= 1 vertex under positive weights
-            limit = sym.select("u").distinct().count() + 1
-        if rounds is None and limit is not None and r >= limit:
-            _release(dist, (_own_sym or set()) | (_own_d or set()))
-            raise RuntimeError(
-                f"sssp: still relaxing after {limit} rounds"
-            )
+    for _ in range(rounds):
         relaxed = sym.join(
             dist.withColumnRenamed("vertex", "u"), "u"
         ).select(
@@ -832,12 +658,7 @@ def sssp(
         )
         # tag the self rows so the min-aggregate also yields the
         # PREVIOUS distance: a row improved iff it is new (_prev NULL)
-        # or strictly closer (distances only decrease). The improved
-        # count rides the checkpoint as an ``observe`` metric (r18) —
-        # replaces live mode's separate anti-join count job, and lets
-        # FIXED mode skip post-fixpoint rounds (min-plus relaxation is
-        # idempotent at the fixpoint, so the result equals the full
-        # R-round sweep bit for bit — the unrolled oracle's statement).
+        # or strictly closer (distances only decrease)
         obs = Observation()
         nxt, _own_n = local_checkpoint_owned(
             dist.withColumn("_self", F.lit(True))
@@ -860,21 +681,18 @@ def sssp(
             )
             .select("vertex", "dist")
         )
-        r += 1
         improved = obs.get["_improved"]
         _release(dist, _own_d)
         dist, _own_d = nxt, _own_n
         if not improved:
-            break
+            break  # fixpoint: the remaining rounds are no-ops
     # dist is materialized; the graph is no longer read by the result
     _release(dist, _own_sym or set())
     return dist
 
 
 def clustering_coefficients(
-    edges: DataFrame,
-    max_degree: int | None = None,
-    broadcast_adjacency: bool | None = None,
+    edges: DataFrame, max_degree: int | None = None
 ) -> DataFrame:
     """Local clustering coefficient per vertex — the triangle
     statistic communities are screened by: ``cc(v) = 2·tri(v) /
@@ -889,12 +707,9 @@ def clustering_coefficients(
     consistent with the triangles that survived the cap) — plus one
     left join of the per-vertex triangle credits back onto the
     degree table."""
-    e, deg, per_edge = _oriented_intersections(
-        edges, max_degree, broadcast_adjacency
-    )
-    # r19: HOF-free contribution stream — see :func:`triangle_counts`
-    # (one row per triangle, +1 per corner via a plain 3-array
-    # explode; the old transform-built struct array ran interpreted).
+    e, deg, per_edge = _oriented_intersections(edges, max_degree)
+    # HOF-free contribution stream — see :func:`triangle_counts` (one
+    # row per triangle, +1 per corner via a plain 3-array explode).
     tri_rows = per_edge.select("u", "v", F.explode("_ws").alias("w"))
     tri = (
         tri_rows.select(
@@ -937,9 +752,9 @@ def components_fixed(edges: DataFrame, rounds: int) -> DataFrame:
     Returns ``(vertex, component)`` with component = the minimum
     vertex id reachable within ``rounds`` hops.
 
-    Rounds AFTER the fixpoint are SKIPPED (r18, the ktruss fixed-mode
-    discipline): hash-min labels are monotone non-increasing and the
-    round operator is idempotent at the fixpoint, so once a round
+    Rounds AFTER the fixpoint are SKIPPED (as in :func:`ktruss`):
+    hash-min labels are monotone non-increasing and the round
+    operator is idempotent at the fixpoint, so once a round
     changes no label every remaining round is a no-op and the result
     is bit-identical to running all ``rounds`` (exactly what the
     unrolled oracle states). The changed-count rides the round's own
@@ -1004,11 +819,7 @@ def components_fixed(edges: DataFrame, rounds: int) -> DataFrame:
     return labels
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int | None = None,
-    max_rounds: int | None = None,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007, the near-linear community baseline behind modularity
     seeding, spam-cluster triage, and catalog grouping): every vertex
@@ -1020,25 +831,13 @@ def label_propagation(
     the 2-cycle oscillation synchronous LPA is prone to on bipartite
     structures. Input is an undirected edge list (columns ``a``,
     ``b``; symmetrized and deduplicated here). Returns ``(vertex,
-    community)`` — community = the converged (or round-``rounds``)
-    label.
+    community)`` — community = the round-``rounds`` label.
 
-    Two modes, the gr01/ipf/kcore twin discipline:
-
-    - ``rounds=None`` (live): iterate to the FIXPOINT, detected by a
-      zero changed-label count — one count() action per round, the
-      rc01 fixpoint pattern — with a loud RuntimeError instead of
-      spinning on a (theoretically possible) oscillating input.
-      ``max_rounds=None`` derives the guard lazily at
-      ``_GUARD_CHECK_AT`` rounds from the vertex count (label
-      propagation converges in O(diameter)-ish rounds on real graphs;
-      |V|+1 spent rounds means oscillation, never a legitimate deep
-      graph).
-    - ``rounds=R`` (fixed sweep): exactly R rounds, NO count actions —
-      well-defined whether or not the fixpoint was reached, so an
-      unrolled-SQL oracle can state the result exactly (and when R ≥
-      the data's convergence depth it IS the fixpoint; a pytest pins
-      fixed == live at the test SFs).
+    Runs exactly ``rounds`` rounds with no count actions — well-defined
+    whether or not the fixpoint was reached, so an unrolled-SQL oracle
+    states the result exactly; once ``rounds`` ≥ the data's
+    convergence depth the result IS the fixpoint (the update is
+    idempotent there).
 
     Distributed shape: per round ONE vertex-keyed equi-join (labels
     onto out-edges) + ONE (vertex, label) count + ONE vertex-keyed
@@ -1060,24 +859,11 @@ def label_propagation(
         .distinct()
         .select("vertex", F.col("vertex").alias("label"))
     )
-    limit = max_rounds
-    r = 0
-    while True:
-        if rounds is not None and r >= rounds:
-            break
-        if rounds is None and limit is None and r >= _GUARD_CHECK_AT:
-            limit = labels.count() + r + 1
-        if rounds is None and limit is not None and r >= limit:
-            # release before raise (see kcore)
-            _release(labels, (_own_e or set()) | (_owned or set()))
-            raise RuntimeError(
-                f"label_propagation: no fixpoint after {limit} rounds "
-                "(synchronous oscillation?)"
-            )
+    for _ in range(rounds):
         neighbor = e.join(
             labels, e.a == labels.vertex
         ).select(F.col("b").alias("vertex"), "label")
-        new_labels, _owned_new = rotate_local_checkpoint(
+        labels, _owned = rotate_local_checkpoint(
             labels.unionByName(neighbor)  # self-vote + neighbor votes
             .groupBy("vertex", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1091,25 +877,8 @@ def label_propagation(
                 ).alias("_best")
             )
             .select("vertex", F.col("_best.label").alias("label")),
-            None,  # the old labels are still read by the changed-count
+            _owned,
         )
-        r += 1
-        changed = (
-            (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "vertex")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            if rounds is None
-            else None
-        )
-        # deferred release: the changed-count above still read the
-        # old generation after the new checkpoint materialized
-        _release(labels, _owned)
-        labels, _owned = new_labels, _owned_new
-        if changed == 0:
-            break
     # the final labels are materialized; the graph is no longer read
     _release(labels, _own_e)
     return labels.select("vertex", F.col("label").alias("community"))

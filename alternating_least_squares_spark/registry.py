@@ -3791,19 +3791,6 @@ def q_m02_als_implicit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embeddings (vector math)
 
 
-def _vec_dot_d(a: Column, b: Column) -> Column:
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _vec_norm_d(a: Column) -> Column:
-    ad = F.transform(a, lambda x: x.cast("double"))
-    return F.sqrt(F.aggregate(ad, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 DOT_SQL = (
     "list_sum(list_transform(range(64), "
     "i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)))"
@@ -3815,6 +3802,11 @@ NORM_SQL = (
 
 
 def q_v01_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from alternating_least_squares_spark.functions.similarity import (
+        vec_dot,
+        vec_norm,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
     a = emb.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea")
@@ -3825,8 +3817,8 @@ def q_v01_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("eb"),
     )
     joined = a.join(b, "id_a")
-    cos = _vec_dot_d(F.col("ea"), F.col("eb")) / (
-        _vec_norm_d(F.col("ea")) * _vec_norm_d(F.col("eb"))
+    cos = vec_dot(F.col("ea"), F.col("eb")) / (
+        vec_norm(F.col("ea")) * vec_norm(F.col("eb"))
     )
     return joined.select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
 
@@ -3845,14 +3837,19 @@ def q_v02_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rank by (rounded cosine DESC, neighbor id) so ordering is
     deterministic across engines. The LSH-bucketed variant for scale is
     ``functions/similarity.py`` (rows-only check)."""
+    from alternating_least_squares_spark.functions.similarity import (
+        vec_dot,
+        vec_norm,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq")
     )
     n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("en"))
     pairs = q.crossJoin(n).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = _vec_dot_d(F.col("eq"), F.col("en")) / (
-        _vec_norm_d(F.col("eq")) * _vec_norm_d(F.col("en"))
+    cos = vec_dot(F.col("eq"), F.col("en")) / (
+        vec_norm(F.col("eq")) * vec_norm(F.col("en"))
     )
     scored = pairs.select(
         "query_id", "neighbor_id", F.round(cos, 6).alias("cosine")
@@ -10592,11 +10589,10 @@ def q_gr05_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-core fixpoint at sf0.01). Exactly GR05_ROUNDS peel rounds on
     both sides — the gr01/ipf fixed-sweep discipline, well-defined
     whether or not the fixpoint has been reached, and ≥ the measured
-    peel depth at both test SFs so the result here IS the 3-core.
-    The live fixpoint mode (rounds=None, edge-count early exit, loud
-    max_rounds guard) is exercised by tests/test_graph.py, which
-    pins fixed-sweep == fixpoint on this data and brute-force parity
-    on random graphs."""
+    peel depth at both test SFs so the result here IS the 3-core;
+    tests/test_graph.py pins this budget's result equal to a
+    structural |V|+1 budget on this data, and brute-force parity on
+    random graphs."""
     from alternating_least_squares_spark.operators.graph import kcore
 
     edges = _support_edges(spark, sf_dir)
@@ -10667,11 +10663,9 @@ def q_gr10_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides — the gr01/ipf fixed-sweep discipline, ≥ the measured
     peel depth at both test SFs (7 at sf0.01, where the peel drops
     96% of edges; 0 at sf0.001, whose capped graph has min support
-    13), so the hash-checked result IS the 10-truss there. Live
-    fixpoint mode (edge-count early exit, lazy structural guard,
-    release-before-raise) is exercised by tests/test_graph.py via
-    brute-force parity on random graphs. Returns (a, b, support)
-    with support scored inside the truss."""
+    13), so the hash-checked result IS the 10-truss there;
+    tests/test_graph.py pins brute-force parity on random graphs.
+    Returns (a, b, support) with support scored inside the truss."""
     from alternating_least_squares_spark.operators.graph import ktruss
 
     return ktruss(
@@ -10758,8 +10752,8 @@ def q_gr06_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance table there; fragmentary graphs (sf0.1's support graph
     is mostly small components) simply reach fewer vertices — absent,
     never NULL-padded — and the fixed sweep keeps both sides agreeing
-    at ANY regeneration. Live frontier-exhaustion mode is exercised
-    by tests/test_graph.py (brute-force parity on random graphs)."""
+    at ANY regeneration. tests/test_graph.py pins brute-force parity
+    on random graphs."""
     from alternating_least_squares_spark.operators.graph import (
         bfs_distances,
     )
@@ -10859,10 +10853,9 @@ def q_gr11_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-path-forest hop depth at both test SFs (8 at sf0.01, 4
     at sf0.001 — weighted depth can exceed the BFS eccentricity, so
     the margin is wider than gr06's), making the hash-checked result
-    the true distance table there; the live fixpoint mode (improved
-    == 0 early exit, |V|+1 runaway guard, rotating checkpoints) is
-    pinned equal to the fixed sweep on this data and brute-force
-    Dijkstra parity on random graphs by tests/test_graph.py."""
+    the true distance table there; tests/test_graph.py pins this
+    budget's result equal to a structural |V|+1 budget on this data,
+    and brute-force Dijkstra parity on random graphs."""
     from alternating_least_squares_spark.operators.graph import sssp
 
     edges = _support_weighted_edges(spark, sf_dir)
@@ -11006,8 +10999,8 @@ def q_gr09_label_propagation(
     same graph). Exactly GR09_ROUNDS=8 synchronous rounds on both
     sides — ≥ the measured convergence depth at both test SFs (4 at
     sf0.001, 6 at sf0.01), so the hash-checked result here IS the
-    fixpoint; fixed-sweep == the live convergence loop is pinned by
-    pytest. Same Pregel-as-DataFrames shape as gr01/gr05/gr08: per
+    fixpoint; pytest pins this budget's result equal to a much larger
+    one. Same Pregel-as-DataFrames shape as gr01/gr05/gr08: per
     round one vertex-keyed join, one (vertex, label) count, one
     vertex-keyed deterministic argmax (min of a (-count, label)
     struct — partial-agg friendly, no window sort), per-round

@@ -777,29 +777,23 @@ def _apply_cdc_batch(
     return True
 
 
-#: Default number of STATE partitions for replayed streams, read from
-#: ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS``. Streaming shuffles are
-#: exempt from AQE coalescing and the count is FROZEN into the
+#: Number of STATE partitions for replayed streams. Streaming shuffles
+#: are exempt from AQE coalescing and the count is FROZEN into the
 #: checkpoint at first start, so unlike batch it cannot self-correct:
 #: every stateful micro-batch pays a fixed per-partition cost (state
-#: store open + delta commit + task round) regardless of data. Size it
-#: to the keyed-state volume (≈ state_bytes / target partition size),
-#: not to the core count — the watermark bounds live state to (active
-#: windows × keys), so the bench fixtures' state is KB-scale and 8
-#: partitions already over-provisions it; a production deployment with
-#: e.g. 10⁹ user keys sets the env (or passes ``state_partitions``)
-#: upward. Measured at sf0.1/local[32], alternating: st01 micro-batch
-#: 3.1–4.7 s at 32 state partitions vs 0.7–1.2 s at 8 with identical
-#: results; st11 6.5 s vs 3.8 s.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+#: store open + delta commit + task round) regardless of data. It is
+#: sized to the keyed-state volume (≈ state_bytes / target partition
+#: size), not to the core count — the watermark bounds live state to
+#: (active windows × keys), so the bench fixtures' state is KB-scale
+#: and 8 partitions already over-provisions it. Measured at
+#: sf0.1/local[32], alternating: st01 micro-batch 3.1–4.7 s at 32
+#: state partitions vs 0.7–1.2 s at 8 with identical results; st11
+#: 6.5 s vs 3.8 s.
+STREAM_STATE_PARTITIONS = 8
 
 
 def run_stream_to_batch(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
+    stream_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Replay the stream to completion (``Trigger.AvailableNow``) into
     an in-memory sink and return the final result as a batch DataFrame.
@@ -810,21 +804,20 @@ def run_stream_to_batch(
     (append mode would hold the final windows open — there is no
     later batch to close them in a replay).
 
-    ``state_partitions`` (default :data:`STREAM_STATE_PARTITIONS`)
-    pins the stream's state-partition count for the replay —
-    ``spark.sql.shuffle.partitions`` is set for the query's lifetime
-    and restored after (the value a stream starts with is the one its
-    checkpoint keeps forever, so it must be chosen deliberately; see
-    the constant's docstring for the sizing rule). Partitioning never
-    changes WHAT a keyed aggregation computes — replay == batch holds
-    at any count — only how many state-store tasks each micro-batch
-    schedules."""
-    if state_partitions is None:
-        state_partitions = STREAM_STATE_PARTITIONS
+    The replay pins the stream's state-partition count to
+    :data:`STREAM_STATE_PARTITIONS` — ``spark.sql.shuffle.partitions``
+    is set for the query's lifetime and restored after (the value a
+    stream starts with is the one its checkpoint keeps forever, so it
+    must be chosen deliberately; see the constant's docstring for the
+    sizing rule). Partitioning never changes WHAT a keyed aggregation
+    computes — replay == batch holds at any count — only how many
+    state-store tasks each micro-batch schedules."""
     spark = stream_df.sparkSession
     name = f"stream_replay_{uuid.uuid4().hex[:12]}"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    )
     try:
         query = (
             stream_df.writeStream.format("memory")

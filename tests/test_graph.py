@@ -148,6 +148,7 @@ def test_triangle_counts_match_brute_force(spark, raw, cap):
     from collections import Counter
     from itertools import combinations
 
+    from alternating_least_squares_spark.operators import graph
     from alternating_least_squares_spark.operators.graph import (
         triangle_counts,
     )
@@ -187,17 +188,22 @@ def test_triangle_counts_match_brute_force(spark, raw, cap):
 
     # the scale path (shuffled-hash joins, no adjacency broadcast)
     # must be result-identical to the gated fast path
-    got_shuffled = {
-        r["part"]: r["n_triangles"]
-        for r in triangle_counts(df, broadcast_adjacency=False).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "BROADCAST_EDGE_LIMIT", 0)
+        got_shuffled = {
+            r["part"]: r["n_triangles"]
+            for r in triangle_counts(df).collect()
+        }
     assert got_shuffled == brute(edges)
 
 
-def test_triangle_scale_path_matches_broadcast_on_planted_graph(spark):
+def test_triangle_scale_path_matches_broadcast_on_planted_graph(
+    spark, monkeypatch
+):
     """Deterministic twin of the property test's scale-path check on
     a denser planted graph (K6 ∪ K4 sharing vertex 5 + a pendant):
     both join strategies, same counts."""
+    from alternating_least_squares_spark.operators import graph
     from alternating_least_squares_spark.operators.graph import (
         triangle_counts,
     )
@@ -209,11 +215,13 @@ def test_triangle_scale_path_matches_broadcast_on_planted_graph(spark):
     )
     fast = {
         r["part"]: r["n_triangles"]
-        for r in triangle_counts(df, broadcast_adjacency=True).collect()
+        for r in triangle_counts(df).collect()
     }
+    # a zero size gate forces the shuffled-hash scale path
+    monkeypatch.setattr(graph, "BROADCAST_EDGE_LIMIT", 0)
     scale = {
         r["part"]: r["n_triangles"]
-        for r in triangle_counts(df, broadcast_adjacency=False).collect()
+        for r in triangle_counts(df).collect()
     }
     # K6: C(5,2)=10 per vertex; K4: 3 per vertex; vertex 5 is in both
     expect = {v: 10 for v in range(6)} | {10: 3, 11: 3, 12: 3}
@@ -222,10 +230,11 @@ def test_triangle_scale_path_matches_broadcast_on_planted_graph(spark):
     assert scale == expect
 
 
-def test_edge_neighborhood_scores_hand_computed(spark):
+def test_edge_neighborhood_scores_hand_computed(spark, monkeypatch):
     """gr04's operator on K4 + pendant: every K4 edge has the 2 other
     vertices in common (union = 3+3-2=4 ... with endpoints in each
     other's neighborhoods); the pendant edge shares nothing."""
+    from alternating_least_squares_spark.operators import graph
     from alternating_least_squares_spark.operators.graph import (
         edge_neighborhood_scores,
     )
@@ -244,11 +253,10 @@ def test_edge_neighborhood_scores_hand_computed(spark):
     assert got[(4, 9)] == (0, 0.0)
     assert len(got) == 7
 
+    monkeypatch.setattr(graph, "BROADCAST_EDGE_LIMIT", 0)
     scale = {
         (r["a"], r["b"]): (r["common"], r["jaccard"])
-        for r in edge_neighborhood_scores(
-            df, broadcast_adjacency=False
-        ).collect()
+        for r in edge_neighborhood_scores(df).collect()
     }
     assert scale == got
 
@@ -288,14 +296,14 @@ def test_kcore_hand_computed(spark):
              (4, 5), (5, 6)]
     df = spark.createDataFrame(edges, "a long, b long")
     got = {r["vertex"]: r["core_degree"]
-           for r in kcore(df, k=3).collect()}
+           for r in kcore(df, k=3, rounds=7).collect()}  # |V| + 1
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
 def test_kcore_fixed_sweep_matches_fixpoint_once_deep_enough(spark):
-    """The fixed-sweep twin equals the live fixpoint as soon as
-    rounds >= the peel depth — and a too-shallow sweep is the
-    documented mid-peel snapshot, not an error."""
+    """A budget >= the peel depth equals the structural |V|+1 budget
+    — and a too-shallow budget is the documented mid-peel snapshot,
+    not an error."""
     from alternating_least_squares_spark.operators.graph import kcore
 
     # chain 0-1-2-3-4-5 plus a triangle 10,11,12: 2-core = triangle,
@@ -303,12 +311,13 @@ def test_kcore_fixed_sweep_matches_fixpoint_once_deep_enough(spark):
     edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5),
              (10, 11), (10, 12), (11, 12)]
     df = spark.createDataFrame(edges, "a long, b long")
-    live = {(r["vertex"], r["core_degree"])
-            for r in kcore(df, k=2).collect()}
-    assert live == {(10, 2), (11, 2), (12, 2)}
+    n_vertices = len({v for e in edges for v in e})
+    full = {(r["vertex"], r["core_degree"])
+            for r in kcore(df, k=2, rounds=n_vertices + 1).collect()}
+    assert full == {(10, 2), (11, 2), (12, 2)}
     deep = {(r["vertex"], r["core_degree"])
             for r in kcore(df, k=2, rounds=6).collect()}
-    assert deep == live
+    assert deep == full
     shallow = {(r["vertex"], r["core_degree"])
                for r in kcore(df, k=2, rounds=1).collect()}
     # one peel only removes the chain ENDS (0 and 5)
@@ -320,35 +329,32 @@ def test_kcore_validates_and_guards(spark):
 
     df = spark.createDataFrame([(1, 2)], "a long, b long")
     with pytest.raises(ValueError):
-        kcore(df, k=0)
-    with pytest.raises(RuntimeError):
-        # an explicit max_rounds=0 trips the loud guard before any peel
-        kcore(df, k=2, max_rounds=0)
+        kcore(df, k=0, rounds=3)
 
 
-def test_deep_graphs_pass_the_default_runaway_guard(spark):
-    """ADVICE r9: the old fixed ``max_rounds=60`` default rejected
-    LEGITIMATE deep graphs — a long path at k=2 peels one vertex off
-    each end per round, and a far seed has eccentricity > 60 in any
-    large sparse graph. The default guard is now the structural
-    |V|+1 bound derived from the input, so both must complete."""
+def test_deep_paths_converge_within_a_structural_budget(spark):
+    """Deep graphs need deep budgets, and the structural |V|+1 budget
+    always suffices: a long path at k=2 peels one vertex off each end
+    per round (62 rounds here), and a seed at the end of a path has
+    eccentricity |V|-1 (62 here). Both must reach the fixpoint."""
     from alternating_least_squares_spark.operators.graph import (
         bfs_distances,
         kcore,
     )
 
-    # 124-vertex path: k=2 peels both ends -> 62 live rounds (> 60)
+    # 124-vertex path: k=2 peels both ends -> 62 changing rounds
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(123)], "a long, b long"
     )
-    assert kcore(path, k=2).count() == 0  # a path has no 2-core
-    # seed at one end of a 63-vertex path: eccentricity 62 (> 60)
+    # a path has no 2-core
+    assert kcore(path, k=2, rounds=124 + 1).count() == 0
+    # seed at one end of a 63-vertex path: eccentricity 62
     seeds = spark.createDataFrame([(0,)], "vertex long")
     sub = spark.createDataFrame(
         [(i, i + 1) for i in range(62)], "a long, b long"
     )
     got = {r["vertex"]: r["hops"] for r in
-           bfs_distances(sub, seeds).collect()}
+           bfs_distances(sub, seeds, rounds=63 + 1).collect()}
     assert len(got) == 63 and got[62] == 62
 
 
@@ -379,8 +385,9 @@ def test_kcore_matches_brute_force(spark, raw, k):
                 return set()
 
     df = spark.createDataFrame(edges, "a long, b long")
+    n_vertices = len({v for e in edges for v in e})
     got = {(r["vertex"], r["core_degree"])
-           for r in kcore(df, k=k).collect()}
+           for r in kcore(df, k=k, rounds=n_vertices + 1).collect()}
     assert got == brute(edges, k)
 
 
@@ -396,7 +403,7 @@ def test_bfs_distances_hand_computed(spark):
     )
     seeds = spark.createDataFrame([(1,)], "vertex long")
     got = {r["vertex"]: r["hops"]
-           for r in bfs_distances(edges, seeds).collect()}
+           for r in bfs_distances(edges, seeds, rounds=7).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
@@ -415,17 +422,6 @@ def test_bfs_fixed_sweep_truncates_then_matches(spark):
     five = {r["vertex"]: r["hops"]
             for r in bfs_distances(edges, seeds, rounds=5).collect()}
     assert five == {1: 0, 2: 1, 3: 2, 4: 3}
-
-
-def test_bfs_guard_raises(spark):
-    from alternating_least_squares_spark.operators.graph import (
-        bfs_distances,
-    )
-
-    edges = spark.createDataFrame([(1, 2)], "a long, b long")
-    seeds = spark.createDataFrame([(1,)], "vertex long")
-    with pytest.raises(RuntimeError):
-        bfs_distances(edges, seeds, max_rounds=0)
 
 
 @settings(max_examples=8, deadline=None)
@@ -459,8 +455,10 @@ def test_bfs_matches_brute_force(spark, raw, smod):
     df = spark.createDataFrame(edges, "a long, b long")
     seeds = spark.createDataFrame([(v,) for v in seed_list] or [(None,)],
                                   "vertex long").filter("vertex IS NOT NULL")
-    got = {r["vertex"]: r["hops"]
-           for r in bfs_distances(df, seeds).collect()}
+    got = {
+        r["vertex"]: r["hops"]
+        for r in bfs_distances(df, seeds, rounds=len(verts) + 1).collect()
+    }
     assert got == brute()
 
 
@@ -540,6 +538,7 @@ def test_edge_neighborhood_scores_match_brute_force(spark, raw):
     """Any random graph: per-edge common-neighbor counts and Jaccard
     from the oriented-credit formulation must equal the brute-force
     neighborhood intersection, on BOTH join strategies."""
+    from alternating_least_squares_spark.operators import graph
     from alternating_least_squares_spark.operators.graph import (
         edge_neighborhood_scores,
     )
@@ -559,14 +558,15 @@ def test_edge_neighborhood_scores_match_brute_force(spark, raw):
         return out
 
     df = spark.createDataFrame(edges, "a long, b long")
-    for strategy in (True, False):
-        got = {
-            (r["a"], r["b"]): (r["common"], r["jaccard"])
-            for r in edge_neighborhood_scores(
-                df, broadcast_adjacency=strategy
-            ).collect()
-        }
-        assert got == brute(), f"broadcast_adjacency={strategy}"
+    # the default gate broadcasts; a zero gate forces shuffled-hash
+    for limit in (graph.BROADCAST_EDGE_LIMIT, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "BROADCAST_EDGE_LIMIT", limit)
+            got = {
+                (r["a"], r["b"]): (r["common"], r["jaccard"])
+                for r in edge_neighborhood_scores(df).collect()
+            }
+        assert got == brute(), f"BROADCAST_EDGE_LIMIT={limit}"
 
 
 @settings(max_examples=6, deadline=None)
@@ -719,22 +719,23 @@ def test_label_propagation_hand_computed(spark):
         for r in label_propagation(edges, rounds=4).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
-    # and the live fixpoint loop lands on the same answer
-    live = {
+    # and a |V|+1 budget lands on the same answer
+    full = {
         r["vertex"]: r["community"]
-        for r in label_propagation(edges).collect()
+        for r in label_propagation(edges, rounds=7).collect()
     }
-    assert live == got
+    assert full == got
 
 
 def test_gr09_fixed_sweep_equals_live_convergence(spark):
     """GR09_ROUNDS must cover the support graph's LPA convergence
-    depth at the test SF: the fixed sweep must equal the live
-    fixpoint loop (changed-count early exit, loud guard)."""
+    depth at the test SF: the registry's budget must equal a budget
+    four times as large."""
     from alternating_least_squares_spark.operators.graph import (
         label_propagation,
     )
     from alternating_least_squares_spark.registry import (
+        GR09_ROUNDS,
         _support_edges,
         q_gr09_label_propagation,
     )
@@ -744,26 +745,13 @@ def test_gr09_fixed_sweep_equals_live_convergence(spark):
         (r["part"], r["community"])
         for r in q_gr09_label_propagation(spark, SF_SMALL).collect()
     }
-    live = {
+    far = {
         (r["vertex"], r["community"])
-        for r in label_propagation(_support_edges(spark, SF_SMALL)).collect()
+        for r in label_propagation(
+            _support_edges(spark, SF_SMALL), rounds=4 * GR09_ROUNDS
+        ).collect()
     }
-    assert got == live and got
-
-
-def test_label_propagation_guard_raises(spark):
-    """max_rounds below the convergence depth must fail loudly (the
-    kcore/bfs guard discipline), never return a silent under-sweep
-    from the live mode."""
-    from alternating_least_squares_spark.operators.graph import (
-        label_propagation,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "a: long, b: long"
-    )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        label_propagation(edges, max_rounds=1)
+    assert got == far and got
 
 
 @settings(max_examples=8, deadline=None)
@@ -836,7 +824,7 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
     assert leaked <= 2, leaked
 
     before = len(jsc.getPersistentRDDs())
-    label_propagation(edges).write.format("noop").mode(
+    label_propagation(edges, rounds=16).write.format("noop").mode(
         "overwrite"
     ).save()
     leaked = len(jsc.getPersistentRDDs()) - before
@@ -869,14 +857,16 @@ def test_ktruss_matches_brute_force(spark, raw, k):
 
     edges = sorted({(min(a, b), max(a, b)) for a, b in raw})
     df = spark.createDataFrame(edges, "a long, b long")
-    got = {(r["a"], r["b"]): r["support"] for r in ktruss(df, k).collect()}
+    got = {
+        (r["a"], r["b"]): r["support"]
+        for r in ktruss(df, k, rounds=len(edges) + 1).collect()
+    }
     assert got == _py_ktruss(edges, k)
 
 
 def test_ktruss_fixed_sweep_matches_fixpoint_once_deep_enough(spark):
-    """The gr10 twin discipline: rounds >= peel depth makes the fixed
-    sweep identical to the live fixpoint (and extra rounds change
-    nothing once converged)."""
+    """A budget >= the peel depth equals the structural |E|+1 budget
+    (extra rounds change nothing once converged)."""
     from alternating_least_squares_spark.operators.graph import ktruss
 
     # two 4-cliques sharing a vertex plus a pendant path: the path
@@ -887,15 +877,17 @@ def test_ktruss_fixed_sweep_matches_fixpoint_once_deep_enough(spark):
     df = spark.createDataFrame(
         sorted(set(clique1 + clique2 + path)), "a long, b long"
     )
-    live = sorted(
-        (r["a"], r["b"], r["support"]) for r in ktruss(df, 4).collect()
+    n_edges = len(set(clique1 + clique2 + path))
+    full = sorted(
+        (r["a"], r["b"], r["support"])
+        for r in ktruss(df, 4, rounds=n_edges + 1).collect()
     )
     fixed = sorted(
         (r["a"], r["b"], r["support"])
         for r in ktruss(df, 4, rounds=6).collect()
     )
-    assert live == fixed
-    assert len(live) == len(clique1) + len(clique2)
+    assert full == fixed
+    assert len(full) == len(clique1) + len(clique2)
 
 
 def test_ktruss_validates_guards_and_releases(spark):
@@ -906,19 +898,47 @@ def test_ktruss_validates_guards_and_releases(spark):
         "a long, b long",
     )
     with pytest.raises(ValueError, match="k must be >= 3"):
-        ktruss(df, k=2)
+        ktruss(df, k=2, rounds=7)
     jsc = spark.sparkContext._jsc
     before = len(jsc.getPersistentRDDs())
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        # an explicit max_rounds=0 trips the loud guard before any peel
-        ktruss(df, k=3, max_rounds=0)
-    # release-before-raise: the guard path leaks nothing (<= 0: the
-    # shared session's ContextCleaner may release unrelated RDDs)
-    assert len(jsc.getPersistentRDDs()) - before <= 0
-    before = len(jsc.getPersistentRDDs())
-    ktruss(df, k=4).write.format("noop").mode("overwrite").save()
+    ktruss(df, k=4, rounds=7).write.format("noop").mode(
+        "overwrite"
+    ).save()
     # only the final generation + final scoring pass may stay pinned
     assert len(jsc.getPersistentRDDs()) - before <= 3
+
+
+def test_ktruss_runs_no_count_jobs(spark):
+    """ktruss's edge counts ride its checkpoints as ``observe``
+    metrics, so the call runs no count() job. The fixture peels
+    twice (the fan's support-1 edges, then its stranded spine) and
+    stops at round 3. Its jobs are 13 outside the loop (the input
+    checkpoint, the final scoring pass and the collect) plus 11 per
+    round (edge_support's two checkpoints and the rotated edge set).
+    A count() costs 2 jobs here (partial count + final), so one per
+    round plus the initial one would add 8."""
+    from alternating_least_squares_spark.operators.graph import ktruss
+
+    cliques = [(a, b) for a in range(4) for b in range(a + 1, 4)] + [
+        (a, b) for a in range(3, 7) for b in range(a + 1, 7)
+    ]
+    fan = [(10, 11), (11, 12), (10, 12), (12, 13), (11, 13), (13, 14),
+           (12, 14)]
+    edges = sorted(set(cliques + fan))
+    df = spark.createDataFrame(edges, "a long, b long")
+    sc = spark.sparkContext
+    group = "test_ktruss_runs_no_count_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = {
+            (r["a"], r["b"]): r["support"]
+            for r in ktruss(df, 4, rounds=len(edges) + 1).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _py_ktruss(edges, 4)
+    assert len(got) == len(cliques)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 13 + 3 * 11
 
 
 def test_sssp_hand_computed_weighted_beats_hops(spark):
@@ -933,7 +953,10 @@ def test_sssp_hand_computed_weighted_beats_hops(spark):
         "a long, b long, weight long",
     )
     seeds = spark.createDataFrame([(1,)], "vertex long")
-    got = {r["vertex"]: r["dist"] for r in sssp(edges, seeds).collect()}
+    got = {
+        r["vertex"]: r["dist"]
+        for r in sssp(edges, seeds, rounds=6).collect()  # |V| + 1
+    }
     assert got == {1: 0, 2: 2, 3: 4}
 
 
@@ -963,6 +986,7 @@ def test_sssp_validates_and_guards(spark):
         sssp(
             spark.createDataFrame([(1, 2, 0)], "a long, b long, weight long"),
             seeds,
+            rounds=3,
         )
     with pytest.raises(ValueError, match="positive non-NULL"):
         sssp(
@@ -970,20 +994,16 @@ def test_sssp_validates_and_guards(spark):
                 [(1, 2, None)], "a long, b long, weight long"
             ),
             seeds,
-        )
-    with pytest.raises(RuntimeError, match="still relaxing"):
-        sssp(
-            spark.createDataFrame([(1, 2, 1)], "a long, b long, weight long"),
-            seeds,
-            max_rounds=0,
+            rounds=3,
         )
 
 
 def test_gr11_fixed_sweep_equals_live_fixpoint(spark):
     """The GR11_ROUNDS=10 unroll must BE the fixpoint on the real
-    fixture (measured hop depth 4 at sf0.001) — the gr05/gr08 pinning
-    discipline that keeps the driver hash meaning 'true distances',
-    not 'prefix of a loop'."""
+    fixture (measured hop depth 4 at sf0.001): it equals the
+    structural |V|+1 budget — the gr05/gr08 pinning discipline that
+    keeps the oracle hash meaning 'true distances', not 'prefix of a
+    loop'."""
     from alternating_least_squares_spark.operators.graph import sssp
     from alternating_least_squares_spark.registry import (
         GR11_ROUNDS,
@@ -1000,11 +1020,18 @@ def test_gr11_fixed_sweep_equals_live_fixpoint(spark):
         .distinct()
         .filter(F.col("vertex") % GR11_SEED_MOD == 0)
     )
+    n_vertices = (
+        edges.select(F.col("a").alias("v"))
+        .union(edges.select(F.col("b").alias("v")))
+        .distinct()
+        .count()
+    )
     fixed = {(r["vertex"], r["dist"])
              for r in sssp(edges, seeds, rounds=GR11_ROUNDS).collect()}
-    live = {(r["vertex"], r["dist"])
-            for r in sssp(edges, seeds).collect()}
-    assert fixed and fixed == live
+    full = {(r["vertex"], r["dist"])
+            for r in sssp(edges, seeds, rounds=n_vertices + 1).collect()}
+    assert n_vertices + 1 > GR11_ROUNDS
+    assert fixed and fixed == full
 
 
 @settings(max_examples=8, deadline=None)
@@ -1050,7 +1077,10 @@ def test_sssp_matches_brute_force_dijkstra(spark, raw, smod, wseed):
     seeds = spark.createDataFrame(
         [(v,) for v in seed_list] or [(None,)], "vertex long"
     ).filter("vertex IS NOT NULL")
-    got = {r["vertex"]: r["dist"] for r in sssp(df, seeds).collect()}
+    got = {
+        r["vertex"]: r["dist"]
+        for r in sssp(df, seeds, rounds=len(verts) + 1).collect()
+    }
     assert got == brute()
 
 
@@ -1067,6 +1097,7 @@ def test_sssp_rejects_fractional_weights(spark):
                 [(1, 2, 2.9)], "a long, b long, weight double"
             ),
             seeds,
+            rounds=3,
         )
     # integral-valued doubles are fine
     got = {
@@ -1076,6 +1107,7 @@ def test_sssp_rejects_fractional_weights(spark):
                 [(1, 2, 2.0)], "a long, b long, weight double"
             ),
             seeds,
+            rounds=3,
         ).collect()
     }
     assert got == {1: 0, 2: 2}

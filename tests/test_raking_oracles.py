@@ -9,7 +9,13 @@ bit-identical under pytest, not only under the out-of-band sweep:
   ``ipf.rake_fixed`` kernel and its SQL template);
 * exact dedup (t05), the MinHash near-dup entries (d03, d11, d12), LSH
   top-k (s01) and semantic dedup (sm01), whose operators each keep one
-  production path (Arrow MinHash bands, pandas cluster pairs)."""
+  production path (Arrow MinHash bands, pandas cluster pairs);
+* the triangle-family graph entries (gr03, gr04, gr07), whose join
+  strategy is chosen by the size gate alone, and the graph round loops
+  (gr05, gr06, gr09, gr10, gr11), each run at the registry's round
+  budget against its unrolled oracle;
+* the brute-force cosine entries (v01, v02), which score with
+  ``similarity.vec_dot`` / ``vec_norm``."""
 
 from __future__ import annotations
 
@@ -34,6 +40,20 @@ PAIRS = (
     "s01_lsh_topk",
     "sm01_semantic_dedup",
 )
+GRAPH = (
+    "gr03_triangles",
+    "gr04_edge_embeddedness",
+    "gr05_kcore",
+    "gr06_bfs_distance",
+    "gr07_clustering_coeff",
+    "gr09_label_propagation",
+    "gr10_ktruss",
+    "gr11_sssp",
+)
+VECTORS = (
+    "v01_cosine_pairs",
+    "v02_topk_cosine",
+)
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +63,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", RAKING + PAIRS)
+@pytest.mark.parametrize("name", RAKING + PAIRS + GRAPH + VECTORS)
 def test_raking_entry_matches_oracle(spark, duck, name):
     fn = registry.queries()[name]
     status, detail = oracle_check.compare(
