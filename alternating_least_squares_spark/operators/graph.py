@@ -833,11 +833,16 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     ``b``; symmetrized and deduplicated here). Returns ``(vertex,
     community)`` — community = the round-``rounds`` label.
 
-    Runs exactly ``rounds`` rounds with no count actions — well-defined
-    whether or not the fixpoint was reached, so an unrolled-SQL oracle
-    states the result exactly; once ``rounds`` ≥ the data's
-    convergence depth the result IS the fixpoint (the update is
-    idempotent there).
+    Returns the label after ``rounds`` rounds — well-defined whether or
+    not the fixpoint was reached, so an unrolled-SQL oracle states the
+    result exactly. Rounds AFTER the fixpoint are SKIPPED (as in
+    :func:`components_fixed`): the update is deterministic, so once a
+    round changes no label every remaining round is the identity and
+    the result is bit-identical to running all ``rounds``. Each
+    vertex's own label rides the argmax aggregate, and the changed
+    count is an ``observe`` metric on the round's checkpoint — no
+    count action. A graph that oscillates (synchronous LPA's 2-cycles)
+    runs the whole budget.
 
     Distributed shape: per round ONE vertex-keyed equi-join (labels
     onto out-edges) + ONE (vertex, label) count + ONE vertex-keyed
@@ -862,23 +867,37 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     for _ in range(rounds):
         neighbor = e.join(
             labels, e.a == labels.vertex
-        ).select(F.col("b").alias("vertex"), "label")
-        labels, _owned = rotate_local_checkpoint(
-            labels.unionByName(neighbor)  # self-vote + neighbor votes
+        ).select(F.col("b").alias("vertex"), "label", F.lit(False).alias("_self"))
+        # self-vote + neighbor votes; the self tag carries the vertex's
+        # current label through to the argmax (every vertex has one
+        # self row, so _prev is never NULL)
+        votes = (
+            labels.withColumn("_self", F.lit(True))
+            .unionByName(neighbor)
             .groupBy("vertex", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("vertex")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("neg_cnt"),
-                        F.col("label").alias("label"),
-                    )
-                ).alias("_best")
-            )
-            .select("vertex", F.col("_best.label").alias("label")),
+            .agg(F.count(F.lit(1)).alias("cnt"), F.max("_self").alias("_self"))
+        )
+        best = votes.groupBy("vertex").agg(
+            F.min(
+                F.struct(
+                    (-F.col("cnt")).alias("neg_cnt"),
+                    F.col("label").alias("label"),
+                )
+            ).alias("_best"),
+            F.max(F.when(F.col("_self"), F.col("label"))).alias("_prev"),
+        )
+        obs = Observation()
+        labels, _owned = rotate_local_checkpoint(
+            best.observe(
+                obs,
+                F.sum(
+                    (F.col("_best.label") != F.col("_prev")).cast("long")
+                ).alias("_changed"),
+            ).select("vertex", F.col("_best.label").alias("label")),
             _owned,
         )
+        if not obs.get["_changed"]:
+            break  # fixpoint: the remaining rounds are identity
     # the final labels are materialized; the graph is no longer read
     _release(labels, _own_e)
     return labels.select("vertex", F.col("label").alias("community"))

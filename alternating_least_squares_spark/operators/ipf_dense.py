@@ -1,40 +1,48 @@
-"""Shuffle-free IPF for matrices with a BOUNDED column domain.
+"""IPF for matrices with a BOUNDED column domain, on two paths.
 
 The generic :mod:`~alternating_least_squares_spark.operators.ipf`
 loop works on coordinate matrices of any shape — each sweep costs a
 window shuffle per pass plus join shuffles for the loss. When one
 dimension is small and bounded (the flagship's hour-of-day axis:
 ≤ 24 values; reference ``resources/hours.csv`` has exactly 24 rows),
-there is a strictly better layout: **one array row per matrix row**,
-``(r: long, x: double, vals: array<double>)``, with the y-marginal
-held on the driver as plan literals.
+the y-marginal fits on the driver and :func:`converge_dense` picks
+one of two layouts by the state's size, |x| × |y| cells, against the
+module constant :data:`MAX_DRIVER_CELLS`:
 
-Per sweep this layout costs:
+* **driver path** (≤ the gate) — the x-marginal and the coordinate
+  seed are collected once over Arrow (two scans, no shuffle), the
+  dense state is one NumPy ``(rows, cols)`` array, every sweep is a
+  handful of vectorized array ops, and the result comes back as one
+  Arrow-built DataFrame. A small state spends its time in per-job
+  planning and scheduling, not compute, so no Spark job per sweep is
+  the whole point: the loop's Spark work is the two collects.
+* **distributed path** (> the gate) — **one array row per matrix
+  row**, ``(r, _x, vals: array<double>, _rsum)``, hash-partitioned by
+  row id once and pinned by ``localCheckpoint``. Per sweep ONE eager
+  checkpoint job: the column pass is a narrow ``zip_with`` against an
+  ``n_cols`` literal array, and the ``observe`` metrics on that
+  checkpoint carry the post-step x-loss and the next column sums.
+  Executors exchange exactly ``n_cols`` doubles per sweep and the row
+  dimension never re-shuffles — the plan for 10⁹ rows.
 
-* **row pass** — ``vals[p] * x / Σvals``: a narrow ``transform`` over
-  the cached rows. No shuffle.
-* **column pass** — column sums are one ``agg`` of ``n_cols`` partial
-  sums (map-side combine, a single scalar-row collect), then
-  ``vals[p] * y[p]/colsum[p]`` with literal factors. No shuffle.
-* **loss** — ‖x − rowsums‖ folded into the next sweep's aggregate.
-
-At 100 TB / 10⁹ rows this is the plan you want: the row dimension
-stays partitioned and untouched across the whole loop, executors
-exchange exactly ``n_cols`` doubles per sweep, and every expression is
-native ``F.*`` inside codegen. The coordinate loop by contrast
-re-shuffles the full matrix 4× per sweep.
-
-Semantics are identical to :func:`ipf.converge` (both-marginal
-post-step loss, same stop criteria); ``tests/test_ipf.py`` asserts the
-two agree on literals.
+Both paths share one stop loop (:func:`_fit`: post-step x-loss,
+plateau, ``max_iterations``, the exact y-residual, factor 0 for a zero
+column) and both keep an all-zero state row at zero. They agree cell
+for cell to float rounding (``tests/test_ipf.py`` runs the
+edge cases on both, and the flagship's paths against each other).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from alternating_least_squares_spark.checkpoint import (
+    release_local_checkpoint,
     rotate_local_checkpoint,
 )
 from alternating_least_squares_spark.operators import matrix as M
@@ -101,11 +109,22 @@ def from_row_arrays(rows: DataFrame, col_ids: list[int]) -> DataFrame:
     ).select(M.R, F.element_at(ids, F.col("_p") + 1).alias(M.C), M.V)
 
 
-# Target state rows per partition for the sweep jobs. The loop's cost
-# at bench scale is per-task scheduling overhead (2 jobs/sweep), so a
+# Largest state (|x| × |y| cells) the loop holds on the driver: 2M
+# doubles is 16 MB per array and a few ms per NumPy sweep. Above it the
+# state stays distributed (the flagship is ~48k cells at sf0.01 and
+# ~480k at sf0.1, both below).
+MAX_DRIVER_CELLS = 2_000_000
+
+# Target state rows per partition for the distributed sweep jobs. The
+# loop's cost at bench scale is per-task scheduling overhead, so a
 # small state should not be spread over every core; at cluster scale
 # the cap is defaultParallelism as before.
 ROWS_PER_PARTITION = 8192
+
+_EMPTY_STATE = (
+    "empty state: no seed row meets the x marginal within the y "
+    "marginal's column domain"
+)
 
 
 def converge_dense(
@@ -118,27 +137,36 @@ def converge_dense(
     x_total: float | None = None,
     n_rows: int | None = None,
 ) -> IPFResult:
-    """IPF with the column marginal as driver-side literals.
+    """IPF with the column marginal as driver-side values.
 
     Same contract as :func:`ipf.converge` (reference ``converge``,
     ``core.clj:99-119``, with the SURVEY §0.3 fixes: post-step loss,
     both marginals tracked). The seed's column domain must lie within
     the y-marginal's id set; cells outside it are ignored, absent
-    cells read as ``seed_fill``.
+    cells read as ``seed_fill`` and NULL cells as ``0 + seed_fill``.
+    Each ``(r, c)`` cell may appear once (a duplicate raises). State
+    rows are the seed rows whose id is in x; when there are none the
+    call raises ``ValueError`` naming the empty state.
+
+    The loop runs on the driver in NumPy when the state has at most
+    :data:`MAX_DRIVER_CELLS` cells (|x| × |y|), and as one eager
+    checkpoint job per sweep above it (see the module docstring). The
+    two paths return the same iterations, and the same matrix and
+    losses to float rounding.
 
     ``seed_fill`` > 0 is the fused densify+Laplace path (A9): pass the
     SPARSE seed plus ``seed_fill=alpha`` instead of pre-densifying —
     equivalent to densifying over the x-rows × y-columns domain and
     adding ``alpha`` (:func:`matrix.laplace_smooth`) for every row that
-    appears in the seed, but skips materializing and re-shuffling the
-    |rows|x|cols| dense coordinate form. (A row with NO seed cells at
-    all gets no state row this way — callers whose x-marginal can
-    contain such rows must densify explicitly.)
+    appears in the seed, but skips materializing the |rows|x|cols|
+    dense coordinate form. (A row with NO seed cells at all gets no
+    state row this way — callers whose x-marginal can contain such
+    rows must densify explicitly.)
 
     ``x_total`` skips the precondition aggregate when the caller has
-    already computed Σx; ``n_rows`` likewise skips the layout-sizing
-    count when the caller already knows |x| (allocate_costs reads both
-    off its x-checkpoint observe metrics).
+    already computed Σx; ``n_rows`` likewise skips the count that
+    sizes the state when the caller already knows |x| (allocate_costs
+    reads both off its x-checkpoint observe metrics).
     """
     y_rows = y_marginal.select(M.ID, M.V).collect()
     if len(y_rows) > MAX_DRIVER_COLS:
@@ -148,8 +176,7 @@ def converge_dense(
         )
     y_rows.sort(key=lambda row: row[M.ID])
     col_ids = [row[M.ID] for row in y_rows]
-    y_vals = [float(row[M.V]) for row in y_rows]
-    n = len(col_ids)
+    y = np.array([float(row[M.V]) for row in y_rows])
 
     if x_total is None:
         x_total = x_marginal.agg(F.sum(M.V)).first()[0]
@@ -158,14 +185,150 @@ def converge_dense(
             "empty marginal: IPF needs non-empty x and y marginals "
             f"(x_total={x_total}, |y|={len(y_rows)})"
         )
-    y_total = sum(y_vals)
+    y_total = float(y.sum())
     scale = max(abs(x_total), abs(y_total), 1.0)
     if abs(x_total - y_total) / scale > 1e-6:
         raise ValueError(
             f"marginals must sum to the same total (x={x_total}, y={y_total}); "
             "see reference README:7"
         )
+    if n_rows is None:
+        n_rows = x_marginal.count()
+    if n_rows * len(col_ids) <= MAX_DRIVER_CELLS:
+        return _converge_driver(
+            x_marginal, seed, col_ids, y, threshold, max_iterations, seed_fill
+        )
+    return _converge_distributed(
+        x_marginal, seed, col_ids, y, n_rows, threshold, max_iterations,
+        seed_fill,
+    )
 
+
+def _fit(first, sweep, y, threshold: float, max_iterations: int):
+    """The stop loop both paths share. ``first`` is the seed state's
+    ``(xss, colsums)``: its squared x-loss and the column sums of its
+    row-scaled successor. ``sweep(factors)`` applies one column pass
+    with those factors and returns the new state's ``(xss, colsums)``.
+    Returns ``(loss, y_loss, sweeps)``."""
+    xss, colsums = first
+    loss = y_loss = float("inf")
+    iteration = 0
+    while True:
+        if iteration > 0:
+            # xss is the post-step squared loss of sweep `iteration`'s
+            # result — SURVEY §0.3 fix.
+            new_loss = float(xss) ** 0.5
+            plateaued = abs(loss - new_loss) < threshold
+            loss = new_loss
+            if loss < threshold or plateaued or iteration >= max_iterations:
+                break
+        # a zero column can receive no mass: factor 0
+        factors = np.divide(y, colsums, out=np.zeros_like(y), where=colsums != 0)
+        # y-residual is exact arithmetic given the column sums: the
+        # column pass lands each column on y[p] up to one multiply.
+        y_loss = float(np.sqrt(np.sum((y - colsums * factors) ** 2)))
+        xss, colsums = sweep(factors)
+        iteration += 1
+    return loss, y_loss, iteration
+
+
+def _converge_driver(
+    x_marginal: DataFrame,
+    seed: DataFrame,
+    col_ids: list[int],
+    y: np.ndarray,
+    threshold: float,
+    max_iterations: int,
+    seed_fill: float,
+) -> IPFResult:
+    """The loop on a NumPy ``(rows, cols)`` state: one Arrow collect of
+    x and of the in-domain seed cells, no Spark job per sweep. Seed
+    rows outside x are collected and dropped here — the gate sizes the
+    state by |x|, which assumes the seed's rows are x's, as the
+    flagship's are."""
+    spark = seed.sparkSession
+    xt = x_marginal.select(M.ID, M.V).toArrow()
+    st = (
+        seed.select(M.R, M.C, M.V)
+        .filter(F.col(M.R).isNotNull() & F.col(M.C).isin(col_ids))
+        .toArrow()
+    )
+    cols = np.asarray(col_ids, dtype=np.int64)
+    n = cols.size
+    rows, inv = np.unique(st[M.R].to_numpy().astype(np.int64), return_inverse=True)
+    cell = inv * n + np.searchsorted(cols, st[M.C].to_numpy().astype(np.int64))
+    if np.unique(cell).size != cell.size:
+        # the distributed layout fails on DUPLICATED_MAP_KEY; never sum
+        raise ValueError("seed has a duplicated (r, c) cell")
+    vals = np.full((rows.size, n), seed_fill)
+    vals.flat[cell] = (
+        pc.fill_null(st[M.V].cast(pa.float64()), 0.0).to_numpy() + seed_fill
+    )
+    # inner join on x's ids
+    x_ids = xt[M.ID].to_numpy().astype(np.int64)
+    order = np.argsort(x_ids)
+    k = np.searchsorted(x_ids, rows, sorter=order)
+    hit = k < x_ids.size
+    hit[hit] = x_ids[order[k[hit]]] == rows[hit]
+    if not hit.any():
+        raise ValueError(_EMPTY_STATE)
+    rows, vals = rows[hit], vals[hit]
+    x = xt[M.V].to_numpy()[order[k[hit]]][:, None]
+
+    scaled = vals
+
+    def observe(state: np.ndarray):
+        # the row-scaled successor, all-zero rows left as they are
+        # (they can receive no mass; naive v*x/0 would flood NaN)
+        nonlocal scaled
+        rsum = state.sum(axis=1)[:, None]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            scaled = np.where(rsum != 0, state * x / rsum, state)
+        return ((x - rsum) ** 2).sum(), scaled.sum(axis=0)
+
+    def sweep(factors: np.ndarray):
+        nonlocal vals
+        vals = scaled * factors
+        return observe(vals)
+
+    loss, y_loss, iterations = _fit(
+        observe(vals), sweep, y, threshold, max_iterations
+    )
+    # the distributed path's schema: seed's r, c as a literal id
+    int32 = cols.min() >= -(2**31) and cols.max() < 2**31
+    schema = T.StructType(
+        [
+            seed.schema[M.R],
+            T.StructField(M.C, T.IntegerType() if int32 else T.LongType(), False),
+            T.StructField(M.V, T.DoubleType()),
+        ]
+    )
+    matrix = spark.createDataFrame(
+        pa.table(
+            {
+                M.R: np.repeat(rows, n),
+                M.C: np.tile(cols, rows.size),
+                M.V: vals.ravel(),
+            }
+        ),
+        schema,
+    )
+    return IPFResult(matrix=matrix, loss=loss, y_loss=y_loss, iterations=iterations)
+
+
+def _converge_distributed(
+    x_marginal: DataFrame,
+    seed: DataFrame,
+    col_ids: list[int],
+    y: np.ndarray,
+    n_rows: int,
+    threshold: float,
+    max_iterations: int,
+    seed_fill: float,
+) -> IPFResult:
+    """The loop on a checkpointed row-array state: one Spark job per
+    sweep, the row dimension never re-shuffled."""
+    n = len(col_ids)
     # State carries the row sum as a MATERIALIZED column (`_rsum`).
     # Higher-order functions (transform/aggregate lambdas) are
     # interpreted, not codegen'd, and Catalyst inlines a projected
@@ -181,12 +344,9 @@ def converge_dense(
     # all later sweeps are narrow, so the hash layout survives the
     # whole loop — this one shuffle is the loop's only one.
     spark = seed.sparkSession
-    # Adaptive width: state rows == |x ∩ seed rows| ≤ |x|. One cheap
-    # count of the (tiny) marginal sizes the layout so a 20k-row bench
-    # state runs 3 tasks/job instead of 32 — per-sweep wall time is
-    # task scheduling, not compute, at that size.
-    if n_rows is None:
-        n_rows = x_marginal.count()
+    # Adaptive width: state rows == |x ∩ seed rows| ≤ |x|, so |x| sizes
+    # the layout and a 20k-row state runs 3 tasks/job instead of 32 —
+    # per-sweep wall time is task scheduling, not compute, at that size.
     n_parts = max(
         1,
         min(
@@ -239,30 +399,16 @@ def converge_dense(
     state, _owned = rotate_local_checkpoint(
         state.observe(obs, *sweep_metrics), None
     )
+    if obs.get["_xss"] is None:  # a sum over no rows
+        release_local_checkpoint(state, _owned)
+        raise ValueError(_EMPTY_STATE)
 
-    loss = float("inf")
-    y_loss = float("inf")
-    iteration = 0
-    while True:
+    def observed(obs: Observation):
         metrics = obs.get
-        if iteration > 0:
-            # _xss is the post-step squared loss of the matrix now in
-            # `state` (= sweep `iteration`'s result) — SURVEY §0.3 fix.
-            new_loss = metrics["_xss"] ** 0.5
-            plateaued = abs(loss - new_loss) < threshold
-            loss = new_loss
-            if loss < threshold or plateaued or iteration >= max_iterations:
-                break
-        colsums = [metrics[f"c{p}"] for p in range(n)]
-        factors = [
-            y_vals[p] / colsums[p] if colsums[p] else 0.0 for p in range(n)
-        ]
-        # y-residual is exact arithmetic given the column sums: the
-        # column pass lands each column on y[p] up to one multiply.
-        y_loss = (
-            sum((y_vals[p] - colsums[p] * factors[p]) ** 2 for p in range(n))
-            ** 0.5
-        )
+        return metrics["_xss"], np.array([metrics[f"c{p}"] for p in range(n)])
+
+    def sweep(factors: np.ndarray):
+        nonlocal state, _owned
         # Inject the factors as ONE array<double> LITERAL, consumed by
         # a zip_with lambda. Three earlier shapes all lose to this:
         # (a) broadcast-DF crossJoin — a fresh BroadcastExchange every
@@ -278,7 +424,7 @@ def converge_dense(
         # so the changing literal costs nothing. Net measured sweep:
         # ~0.2 s vs ~0.55 s for (a) at bench scale.
         col_scaled = F.zip_with(
-            F.col("vals"), F.lit(factors), lambda v, f: _rowsum_guard(v) * f
+            F.col("vals"), F.lit(factors.tolist()), lambda v, f: _rowsum_guard(v) * f
         )
         obs = Observation()
         state, _owned = rotate_local_checkpoint(
@@ -290,11 +436,14 @@ def converge_dense(
             ).observe(obs, *sweep_metrics),
             _owned,
         )
-        iteration += 1
+        return observed(obs)
 
+    loss, y_loss, iterations = _fit(
+        observed(obs), sweep, y, threshold, max_iterations
+    )
     return IPFResult(
         matrix=from_row_arrays(state.select(M.R, "vals"), col_ids),
         loss=loss,
         y_loss=y_loss,
-        iterations=iteration,
+        iterations=iterations,
     )

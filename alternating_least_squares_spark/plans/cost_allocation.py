@@ -28,6 +28,7 @@ plan per output, materialized once by the IPF loop.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,15 +72,18 @@ def allocate_costs(
 ) -> IPFResult:
     """E1+E3: run IPF to impute the part×hour cost matrix.
 
-    Each marginal is computed ONCE and pinned with ``localCheckpoint``
-    (the seed densification, the IPF sweeps, and the per-iteration
-    loss checks all reuse the materialized result instead of
-    re-scanning lineitem/events).
+    The (part, hour) base and the x marginal are computed ONCE and
+    pinned with ``localCheckpoint``, so the IPF loop reads materialized
+    results instead of re-scanning lineitem.
 
-    The hour axis is bounded (≤ 24 values), so the loop runs in the
-    row-array layout (:func:`ipf_dense.converge_dense`): the matrix
+    The hour axis is bounded (≤ 24 values), so the loop is
+    :func:`ipf_dense.converge_dense`. Below its cell gate
+    (``MAX_DRIVER_CELLS``, |parts| × |hours|; the flagship is ~48k
+    cells at sf0.01) it collects x and the visit seed once over Arrow
+    and runs the sweeps in NumPy on the driver; above it the matrix
     stays partitioned by part across all sweeps and each sweep moves
-    only 24 doubles between executors — no per-iteration shuffles.
+    only 24 doubles between executors. The 24-row hour marginal is
+    built from Arrow, so no path starts a Python worker.
 
     ``threshold`` here is RELATIVE to the marginal grand total (the
     loop stops when ‖x − rowsums‖ < threshold·Σx). The reference's
@@ -102,7 +106,7 @@ def allocate_costs(
             F.sum(M.V).alias("_xt"),
             F.count(F.lit(1)).alias("_nr"),
         )
-        .localCheckpoint(eager=True)  # 4 downstream actions read it
+        .localCheckpoint(eager=True)  # converge_dense reads it once or more
     )
     x_total = obs_x.get["_xt"]
     if x_total is None:
@@ -130,9 +134,18 @@ def allocate_costs(
             f"{x_total} (IPF needs both marginals on a shared total)"
         )
     scale_f = x_total / y_raw["_yt"]
+    # Arrow-built, not a Python-list createDataFrame: that one is a
+    # parallelize RDD, and converge_dense's collect of it would start
+    # Python workers (~0.8 CPU-s) for 24 rows.
     y = spark.createDataFrame(
-        [(r[M.ID], r[M.V] * scale_f) for r in y_raw["_rows"]],
-        f"{M.ID} long, {M.V} double",
+        pa.table(
+            {
+                M.ID: pa.array([r[M.ID] for r in y_raw["_rows"]], pa.int64()),
+                M.V: pa.array(
+                    [r[M.V] * scale_f for r in y_raw["_rows"]], pa.float64()
+                ),
+            }
+        )
     )
     # SPARSE seed + fused alpha-fill: every x part has >= 1 base row
     # (x is an aggregate OF base), so the seed_fill fast path is exact

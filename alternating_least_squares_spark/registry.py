@@ -10996,11 +10996,14 @@ def q_gr09_label_propagation(
     clusters RETAIN distinct labels across bridge edges — the
     product-grouping / spam-cluster shape components can't express
     (sf0.01: 355 communities vs gr08's handful of components on the
-    same graph). Exactly GR09_ROUNDS=8 synchronous rounds on both
+    same graph). A budget of GR09_ROUNDS=8 synchronous rounds on both
     sides — ≥ the measured convergence depth at both test SFs (4 at
     sf0.001, 6 at sf0.01), so the hash-checked result here IS the
     fixpoint; pytest pins this budget's result equal to a much larger
-    one. Same Pregel-as-DataFrames shape as gr01/gr05/gr08: per
+    one. The Spark side stops after the first round that changes no
+    label (every later round is the identity), so it runs the
+    convergence depth plus one round; the unrolled oracle runs all
+    eight. Same Pregel-as-DataFrames shape as gr01/gr05/gr08: per
     round one vertex-keyed join, one (vertex, label) count, one
     vertex-keyed deterministic argmax (min of a (-count, label)
     struct — partial-agg friendly, no window sort), per-round

@@ -727,6 +727,36 @@ def test_label_propagation_hand_computed(spark):
     assert full == got
 
 
+def test_label_propagation_skips_rounds_after_fixpoint(spark):
+    """Once a round changes no label, label_propagation stops: a budget
+    far past the fixpoint runs the same Spark jobs as one just past it,
+    with the same result."""
+    from alternating_least_squares_spark.operators.graph import (
+        label_propagation,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)],
+        "a: long, b: long",
+    )
+    sc = spark.sparkContext
+    runs = []
+    for rounds in (7, 70):
+        group = f"test_label_propagation_skips_rounds_after_fixpoint_{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            got = {
+                r["vertex"]: r["community"]
+                for r in label_propagation(edges, rounds=rounds).collect()
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        runs.append((got, len(sc.statusTracker().getJobIdsForGroup(group))))
+    (short, short_jobs), (long, long_jobs) = runs
+    assert short == long == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
+    assert short_jobs == long_jobs
+
+
 def test_gr09_fixed_sweep_equals_live_convergence(spark):
     """GR09_ROUNDS must cover the support graph's LPA convergence
     depth at the test SF: the registry's budget must equal a budget

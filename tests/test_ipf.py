@@ -13,6 +13,17 @@ from alternating_least_squares_spark.operators.ipf import converge, _marginal_lo
 from tests.conftest import coo_to_nested, vec_to_list
 
 
+def _both_paths(monkeypatch):
+    """Yield each ``converge_dense`` path in turn: the driver path (the
+    default for any state under ``MAX_DRIVER_CELLS``) and then the
+    distributed one, forced by a zero cell gate."""
+    from alternating_least_squares_spark.operators import ipf_dense
+
+    yield "driver"
+    monkeypatch.setattr(ipf_dense, "MAX_DRIVER_CELLS", 0)
+    yield "distributed"
+
+
 def test_row_pass_row_sums_equal_marginal(make_matrix, make_vector):
     """The defining invariant of the row pass (A15): after fitting rows
     to the x-marginal, row sums equal the marginal exactly."""
@@ -83,10 +94,10 @@ def test_converge_max_iterations_cap(make_matrix, make_vector):
     assert res.iterations == 3
 
 
-def test_converge_dense_matches_coordinate(make_matrix, make_vector):
+def test_converge_dense_matches_coordinate(make_matrix, make_vector, monkeypatch):
     """The bounded-column-domain loop (ipf_dense.converge_dense) is a
     layout change, not a semantics change: same iterations, same loss,
-    same matrix as the coordinate-form converge."""
+    same matrix as the coordinate-form converge, on both paths."""
     from alternating_least_squares_spark.operators.ipf_dense import (
         converge_dense,
         from_row_arrays,
@@ -97,45 +108,50 @@ def test_converge_dense_matches_coordinate(make_matrix, make_vector):
     y = make_vector([25, 35])
     seed = make_matrix([[1, 2], [3, 4], [5, 6]])
     r1 = converge(x, y, seed, threshold=1e-12, max_iterations=50)
-    r2 = converge_dense(x, y, seed, threshold=1e-12, max_iterations=50)
-    assert r2.iterations == r1.iterations
-    assert abs(r2.loss - r1.loss) < 1e-12
     a = {(r["r"], r["c"]): r["v"] for r in r1.matrix.collect()}
-    b = {(r["r"], r["c"]): r["v"] for r in r2.matrix.collect()}
-    assert a.keys() == b.keys()
-    assert all(abs(a[k] - b[k]) < 1e-9 for k in a)
+    for path in _both_paths(monkeypatch):
+        r2 = converge_dense(x, y, seed, threshold=1e-12, max_iterations=50)
+        assert r2.iterations == r1.iterations, path
+        assert abs(r2.loss - r1.loss) < 1e-12, path
+        b = {(r["r"], r["c"]): r["v"] for r in r2.matrix.collect()}
+        assert a.keys() == b.keys(), path
+        assert all(abs(a[k] - b[k]) < 1e-9 for k in a), path
     # round-trip helpers preserve the matrix exactly
     rt = from_row_arrays(to_row_arrays(seed, [0, 1]), [0, 1])
     c = {(r["r"], r["c"]): r["v"] for r in rt.collect()}
     assert c == {(r["r"], r["c"]): r["v"] for r in seed.collect()}
 
 
-def test_converge_dense_rejects_mismatched_totals(make_matrix, make_vector):
+def test_converge_dense_rejects_mismatched_totals(
+    make_matrix, make_vector, monkeypatch
+):
     from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 
-    with pytest.raises(ValueError, match="same total"):
-        converge_dense(
-            make_vector([1, 2]),
-            make_vector([100, 200]),
-            make_matrix([[1, 1], [1, 1]]),
-        )
+    for _ in _both_paths(monkeypatch):
+        with pytest.raises(ValueError, match="same total"):
+            converge_dense(
+                make_vector([1, 2]),
+                make_vector([100, 200]),
+                make_matrix([[1, 1], [1, 1]]),
+            )
 
 
-def test_converge_dense_zero_row_stays_zero(make_matrix, make_vector):
+def test_converge_dense_zero_row_stays_zero(make_matrix, make_vector, monkeypatch):
     """An all-zero seed row can receive no mass: it must stay zero (no
     NaN flood), and the loop still fits the remaining rows."""
+    import math
+
     from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 
     seed = make_matrix([[1.0, 2.0], [0.0, 0.0], [3.0, 1.0]])
     x = make_vector([10.0, 0.0, 20.0])
     y = make_vector([14.0, 16.0])
-    res = converge_dense(x, y, seed, threshold=1e-10, max_iterations=100)
-    vals = {(r["r"], r["c"]): r["v"] for r in res.matrix.collect()}
-    assert vals[(1, 0)] == 0.0 and vals[(1, 1)] == 0.0
-    import math
-
-    assert all(not math.isnan(v) for v in vals.values())
-    assert abs(sum(vals.values()) - 30.0) < 1e-6
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(x, y, seed, threshold=1e-10, max_iterations=100)
+        vals = {(r["r"], r["c"]): r["v"] for r in res.matrix.collect()}
+        assert vals[(1, 0)] == 0.0 and vals[(1, 1)] == 0.0, path
+        assert all(not math.isnan(v) for v in vals.values()), path
+        assert abs(sum(vals.values()) - 30.0) < 1e-6, path
 
 
 def test_converge_dense_matches_coordinate_on_real_data(spark):
@@ -181,11 +197,14 @@ def test_converge_dense_matches_coordinate_on_real_data(spark):
     assert worst < 1e-6, worst
 
 
-def test_converge_dense_result_plan_is_shuffle_free(make_matrix, make_vector):
-    """The dense loop's whole point: after the single setup shuffle is
-    pinned by localCheckpoint, everything downstream — every sweep and
-    the final coordinate expansion — is narrow. The result matrix's
-    physical plan must therefore contain no Exchange."""
+def test_converge_dense_result_plan_is_shuffle_free(
+    make_matrix, make_vector, monkeypatch
+):
+    """The dense loop's whole point: on the distributed path, after the
+    single setup shuffle is pinned by localCheckpoint, everything
+    downstream — every sweep and the final coordinate expansion — is
+    narrow; the driver path's result is a scan of Arrow batches. The
+    result matrix's physical plan must therefore contain no Exchange."""
     from alternating_least_squares_spark.operators.ipf_dense import (
         converge_dense,
     )
@@ -193,12 +212,13 @@ def test_converge_dense_result_plan_is_shuffle_free(make_matrix, make_vector):
     seed = make_matrix([[1.0, 2.0], [3.0, 4.0]])
     x = make_vector([3.0, 7.0])
     y = make_vector([4.0, 6.0])
-    res = converge_dense(x, y, seed, threshold=1e-12, max_iterations=20)
-    plan = res.matrix._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(x, y, seed, threshold=1e-12, max_iterations=20)
+        plan = res.matrix._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (path, plan)
 
 
-def test_converge_dense_ignores_out_of_domain_seed_columns(spark):
+def test_converge_dense_ignores_out_of_domain_seed_columns(spark, monkeypatch):
     """Seed cells whose column id is absent from the y-marginal are
     IGNORED per the documented contract — otherwise the NULL map
     position crashed the whole flagship with NULL_MAP_KEY whenever an
@@ -212,16 +232,74 @@ def test_converge_dense_ignores_out_of_domain_seed_columns(spark):
         [(1, 0, 1.0), (1, 1, 1.0), (1, 23, 99.0), (2, 0, 1.0), (2, 1, 1.0)],
         "r long, c long, v double",
     )
-    res = converge_dense(x, y, seed, threshold=1e-12, max_iterations=50)
-    cells = {(r["r"], r["c"]): r["v"] for r in res.matrix.collect()}
-    assert set(c for _, c in cells) == {0, 1}
-    assert abs(sum(cells.values()) - 12.0) < 1e-9
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(x, y, seed, threshold=1e-12, max_iterations=50)
+        cells = {(r["r"], r["c"]): r["v"] for r in res.matrix.collect()}
+        assert set(c for _, c in cells) == {0, 1}, path
+        assert abs(sum(cells.values()) - 12.0) < 1e-9, path
 
 
-def test_converge_empty_marginal_raises_value_error(spark):
+def test_converge_dense_empty_state_raises_value_error(spark, monkeypatch):
+    """No seed row meets the x marginal: both paths raise a ValueError
+    naming the empty state (the distributed path used to fail with a
+    TypeError on the None sums of an empty checkpoint)."""
+    from alternating_least_squares_spark.operators.ipf_dense import converge_dense
+
+    x = spark.createDataFrame([(1, 4.0)], "id long, v double")
+    y = spark.createDataFrame([(0, 4.0)], "id long, v double")
+    seed = spark.createDataFrame([(7, 0, 1.0)], "r long, c long, v double")
+    for _ in _both_paths(monkeypatch):
+        with pytest.raises(ValueError, match="empty state"):
+            converge_dense(x, y, seed, max_iterations=5)
+
+
+def test_converge_dense_null_seed_value_reads_as_fill(spark, monkeypatch):
+    """A NULL seed value reads as ``0 + seed_fill``, like an explicit
+    zero cell, and both paths agree on the result."""
+    from alternating_least_squares_spark.operators.ipf_dense import converge_dense
+
+    x = spark.createDataFrame([(0, 3.0), (1, 9.0)], "id long, v double")
+    y = spark.createDataFrame([(0, 5.0), (1, 7.0)], "id long, v double")
+    cells = [(0, 0, 1.0), (1, 0, 2.0), (1, 1, 4.0)]
+    with_null = spark.createDataFrame(
+        cells + [(0, 1, None)], "r long, c long, v double"
+    )
+    with_zero = spark.createDataFrame(
+        cells + [(0, 1, 0.0)], "r long, c long, v double"
+    )
+    results = []
+    for _ in _both_paths(monkeypatch):
+        for seed in (with_null, with_zero):
+            res = converge_dense(
+                x, y, seed, threshold=0.0, max_iterations=3, seed_fill=0.5
+            )
+            results.append({(r["r"], r["c"]): r["v"] for r in res.matrix.collect()})
+    want = results[1]
+    assert len(want) == 4
+    for got in results:
+        assert got.keys() == want.keys()
+        assert all(abs(got[k] - want[k]) <= 1e-12 * abs(want[k]) for k in want)
+
+
+def test_converge_dense_rejects_duplicated_cell(spark, monkeypatch):
+    """A seed that lists one (r, c) cell twice is rejected on both paths
+    (Spark's DUPLICATED_MAP_KEY on the distributed one); the driver
+    path must not silently sum the two values."""
+    from alternating_least_squares_spark.operators.ipf_dense import converge_dense
+
+    x = spark.createDataFrame([(0, 6.0)], "id long, v double")
+    y = spark.createDataFrame([(0, 2.0), (1, 4.0)], "id long, v double")
+    seed = spark.createDataFrame(
+        [(0, 0, 1.0), (0, 1, 1.0), (0, 1, 2.0)], "r long, c long, v double"
+    )
+    for _ in _both_paths(monkeypatch):
+        with pytest.raises(Exception, match="DUPLICATED_MAP_KEY|duplicated"):
+            converge_dense(x, y, seed, max_iterations=5)
+
+
+def test_converge_empty_marginal_raises_value_error(spark, monkeypatch):
     """An empty marginal must raise the precondition ValueError, not
     TypeError from abs(None)."""
-    import pytest
     from alternating_least_squares_spark.operators.ipf import converge
     from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 
@@ -230,8 +308,11 @@ def test_converge_empty_marginal_raises_value_error(spark):
     seed = spark.createDataFrame([(1, 0, 1.0)], "r long, c long, v double")
     with pytest.raises(ValueError, match="empty marginal"):
         converge(x, empty, seed)
-    with pytest.raises(ValueError, match="empty marginal"):
-        converge_dense(x, empty, seed)
+    for _ in _both_paths(monkeypatch):
+        with pytest.raises(ValueError, match="empty marginal"):
+            converge_dense(x, empty, seed)
+        with pytest.raises(ValueError, match="empty marginal"):
+            converge_dense(empty, x, seed)
 
 
 def test_converge_threshold_zero_runs_exact_iteration_count(spark):
@@ -387,6 +468,81 @@ def test_cost_per_visit_fixed_matches_python_replay(spark):
     }
     assert len(got) > 1000
     assert got == want
+
+
+def test_cost_per_visit_ipf_invariants_and_job_count(spark):
+    """The live flagship end to end: the imputed cost's row sums match
+    the part marginal and its column sums the hour marginal rescaled to
+    Σx, each within 1e-6·Σx (the benchmark's IPF check), in a pinned
+    number of Spark jobs. Below the cell gate the sweeps run in NumPy,
+    so the count does not grow with the sweeps: 2 parquet schema reads
+    (lineitem, events), 2 each for the base and the x checkpoints, 3
+    for the hour marginal's aggregate, 1 each for the Arrow collects of
+    x and of the seed, and 2 for the final join. The 24-row y collect
+    reads an Arrow-built frame and runs none. The distributed path
+    instead runs a setup checkpoint and one checkpoint job per sweep."""
+    from collections import defaultdict
+
+    from alternating_least_squares_spark.plans import cost_allocation as CA
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    group = "test_cost_per_visit_ipf_invariants_and_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        rows = CA.cost_per_visit(spark, SF_SMALL).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    x = {
+        part: v
+        for part, v in CA.load_table(spark, SF_SMALL, "lineitem")
+        .groupBy("l_partkey")
+        .agg(F.sum(revenue))
+        .collect()
+        if v != 0
+    }
+    y_raw = {
+        hour: v
+        for hour, v in CA.load_table(spark, SF_SMALL, "events")
+        .groupBy(F.hour("ts"))
+        .agg(F.sum("value"))
+        .collect()
+        if v != 0
+    }
+    x_total, y_total = sum(x.values()), sum(y_raw.values())
+    y = {h: v * x_total / y_total for h, v in y_raw.items()}
+    rowsum: dict = defaultdict(float)
+    colsum: dict = defaultdict(float)
+    for r in rows:
+        rowsum[r["part"]] += r["cost"]
+        colsum[r["hour"]] += r["cost"]
+    assert rowsum.keys() == x.keys() and colsum.keys() == y.keys()
+    assert max(abs(rowsum[k] - x[k]) for k in x) <= 1e-6 * x_total
+    assert max(abs(colsum[k] - y[k]) for k in y) <= 1e-6 * x_total
+    assert n_jobs == 13, n_jobs
+
+
+def test_allocate_costs_driver_path_matches_distributed(spark, monkeypatch):
+    """The flagship's IPF on the driver path and on the distributed path
+    (forced by a zero cell gate) agree cell for cell to 1e-9 relative,
+    in the same number of sweeps."""
+    from alternating_least_squares_spark.plans import cost_allocation as CA
+    from tests.conftest import SF_SMALL
+
+    base = CA.part_hour_base(spark, SF_SMALL).localCheckpoint(eager=True)
+    runs = []
+    for _ in _both_paths(monkeypatch):
+        res = CA.allocate_costs(spark, SF_SMALL, base=base)
+        cells = {(r["r"], r["c"]): r["v"] for r in res.matrix.collect()}
+        runs.append((res.iterations, cells))
+    (it_driver, a), (it_dist, b) = runs
+    assert it_driver == it_dist
+    assert a.keys() == b.keys() and len(a) > 1000
+    worst = max(abs(a[k] - b[k]) / max(abs(b[k]), 1e-300) for k in b)
+    assert worst < 1e-9, worst
 
 
 def test_rake3_matches_python_reference_and_converges(spark):
