@@ -109,10 +109,20 @@ def from_row_arrays(rows: DataFrame, col_ids: list[int]) -> DataFrame:
     ).select(M.R, F.element_at(ids, F.col("_p") + 1).alias(M.C), M.V)
 
 
-# Largest state (|x| × |y| cells) the loop holds on the driver: 2M
-# doubles is 16 MB per array and a few ms per NumPy sweep. Above it the
-# state stays distributed (the flagship is ~48k cells at sf0.01 and
-# ~480k at sf0.1, both below).
+# Largest state (|x| × |y| cells) the loop holds on the driver. This is
+# a driver-memory bound, not a speed crossover: on a synthetic
+# rows × 24 state (4 vCPUs, 4 sweeps, least-CPU of 3 runs) the driver
+# path won at every size measured, in wall / CPU seconds
+#     cells     driver        distributed
+#     48k       0.6 / 1.1     2.1 / 5.5
+#     480k      1.1 / 1.6     3.3 / 10.3
+#     2.0M      1.7 / 2.7     6.9 / 19.5
+#     4.8M      4.1 / 6.6     10.9 / 38.0
+#     9.6M      5.7 / 9.5     23.4 / 86.6
+# while the driver's Python peak grew from 150 MB to 300 MB at 2M cells
+# and 850 MB at 9.6M. The flagship is ~48k cells at sf0.01 and ~480k at
+# sf0.1 (there 3.4 / 5.2 s against 8.0 / 13.4 s). A larger driver heap
+# would move the gate up; concurrent driver-side work would move it down.
 MAX_DRIVER_CELLS = 2_000_000
 
 # Target state rows per partition for the distributed sweep jobs. The
@@ -152,7 +162,11 @@ def converge_dense(
     :data:`MAX_DRIVER_CELLS` cells (|x| × |y|), and as one eager
     checkpoint job per sweep above it (see the module docstring). The
     two paths return the same iterations, and the same matrix and
-    losses to float rounding.
+    losses to float rounding. Below the gate the seed's in-domain cells
+    are collected before the join on x, rows outside x included, so
+    the collect is bounded only when the seed's rows are x's (as in
+    ``allocate_costs``); more collected cells than the gate send the
+    call to the distributed path after that collect.
 
     ``seed_fill`` > 0 is the fused densify+Laplace path (A9): pass the
     SPARSE seed plus ``seed_fill=alpha`` instead of pre-densifying —
@@ -195,9 +209,18 @@ def converge_dense(
     if n_rows is None:
         n_rows = x_marginal.count()
     if n_rows * len(col_ids) <= MAX_DRIVER_CELLS:
-        return _converge_driver(
-            x_marginal, seed, col_ids, y, threshold, max_iterations, seed_fill
+        cells = (
+            seed.select(M.R, M.C, M.V)
+            .filter(F.col(M.R).isNotNull() & F.col(M.C).isin(col_ids))
+            .toArrow()
         )
+        # the gate counts x's rows; seed rows outside x still arrive
+        # here, so more cells than the gate holds go distributed
+        if cells.num_rows <= MAX_DRIVER_CELLS:
+            return _converge_driver(
+                x_marginal, seed, cells, col_ids, y, threshold,
+                max_iterations, seed_fill,
+            )
     return _converge_distributed(
         x_marginal, seed, col_ids, y, n_rows, threshold, max_iterations,
         seed_fill,
@@ -235,35 +258,28 @@ def _fit(first, sweep, y, threshold: float, max_iterations: int):
 def _converge_driver(
     x_marginal: DataFrame,
     seed: DataFrame,
+    cells: pa.Table,
     col_ids: list[int],
     y: np.ndarray,
     threshold: float,
     max_iterations: int,
     seed_fill: float,
 ) -> IPFResult:
-    """The loop on a NumPy ``(rows, cols)`` state: one Arrow collect of
-    x and of the in-domain seed cells, no Spark job per sweep. Seed
-    rows outside x are collected and dropped here — the gate sizes the
-    state by |x|, which assumes the seed's rows are x's, as the
-    flagship's are."""
+    """The loop on a NumPy ``(rows, cols)`` state built from x (one
+    Arrow collect) and ``cells``, the collected in-domain seed cells.
+    No Spark job per sweep. Cells whose row is outside x are dropped
+    before the state is built, so it holds at most |x| × |y| cells."""
     spark = seed.sparkSession
     xt = x_marginal.select(M.ID, M.V).toArrow()
-    st = (
-        seed.select(M.R, M.C, M.V)
-        .filter(F.col(M.R).isNotNull() & F.col(M.C).isin(col_ids))
-        .toArrow()
-    )
     cols = np.asarray(col_ids, dtype=np.int64)
     n = cols.size
-    rows, inv = np.unique(st[M.R].to_numpy().astype(np.int64), return_inverse=True)
-    cell = inv * n + np.searchsorted(cols, st[M.C].to_numpy().astype(np.int64))
-    if np.unique(cell).size != cell.size:
+    rows, inv = np.unique(
+        cells[M.R].to_numpy().astype(np.int64), return_inverse=True
+    )
+    pos = np.searchsorted(cols, cells[M.C].to_numpy().astype(np.int64))
+    if np.unique(inv * n + pos).size != inv.size:
         # the distributed layout fails on DUPLICATED_MAP_KEY; never sum
         raise ValueError("seed has a duplicated (r, c) cell")
-    vals = np.full((rows.size, n), seed_fill)
-    vals.flat[cell] = (
-        pc.fill_null(st[M.V].cast(pa.float64()), 0.0).to_numpy() + seed_fill
-    )
     # inner join on x's ids
     x_ids = xt[M.ID].to_numpy().astype(np.int64)
     order = np.argsort(x_ids)
@@ -272,7 +288,14 @@ def _converge_driver(
     hit[hit] = x_ids[order[k[hit]]] == rows[hit]
     if not hit.any():
         raise ValueError(_EMPTY_STATE)
-    rows, vals = rows[hit], vals[hit]
+    keep = hit[inv]
+    slot = np.cumsum(hit) - 1
+    rows = rows[hit]
+    vals = np.full((rows.size, n), seed_fill)
+    vals[slot[inv[keep]], pos[keep]] = (
+        pc.fill_null(cells[M.V].cast(pa.float64()), 0.0).to_numpy()[keep]
+        + seed_fill
+    )
     x = xt[M.V].to_numpy()[order[k[hit]]][:, None]
 
     scaled = vals
@@ -294,25 +317,24 @@ def _converge_driver(
     loss, y_loss, iterations = _fit(
         observe(vals), sweep, y, threshold, max_iterations
     )
-    # the distributed path's schema: seed's r, c as a literal id
-    int32 = cols.min() >= -(2**31) and cols.max() < 2**31
+    # one array row per state row, like the distributed state, so both
+    # paths end in the same from_row_arrays. A coordinate table would
+    # be |y| times the rows, and below Spark's Arrow local-relation
+    # threshold it becomes a driver-side local relation: consuming 2M
+    # coordinate cells took 6.4-7.0 s, against 1.4-1.9 s for 4.8M
+    # cells above the threshold (4 vCPUs).
+    rows_t = pa.table(
+        {
+            M.R: rows,
+            "vals": pa.ListArray.from_arrays(
+                np.arange(0, vals.size + 1, n, dtype=np.int32), vals.ravel()
+            ),
+        }
+    )
     schema = T.StructType(
-        [
-            seed.schema[M.R],
-            T.StructField(M.C, T.IntegerType() if int32 else T.LongType(), False),
-            T.StructField(M.V, T.DoubleType()),
-        ]
+        [seed.schema[M.R], T.StructField("vals", T.ArrayType(T.DoubleType()))]
     )
-    matrix = spark.createDataFrame(
-        pa.table(
-            {
-                M.R: np.repeat(rows, n),
-                M.C: np.tile(cols, rows.size),
-                M.V: vals.ravel(),
-            }
-        ),
-        schema,
-    )
+    matrix = from_row_arrays(spark.createDataFrame(rows_t, schema), col_ids)
     return IPFResult(matrix=matrix, loss=loss, y_loss=y_loss, iterations=iterations)
 
 

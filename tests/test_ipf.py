@@ -297,6 +297,41 @@ def test_converge_dense_rejects_duplicated_cell(spark, monkeypatch):
             converge_dense(x, y, seed, max_iterations=5)
 
 
+def test_converge_dense_seed_rows_outside_x_fall_back_above_gate(
+    spark, monkeypatch
+):
+    """The gate counts |x| × |y| cells, but the driver path collects
+    every in-domain seed cell, rows outside x included. A seed with more
+    such cells than the gate goes to the distributed path, and the state
+    either path builds holds only x's rows."""
+    from alternating_least_squares_spark.operators import ipf_dense
+
+    x = spark.createDataFrame([(0, 3.0), (1, 9.0)], "id long, v double")
+    y = spark.createDataFrame([(0, 5.0), (1, 7.0)], "id long, v double")
+    seed = spark.createDataFrame(
+        [(r, c, 1.0 + r + c) for r in range(6) for c in range(2)],
+        "r long, c long, v double",
+    )
+    distributed = ipf_dense._converge_distributed
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return distributed(*args, **kwargs)
+
+    monkeypatch.setattr(ipf_dense, "_converge_distributed", spy)
+    results = []
+    for gate in (12, 11):  # 12 seed cells: driver, then distributed
+        monkeypatch.setattr(ipf_dense, "MAX_DRIVER_CELLS", gate)
+        res = ipf_dense.converge_dense(x, y, seed, threshold=0.0, max_iterations=3)
+        results.append({(r["r"], r["c"]): r["v"] for r in res.matrix.collect()})
+    assert len(calls) == 1
+    want = results[1]
+    assert sorted(want) == [(0, 0), (0, 1), (1, 0), (1, 1)]
+    assert results[0].keys() == want.keys()
+    assert all(abs(results[0][k] - want[k]) <= 1e-12 * want[k] for k in want)
+
+
 def test_converge_empty_marginal_raises_value_error(spark, monkeypatch):
     """An empty marginal must raise the precondition ValueError, not
     TypeError from abs(None)."""
