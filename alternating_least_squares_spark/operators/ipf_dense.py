@@ -13,9 +13,12 @@ module constant :data:`MAX_DRIVER_CELLS`:
   seed are collected once over Arrow (two scans, no shuffle), the
   dense state is one NumPy ``(rows, cols)`` array, every sweep is a
   handful of vectorized array ops, and the result comes back as one
-  Arrow-built DataFrame. A small state spends its time in per-job
-  planning and scheduling, not compute, so no Spark job per sweep is
-  the whole point: the loop's Spark work is the two collects.
+  Arrow-built DataFrame of array rows, expanded by the same
+  :func:`from_row_arrays` as the distributed path. A small state
+  spends its time in per-job planning and scheduling, not compute, so
+  no Spark job per sweep is the whole point: the loop's Spark work is
+  the two collects. The gate bounds driver memory: the driver path was
+  faster at every state size measured (see the constant).
 * **distributed path** (> the gate) — **one array row per matrix
   row**, ``(r, _x, vals: array<double>, _rsum)``, hash-partitioned by
   row id once and pinned by ``localCheckpoint``. Per sweep ONE eager
