@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 from alternating_least_squares_spark.checkpoint import (
     local_checkpoint_owned,
     release_local_checkpoint,
-    rotate_local_checkpoint,
 )
 from alternating_least_squares_spark.functions.textfns import shingles, tokens
 from alternating_least_squares_spark.functions.width import spread_if_narrow
+from alternating_least_squares_spark.operators.graph import _hash_min
 
 HEX_DIGITS = "0123456789abcdef"
 
@@ -760,9 +760,9 @@ def admit_with_band_index(
 def keep_one_filter(
     docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Drop the higher-id member of every near-dup pair (transitive
-    enough for pipeline use; :func:`dedup_components` is the exact
-    clustering). One anti-join."""
+    """Drop the higher-id member of every near-dup pair. One anti-join,
+    no round loop: a chain a–b–c keeps only a, though a and c may not
+    be near-dups. :func:`dedup_components` is the exact clustering."""
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return docs.join(losers, id_col, "left_anti")
 
@@ -774,68 +774,24 @@ def dedup_components(
     hash-min label propagation: every vertex converges to the MINIMUM
     id reachable from it. Returns ``(id, component)``.
 
-    Iterative driver loop (the same pattern as the IPF/ALS loops):
-    per round one join (labels → neighbors) + one groupBy-min + a
-    scalar changed-count action; ``localCheckpoint`` cuts lineage.
-    Rounds needed = graph diameter — near-dup clusters are almost
-    cliques, so 2–3 rounds in practice. At 100 TB both sides shuffle
-    on the vertex id; no driver-side state beyond the changed counter.
-    """
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    Runs the round loop of ``operators.graph.components_fixed`` on the
+    ``(id_a, id_b)`` edges, with ``max_iterations`` as its budget.
+    Rounds needed = graph diameter; near-dup clusters are almost
+    cliques, so 2–3 rounds in practice. Raises ``RuntimeError`` when
+    the budget ends before a round changes no label: silently
+    returning partial labels would let a keep-one dedup keep
+    duplicates with no signal."""
+    labels, owned, converged = _hash_min(
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
+        max_iterations,
     )
-    edges, _own_e = local_checkpoint_owned(
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-    )
-    labels, _owned = local_checkpoint_owned(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
-    )
-    converged = False
-    for _ in range(max_iterations):
-        # candidate label per vertex: min over its own label and every
-        # neighbor's label
-        neighbor_labels = (
-            edges.join(labels, edges.src == labels.id)
-            .select(F.col("dst").alias("id"), "component")
-        )
-        # rotate LATE (release_local_checkpoint, not the rotate
-        # helper): the changed-count join still reads the OLD labels
-        # after the new checkpoint materializes
-        new_labels, _owned_new = rotate_local_checkpoint(
-            labels.unionByName(neighbor_labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component")),
-            None,
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        release_local_checkpoint(labels, _owned)
-        labels, _owned = new_labels, _owned_new
-        if changed == 0:
-            converged = True
-            break
     if not converged:
         # release before raise: callers that catch the error must not
-        # inherit this loop's pinned checkpoint generations
-        release_local_checkpoint(
-            labels, (_own_e or set()) | (_owned or set())
-        )
-        # silently returning partial labels would let a keep-one dedup
-        # keep duplicates with no signal
+        # inherit this loop's pinned checkpoint
+        release_local_checkpoint(labels, owned)
         raise RuntimeError(
             f"connected components did not converge in {max_iterations} "
             "rounds (graph diameter exceeds the budget); raise "
             "max_iterations"
         )
-    # the final labels are materialized; the pair graph is no longer
-    # read by the returned result
-    release_local_checkpoint(labels, _own_e)
-    return labels
+    return labels.select(F.col("vertex").alias("id"), "component")

@@ -69,15 +69,6 @@ def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.translate(text, PUNCT_CHARS, ""))
 
 
-def word_occurrences(text: Column, word: str) -> Column:
-    """Count of substring occurrences, computed by length delta so the
-    DuckDB oracle can reproduce it with ``replace`` exactly."""
-    return (
-        (F.length(text) - F.length(F.replace(text, F.lit(word), F.lit(""))))
-        / F.lit(len(word))
-    ).cast("long")
-
-
 def avg_token_length(text: Column) -> Column:
     """Mean token length = (non-whitespace chars) / (token count).
     The numerator equals sum(length(token)) exactly — every character

@@ -737,52 +737,40 @@ def clustering_coefficients(
     )
 
 
-def components_fixed(edges: DataFrame, rounds: int) -> DataFrame:
-    """Connected components by hash-min label propagation, run for
-    EXACTLY ``rounds`` rounds — the gr01/gr05/gr06 fixed-sweep
-    discipline: the result is well-defined whether or not the
-    fixpoint has been reached, so an unrolled SQL oracle can state it
-    bit for bit at any data regeneration; a pytest pins fixed-sweep ==
-    the live convergence loop (functions/dedup.dedup_components, which
-    owns the changed-count early exit and the loud non-convergence
-    guard) at the test SFs, proving ``rounds`` ≥ the graph diameter
-    there.
+def _hash_min(
+    edges: DataFrame, rounds: int
+) -> tuple[DataFrame, set[int], bool]:
+    """The hash-min round loop behind :func:`components_fixed` and
+    ``functions.dedup.dedup_components``. ``edges``: columns ``a``,
+    ``b`` (undirected; deduplicated here). Runs at most ``rounds``
+    rounds and returns ``(labels, owned, reached_fixpoint)``:
+    ``labels`` is ``(vertex, component)`` on a checkpoint whose block
+    ids are ``owned``, and ``reached_fixpoint`` says whether a round
+    changed no label.
 
-    ``edges``: columns ``a``, ``b`` (undirected; deduplicated here).
-    Returns ``(vertex, component)`` with component = the minimum
-    vertex id reachable within ``rounds`` hops.
-
-    Rounds AFTER the fixpoint are SKIPPED (as in :func:`ktruss`):
-    hash-min labels are monotone non-increasing and the round
-    operator is idempotent at the fixpoint, so once a round
-    changes no label every remaining round is a no-op and the result
-    is bit-identical to running all ``rounds`` (exactly what the
-    unrolled oracle states). The changed-count rides the round's own
-    checkpoint materialization as an ``observe`` metric (the ipf_dense
-    pattern) — zero extra jobs; at sf0.1 the gr08 support graph
-    converges after 8 of its 10 budgeted rounds (instrumented
-    changed-counts 3136, 757, 202, 69, 19, 3, 2, 0 — the last two
-    rounds are skipped).
-
-    Scale shape: per round ONE vertex-keyed equi-join (labels onto
-    out-edges) + ONE groupBy-min — both shuffle on the vertex id, the
-    Pregel-as-DataFrames pattern shared with pagerank/kcore/bfs;
-    per-round localCheckpoint keeps lineage flat (round N never
-    replays 1..N-1). Rounds needed = component diameter, NOT log |V|:
-    hash-min moves the minimum one hop per round."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    e = edges.select("a", "b").distinct()
-    e, _own_e = local_checkpoint_owned(
-        e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct()
+    Each round is ONE vertex-keyed equi-join (labels onto out-edges)
+    and ONE groupBy-min, both shuffled on the vertex id (the
+    Pregel-as-DataFrames pattern shared with pagerank/kcore/bfs). The
+    rotated localCheckpoint keeps lineage flat, and the round's
+    changed count rides that checkpoint as an ``observe`` metric, so
+    the stop test costs no job. Labels only ever decrease and the
+    round is idempotent at the fixpoint, so stopping there gives the
+    same labels as running every round. Rounds needed = component
+    diameter, NOT log |V|: hash-min moves the minimum one hop per
+    round."""
+    e, own_e = local_checkpoint_owned(
+        edges.select("a", "b")
+        .unionByName(
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+        .distinct()
     )
-    labels, _owned = local_checkpoint_owned(
+    labels, owned = local_checkpoint_owned(
         e.select(F.col("a").alias("vertex"))
         .distinct()
         .select("vertex", F.col("vertex").alias("component"))
     )
+    reached_fixpoint = False
     for _ in range(rounds):
         neighbor = e.join(
             labels, e.a == labels.vertex
@@ -803,20 +791,36 @@ def components_fixed(edges: DataFrame, rounds: int) -> DataFrame:
             )
         )
         obs = Observation()
-        labels, _owned = rotate_local_checkpoint(
+        labels, owned = rotate_local_checkpoint(
             merged.observe(
                 obs,
                 F.sum(
                     (F.col("component") < F.col("_prev")).cast("long")
                 ).alias("_changed"),
             ).select("vertex", "component"),
-            _owned,
+            owned,
         )
         if not obs.get["_changed"]:
-            break  # fixpoint: the remaining rounds are identity
+            reached_fixpoint = True
+            break
     # the final labels are materialized; the graph is no longer read
-    _release(labels, _own_e)
-    return labels
+    _release(labels, own_e)
+    return labels, owned, reached_fixpoint
+
+
+def components_fixed(edges: DataFrame, rounds: int) -> DataFrame:
+    """Connected components by hash-min label propagation with a
+    budget of ``rounds`` rounds: the result equals running exactly
+    ``rounds`` rounds, so an unrolled SQL oracle (gr08, v07) states it
+    bit for bit whether or not the fixpoint falls inside the budget.
+    The loop stops early at the fixpoint (see :func:`_hash_min`).
+
+    ``edges``: columns ``a``, ``b`` (undirected; deduplicated here).
+    Returns ``(vertex, component)`` with component = the minimum
+    vertex id reachable within ``rounds`` hops."""
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+    return _hash_min(edges, rounds)[0]
 
 
 def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:

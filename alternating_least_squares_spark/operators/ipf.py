@@ -20,7 +20,7 @@ Spark execution model: this is the one place the engine runs a
 driver-side Python loop (the same pattern MLlib's own ALS uses).
 Per iteration: two window-normalize + broadcast-scale stages (see
 ``matrix.ipf_step``) and one scalar collect for the losses. Lineage
-is cut with ``localCheckpoint`` every ``checkpoint_every`` sweeps so
+is cut with ``localCheckpoint`` every ``CHECKPOINT_EVERY`` sweeps so
 the logical plan does not grow linearly with iterations — without
 this, Catalyst planning time dominates after ~30 sweeps.
 """
@@ -36,6 +36,9 @@ from alternating_least_squares_spark.checkpoint import (
     rotate_local_checkpoint,
 )
 from alternating_least_squares_spark.operators import matrix as M
+
+# sweeps between :func:`converge`'s lineage cuts (module docstring)
+CHECKPOINT_EVERY = 5
 
 
 @dataclass
@@ -182,7 +185,6 @@ def converge(
     seed: DataFrame,
     threshold: float = 1e-15,
     max_iterations: int = 1000,
-    checkpoint_every: int = 5,
 ) -> IPFResult:
     """Iterate IPF sweeps until the x-marginal loss drops below
     ``threshold``, the loss plateaus (Δloss < threshold), or
@@ -212,7 +214,7 @@ def converge(
         )
 
     # NOT rotation-owned: the returned matrix may be a LAZY plan over
-    # ipf_step (checkpoint_every > 1 skips the final checkpoint) that
+    # ipf_step (CHECKPOINT_EVERY > 1 skips the final checkpoint) that
     # still JOINS the marginals when the caller materializes it —
     # releasing them here would make the result unrecomputable.
     x_marginal = x_marginal.localCheckpoint(eager=True)
@@ -229,7 +231,7 @@ def converge(
         # deeper per sweep and planning time dominates execution.
         # Rotating the checkpoint releases the superseded sweep's
         # blocks.
-        if (iteration + 1) % checkpoint_every == 0:
+        if (iteration + 1) % CHECKPOINT_EVERY == 0:
             nxt, _owned = rotate_local_checkpoint(nxt, _owned)
         new_loss, new_y_loss = _marginal_losses(nxt, x_marginal, y_marginal)
         plateaued = abs(loss - new_loss) < threshold

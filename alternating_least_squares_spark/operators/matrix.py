@@ -176,11 +176,6 @@ def sum_cols(matrix: DataFrame) -> DataFrame:
     return matrix.groupBy(F.col(C).alias(ID)).agg(F.sum(V).alias(V))
 
 
-def matrix_total(matrix: DataFrame) -> DataFrame:
-    """Grand total Σ M (used by conservation checks, `README.md:7`)."""
-    return matrix.agg(F.sum(V).alias("total"))
-
-
 def laplace_smooth(matrix: DataFrame, alpha: float = 1e-15) -> DataFrame:
     """A9 — add α to every cell. Reference ``core.clj:47-50``; called
     with α=1e-15 at ``core.clj:187`` to keep IPF division well-defined.

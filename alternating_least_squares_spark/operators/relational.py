@@ -109,16 +109,6 @@ def unpivot(
     )
 
 
-def pivot_matrix(
-    coo: DataFrame, row_key: str, col_key: str, value: str
-) -> DataFrame:
-    """Inverse of C8: coordinate → wide (for CSV export parity with the
-    reference's ``save-csv`` of labeled matrices, ``core.clj:63-69`` +
-    ``data.clj:11-15``). One shuffle on the row key; column values
-    must be enumerable (pivot collects distinct col keys first)."""
-    return coo.groupBy(row_key).pivot(col_key).sum(value)
-
-
 def filter_nonzero(df: DataFrame, col: str) -> DataFrame:
     """C2 — drop rows whose click-count is zero.
 

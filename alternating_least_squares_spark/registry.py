@@ -2707,8 +2707,9 @@ FROM documents WHERE doc_id % 10 = 0
 
 
 def q_d04_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact connected components (iterative hash-min label
-    propagation) over the exact-duplicate graph: docs sharing an
+    """Exact connected components (dedup_components, the hash-min
+    round loop of graph.components_fixed) over the exact-duplicate
+    graph: docs sharing an
     md5(text) form a clique, so the true component of every doc is the
     min doc_id in its hash group — which plain SQL can state, giving
     an ORACLE-CHECKED iterative graph operator."""
@@ -15543,9 +15544,10 @@ def q_d11_neardup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_dedup.py's planted-pair fixtures.
 
     Scale posture: inherits near_dup_pairs' banded-join-only shape
-    and dedup_components' per-round one-join+one-agg loop (clusters
-    are near-cliques → 2-3 rounds); the singleton pass is one
-    anti-join. Nothing here is all-pairs."""
+    and the hash-min round of graph.components_fixed, one join + one
+    groupBy-min per round with the stop test observed on the round's
+    checkpoint (clusters are near-cliques → 2-3 rounds); the
+    singleton pass is one anti-join. Nothing here is all-pairs."""
     from alternating_least_squares_spark.functions.dedup import (
         dedup_components,
         near_dup_pairs,
@@ -16014,10 +16016,11 @@ def q_d15_threshold_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pairs inherit near_dup_pairs (banded equi-join, the
     one shuffle, exact-Jaccard verify on hashed shingles — nothing
-    all-pairs); components run hash-min label propagation whose round
-    count is the CLUSTER diameter (2 here, ≤3 for near-dup graphs —
-    almost-cliques), each round one join + one groupBy-min with
-    rotating localCheckpoints (checkpoint.py bounds pinned storage).
+    all-pairs); components run the hash-min round of
+    graph.components_fixed, whose round count is the CLUSTER diameter
+    (2 here, ≤3 for near-dup graphs — almost-cliques), each round one
+    join + one groupBy-min on a rotating localCheckpoint that also
+    carries the changed count (checkpoint.py bounds pinned storage).
     Reference scope: data.clj:17-30 diffs sorted exports; collapsing
     a 100 TB corpus's transitive near-dup clusters to canonical
     survivors is that dedup contract at training-data scale."""

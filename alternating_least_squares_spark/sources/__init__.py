@@ -1,6 +1,5 @@
 from alternating_least_squares_spark.sources.catalog import (  # noqa: F401
     TABLES,
-    avro_available,
     load_table,
     load_tables,
     read_csv,

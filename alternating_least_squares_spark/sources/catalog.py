@@ -261,48 +261,3 @@ def write_parquet(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
-
-def avro_available(spark: SparkSession) -> bool:
-    """Whether the ``avro`` data source is loadable in this runtime.
-
-    Avro has been a BUILT-IN-BUT-EXTERNAL Spark module since 2.4: the
-    implementation lives in the separately-shipped spark-avro jar
-    (``org.apache.spark:spark-avro_2.13:<spark-version>``), and this
-    container's Spark distro does not bundle it (verified round 11/12
-    — ``format("avro")`` raises AnalysisException FAILED_TO_FIND_DATA_SOURCE
-    with the deployment-guide pointer). Deployments that need the
-    B-family Avro path add the jar via ``spark.jars.packages``; the
-    read/write helpers below then light up unchanged. Gate callers on
-    this probe — the b09 pytest documents both branches.
-
-    The probe attempts a real zero-row write: Spark's data-source
-    lookup happens at plan time, so a missing module surfaces as
-    AnalysisException FAILED_TO_FIND_DATA_SOURCE before any data
-    moves. (A java.lang.Class.forName probe is NOT trustworthy
-    through the py4j gateway — measured returning a class handle on
-    this distro even though format('avro') cannot resolve.)"""
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    with tempfile.TemporaryDirectory(prefix="avro_probe_") as d:
-        try:
-            spark.createDataFrame([], "probe int").write.mode(
-                "overwrite"
-            ).format("avro").save(f"{d}/p")
-            return True
-        except AnalysisException:
-            return False
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro source (row-oriented, schema-evolving container format —
-    the Kafka-ecosystem interchange twin of the ORC/JSON helpers).
-    Requires the external spark-avro jar; see :func:`avro_available`."""
-    return spark.read.format("avro").load(path)
-
-
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Avro sink. Requires the external spark-avro jar; see
-    :func:`avro_available`."""
-    df.write.mode(mode).format("avro").save(path)

@@ -587,6 +587,37 @@ def test_dedup_components_releases_checkpoints_on_raise(spark):
     assert len(jsc.getPersistentRDDs()) - before <= 0
 
 
+def test_dedup_components_runs_no_count_jobs(spark):
+    """dedup_components runs on the components round loop, whose
+    changed count rides each round's checkpoint as an ``observe``
+    metric, so no round starts a count() job. The 5-chain needs 4
+    rounds to carry the minimum to its end plus the round that
+    changes nothing. Its jobs are 5 outside the loop (the edge and
+    seed checkpoints and the collect) plus 5 per round, all of them
+    materializing the rotated checkpoint (its shuffle stages run as
+    jobs of their own under adaptive execution). A changed-count join
+    with count() each round would add 5 more per round: 55 in all."""
+    from alternating_least_squares_spark.functions.dedup import (
+        dedup_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    group = "test_dedup_components_runs_no_count_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = {
+            r["id"]: r["component"]
+            for r in dedup_components(pairs).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {v: 1 for v in range(1, 6)}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5 + 5 * 5
+
+
 def test_d15_collapse_matches_brute_force_at_sf0001(spark):
     """d15 collapse property (the d12 recall proof extended to the
     composition): at sf0.001 the pipeline's component census must

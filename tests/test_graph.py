@@ -639,14 +639,11 @@ def test_components_fixed_hand_computed(spark):
 
 def test_gr08_fixed_sweep_equals_live_convergence(spark):
     """GR08_ROUNDS must cover the support graph's component diameter
-    at the test SF: the fixed sweep must equal the live convergence
-    loop (dedup_components — changed-count early exit, loud guard)."""
-    from pyspark.sql import functions as F
-
-    from alternating_least_squares_spark.functions.dedup import (
-        dedup_components,
-    )
+    at the test SF: the fixed sweep must equal the converged
+    components, computed here by a pure-Python union-find (each
+    vertex labeled with its component's minimum id)."""
     from alternating_least_squares_spark.registry import (
+        _support_edges,
         q_gr08_connected_components,
     )
     from tests.conftest import SF_SMALL
@@ -655,16 +652,23 @@ def test_gr08_fixed_sweep_equals_live_convergence(spark):
         (r["part"], r["component"])
         for r in q_gr08_connected_components(spark, SF_SMALL).collect()
     }
-    from alternating_least_squares_spark.registry import _support_edges
+    parent: dict[int, int] = {}
 
-    edges = _support_edges(spark, SF_SMALL).select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b")
-    )
-    live = {
-        (r["id"], r["component"])
-        for r in dedup_components(edges).collect()
-    }
-    assert got == live and got
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for r in _support_edges(spark, SF_SMALL).collect():
+        a, b = r["a"], r["b"]
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        # union by minimum id: every root is its component's minimum
+        parent[max(ra, rb)] = min(ra, rb)
+    closure = {(v, find(v)) for v in parent}
+    assert got == closure and got
 
 
 @settings(max_examples=8, deadline=None)

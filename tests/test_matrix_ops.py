@@ -169,10 +169,6 @@ def test_safe_divide_zero_guard(make_matrix):
     assert coo_to_nested(out) == [[3.0, 0.0]]
 
 
-def test_matrix_total(make_matrix):
-    assert M.matrix_total(make_matrix([[1, 2], [3, 4]])).first()["total"] == 10.0
-
-
 def test_weight_matrix_zero_row_gets_zero_weights(spark):
     """A zero-sum row must yield weight 0 (not ANSI DIVIDE_BY_ZERO —
     Spark 4 makes /0 an error, which killed unsmoothed sparse

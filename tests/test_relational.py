@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators.relational import (
     anti_join,
-    pivot_matrix,
     symmetric_diff,
     unpivot,
     zero_pad_union,
@@ -41,10 +40,12 @@ def test_unpivot_pivot_roundtrip(spark):
         [("a", 1.0, 2.0), ("b", 3.0, 4.0)], "k string, h0 double, h1 double"
     )
     long = unpivot(wide, ["k"], ["h0", "h1"], "hour", "v")
-    assert long.count() == 4
-    back = pivot_matrix(long, "k", "hour", "v")
-    got = {r["k"]: (r["h0"], r["h1"]) for r in back.collect()}
-    assert got == {"a": (1.0, 2.0), "b": (3.0, 4.0)}
+    assert sorted(map(tuple, long.collect())) == [
+        ("a", "h0", 1.0),
+        ("a", "h1", 2.0),
+        ("b", "h0", 3.0),
+        ("b", "h1", 4.0),
+    ]
 
 
 def test_upsert_row_level_semantics(spark):

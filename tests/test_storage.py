@@ -381,39 +381,6 @@ def test_cbo_stats_flip_join_strategy_and_confs_restore(spark):
         assert spark.conf.get(k) == v
 
 
-def test_b09_avro_roundtrip_or_documented_absence(spark, tmp_path):
-    """B-family ledger closure (VERDICT r11 #8): the Avro data source
-    is built-in-but-external since Spark 2.4 and this container's
-    distro ships WITHOUT the spark-avro jar. Both branches are
-    contractual: with the jar present (spark.jars.packages
-    org.apache.spark:spark-avro_2.13:<version>) the roundtrip must be
-    lossless; without it, the probe must say so and format('avro')
-    must fail loudly with the FAILED_TO_FIND_DATA_SOURCE guidance —
-    never a silent fallback."""
-    import pytest
-    from pyspark.errors import AnalysisException
-
-    from alternating_least_squares_spark.sources import load_table
-    from alternating_least_squares_spark.sources.catalog import (
-        avro_available,
-        read_avro,
-        write_avro,
-    )
-    from tests.conftest import SF_SMALL
-
-    df = load_table(spark, SF_SMALL, "region")
-    path = str(tmp_path / "region_avro")
-    if avro_available(spark):
-        write_avro(df, path)
-        back = read_avro(spark, path)
-        assert sorted(map(tuple, back.collect())) == sorted(
-            map(tuple, df.collect())
-        )
-    else:
-        with pytest.raises(AnalysisException, match="avro|AVRO"):
-            write_avro(df, path)
-
-
 def test_aqe_coalesce_merges_small_partitions_and_confs_restore(spark):
     """x24: under a deliberately mis-sized 200-way static shuffle,
     AQE must coalesce the modest aggregate's post-shuffle partitions

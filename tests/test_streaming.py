@@ -1449,14 +1449,17 @@ def test_streaming_fold_policy_redelivery_and_content(spark, tmp_path):
     # folds (25% > 5%) and waves 1/3 decline (wave 3 is 3/75 = 4%
     # of the post-fold live rows — the denominator SHRINKS at a fold)
     waves = [range(0, 5), range(10, 30), range(40, 43)]
+    seen: set[str] = set()
     for i, w in enumerate(waves):
         spark.createDataFrame([(k,) for k in w], "k long").repartition(
             1
         ).write.mode("append").parquet(req)
-        os.utime(
-            [os.path.join(req, f) for f in os.listdir(req)
-             if f.endswith(".parquet")][0], (1_700_000_000 + i,) * 2
-        )
+        # stamp the file THIS wave wrote, so the file source lists the
+        # waves in write order
+        listing = set(os.listdir(req))
+        (new,) = [f for f in listing - seen if f.endswith(".parquet")]
+        seen = listing
+        os.utime(os.path.join(req, new), (1_700_000_000 + i,) * 2)
     n, folds = stream_erase_with_auto_fold(
         spark, req, str(tmp_path / "ck"), table,
         T.StructType([T.StructField("k", T.LongType())]),

@@ -65,11 +65,6 @@ def test_fingerprint_deterministic_and_order_sensitive(spark):
     assert len(a) == 32  # md5 hex
 
 
-def test_word_occurrences_counts_all(spark):
-    got = _one(spark, " the the the ", lambda c: TX.word_occurrences(c, "the"))
-    assert got == 3
-
-
 def test_dedup_components_chain_and_isolated(spark):
     """Hash-min CC: a 4-chain collapses to its min id in ~diameter
     rounds; isolated pairs keep separate components."""
