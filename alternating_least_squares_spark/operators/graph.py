@@ -122,6 +122,27 @@ def vertex_degrees(edges: DataFrame) -> DataFrame:
 BROADCAST_EDGE_LIMIT = 8_000_000
 
 
+def _drop_hubs(edges: DataFrame, max_degree: int | None) -> DataFrame:
+    """The triangle-family hub cap: drop every edge touching a vertex
+    of degree > ``max_degree`` (``None`` keeps all edges)."""
+    if max_degree is None:
+        return edges
+    if max_degree < 2:
+        raise ValueError(
+            f"max_degree must be >= 2 (got {max_degree}); a "
+            "degree-1 vertex can never close a triangle, so "
+            "capping below 2 silently empties the result"
+        )
+    hubs = (
+        vertex_degrees(edges)
+        .filter(F.col("degree") > max_degree)
+        .select("vertex")
+    )
+    return edges.join(
+        hubs.withColumnRenamed("vertex", "a"), "a", "left_anti"
+    ).join(hubs.withColumnRenamed("vertex", "b"), "b", "left_anti")
+
+
 def _oriented_intersections(
     edges: DataFrame,
     max_degree: int | None,
@@ -137,21 +158,7 @@ def _oriented_intersections(
     with z ∈ ``_ws``. See :func:`triangle_counts` for the scale
     contract (array width ≤ √(2|E|); broadcast vs shuffled-hash joins,
     chosen by |E| against :data:`BROADCAST_EDGE_LIMIT`)."""
-    if max_degree is not None:
-        if max_degree < 2:
-            raise ValueError(
-                f"max_degree must be >= 2 (got {max_degree}); a "
-                "degree-1 vertex can never close a triangle, so "
-                "capping below 2 silently empties the result"
-            )
-        hubs = (
-            vertex_degrees(edges)
-            .filter(F.col("degree") > max_degree)
-            .select("vertex")
-        )
-        edges = edges.join(
-            hubs.withColumnRenamed("vertex", "a"), "a", "left_anti"
-        ).join(hubs.withColumnRenamed("vertex", "b"), "b", "left_anti")
+    edges = _drop_hubs(edges, max_degree)
     # two consumers (degree count + orientation join) → materialize.
     # The blocks are read by the RETURNED plans, so they cannot be
     # released here; loop callers (ktruss) pass ``owned_out`` and
@@ -397,6 +404,9 @@ def ktruss(
     count makes every remaining round a no-op and the result equals
     the full sweep bit for bit. The edge counts ride the input and
     per-round checkpoints as ``observe`` metrics — no count jobs.
+    The round that reaches the fixpoint kept every edge, so its
+    supports are returned as they stand; only a budget spent before
+    the fixpoint costs a final scoring pass.
 
     Scale shape: each round is one :func:`edge_support` pass over a
     SHRINKING edge set — the degree-ordered intersection bounds the
@@ -414,16 +424,7 @@ def ktruss(
             "degenerates to a no-op"
         )
     min_support = k - 2
-    e = edges.select("a", "b").distinct()
-    if max_degree is not None:
-        hubs = (
-            vertex_degrees(e)
-            .filter(F.col("degree") > max_degree)
-            .select("vertex")
-        )
-        e = e.join(
-            hubs.withColumnRenamed("vertex", "a"), "a", "left_anti"
-        ).join(hubs.withColumnRenamed("vertex", "b"), "b", "left_anti")
+    e = _drop_hubs(edges.select("a", "b").distinct(), max_degree)
     obs0 = Observation()
     e, _owned = local_checkpoint_owned(
         e.observe(obs0, F.count(F.lit(1)).alias("_n"))
@@ -431,11 +432,10 @@ def ktruss(
     n_prev = obs0.get["_n"]
     for _ in range(rounds):
         _own_round: list[int] = []
-        sup = edge_support(e, None, _own_round)
+        sup = edge_support(e.select("a", "b"), None, _own_round)
         obs = Observation()
         e, _owned = rotate_local_checkpoint(
             sup.filter(F.col("support") >= min_support)
-            .select("a", "b")
             .observe(obs, F.count(F.lit(1)).alias("_n")),
             _owned,
         )
@@ -444,12 +444,15 @@ def ktruss(
         _release(e, set(_own_round))
         n_new = obs.get["_n"]
         if n_new == n_prev:
-            break  # fixpoint: the remaining rounds are no-ops
+            # fixpoint: the round kept every edge, so its supports are
+            # the supports inside the truss; the final generation stays
+            # pinned — the returned DataFrame reads it
+            return e
         n_prev = n_new
-    # score the survivors within the truss; the final generation and
-    # this last pass's internal checkpoints stay pinned — the
-    # returned DataFrame reads them (the kcore/gr03 discipline)
-    return edge_support(e)
+    # budget spent before the fixpoint: score the survivors within the
+    # last edge set; the final generation and this pass's internal
+    # checkpoints stay pinned (the kcore/gr03 discipline)
+    return edge_support(e.select("a", "b"))
 
 
 def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -857,7 +860,7 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     keeps lineage flat — at 100 TB the work is R bounded shuffles of a
     fixed-size label table.
     """
-    e = edges.select("a", "b").distinct()
+    e = edges.select("a", "b")
     e, _own_e = local_checkpoint_owned(
         e.unionByName(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))

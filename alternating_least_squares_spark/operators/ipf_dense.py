@@ -1,13 +1,20 @@
-"""IPF for matrices with a BOUNDED column domain, on two paths.
+"""The stop-controlled IPF loop, :func:`converge_dense`, on two paths.
 
-The generic :mod:`~alternating_least_squares_spark.operators.ipf`
-loop works on coordinate matrices of any shape — each sweep costs a
-window shuffle per pass plus join shuffles for the loss. When one
-dimension is small and bounded (the flagship's hour-of-day axis:
-≤ 24 values; reference ``resources/hours.csv`` has exactly 24 rows),
-the y-marginal fits on the driver and :func:`converge_dense` picks
-one of two layouts by the state's size, |x| × |y| cells, against the
-module constant :data:`MAX_DRIVER_CELLS`:
+Reference: ``converge`` at ``core.clj:99-119``. IPF (Deming–Stephan
+1940; the Sinkhorn–Knopp family) imputes a matrix from its two
+marginals plus a seed giving the rough shape, by alternately scaling
+rows and columns to match the marginals. The package has two IPF
+kernels: :func:`converge_dense` (here) for loops that stop on a
+threshold, a plateau or ``max_iterations``, and :func:`ipf.rake_fixed`
+for fixed micro-unit sweeps that an unrolled SQL oracle states bit for
+bit.
+
+The loop holds the column marginal on the driver, so the column domain
+must be bounded (at most :data:`MAX_DRIVER_COLS` ids; the flagship's
+hour-of-day axis has ≤ 24, as does the reference's
+``resources/hours.csv``). It picks one of two layouts by the state's
+size, |x| × |y| cells, against the module constant
+:data:`MAX_DRIVER_CELLS`:
 
 * **driver path** (≤ the gate) — the x-marginal and the coordinate
   seed are collected once over Arrow (two scans, no shuffle), the
@@ -31,11 +38,14 @@ module constant :data:`MAX_DRIVER_CELLS`:
 Both paths share one stop loop (:func:`_fit`: post-step x-loss,
 plateau, ``max_iterations``, the exact y-residual, factor 0 for a zero
 column) and both keep an all-zero state row at zero. They agree cell
-for cell to float rounding (``tests/test_ipf.py`` runs the
-edge cases on both, and the flagship's paths against each other).
+for cell to float rounding (``tests/test_ipf.py`` runs the edge cases
+on both, and against the coordinate-form reference in
+``tests/ipf_reference.py``).
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -49,12 +59,23 @@ from alternating_least_squares_spark.checkpoint import (
     rotate_local_checkpoint,
 )
 from alternating_least_squares_spark.operators import matrix as M
-from alternating_least_squares_spark.operators.ipf import IPFResult
 
 # Refuse to hold more than this many column-marginal entries on the
-# driver; beyond it the coordinate-form `ipf.converge` is the right
-# tool (its shuffles are unavoidable for two unbounded dimensions).
+# driver (the y-marginal is collected, and every state row is an
+# array of this width).
 MAX_DRIVER_COLS = 100_000
+
+
+@dataclass
+class IPFResult:
+    """Mirror of the reference's ``{:matrix :loss :iterations}`` result
+    map (``core.clj:114``), extended with the y-loss (README promises
+    both losses; the reference only tracked x — SURVEY.md §0.3)."""
+
+    matrix: DataFrame
+    loss: float
+    y_loss: float
+    iterations: int
 
 
 def _array_sum(vals) -> F.Column:
@@ -152,14 +173,22 @@ def converge_dense(
 ) -> IPFResult:
     """IPF with the column marginal as driver-side values.
 
-    Same contract as :func:`ipf.converge` (reference ``converge``,
-    ``core.clj:99-119``, with the SURVEY §0.3 fixes: post-step loss,
-    both marginals tracked). The seed's column domain must lie within
-    the y-marginal's id set; cells outside it are ignored, absent
-    cells read as ``seed_fill`` and NULL cells as ``0 + seed_fill``.
-    Each ``(r, c)`` cell may appear once (a duplicate raises). State
-    rows are the seed rows whose id is in x; when there are none the
-    call raises ``ValueError`` naming the empty state.
+    Iterates sweeps until the post-step x-loss drops below
+    ``threshold``, the loss plateaus (Δloss < threshold), or
+    ``max_iterations`` sweeps have run — the reference's three stop
+    criteria (``core.clj:111-113``) with its defaults (threshold 1e-15,
+    max-iter 1000) and the SURVEY §0.3 fixes: post-step loss, both
+    marginals tracked. ``threshold=0`` disables both data-dependent
+    stops, so the loop runs exactly ``max_iterations`` sweeps. Both
+    marginals must share a grand total to 1e-6 relative (README:7).
+
+    The seed's column domain must lie within the y-marginal's id set;
+    cells outside it are ignored, absent cells read as ``seed_fill``
+    and NULL cells as ``0 + seed_fill``, and the result holds every y
+    column of every state row. Each ``(r, c)`` cell may appear once
+    (a duplicate raises). State rows are the seed rows whose id is in
+    x; when there are none the call raises ``ValueError`` naming the
+    empty state.
 
     The loop runs on the driver in NumPy when the state has at most
     :data:`MAX_DRIVER_CELLS` cells (|x| × |y|), and as one eager
@@ -189,7 +218,7 @@ def converge_dense(
     if len(y_rows) > MAX_DRIVER_COLS:
         raise ValueError(
             f"y marginal has {len(y_rows)} entries (> {MAX_DRIVER_COLS}); "
-            "use ipf.converge for unbounded column domains"
+            "converge_dense needs a bounded column domain"
         )
     y_rows.sort(key=lambda row: row[M.ID])
     col_ids = [row[M.ID] for row in y_rows]

@@ -249,8 +249,8 @@ def optimize_marginal(marginal: DataFrame, seed: DataFrame) -> DataFrame:
     m = marginal.select(F.col(ID).alias(R), F.col(V).alias("_m"))
     rowsum = F.sum(V).over(w)
     # rowsum-0 guard: the row keeps its (all-zero) cells instead of
-    # raising ANSI DIVIDE_BY_ZERO — identical to ipf_dense's
-    # _rowsum_guard, so the coordinate and dense loops stay twins.
+    # raising ANSI DIVIDE_BY_ZERO — the convention of converge_dense's
+    # row pass, so a coordinate loop built on this matches it.
     return seed.join(m, R).select(
         R,
         C,
@@ -258,23 +258,6 @@ def optimize_marginal(marginal: DataFrame, seed: DataFrame) -> DataFrame:
         .otherwise(F.col(V))
         .alias(V),
     )
-
-
-def ipf_step(
-    x_marginal: DataFrame, y_marginal: DataFrame, seed: DataFrame
-) -> DataFrame:
-    """A16 — one IPF sweep: fit rows to the x-marginal, then columns to
-    the y-marginal.
-
-    Reference ``step`` at ``core.clj:89-97`` (optimize, transpose,
-    optimize, transpose back). Because transpose is free in COO form
-    (see :func:`transpose`) a sweep is exactly two window-normalize +
-    broadcast-scale passes: shuffle on ``r``, then shuffle on ``c``.
-    That is the minimum possible data movement for IPF.
-    """
-    row_fit = optimize_marginal(x_marginal, seed)
-    col_fit = transpose(optimize_marginal(y_marginal, transpose(row_fit)))
-    return col_fit
 
 
 def normalize_matrix(matrix: DataFrame) -> DataFrame:
@@ -299,19 +282,6 @@ def error_matrix(p: DataFrame, q: DataFrame) -> DataFrame:
     b = q.select(R, C, F.col(V).alias("_q"))
     return a.join(b, [R, C]).select(
         R, C, F.abs(F.col("_p") - F.col("_q")).alias(V)
-    )
-
-
-def matrix_norm(matrix: DataFrame) -> DataFrame:
-    """A20 — L2,1 norm: Σ over rows of per-row L2 norms.
-
-    Reference ``matrix-norm`` at ``core.clj:134-136``. Two-level agg:
-    groupBy(r) partial+final, then a scalar sum.
-    """
-    return (
-        matrix.groupBy(R)
-        .agg(F.sqrt(F.sum(F.pow(F.col(V), F.lit(2)))).alias("_n"))
-        .agg(F.sum("_n").alias("matrix_norm"))
     )
 
 

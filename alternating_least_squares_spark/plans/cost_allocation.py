@@ -33,8 +33,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators import matrix as M
-from alternating_least_squares_spark.operators.ipf import IPFResult, rake_fixed
-from alternating_least_squares_spark.operators.ipf_dense import converge_dense
+from alternating_least_squares_spark.operators.ipf import rake_fixed
+from alternating_least_squares_spark.operators.ipf_dense import (
+    IPFResult,
+    converge_dense,
+)
 from alternating_least_squares_spark.sources import load_table
 
 HOURS = 24
@@ -87,10 +90,10 @@ def allocate_costs(
 
     ``threshold`` here is RELATIVE to the marginal grand total (the
     loop stops when ‖x − rowsums‖ < threshold·Σx). The reference's
-    absolute threshold (``core.clj:103``) is kept in the generic
-    ``converge``/``converge_dense`` operators, but an absolute 1e-9 is
-    below the double-rounding floor once Σx reaches ~1e10 — the loop
-    would spin at the fp plateau for the whole iteration budget.
+    absolute threshold (``core.clj:103``) is kept in ``converge_dense``
+    itself, but an absolute 1e-9 is below the double-rounding floor
+    once Σx reaches ~1e10 — the loop would spin at the fp plateau for
+    the whole iteration budget.
     """
     if base is None:
         base = part_hour_base(spark, sf_dir).localCheckpoint(eager=True)

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators import ipf as IPF
+from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 from alternating_least_squares_spark.operators import hierarchy as H
 from alternating_least_squares_spark.operators import matrix as M
 from alternating_least_squares_spark.operators import relational as Rel
@@ -402,138 +403,6 @@ FROM rf JOIN y ON y.id = rf.c
 """
 
 
-A17_SWEEPS = 6
-
-
-def q_a17_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A17 converge (reference ``core.clj:99-119``) as a FIXED-sweep
-    unroll so the full iterative loop is hash-checkable against a
-    DuckDB oracle (nested CTEs, one pair per sweep).
-
-    Determinism contract: the matrix lives in integer micro-units
-    (``v_us = floor(v * 1e6)`` as long) between half-sweeps. Long sums
-    are exact and order-independent, each rescale is one double
-    division + two multiplies on exact inputs (bit-identical IEEE ops
-    in both engines), and ``floor`` re-quantizes without any rounding-
-    mode ambiguity (Spark HALF_UP vs DuckDB half-even never enters).
-
-    Plan shape: the whole 12-half-sweep loop is ONE declarative
-    Catalyst plan (alternating r/c windows). An eager per-sweep
-    materialization variant (the ipf_dense pattern) was measured
-    SLOWER here — at sf0.01 the matrix is tiny and 13 job submissions
-    cost more than the extra exchanges; the production-scale loop with
-    driver-side convergence control is ``operators/ipf_dense`` (used
-    by the flagship), this query is the oracle-checkable unroll."""
-    wr = Window.partitionBy(M.R)
-    wc = Window.partitionBy(M.C)
-    mat = _qty_matrix(spark, sf_dir).withColumn(
-        "v_us", F.floor(F.col(M.V) * F.lit(1e6)).cast("long")
-    ).select(M.R, M.C, "v_us")
-    x = _qty_vector(spark, sf_dir)  # row marginal
-    y = _hour_vector(spark, sf_dir)  # col marginal
-    for _ in range(A17_SWEEPS):
-        for marg, key, w in ((x, M.R, wr), (y, M.C, wc)):
-            mat = (
-                mat.join(marg.withColumnRenamed(M.ID, key), key)
-                .withColumn(
-                    "v_us",
-                    F.floor(
-                        F.col("v_us").cast("double")
-                        / F.sum("v_us").over(w).cast("double")
-                        * F.col(M.V)
-                        * F.lit(1e6)
-                    ).cast("long"),
-                )
-                .select(M.R, M.C, "v_us")
-            )
-    return mat
-
-
-def _a17_oracle() -> str:
-    ctes = [
-        f"m0 AS (SELECT r, c, CAST(floor(v * 1000000.0) AS BIGINT) AS v_us"
-        f" FROM ({M_SQL}))",
-        f"x AS ({VQ_SQL})",
-        f"y AS ({VH_SQL})",
-    ]
-    prev = "m0"
-    for i in range(A17_SWEEPS):
-        for half, (marg, key) in (("r", ("x", "r")), ("c", ("y", "c"))):
-            name = f"s{i}{half}"
-            ctes.append(
-                f"{name} AS (SELECT m.r, m.c, CAST(floor("
-                f"CAST(m.v_us AS DOUBLE) / CAST(SUM(m.v_us) OVER "
-                f"(PARTITION BY m.{key}) AS DOUBLE) * g.v * 1000000.0"
-                f") AS BIGINT) AS v_us "
-                f"FROM {prev} m JOIN {marg} g ON g.id = m.{key})"
-            )
-            prev = name
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT r, c, v_us FROM {prev}"
-
-
-SQL_A17 = _a17_oracle()
-
-
-RAKE3_SWEEPS = 3
-RAKE3_AXES = ("flag", "status", "ship_month")
-
-
-def q_a22_rake3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-way IPF raking — the N-dimensional generalization of the
-    reference's whole scope (``core.clj:99-119`` rakes a 2-D matrix to
-    row/col marginals; survey statisticians rake 3+ dimensions with
-    the same Deming–Stephan alternating scaling). The tensor is
-    (l_returnflag × l_linestatus × ship month); the three marginals
-    are Σ l_quantity per axis — derived from the SAME scan, so their
-    grand totals agree exactly — and the seed is the observed CELL
-    COUNT profile (a genuinely different shape, so the rake does real
-    work). Fixed sweep R=3 (9 axis passes), the a17 twin discipline:
-    exactly what an unrolled oracle can state.
-
-    Determinism contract (the a16/a17 micro-unit pattern, verbatim):
-    cells live in integer micro-units between passes; each axis pass
-    window-sums exact longs (order-independent below 2^53), does ONE
-    double division + multiply on exact inputs, and re-quantizes with
-    floor (no rounding-mode ambiguity). Distributed shape: one axis
-    pass = one window-sum keyed on that axis + one broadcast marginal
-    join — O(cells) per pass, 3 keyed exchanges per sweep, nothing
-    driver-side; identical movement to ``matrix.ipf_step`` extended
-    to a third axis."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.select(
-        F.col("l_returnflag").alias("flag"),
-        F.col("l_linestatus").alias("status"),
-        F.month("l_shipdate").cast("long").alias("ship_month"),
-        F.col("l_quantity").alias("qty"),
-    )
-    from alternating_least_squares_spark.operators.ipf import rake_fixed
-
-    cells = base.groupBy(*RAKE3_AXES).agg(
-        (F.count("*") * F.lit(1_000_000)).cast("long").alias("v_us")
-    )
-    marginals = [
-        (
-            axis,
-            base.groupBy(axis).agg(
-                F.floor(F.sum("qty") * F.lit(1e6))
-                .cast("long")
-                .alias("m_us")
-            ),
-        )
-        for axis in RAKE3_AXES
-    ]
-    cur = rake_fixed(cells, marginals, RAKE3_SWEEPS)
-    return cur.select(
-        "flag",
-        "status",
-        "ship_month",
-        "v_us",
-        F.round(
-            F.col("v_us").cast("double") / F.lit(1_000_000.0), 6
-        ).alias("alloc"),
-    )
-
-
 def _rake_fixed_ctes(
     start: str, cols: tuple[str, ...], marginals: list[tuple[str, str]],
     sweeps: int,
@@ -566,6 +435,117 @@ def _rake_fixed_ctes(
 )""")
             prev = name
     return ctes, prev
+
+
+A17_SWEEPS = 6
+
+
+def q_a17_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A17 converge (reference ``core.clj:99-119``) as a FIXED-sweep
+    rake on :func:`ipf.rake_fixed`, so the whole iterative loop is
+    hash-checkable against an unrolled DuckDB oracle.
+
+    Determinism contract: the matrix and both marginals live in integer
+    micro-units (``floor(v * 1e6)`` as long). Long sums are exact and
+    order-independent, each rescale is one double division and one
+    multiply on exact inputs (bit-identical IEEE ops in both engines),
+    and ``floor`` re-quantizes without any rounding-mode ambiguity
+    (Spark HALF_UP vs DuckDB half-even never enters). The
+    stop-controlled loop is ``ipf_dense.converge_dense`` (the flagship
+    and a21)."""
+    mat = _qty_matrix(spark, sf_dir).select(
+        M.R, M.C, F.floor(F.col(M.V) * F.lit(1e6)).cast("long").alias("v_us")
+    )
+    marginals = [
+        (
+            key,
+            marg.select(
+                F.col(M.ID).alias(key),
+                F.floor(F.col(M.V) * F.lit(1e6)).cast("long").alias("m_us"),
+            ),
+        )
+        for key, marg in (
+            (M.R, _qty_vector(spark, sf_dir)),
+            (M.C, _hour_vector(spark, sf_dir)),
+        )
+    ]
+    return IPF.rake_fixed(mat, marginals, A17_SWEEPS).select(M.R, M.C, "v_us")
+
+
+def _a17_oracle() -> str:
+    ctes = [
+        f"m0 AS (SELECT r, c, CAST(floor(v * 1000000.0) AS BIGINT) AS v_us"
+        f" FROM ({M_SQL}))",
+        f"x AS (SELECT id AS r, CAST(floor(v * 1000000.0) AS BIGINT) AS m_us"
+        f" FROM ({VQ_SQL}))",
+        f"y AS (SELECT id AS c, CAST(floor(v * 1000000.0) AS BIGINT) AS m_us"
+        f" FROM ({VH_SQL}))",
+    ]
+    passes, last = _rake_fixed_ctes(
+        "m0", (M.R, M.C), [(M.R, "x"), (M.C, "y")], A17_SWEEPS
+    )
+    return "WITH " + ",\n".join(ctes + passes) + f"\nSELECT r, c, v_us FROM {last}"
+
+
+SQL_A17 = _a17_oracle()
+
+
+RAKE3_SWEEPS = 3
+RAKE3_AXES = ("flag", "status", "ship_month")
+
+
+def q_a22_rake3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Three-way IPF raking — the N-dimensional generalization of the
+    reference's whole scope (``core.clj:99-119`` rakes a 2-D matrix to
+    row/col marginals; survey statisticians rake 3+ dimensions with
+    the same Deming–Stephan alternating scaling). The tensor is
+    (l_returnflag × l_linestatus × ship month); the three marginals
+    are Σ l_quantity per axis — derived from the SAME scan, so their
+    grand totals agree exactly — and the seed is the observed CELL
+    COUNT profile (a genuinely different shape, so the rake does real
+    work). Fixed sweep R=3 (9 axis passes), the a17 twin discipline:
+    exactly what an unrolled oracle can state.
+
+    Determinism contract (the a16/a17 micro-unit pattern, verbatim):
+    cells live in integer micro-units between passes; each axis pass
+    window-sums exact longs (order-independent below 2^53), does ONE
+    double division + multiply on exact inputs, and re-quantizes with
+    floor (no rounding-mode ambiguity). Distributed shape: one axis
+    pass = one window-sum keyed on that axis + one broadcast marginal
+    join — O(cells) per pass, 3 keyed exchanges per sweep, nothing
+    driver-side; the same :func:`ipf.rake_fixed` kernel as a17 and
+    the flagship's fixed-sweep twin, over three axes."""
+    li = load_table(spark, sf_dir, "lineitem")
+    base = li.select(
+        F.col("l_returnflag").alias("flag"),
+        F.col("l_linestatus").alias("status"),
+        F.month("l_shipdate").cast("long").alias("ship_month"),
+        F.col("l_quantity").alias("qty"),
+    )
+    cells = base.groupBy(*RAKE3_AXES).agg(
+        (F.count("*") * F.lit(1_000_000)).cast("long").alias("v_us")
+    )
+    marginals = [
+        (
+            axis,
+            base.groupBy(axis).agg(
+                F.floor(F.sum("qty") * F.lit(1e6))
+                .cast("long")
+                .alias("m_us")
+            ),
+        )
+        for axis in RAKE3_AXES
+    ]
+    cur = IPF.rake_fixed(cells, marginals, RAKE3_SWEEPS)
+    return cur.select(
+        "flag",
+        "status",
+        "ship_month",
+        "v_us",
+        F.round(
+            F.col("v_us").cast("double") / F.lit(1_000_000.0), 6
+        ).alias("alloc"),
+    )
 
 
 def _a22_sql() -> str:
@@ -608,21 +588,21 @@ SQL_A22 = _a22_sql()
 
 
 def q_a21_converge_coordinate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A17's GENERIC driver loop (``operators/ipf.py:converge``,
+    """The stop-controlled IPF loop (:func:`ipf_dense.converge_dense`,
     reference ``core.clj:99-119``) run for a fixed 2 iterations and
-    hash-checked — a17 covers the fixed-sweep unroll, this entry
-    executes the actual Python ``while`` loop with its marginal-total
-    precondition, per-sweep loss collect, and stop logic.
+    hash-checked — a17 covers the fixed-sweep rake, this entry
+    executes the flagship's own loop with its marginal-total
+    precondition, loss tracking and stop logic.
 
     Determinism contract (no mid-loop quantization, unlike a17): the
     fixture matrix has exactly ONE cell per row key (c is a function
-    of r), so the row pass computes ``(v/v)*x = x`` exactly, and the
-    column pass then window-sums INTEGRAL doubles (Σ l_quantity) —
-    exact in any order below 2^53 — before one division and one
-    multiply on bit-identical inputs in both engines. ``threshold=0``
-    disables both data-dependent stop criteria, so the loop runs
-    exactly ``max_iterations`` sweeps regardless of float noise in the
-    loss collect."""
+    of r), so the row pass lands each cell on its row's x exactly, and
+    the column pass then sums INTEGRAL doubles (Σ l_quantity) — exact
+    in any order below 2^53 — before one division and one multiply per
+    cell. ``threshold=0`` disables both data-dependent stop criteria,
+    so the loop runs exactly ``max_iterations`` sweeps regardless of
+    float noise in the loss. The loop returns every column of the
+    y domain; the inner join keeps the seed's cells."""
     li = load_table(spark, sf_dir, "lineitem")
     mat = li.groupBy(
         F.col("l_partkey").alias(M.R),
@@ -632,8 +612,9 @@ def q_a21_converge_coordinate(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = li.groupBy((F.col("l_partkey") % HOURS).alias(M.ID)).agg(
         F.sum("l_quantity").alias(M.V)
     )
-    res = IPF.converge(x, y, mat, threshold=0.0, max_iterations=2)
-    return _round(res.matrix, [M.V], 6)
+    res = converge_dense(x, y, mat, threshold=0.0, max_iterations=2)
+    cells = res.matrix.join(mat.select(M.R, M.C), [M.R, M.C])
+    return _round(cells, [M.V], 6)
 
 
 def _a21_oracle() -> str:

@@ -933,6 +933,10 @@ def test_ktruss_validates_guards_and_releases(spark):
     )
     with pytest.raises(ValueError, match="k must be >= 3"):
         ktruss(df, k=2, rounds=7)
+    # the gr03 hub cap comes with its guard: capping below 2 would
+    # silently empty the truss
+    with pytest.raises(ValueError, match="max_degree must be >= 2"):
+        ktruss(df, k=4, rounds=7, max_degree=1)
     jsc = spark.sparkContext._jsc
     before = len(jsc.getPersistentRDDs())
     ktruss(df, k=4, rounds=7).write.format("noop").mode(
@@ -946,11 +950,12 @@ def test_ktruss_runs_no_count_jobs(spark):
     """ktruss's edge counts ride its checkpoints as ``observe``
     metrics, so the call runs no count() job. The fixture peels
     twice (the fan's support-1 edges, then its stranded spine) and
-    stops at round 3. Its jobs are 13 outside the loop (the input
-    checkpoint, the final scoring pass and the collect) plus 11 per
-    round (edge_support's two checkpoints and the rotated edge set).
-    A count() costs 2 jobs here (partial count + final), so one per
-    round plus the initial one would add 8."""
+    stops at round 3. Its jobs are 3 outside the loop (the input
+    checkpoint and the collect) plus 11 per round (edge_support's two
+    checkpoints and the rotated edge set); round 3 reaches the
+    fixpoint, so its supports are returned with no further scoring
+    pass. A count() costs 2 jobs here (partial count + final), so one
+    per round plus the initial one would add 8."""
     from alternating_least_squares_spark.operators.graph import ktruss
 
     cliques = [(a, b) for a in range(4) for b in range(a + 1, 4)] + [
@@ -972,7 +977,7 @@ def test_ktruss_runs_no_count_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == _py_ktruss(edges, 4)
     assert len(got) == len(cliques)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 13 + 3 * 11
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3 + 3 * 11
 
 
 def test_sssp_hand_computed_weighted_beats_hops(spark):

@@ -1,7 +1,10 @@
 """IPF property tests (SURVEY.md §5.2): the invariants that define
 correct Iterative Proportional Fitting, independent of any oracle.
 
-Reference: converge at core.clj:99-119 (with the §0.3 loss fix)."""
+Reference: converge at core.clj:99-119 (with the §0.3 loss fix). The
+loop-contract tests run ``converge_dense`` on both of its paths; the
+coordinate-form ``converge`` in ``tests/ipf_reference.py`` is the
+parity reference."""
 
 from __future__ import annotations
 
@@ -9,8 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators import matrix as M
-from alternating_least_squares_spark.operators.ipf import converge, _marginal_losses
+from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 from tests.conftest import coo_to_nested, vec_to_list
+from tests.ipf_reference import converge, _marginal_losses
 
 
 def _both_paths(monkeypatch):
@@ -34,32 +38,36 @@ def test_row_pass_row_sums_equal_marginal(make_matrix, make_vector):
     assert all(abs(a - b) < 1e-9 for a, b in zip(sums, [10.0, 20.0]))
 
 
-def test_converge_rank1_seed_one_iteration(make_matrix, make_vector):
+def test_converge_rank1_seed_one_iteration(make_matrix, make_vector, monkeypatch):
     """A rank-1 seed is already proportional → IPF converges in exactly
     one sweep with both losses ≈ 0 (SURVEY §5.2)."""
     x, y = make_vector([2, 4]), make_vector([3, 3])
     seed = M.seed_matrix(x, y)  # rank-1 outer product
-    res = converge(x, y, seed, threshold=1e-12, max_iterations=50)
-    assert res.iterations == 1
-    assert res.loss < 1e-12
-    assert res.y_loss < 1e-9
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(x, y, seed, threshold=1e-12, max_iterations=50)
+        assert res.iterations == 1, path
+        assert res.loss < 1e-12, path
+        assert res.y_loss < 1e-9, path
 
 
-def test_converge_conservation_and_both_losses(make_matrix, make_vector):
+def test_converge_conservation_and_both_losses(
+    make_matrix, make_vector, monkeypatch
+):
     """Σmatrix == Σmarginal after convergence (reference README:7
     precondition propagated), and BOTH marginal losses are below
     threshold (fixing the reference's x-only check, SURVEY §0.3)."""
     x = make_vector([6, 14])
     y = make_vector([8, 12])
     seed = make_matrix([[1, 3], [5, 2]])
-    res = converge(x, y, seed, threshold=1e-10, max_iterations=200)
-    assert res.loss < 1e-6 and res.y_loss < 1e-6
-    total = res.matrix.agg(F.sum("v")).first()[0]
-    assert abs(total - 20.0) < 1e-9
-    rows = vec_to_list(M.sum_rows(res.matrix))
-    cols = vec_to_list(M.sum_cols(res.matrix))
-    assert all(abs(a - b) < 1e-6 for a, b in zip(rows, [6.0, 14.0]))
-    assert all(abs(a - b) < 1e-6 for a, b in zip(cols, [8.0, 12.0]))
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(x, y, seed, threshold=1e-10, max_iterations=200)
+        assert res.loss < 1e-6 and res.y_loss < 1e-6, path
+        total = res.matrix.agg(F.sum("v")).first()[0]
+        assert abs(total - 20.0) < 1e-9, path
+        rows = vec_to_list(M.sum_rows(res.matrix))
+        cols = vec_to_list(M.sum_cols(res.matrix))
+        assert all(abs(a - b) < 1e-6 for a, b in zip(rows, [6.0, 14.0])), path
+        assert all(abs(a - b) < 1e-6 for a, b in zip(cols, [8.0, 12.0])), path
 
 
 def test_converge_rejects_mismatched_totals(make_matrix, make_vector):
@@ -83,15 +91,16 @@ def test_marginal_losses_count_unserved_ids(spark, make_vector):
     assert y_loss == 0.0
 
 
-def test_converge_max_iterations_cap(make_matrix, make_vector):
-    res = converge(
-        make_vector([6, 14]),
-        make_vector([8, 12]),
-        make_matrix([[1, 3], [5, 2]]),
-        threshold=0.0,  # unreachable → must stop on the cap
-        max_iterations=3,
-    )
-    assert res.iterations == 3
+def test_converge_max_iterations_cap(make_matrix, make_vector, monkeypatch):
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(
+            make_vector([6, 14]),
+            make_vector([8, 12]),
+            make_matrix([[1, 3], [5, 2]]),
+            threshold=0.0,  # unreachable → must stop on the cap
+            max_iterations=3,
+        )
+        assert res.iterations == 3, path
 
 
 def test_converge_dense_matches_coordinate(make_matrix, make_vector, monkeypatch):
@@ -335,9 +344,6 @@ def test_converge_dense_seed_rows_outside_x_fall_back_above_gate(
 def test_converge_empty_marginal_raises_value_error(spark, monkeypatch):
     """An empty marginal must raise the precondition ValueError, not
     TypeError from abs(None)."""
-    from alternating_least_squares_spark.operators.ipf import converge
-    from alternating_least_squares_spark.operators.ipf_dense import converge_dense
-
     empty = spark.createDataFrame([], "id long, v double")
     x = spark.createDataFrame([(1, 1.0)], "id long, v double")
     seed = spark.createDataFrame([(1, 0, 1.0)], "r long, c long, v double")
@@ -350,28 +356,25 @@ def test_converge_empty_marginal_raises_value_error(spark, monkeypatch):
             converge_dense(empty, x, seed)
 
 
-def test_converge_threshold_zero_runs_exact_iteration_count(spark):
+def test_converge_threshold_zero_runs_exact_iteration_count(spark, monkeypatch):
     """threshold=0 disables both data-dependent stop criteria (loss <
     threshold and plateau), so the loop runs exactly max_iterations —
     the determinism contract the a21 oracle entry relies on."""
-    from alternating_least_squares_spark.operators.ipf import converge
-
     x = spark.createDataFrame([(0, 4.0), (1, 8.0)], "id long, v double")
     y = spark.createDataFrame([(0, 9.0), (1, 3.0)], "id long, v double")
     seed = spark.createDataFrame(
         [(0, 0, 1.0), (0, 1, 1.0), (1, 0, 2.0), (1, 1, 1.0)],
         "r long, c long, v double",
     )
-    res = converge(x, y, seed, threshold=0.0, max_iterations=3)
-    assert res.iterations == 3
+    for path in _both_paths(monkeypatch):
+        res = converge_dense(x, y, seed, threshold=0.0, max_iterations=3)
+        assert res.iterations == 3, path
 
 
-def test_converge_single_cell_rows_fixed_point(spark):
+def test_converge_single_cell_rows_fixed_point(spark, monkeypatch):
     """The a21 fixture shape — one cell per row key — reaches its fixed
-    point after one sweep: the row pass is (v/v)*x = x exactly, so
-    sweep 2 reproduces sweep 1's output bit-for-bit."""
-    from alternating_least_squares_spark.operators.ipf import converge
-
+    point after one sweep: the row pass lands each cell on its row's x
+    exactly, so sweep 2 reproduces sweep 1's output bit-for-bit."""
     x = spark.createDataFrame(
         [(1, 4.0), (2, 8.0), (3, 6.0)], "id long, v double"
     )
@@ -380,11 +383,12 @@ def test_converge_single_cell_rows_fixed_point(spark):
     seed = spark.createDataFrame(
         [(1, 1, 3.0), (2, 0, 5.0), (3, 1, 2.0)], "r long, c long, v double"
     )
-    one = converge(x, y, seed, threshold=0.0, max_iterations=1)
-    two = converge(x, y, seed, threshold=0.0, max_iterations=2)
-    c1 = {(r["r"], r["c"]): r["v"] for r in one.matrix.collect()}
-    c2 = {(r["r"], r["c"]): r["v"] for r in two.matrix.collect()}
-    assert c1 == c2  # exact equality, not approx
+    for path in _both_paths(monkeypatch):
+        one = converge_dense(x, y, seed, threshold=0.0, max_iterations=1)
+        two = converge_dense(x, y, seed, threshold=0.0, max_iterations=2)
+        c1 = {(r["r"], r["c"]): r["v"] for r in one.matrix.collect()}
+        c2 = {(r["r"], r["c"]): r["v"] for r in two.matrix.collect()}
+        assert c1 == c2, path  # exact equality, not approx
 
 
 def test_cost_per_visit_fixed_chain_invariants(spark):

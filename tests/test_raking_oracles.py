@@ -6,7 +6,8 @@ Each entry is compared against its DuckDB oracle with the same compare
 bit-identical under pytest, not only under the out-of-band sweep:
 
 * every fixed-sweep IPF entry, against its unrolled oracle (the shared
-  ``ipf.rake_fixed`` kernel and its SQL template);
+  ``ipf.rake_fixed`` kernel and its SQL template), and a21, the
+  stop-controlled ``converge_dense`` loop, on both of its paths;
 * exact dedup (t05), the MinHash near-dup entries (d03, d11, d12), LSH
   top-k (s01) and semantic dedup (sm01), whose operators each keep one
   production path (Arrow MinHash bands, pandas cluster pairs);
@@ -68,5 +69,20 @@ def test_raking_entry_matches_oracle(spark, duck, name):
     fn = registry.queries()[name]
     status, detail = oracle_check.compare(
         spark, duck, name, fn, registry.oracle_sql()[name], SF_SMALL
+    )
+    assert status == "ok", detail
+
+
+def test_a21_distributed_path_matches_oracle(spark, duck, monkeypatch):
+    """a21 runs ``converge_dense``, whose sf0.001 state sits below the
+    driver cell gate; a zero gate sends it down the distributed path,
+    which must match the same oracle."""
+    from alternating_least_squares_spark.operators import ipf_dense
+
+    monkeypatch.setattr(ipf_dense, "MAX_DRIVER_CELLS", 0)
+    name = "a21_converge_coordinate"
+    status, detail = oracle_check.compare(
+        spark, duck, name, registry.queries()[name],
+        registry.oracle_sql()[name], SF_SMALL,
     )
     assert status == "ok", detail

@@ -21,7 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.operators import matrix as M
-from alternating_least_squares_spark.operators.ipf import converge
+from alternating_least_squares_spark.operators.ipf_dense import converge_dense
 from alternating_least_squares_spark.operators.relational import (
     anti_join,
     filter_nonzero,
@@ -134,7 +134,7 @@ def test_full_ipf_on_reference_data(spark, ref):
         ),
         1e-15,
     )
-    res = converge(x_vec, y_vec, seed, threshold=1e-9, max_iterations=100)
+    res = converge_dense(x_vec, y_vec, seed, threshold=1e-9, max_iterations=100)
     assert res.loss < 1e-6 and res.y_loss < 1e-6
     # imputed matrix spans 73 active keywords × 22 active hours
     assert res.matrix.count() == 73 * 22
