@@ -29,6 +29,7 @@ plan per output, materialized once by the IPF loop.
 from __future__ import annotations
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -117,36 +118,28 @@ def allocate_costs(
             "no revenue rows in lineitem — cannot build the x marginal"
         )
     n_rows = obs_x.get["_nr"]
-    # y is read exactly once downstream (converge_dense collects it to
-    # driver literals), so no checkpoint; the rescale total rides the
-    # SAME aggregate plan instead of a separate pre-scan.
+    # The 24-row hour marginal comes back in one Arrow read and is
+    # rescaled there. Arrow-built, not a Python-list createDataFrame:
+    # that one is a parallelize RDD, and converge_dense's collect of it
+    # would start Python workers (~0.8 CPU-s) for 24 rows.
     y_raw = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.hour("ts").cast("long").alias(M.ID))
         .agg(F.sum("value").alias(M.V))
         .filter(F.col(M.V) != 0)
-        .agg(
-            F.collect_list(F.struct(M.ID, M.V)).alias("_rows"),
-            F.sum(M.V).alias("_yt"),
-        )
-        .first()
+        .toArrow()
     )
-    if not y_raw or not y_raw["_yt"]:
+    y_total = pc.sum(y_raw[M.V]).as_py()
+    if not y_total:
         raise ValueError(
             "hour marginal is empty or sums to 0 — cannot rescale to "
             f"{x_total} (IPF needs both marginals on a shared total)"
         )
-    scale_f = x_total / y_raw["_yt"]
-    # Arrow-built, not a Python-list createDataFrame: that one is a
-    # parallelize RDD, and converge_dense's collect of it would start
-    # Python workers (~0.8 CPU-s) for 24 rows.
     y = spark.createDataFrame(
         pa.table(
             {
-                M.ID: pa.array([r[M.ID] for r in y_raw["_rows"]], pa.int64()),
-                M.V: pa.array(
-                    [r[M.V] * scale_f for r in y_raw["_rows"]], pa.float64()
-                ),
+                M.ID: y_raw[M.ID],
+                M.V: pc.multiply(y_raw[M.V], x_total / y_total),
             }
         )
     )

@@ -821,7 +821,7 @@ def q_b04_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _scratch_path("alternating_ls_orc_roundtrip", "supplier")
     catalog.write_orc(supplier, path)
-    return catalog.read_orc(spark, path)
+    return catalog.read_orc(spark, path, schema=catalog.TABLES["supplier"])
 
 
 SQL_B04 = """

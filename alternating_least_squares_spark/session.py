@@ -43,10 +43,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic sessionized timezone for timestamp oracle parity.
         .config("spark.sql.session.timeZone", "UTC")
-        # Older events.parquet stores INT64 TIMESTAMP(NANOS) which the
-        # reader otherwise rejects; read as raw longs, converted in the
-        # catalog (no-op for the MICROS layout newer testdata uses).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

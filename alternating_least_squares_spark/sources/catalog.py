@@ -2,8 +2,13 @@
 
 The reference's IO surface is CSV only (`data.clj:5-15` — ``open-csv``
 eager read, ``save-csv`` write). We re-expose that (B1/B2 in
-SURVEY.md §2) plus parquet (the driver testdata format) and JSON, all
-with explicit schemas so scans prune columns and push filters.
+SURVEY.md §2) plus parquet (the driver testdata format), JSON and ORC.
+
+One rule for the testdata tables: :data:`TABLES` is the only statement
+of each table's read schema. :func:`load_table` reads with it, so a
+table load infers nothing, starts no Spark job and writes no session
+conf; the one exception is the nanos layout of ``events`` (see
+:func:`events_read_schema`).
 
 At 100 TB the scan is the whole game: always select the needed columns
 before any transform (column pruning reaches the parquet footer), and
@@ -15,12 +20,14 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Pinned schemas for the driver testdata (FIXTURES.md §B). Explicit
-# schemas mean zero inference jobs and stable oracle comparisons.
+# The read schema of each driver testdata table (FIXTURES.md §B), equal
+# field for field to its parquet footer (tests/test_catalog.py checks
+# this at every testdata scale). Reading with it means no inference job.
 TABLES: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -68,7 +75,7 @@ TABLES: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -84,19 +91,14 @@ TABLES: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
-    # events.parquet has shipped with two physical layouts for ``ts``:
-    # INT64 TIMESTAMP(NANOS) — which the Spark parquet reader rejects
-    # outright ([PARQUET_TYPE_ILLEGAL]) unless read with nanosAsLong —
-    # and INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives
-    # as TIMESTAMP_NTZ. ``load_table`` detects the layout from the file
-    # footer and normalizes both to this POST-conversion contract:
-    # ``ts`` a proper TimestampType (microsecond precision) and
-    # ``ts_ns`` the epoch-nanos long for timezone-independent
-    # arithmetic (oracle parity: DuckDB's epoch_ns(ts) yields the same
-    # value for either layout).
+    # events is the one table whose pin is the contract after
+    # normalize_events, not the file: ``ts`` a TimestampType and
+    # ``ts_ns`` the epoch-nanos long for timezone-independent arithmetic
+    # (DuckDB's epoch_ns(ts) gives the same value). The file holds ``ts``
+    # only, in one of two layouts; events_read_schema reads the layout.
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -136,8 +138,8 @@ def normalize_events(raw: DataFrame) -> DataFrame:
     expressions, no actions).
     """
     if isinstance(raw.schema["ts"].dataType, T.LongType):
-        # INT64 TIMESTAMP(NANOS) read under nanosAsLong: raw epoch
-        # nanos. Integer division: `/` would round through double and
+        # INT64 TIMESTAMP(NANOS) read as a long: raw epoch nanos.
+        # Integer division: `/` would round through double and
         # can land 1µs high before the truncating cast.
         ts = F.timestamp_micros(F.expr("ts DIV 1000")).alias("ts")
         ts_ns = F.col("ts").alias("ts_ns")
@@ -161,23 +163,54 @@ def normalize_events(raw: DataFrame) -> DataFrame:
     )
 
 
+def events_read_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Physical read schema of an ``events`` parquet file or directory:
+    ``TABLES["events"]`` without ``ts_ns``, with ``ts`` typed as Spark
+    types the ``ts`` column of the (first) footer.
+
+    The footer is read with pyarrow, so this starts no Spark job.
+    TIMESTAMP(MICROS, unadjusted), the testdata layout, reads as
+    TIMESTAMP_NTZ; INT96 (Spark's own writer) and UTC-adjusted columns
+    as TIMESTAMP. Spark rejects INT64 TIMESTAMP(NANOS)
+    ([PARQUET_TYPE_ILLEGAL]) unless it reads it as a raw epoch-nanos
+    long, which a session conf allows; that layout alone sets it, on
+    the caller's session, which the scan reads it from.
+    """
+    fragment = next(pads.dataset(path, format="parquet").get_fragments())
+    footer = fragment.metadata.schema
+    physical = footer.column(footer.names.index("ts")).physical_type
+    ts = fragment.physical_schema.field("ts").type
+    ts_type: T.DataType = T.TimestampNTZType()
+    if physical == "INT64" and ts.unit == "ns":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ts_type = T.LongType()
+    elif physical == "INT96" or ts.tz is not None:
+        ts_type = T.TimestampType()
+    return T.StructType(
+        [
+            T.StructField("ts", ts_type) if f.name == "ts" else f
+            for f in TABLES["events"].fields
+            if f.name != "ts_ns"
+        ]
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table by name (parquet scan).
+    """Read one driver testdata table by name with its pinned schema.
 
-    Parquet scans get column pruning + predicate pushdown for free:
-    any ``.select``/``.filter`` the caller adds reaches the reader.
-
-    ``events`` needs special handling — see :func:`normalize_events`.
-    The nanosAsLong flip is safe under either layout (it only affects
-    NANOS columns, which Spark cannot read at all otherwise) and is set
-    on the *caller's* session so this works under the driver-owned
-    SparkSession too, not just :mod:`..session`.
+    The schema is ``TABLES[name]``, so the read infers nothing and
+    starts no Spark job. ``events`` is read with
+    :func:`events_read_schema` and mapped onto its pin by
+    :func:`normalize_events`. Parquet scans get column pruning and
+    predicate pushdown: any ``.select``/``.filter`` the caller adds
+    reaches the reader.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events(spark.read.parquet(path))
-    return spark.read.parquet(path)
+        return normalize_events(
+            spark.read.schema(events_read_schema(spark, path)).parquet(path)
+        )
+    return spark.read.schema(TABLES[name]).parquet(path)
 
 
 def read_csv(
@@ -205,16 +238,11 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").csv(path)
 
 
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """JSON-lines scan. Always pass a schema in production — inference
-    is a full extra read, and at 100 TB a schema drift should fail
-    loudly at plan time, not silently widen types."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """JSON-lines scan with an explicit schema: inference would be a
+    full extra read, and at 100 TB a schema drift should fail loudly at
+    plan time, not silently widen types."""
+    return spark.read.schema(schema).json(path)
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -222,16 +250,12 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """ORC scan. Columnar like parquet (striped, with min/max indexes),
-    so column pruning and predicate pushdown reach the reader the same
-    way; the format matters for interop with Hive/Trino warehouses."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+def read_orc(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """ORC scan with an explicit schema. Columnar like parquet (striped,
+    with min/max indexes), so column pruning and predicate pushdown
+    reach the reader the same way; the format matters for interop with
+    Hive/Trino warehouses."""
+    return spark.read.schema(schema).orc(path)
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -4,8 +4,8 @@ The reference has no streaming surface (verified across all 12 files —
 SURVEY.md §2.D); this module is the net-new extension the brief asks
 for, built on Spark's native machinery:
 
-* file-source stream (``readStream.parquet``) with the same
-  nanos-timestamp handling as the batch catalog,
+* file-source stream (``readStream.parquet``) with the batch
+  catalog's read schema and timestamp handling,
 * event-time **watermarks** so state for late data is bounded,
 * **tumbling windows** (``F.window``) for time-bucketed aggregates,
 * **session windows** (``F.session_window``) for gap-based
@@ -33,52 +33,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import normalize_events
-
-# Physical read schema when ts is INT64 TIMESTAMP(NANOS) in the
-# parquet footer; with nanosAsLong it arrives as a raw epoch-nanos
-# long (same contract as sources.catalog.load_table). Newer testdata
-# stores TIMESTAMP(MICROS) instead — `raw_events_schema` probes the
-# footer and returns whichever applies; keep this constant only as the
-# nanos-layout fixture schema for tests.
-RAW_EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def raw_events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Physical read schema of ``<sf_dir>/events.parquet``.
-
-    A file-source stream must be given its schema up front; the right
-    one depends on which layout the testdata shipped with (epoch-nanos
-    long vs TIMESTAMP_NTZ micros — see sources.catalog.normalize_events).
-    A batch reader resolves this from the footer alone (no data scan),
-    so probe with one and reuse its answer for the stream.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+from ..sources.catalog import events_read_schema, normalize_events
 
 
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream of the events table with the catalog's column
-    contract: ``ts`` (micros TimestampType) + ``ts_ns`` (raw long).
+    contract: ``ts`` (micros TimestampType) + ``ts_ns`` (raw long), read
+    with the batch catalog's schema (``events_read_schema``).
 
     ``maxFilesPerTrigger`` paces ingestion for a live run; the
     registry's replay path leaves it unset and uses AvailableNow.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = (
-        spark.readStream.schema(raw_events_schema(spark, sf_dir))
-        .option("pathGlobFilter", "events.parquet")
+    schema = events_read_schema(spark, os.path.join(sf_dir, "events.parquet"))
+    reader = spark.readStream.schema(schema).option(
+        "pathGlobFilter", "events.parquet"
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -23,7 +23,6 @@ def spark():
         .appName("alternating-least-squares-spark-tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

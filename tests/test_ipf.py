@@ -514,12 +514,13 @@ def test_cost_per_visit_ipf_invariants_and_job_count(spark):
     the part marginal and its column sums the hour marginal rescaled to
     Σx, each within 1e-6·Σx (the benchmark's IPF check), in a pinned
     number of Spark jobs. Below the cell gate the sweeps run in NumPy,
-    so the count does not grow with the sweeps: 2 parquet schema reads
-    (lineitem, events), 2 each for the base and the x checkpoints, 3
-    for the hour marginal's aggregate, 1 each for the Arrow collects of
-    x and of the seed, and 2 for the final join. The 24-row y collect
-    reads an Arrow-built frame and runs none. The distributed path
-    instead runs a setup checkpoint and one checkpoint job per sweep."""
+    so the count does not grow with the sweeps: 2 each for the base and
+    the x checkpoints, 2 for the hour marginal's Arrow read, 1 each for
+    the Arrow collects of x and of the seed, and 2 for the final join.
+    The table loads read pinned schemas and run none, and the 24-row y
+    collect reads an Arrow-built frame and runs none. The distributed
+    path instead runs a setup checkpoint and one checkpoint job per
+    sweep."""
     from collections import defaultdict
 
     from alternating_least_squares_spark.plans import cost_allocation as CA
@@ -561,7 +562,7 @@ def test_cost_per_visit_ipf_invariants_and_job_count(spark):
     assert rowsum.keys() == x.keys() and colsum.keys() == y.keys()
     assert max(abs(rowsum[k] - x[k]) for k in x) <= 1e-6 * x_total
     assert max(abs(colsum[k] - y[k]) for k in y) <= 1e-6 * x_total
-    assert n_jobs == 13, n_jobs
+    assert n_jobs == 10, n_jobs
 
 
 def test_allocate_costs_driver_path_matches_distributed(spark, monkeypatch):

@@ -823,7 +823,7 @@ def test_key_uniqueness_flags_planted_duplicates(spark, tmp_path):
     write("lineitem", pa.table({
         "l_orderkey": pa.array([1, 1, 1], pa.int64()),
         # composite (1,1) duplicated; (1,2) fine
-        "l_linenumber": pa.array([1, 1, 2], pa.int64()),
+        "l_linenumber": pa.array([1, 1, 2], pa.int32()),
     }))
     write("orders", pa.table({"o_orderkey": pa.array([7], pa.int64())}))
     # customer is written EMPTY: an empty table must report a passing

@@ -5,6 +5,7 @@ must reproduce the batch aggregation bit-for-bit)."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from alternating_least_squares_spark.sources import load_table
 from alternating_least_squares_spark.streaming import (
@@ -14,6 +15,19 @@ from alternating_least_squares_spark.streaming import (
     sessionize_stream,
 )
 from tests.conftest import SF_SMALL
+
+# Read schema of the events copies the tests below write, with ``ts``
+# the epoch-nanos long ``ts_ns``.
+RAW_EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 
 def test_stream_hourly_equals_batch(spark):
@@ -137,8 +151,6 @@ def test_multi_batch_replay_equals_batch(spark, tmp_path):
     path = str(tmp_path / "events_multi")
     src.repartition(4).write.mode("overwrite").parquet(path)
 
-    from alternating_least_squares_spark.streaming.events import RAW_EVENTS_SCHEMA
-
     raw = (
         spark.readStream.schema(RAW_EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -259,9 +271,6 @@ def test_stream_foreachbatch_merge_accumulates_state(spark, tmp_path):
     the file-arrival order, the final table must equal the batch
     aggregate EXACTLY (decimal accumulation, no float drift)."""
     from alternating_least_squares_spark.operators.relational import upsert
-    from alternating_least_squares_spark.streaming.events import (
-        RAW_EVENTS_SCHEMA,
-    )
 
     src = load_table(spark, SF_SMALL, "events").select(
         "event_id", F.col("ts_ns").alias("ts"), "user_id", "event_type",
@@ -439,7 +448,6 @@ def test_stream_snapshot_sink_incremental_merge(spark, tmp_path):
         )
         pq.write_table(t, str(src / f"events_{i}.parquet"))
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(str(src / "events_0.parquet")).schema
     stream = normalize_events(
         spark.readStream.schema(schema)
