@@ -20,6 +20,8 @@ bucket-join, never all-pairs:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -27,9 +29,11 @@ from alternating_least_squares_spark.checkpoint import (
     local_checkpoint_owned,
     release_local_checkpoint,
 )
+from alternating_least_squares_spark.functions import xxh
 from alternating_least_squares_spark.functions.textfns import shingles, tokens
 from alternating_least_squares_spark.functions.width import spread_if_narrow
 from alternating_least_squares_spark.operators.graph import _hash_min
+from alternating_least_squares_spark.session import ship_package
 
 HEX_DIGITS = "0123456789abcdef"
 
@@ -302,6 +306,54 @@ def exact_dup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _minhash_band_rows(
+    hs: pa.ListArray,
+    perm_seeds: list[np.uint64],
+    band_seeds: list[np.uint64],
+    rows_per_band: int,
+) -> np.ndarray:
+    """The band hashes of one Arrow batch of ``_hs`` lists, as an
+    ``(n, bands)`` int64 array (see :func:`_arrow_minhash_bands`).
+
+    A NULL ``_hs`` bands exactly like an empty one. Membership comes
+    from the validity bitmap, never from the NULL slot's offsets (the
+    Arrow format leaves those unspecified), and the values of NULL and
+    empty rows are dropped before the per-document ``reduceat``."""
+    n = len(hs)
+    # `offsets` is the (slice-adjusted) offsets array, indexing
+    # absolutely into `values`, which includes pre-slice data
+    offs = np.asarray(hs.offsets).astype(np.int64)
+    lengths = np.diff(offs)
+    nonempty = (lengths > 0) & hs.is_valid().to_numpy(zero_copy_only=False)
+    vals = np.asarray(hs.values).view(np.uint64)[offs[0] : offs[-1]]
+    if not nonempty.all():
+        vals = vals[np.repeat(nonempty, lengths)]
+    ne_lengths = lengths[nonempty]
+    ne_starts = np.cumsum(ne_lengths) - ne_lengths
+    n_ne = int(ne_starts.size)
+    out = np.empty((n, len(band_seeds)), dtype=np.int64)
+    if n_ne:
+        # per-permutation signature mins of the non-empty docs, whose
+        # values are now contiguous: reduceat segments are exactly the
+        # per-doc ranges
+        sig = np.empty((len(perm_seeds), n_ne), dtype=np.uint64)
+        for j, seed in enumerate(perm_seeds):
+            y = xxh.hash_long(vals, seed).view(np.int64)
+            # array_min on BIGINT compares SIGNED — min in int64 view,
+            # store bits back as uint64
+            sig[j] = np.minimum.reduceat(y, ne_starts).view(np.uint64)
+        ne_bands = np.empty((n_ne, len(band_seeds)), dtype=np.int64)
+        for b, seed in enumerate(band_seeds):
+            h = np.broadcast_to(seed, (n_ne,)).copy()
+            for r in range(rows_per_band):
+                h = xxh.hash_long(sig[b * rows_per_band + r], h)
+            ne_bands[:, b] = h.view(np.int64)
+        out[nonempty] = ne_bands
+    if n_ne < n:
+        out[~nonempty] = np.array(band_seeds, dtype=np.uint64).view(np.int64)
+    return out
+
+
 def _arrow_minhash_bands(
     narrow: DataFrame, n_hashes: int, bands: int, rows_per_band: int
 ) -> DataFrame:
@@ -318,17 +370,18 @@ def _arrow_minhash_bands(
     ``functions.xxh`` replicates Spark's ``XXH64`` short-input paths,
     so these are the longs the Spark expressions
     ``array_min(transform(_hs, h -> xxhash64(j, h)))`` and
-    ``xxhash64(b, slice(...))`` produce. An empty ``_hs`` (all-NULL
-    signature, every element skipped in the fold) bands to
-    ``hashInt(b, 42)``. The expression spelling lives in
+    ``xxhash64(b, slice(...))`` produce. An empty or NULL ``_hs``
+    (all-NULL signature, every element skipped in the fold) bands to
+    ``hashInt(b, 42)``. The per-batch body is
+    :func:`_minhash_band_rows`; the package is shipped to the workers
+    (``session.ship_package``), so the pass runs from any working
+    directory. The expression spelling lives in
     ``tests/pair_references.py`` and parity is pinned by
     ``tests/test_r19_optimizations.py``.
 
     Plan shape: one narrow zero-shuffle pass; only ``_id`` and
     ``_hs`` cross the Python boundary.
     """
-    import pyarrow as pa
-
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     in_schema = narrow.schema
@@ -338,10 +391,6 @@ def _arrow_minhash_bands(
     )
 
     def bands_batches(it):
-        import numpy as np
-
-        from alternating_least_squares_spark.functions import xxh
-
         perm_seeds = [xxh.xxhash64_int_seed(j) for j in range(n_hashes)]
         band_seeds = [xxh.xxhash64_int_seed(b) for b in range(bands)]
         band_offsets_cache: dict[int, pa.Array] = {}
@@ -350,41 +399,10 @@ def _arrow_minhash_bands(
             if n == 0:
                 continue
             cols = {name: i for i, name in enumerate(batch.schema.names)}
-            hs = batch.column(cols["_hs"])
-            # ListArray internals: `offsets` is the (slice-adjusted)
-            # int32 offsets array, indexing absolutely into `values`
-            # (which deliberately includes pre-slice data).
-            offs = np.asarray(hs.offsets).astype(np.int64)
-            vals = np.asarray(hs.values).view(np.uint64)[: offs[-1]]
-            starts, ends = offs[:-1], offs[1:]
-            nonempty = ends > starts  # NULL rows carry equal offsets
-            ne_starts = starts[nonempty]
-            n_ne = int(ne_starts.size)
-            out = np.empty((n, bands), dtype=np.int64)
-            if n_ne:
-                # per-permutation signature mins for non-empty docs:
-                # empty docs contribute no values, so dropping their
-                # (duplicate) start indices keeps reduceat segments
-                # exactly the per-doc ranges.
-                sig = np.empty((n_hashes, n_ne), dtype=np.uint64)
-                for j in range(n_hashes):
-                    y = xxh.hash_long(vals, perm_seeds[j]).view(np.int64)
-                    # array_min on BIGINT compares SIGNED — min in
-                    # int64 view, store bits back as uint64
-                    sig[j] = np.minimum.reduceat(y, ne_starts).view(
-                        np.uint64
-                    )
-                ne_bands = np.empty((n_ne, bands), dtype=np.int64)
-                for b in range(bands):
-                    h = np.broadcast_to(band_seeds[b], (n_ne,)).copy()
-                    for r in range(rows_per_band):
-                        h = xxh.hash_long(sig[b * rows_per_band + r], h)
-                    ne_bands[:, b] = h.view(np.int64)
-                out[nonempty] = ne_bands
-            if n_ne < n:
-                out[~nonempty] = np.array(
-                    band_seeds, dtype=np.uint64
-                ).view(np.int64)
+            out = _minhash_band_rows(
+                batch.column(cols["_hs"]), perm_seeds, band_seeds,
+                rows_per_band,
+            )
             if n not in band_offsets_cache:
                 band_offsets_cache[n] = pa.array(
                     np.arange(0, (n + 1) * bands, bands, dtype=np.int32),
@@ -402,6 +420,7 @@ def _arrow_minhash_bands(
                 names=["_id", "_hs", "_bands"],
             )
 
+    ship_package(narrow.sparkSession)
     return narrow.mapInArrow(bands_batches, out_schema)
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.functions.similarity import vec_norm
+from alternating_least_squares_spark.session import ship_package
 
 
 def assign_clusters(
@@ -173,6 +174,7 @@ def _pandas_cluster_pairs(
             }
         )
 
+    ship_package(assigned.sparkSession)
     # groupBy keeps a NULL-cluster group; unassignable rows never pair
     return (
         assigned.filter(F.col("cluster").isNotNull())

@@ -141,22 +141,31 @@ def lang_scores(text: Column) -> dict[str, Column]:
 
 def shingles(text: Column, k: int = 3) -> Column:
     """Word-level k-shingles → array<string> (Broder 1997 MinHash
-    building block). Built with ``transform`` over an index sequence —
-    a generator inside codegen, no UDF, no shuffle.
+    building block): ``transform`` over an index sequence, no UDF, no
+    shuffle.
+
+    The token array is bound ONCE per row, as the lambda variable of a
+    one-element ``transform``: a Python-side ``toks`` captured in the
+    lambdas would be inlined by Catalyst into every use, re-running the
+    ``regexp_replace`` + ``split`` of :func:`tokens` k times per
+    shingle. ``tests/test_textfns.py`` pins one ``split`` in the plan.
 
     Documents shorter than k tokens contribute their whole token
     string as a single shingle, so no document silently drops out of
-    dedup."""
-    toks = tokens(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), n - F.lit(k))
-    make = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-        ),
-    )
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(make)
+    dedup; NULL, empty and whitespace-only text give ``['']``."""
+
+    def body(toks: Column) -> Column:
+        n = F.size(toks)
+        make = F.transform(
+            F.sequence(F.lit(0), n - F.lit(k)),
+            lambda i: F.concat_ws(
+                " ",
+                *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)],
+            ),
+        )
+        return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(make)
+
+    return F.element_at(F.transform(F.array(tokens(text)), body), 1)
 
 
 def fingerprint(text: Column, k: int = 3) -> Column:

@@ -1,21 +1,24 @@
-"""Iterative graph analytics — PageRank in exact integer arithmetic.
+"""Iterative graph analytics: PageRank in exact integer arithmetic,
+triangles and k-truss, k-core, BFS/SSSP, label propagation and the
+hash-min connected components shared with ``functions/dedup.py``.
 
-Complements the dedup suite's connected components
-(``functions/dedup.py``) with the other canonical iterative graph
-workload. Spark-first shape: each iteration is ONE equi-join (rank →
-out-edges) plus ONE keyed aggregation (contributions → destination),
-the Pregel message-passing pattern expressed as DataFrames; per-round
+Spark-first shape: each iteration is ONE equi-join (state →
+out-edges) plus ONE keyed aggregation (messages → destination), the
+Pregel message-passing pattern expressed as DataFrames; a per-round
 ``localCheckpoint`` keeps lineage flat so iteration N doesn't replay
-iterations 1..N-1.
+iterations 1..N-1. The one exception is :func:`_hash_min`, whose
+rounds run in NumPy on the driver when the symmetric edge set is at
+most :data:`MAX_DRIVER_EDGES` edges: a small graph's rounds spend
+their time in job scheduling, not compute.
 
-Determinism contract (oracle-ready, the a17 micro-unit idea taken all
-the way): ranks live in integer micro-units and EVERY op is integer —
-``contrib = pr DIV outdeg`` (truncating long division; operands are
-nonnegative so it's floor), damping is ``(damping_pct · Σcontrib) DIV
-100``. There is no floating point anywhere, so any engine computes
-bit-identical ranks in any partition order. The classic float
-formulation is order-dependent under parallel summation and can never
-hash-match across engines.
+PageRank's determinism contract (oracle-ready, the a17 micro-unit
+idea taken all the way): ranks live in integer micro-units and EVERY
+op is integer — ``contrib = pr DIV outdeg`` (truncating long
+division; operands are nonnegative so it's floor), damping is
+``(damping_pct · Σcontrib) DIV 100``. There is no floating point
+anywhere, so any engine computes bit-identical ranks in any partition
+order. The classic float formulation is order-dependent under
+parallel summation and can never hash-match across engines.
 
 Semantics notes: dangling nodes (no out-edges) leak their rank mass
 (the common simplification — no uniform redistribution), and the
@@ -25,8 +28,11 @@ both are deterministic and documented rather than hidden.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from alternating_least_squares_spark.checkpoint import (
     local_checkpoint_owned,
@@ -740,34 +746,72 @@ def clustering_coefficients(
     )
 
 
+# Largest symmetric edge set (both directions, deduplicated) whose
+# hash-min rounds run on the driver. This is a driver-memory bound, not
+# a speed crossover: on a random graph of average degree 4 (4 vCPUs,
+# `local[4]`, rounds to the fixpoint, least CPU of 3 runs, CPU of the
+# driver process and the JVM) the driver path won at every size
+# measured, in wall / CPU seconds
+#     edges     driver         distributed
+#     100k      1.0 / 3.3      6.4 / 12.6
+#     1M        2.7 / 6.7      23.5 / 69.1
+#     4M        11.9 / 23.8    67.6 / 243.0
+# while the driver's Python peak RSS grew from 149 MB to 214 MB at 1M
+# edges and 429 MB at 4M (the JVM's peak was the same on both paths).
+# d11's and gr08's graphs are below it at every testdata scale.
+MAX_DRIVER_EDGES = 1_000_000
+
+
 def _hash_min(
     edges: DataFrame, rounds: int
 ) -> tuple[DataFrame, set[int], bool]:
     """The hash-min round loop behind :func:`components_fixed` and
     ``functions.dedup.dedup_components``. ``edges``: columns ``a``,
     ``b`` (undirected; deduplicated here). Runs at most ``rounds``
-    rounds and returns ``(labels, owned, reached_fixpoint)``:
-    ``labels`` is ``(vertex, component)`` on a checkpoint whose block
-    ids are ``owned``, and ``reached_fixpoint`` says whether a round
-    changed no label.
+    synchronous rounds — each vertex takes the minimum of its own and
+    its neighbors' labels — and returns
+    ``(labels, owned, reached_fixpoint)``: ``labels`` is
+    ``(vertex, component)``, typed like the edge ids, ``owned`` the
+    block ids of the checkpoint it reads (empty on the driver path),
+    and ``reached_fixpoint`` is true only when a round inside the
+    budget changed no label. Labels only ever decrease and a round is
+    idempotent at the fixpoint, so stopping there gives the labels of
+    running every round. Rounds needed = component diameter, NOT
+    log |V|: hash-min moves the minimum one hop per round.
 
-    Each round is ONE vertex-keyed equi-join (labels onto out-edges)
-    and ONE groupBy-min, both shuffled on the vertex id (the
-    Pregel-as-DataFrames pattern shared with pagerank/kcore/bfs). The
-    rotated localCheckpoint keeps lineage flat, and the round's
-    changed count rides that checkpoint as an ``observe`` metric, so
-    the stop test costs no job. Labels only ever decrease and the
-    round is idempotent at the fixpoint, so stopping there gives the
-    same labels as running every round. Rounds needed = component
-    diameter, NOT log |V|: hash-min moves the minimum one hop per
-    round."""
+    The symmetric edges are checkpointed once; ``observe`` metrics on
+    that checkpoint count them and their NULL ids at no extra job. An
+    integer-id edge set of at most :data:`MAX_DRIVER_EDGES` edges with
+    no NULL id is collected once over Arrow and its rounds run in
+    NumPy (``np.minimum.at`` over the directed edges); labels are
+    integers, so the result equals the distributed loop's exactly.
+    Larger graphs run the distributed loop: per round ONE vertex-keyed
+    equi-join (labels onto out-edges) and ONE groupBy-min on a rotated
+    localCheckpoint, whose changed count rides that checkpoint as an
+    ``observe`` metric, so the stop test costs no job."""
+    seen = Observation()
     e, own_e = local_checkpoint_owned(
         edges.select("a", "b")
         .unionByName(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         .distinct()
+        .observe(
+            seen,
+            F.count(F.lit(1)).alias("_edges"),
+            F.count_if(F.col("a").isNull() | F.col("b").isNull()).alias(
+                "_null_ids"
+            ),
+        )
     )
+    size = seen.get
+    id_type = e.schema["a"].dataType
+    if (
+        size["_edges"] <= MAX_DRIVER_EDGES
+        and not size["_null_ids"]
+        and isinstance(id_type, T.IntegralType)
+    ):
+        return _hash_min_driver(e, own_e, id_type, rounds)
     labels, owned = local_checkpoint_owned(
         e.select(F.col("a").alias("vertex"))
         .distinct()
@@ -809,6 +853,39 @@ def _hash_min(
     # the final labels are materialized; the graph is no longer read
     _release(labels, own_e)
     return labels, owned, reached_fixpoint
+
+
+def _hash_min_driver(
+    e: DataFrame, own_e: set[int], id_type: T.DataType, rounds: int
+) -> tuple[DataFrame, set[int], bool]:
+    """:func:`_hash_min`'s rounds in NumPy on the checkpointed
+    symmetric edges ``e``: one Arrow collect, no Spark job per round.
+    Releases ``e``'s checkpoint; the labels come back as an Arrow-built
+    frame that owns no checkpoint."""
+    t = e.toArrow()
+    _release(e, own_e)
+    vertex, src = np.unique(t["a"].to_numpy(), return_inverse=True)
+    dst = np.searchsorted(vertex, t["b"].to_numpy())
+    labels = vertex.copy()
+    reached_fixpoint = False
+    for _ in range(rounds):
+        new = labels.copy()
+        np.minimum.at(new, dst, labels[src])
+        if np.array_equal(new, labels):
+            reached_fixpoint = True
+            break
+        labels = new
+    schema = T.StructType(
+        [T.StructField("vertex", id_type), T.StructField("component", id_type)]
+    )
+    arrow_type = t.schema.field("a").type
+    out = pa.table(
+        {
+            "vertex": pa.array(vertex, arrow_type),
+            "component": pa.array(labels, arrow_type),
+        }
+    )
+    return e.sparkSession.createDataFrame(out, schema), set(), reached_fixpoint
 
 
 def components_fixed(edges: DataFrame, rounds: int) -> DataFrame:

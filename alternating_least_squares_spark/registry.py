@@ -7534,11 +7534,11 @@ def q_t25_hashed_decontaminate(
 
 def _t24_gram_stream(df: DataFrame) -> DataFrame:
     """Raw (doc_id, gram) rows for t24/t25, k=8, NOT deduplicated,
-    assembled by COMPILED lead() windows over one posexplode (the t21
-    lesson, re-measured here: the ``shingles()`` transform-over-index
-    HOF runs its 8-element_at lambda interpreted and cost 46 s at
-    sf0.1 vs ~3 s for this form), keeping ``shingles()``'s short-doc
-    semantics — a document under k tokens contributes its whole
+    assembled by COMPILED lead() windows over one posexplode (46 s
+    at sf0.1 for ``shingles()`` vs ~3 s for this form, measured while
+    ``shingles()`` re-tokenized each document for every element_at of
+    its 8-gram lambda; it now binds the token array once per row),
+    keeping ``shingles()``'s short-doc semantics — a document under k tokens contributes its whole
     token string as one gram, so no document silently drops out."""
     from alternating_least_squares_spark.functions.width import (
         spread_if_narrow,
@@ -10910,9 +10910,11 @@ def q_gr08_connected_components(
     both sides — ≥ the measured component diameters at both test SFs
     (sf0.1's support graph is mostly small fragments; sf0.01's is one
     big component of diameter ≤ 8), with fixed-sweep == the live
-    convergence loop pinned by pytest. Same Pregel-as-DataFrames
-    shape as gr01/gr05/gr06: per round one vertex-keyed join + one
-    groupBy-min, per-round localCheckpoint."""
+    convergence loop pinned by pytest. The support graph is under
+    ``graph.MAX_DRIVER_EDGES`` at every test SF, so the rounds run in
+    NumPy on the driver after one Arrow collect; above the gate each
+    round is one vertex-keyed join + one groupBy-min on a rotated
+    localCheckpoint."""
     from alternating_least_squares_spark.operators.graph import (
         components_fixed,
     )
@@ -15525,10 +15527,14 @@ def q_d11_neardup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_dedup.py's planted-pair fixtures.
 
     Scale posture: inherits near_dup_pairs' banded-join-only shape
-    and the hash-min round of graph.components_fixed, one join + one
-    groupBy-min per round with the stop test observed on the round's
-    checkpoint (clusters are near-cliques → 2-3 rounds); the
-    singleton pass is one anti-join. Nothing here is all-pairs."""
+    (each document tokenized once by ``shingles()``) and
+    ``graph._hash_min``: a pair graph of at most ``MAX_DRIVER_EDGES``
+    symmetric edges (every testdata scale) is collected once over
+    Arrow and its rounds run in NumPy on the driver; a larger one runs
+    one join + one groupBy-min per round with the stop test observed
+    on the round's checkpoint (clusters are near-cliques → 2-3
+    rounds). The singleton pass is one anti-join. Nothing here is
+    all-pairs."""
     from alternating_least_squares_spark.functions.dedup import (
         dedup_components,
         near_dup_pairs,

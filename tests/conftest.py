@@ -31,6 +31,17 @@ def spark():
     s.stop()
 
 
+def hash_min_paths(monkeypatch):
+    """Yield each ``graph._hash_min`` path in turn: the driver path
+    (the default for any edge set under ``MAX_DRIVER_EDGES``) and then
+    the distributed one, forced by a zero edge gate."""
+    from alternating_least_squares_spark.operators import graph
+
+    yield "driver"
+    monkeypatch.setattr(graph, "MAX_DRIVER_EDGES", 0)
+    yield "distributed"
+
+
 @pytest.fixture
 def make_matrix(spark):
     """Nested-list literal → COO DataFrame (r, c, v), like the

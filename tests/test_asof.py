@@ -87,16 +87,18 @@ def test_near_dup_pairs_rejects_bad_banding(spark):
         near_dup_pairs(docs, n_hashes=32, bands=5)
 
 
-def test_dedup_components_raises_when_budget_too_small(spark):
+def test_dedup_components_raises_when_budget_too_small(spark, monkeypatch):
     import pytest as _pytest
 
     from alternating_least_squares_spark.functions.dedup import dedup_components
+    from tests.conftest import hash_min_paths
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(chain, max_iterations=2)
+    for _ in hash_min_paths(monkeypatch):
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            dedup_components(chain, max_iterations=2)
 
 
 def test_asof_null_ts_and_null_key_rows_never_match(spark):

@@ -11,6 +11,7 @@ from alternating_least_squares_spark.functions.dedup import (
     keep_one_filter,
     near_dup_pairs,
 )
+from tests.conftest import hash_min_paths
 
 
 def _corpus(spark):
@@ -566,7 +567,7 @@ def test_q_d13_rotates_signature_checkpoint_across_calls(spark):
     )
 
 
-def test_dedup_components_releases_checkpoints_on_raise(spark):
+def test_dedup_components_releases_checkpoints_on_raise(spark, monkeypatch):
     """ADVICE r13: the non-convergence RuntimeError must not leak the
     loop's pinned checkpoint generations to callers that catch it."""
     import pytest
@@ -579,24 +580,18 @@ def test_dedup_components_releases_checkpoints_on_raise(spark):
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
     jsc = spark.sparkContext._jsc
-    before = len(jsc.getPersistentRDDs())
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(chain, max_iterations=2)
-    # <= 0, not == 0: the shared session's ContextCleaner may release
-    # unrelated RDDs mid-test, so the delta can go negative
-    assert len(jsc.getPersistentRDDs()) - before <= 0
+    for path in hash_min_paths(monkeypatch):
+        before = len(jsc.getPersistentRDDs())
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_components(chain, max_iterations=2)
+        # <= 0, not == 0: the shared session's ContextCleaner may
+        # release unrelated RDDs mid-test, so the delta can go negative
+        assert len(jsc.getPersistentRDDs()) - before <= 0, path
 
 
-def test_dedup_components_runs_no_count_jobs(spark):
-    """dedup_components runs on the components round loop, whose
-    changed count rides each round's checkpoint as an ``observe``
-    metric, so no round starts a count() job. The 5-chain needs 4
-    rounds to carry the minimum to its end plus the round that
-    changes nothing. Its jobs are 5 outside the loop (the edge and
-    seed checkpoints and the collect) plus 5 per round, all of them
-    materializing the rotated checkpoint (its shuffle stages run as
-    jobs of their own under adaptive execution). A changed-count join
-    with count() each round would add 5 more per round: 55 in all."""
+def _chain_components_jobs(spark, group):
+    """Collect dedup_components over a 5-chain in job group ``group``
+    and return the number of Spark jobs it ran."""
     from alternating_least_squares_spark.functions.dedup import (
         dedup_components,
     )
@@ -605,7 +600,6 @@ def test_dedup_components_runs_no_count_jobs(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
     )
     sc = spark.sparkContext
-    group = "test_dedup_components_runs_no_count_jobs"
     sc.setJobGroup(group, group)
     try:
         got = {
@@ -615,7 +609,52 @@ def test_dedup_components_runs_no_count_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == {v: 1 for v in range(1, 6)}
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5 + 5 * 5
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_components_runs_no_count_jobs(spark):
+    """Below ``MAX_DRIVER_EDGES`` dedup_components runs its rounds on
+    the driver: the edge checkpoint, its one Arrow collect and the
+    caller's collect, whatever the number of rounds (5 + 5 per round
+    = 30 when every round ran as Spark jobs)."""
+    assert _chain_components_jobs(spark, "dedup_components_driver") == 3
+
+
+def test_dedup_components_distributed_runs_no_count_jobs(spark, monkeypatch):
+    """The distributed loop's changed count rides each round's
+    checkpoint as an ``observe`` metric, so no round starts a count()
+    job. The 5-chain needs 4 rounds to carry the minimum to its end
+    plus the round that changes nothing. Its jobs are 5 outside the
+    loop (the edge and seed checkpoints and the collect) plus 5 per
+    round, all of them materializing the rotated checkpoint (its
+    shuffle stages run as jobs of their own under adaptive execution).
+    A changed-count join with count() each round would add 5 more per
+    round: 55 in all."""
+    from alternating_least_squares_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_DRIVER_EDGES", 0)
+    jobs = _chain_components_jobs(spark, "dedup_components_distributed")
+    assert jobs == 5 + 5 * 5
+
+
+def test_d11_job_count(spark):
+    """d11 at SF_SMALL runs its hash-min rounds on the driver, so its
+    jobs no longer grow with the rounds: 11 (25 when every round ran
+    as Spark jobs)."""
+    from alternating_least_squares_spark.registry import (
+        q_d11_neardup_keep_one,
+    )
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    group = "test_d11_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        rows = q_d11_neardup_keep_one(spark, SF_SMALL).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
 
 
 def test_d15_collapse_matches_brute_force_at_sf0001(spark):

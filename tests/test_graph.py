@@ -6,7 +6,11 @@ from __future__ import annotations
 
 import pytest
 
+from alternating_least_squares_spark.checkpoint import (
+    release_local_checkpoint as _release,
+)
 from alternating_least_squares_spark.operators.graph import pagerank
+from tests.conftest import hash_min_paths
 
 
 def test_pagerank_hand_computed_two_iterations(spark):
@@ -609,7 +613,7 @@ def test_clustering_coefficients_match_brute_force(spark, raw):
     assert got == brute()
 
 
-def test_components_fixed_hand_computed(spark):
+def test_components_fixed_hand_computed(spark, monkeypatch):
     """gr08's operator on a two-component path + triangle fixture:
     every vertex labels with its component's minimum id; the path
     needs diameter rounds (hash-min moves the min ONE hop/round)."""
@@ -623,18 +627,100 @@ def test_components_fixed_hand_computed(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12)],
         "a: long, b: long",
     )
-    got = {
-        r["vertex"]: r["component"]
-        for r in components_fixed(edges, rounds=3).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
-    # one round is NOT enough for the path — vertex 4 still sees only
-    # vertex 3's initial label (fixed-sweep is honest about that)
-    partial = {
-        r["vertex"]: r["component"]
-        for r in components_fixed(edges, rounds=1).collect()
-    }
-    assert partial[4] == 3 and partial[2] == 1
+    for path in hash_min_paths(monkeypatch):
+        got = {
+            r["vertex"]: r["component"]
+            for r in components_fixed(edges, rounds=3).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}, path
+        # one round is NOT enough for the path — vertex 4 still sees
+        # only vertex 3's initial label (fixed-sweep is honest about it)
+        partial = {
+            r["vertex"]: r["component"]
+            for r in components_fixed(edges, rounds=1).collect()
+        }
+        assert partial[4] == 3 and partial[2] == 1, path
+
+
+def test_hash_min_fixpoint_at_the_budget_edge(spark, monkeypatch):
+    """A 5-chain needs 4 rounds to carry the minimum to its end and a
+    5th that changes nothing: a budget of 5 reaches the fixpoint, a
+    budget of 4 has the same labels but never saw a quiet round."""
+    from alternating_least_squares_spark.operators.graph import _hash_min
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "a: long, b: long"
+    )
+    for path in hash_min_paths(monkeypatch):
+        for rounds, fixpoint in ((4, False), (5, True)):
+            labels, owned, reached = _hash_min(edges, rounds)
+            got = {r["vertex"]: r["component"] for r in labels.collect()}
+            assert got == {v: 1 for v in range(1, 6)}, (path, rounds)
+            assert reached is fixpoint, (path, rounds)
+            assert (owned == set()) is (path == "driver"), path
+            _release(labels, owned)
+
+
+def test_hash_min_empty_duplicate_and_self_loop_edges(spark, monkeypatch):
+    """An empty edge set gives no labels and reaches its fixpoint in
+    the first round; duplicate edges (either direction) count once and
+    a self-loop keeps its vertex. Both paths return the edge id type."""
+    from alternating_least_squares_spark.operators.graph import (
+        _hash_min,
+        components_fixed,
+    )
+
+    empty = spark.createDataFrame([], "a: int, b: int")
+    messy = spark.createDataFrame(
+        [(2, 1), (1, 2), (1, 2), (3, 3), (4, 3), (7, 7)], "a: int, b: int"
+    )
+    for path in hash_min_paths(monkeypatch):
+        labels, owned, reached = _hash_min(empty, 3)
+        assert labels.collect() == [] and reached, path
+        assert [f.dataType.simpleString() for f in labels.schema] == [
+            "int", "int"
+        ], path
+        got = components_fixed(messy, rounds=4)
+        assert [f.dataType.simpleString() for f in got.schema] == [
+            "int", "int"
+        ], path
+        assert {r["vertex"]: r["component"] for r in got.collect()} == {
+            1: 1, 2: 1, 3: 3, 4: 3, 7: 7
+        }, path
+
+
+def test_hash_min_null_ids_run_distributed(spark):
+    """An edge set with a NULL id skips the driver path (its labels
+    come back on a checkpoint the caller owns), whatever its size."""
+    from alternating_least_squares_spark.operators.graph import _hash_min
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None)], "a: long, b: long"
+    )
+    labels, owned, _ = _hash_min(edges, 3)
+    assert owned
+    assert {r["vertex"]: r["component"] for r in labels.collect()}[2] == 1
+    _release(labels, owned)
+
+
+def test_gr08_job_count(spark):
+    """gr08 at SF_SMALL runs its hash-min rounds on the driver, so its
+    jobs no longer grow with the rounds: 5 (19 when every round ran as
+    Spark jobs)."""
+    from alternating_least_squares_spark.registry import (
+        q_gr08_connected_components,
+    )
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    group = "test_gr08_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        rows = q_gr08_connected_components(spark, SF_SMALL).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
 
 
 def test_gr08_fixed_sweep_equals_live_convergence(spark):
@@ -685,10 +771,16 @@ def test_components_fixed_matches_bounded_python_replay(spark, raw, rounds):
     edges = spark.createDataFrame(
         [(a, b) for a, b in sorted(raw)], "a: long, b: long"
     )
-    got = {
-        r["vertex"]: r["component"]
-        for r in components_fixed(edges, rounds=rounds).collect()
-    }
+    # hypothesis reuses one function-scoped monkeypatch across
+    # examples, so each example undoes its own gate change
+    with pytest.MonkeyPatch.context() as mp:
+        got = {
+            path: {
+                r["vertex"]: r["component"]
+                for r in components_fixed(edges, rounds=rounds).collect()
+            }
+            for path in hash_min_paths(mp)
+        }
 
     und = set()
     for a, b in raw:
@@ -701,7 +793,7 @@ def test_components_fixed_matches_bounded_python_replay(spark, raw, rounds):
             if labels[a] < nxt[b]:
                 nxt[b] = labels[a]
         labels = nxt
-    assert got == labels
+    assert got == {"driver": labels, "distributed": labels}
 
 
 def test_label_propagation_hand_computed(spark):
@@ -826,7 +918,7 @@ def test_label_propagation_matches_python_replay(spark, raw, rounds):
     assert got == labels
 
 
-def test_iterative_loops_release_superseded_checkpoints(spark):
+def test_iterative_loops_release_superseded_checkpoints(spark, monkeypatch):
     """Round-13 storage hygiene: a 10-round Pregel loop must leave
     O(1) checkpoint generations pinned, not one per round —
     localCheckpoint blocks survive DataFrame.unpersist() and used to
@@ -847,15 +939,17 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
     )
     jsc = spark.sparkContext._jsc
 
-    before = len(jsc.getPersistentRDDs())
-    components_fixed(edges, rounds=10).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    leaked = len(jsc.getPersistentRDDs()) - before
-    # only the final labels may stay pinned (the returned DataFrame
-    # reads them); the graph, the seed, and ten superseded
-    # generations must all have been released
-    assert leaked <= 2, leaked
+    for path in hash_min_paths(monkeypatch):
+        before = len(jsc.getPersistentRDDs())
+        components_fixed(edges, rounds=10).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        leaked = len(jsc.getPersistentRDDs()) - before
+        # only the final labels may stay pinned (the returned DataFrame
+        # reads them; the driver path's own no checkpoint); the graph,
+        # the seed, and ten superseded generations must all have been
+        # released
+        assert leaked <= (0 if path == "driver" else 2), (path, leaked)
 
     before = len(jsc.getPersistentRDDs())
     label_propagation(edges, rounds=16).write.format("noop").mode(

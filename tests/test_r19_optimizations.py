@@ -155,6 +155,35 @@ def test_arrow_bands_empty_array_matches_expression(spark):
     )
 
 
+def test_arrow_bands_null_slot_bands_like_empty():
+    """A NULL ``_hs`` bands exactly like an empty one even when its
+    slot's offsets span values (the Arrow format leaves a NULL slot's
+    offsets unspecified), and its values never leak into a neighbour's
+    signature. Also on a sliced array, whose offsets start past 0."""
+    import pyarrow as pa
+
+    from alternating_least_squares_spark.functions.dedup import (
+        _minhash_band_rows,
+    )
+
+    perm = [xxh.xxhash64_int_seed(j) for j in range(32)]
+    band = [xxh.xxhash64_int_seed(b) for b in range(8)]
+    values = pa.array([9, 7, -3, 5, 2**62, 0, 11], pa.int64())
+    # rows: [9] (sliced away), [7, -3], NULL over [5, 2**62], [0, 11]
+    hs = pa.ListArray.from_arrays(
+        pa.array([0, 1, 3, 5, 7], pa.int32()),
+        values,
+        mask=pa.array([False, False, True, False]),
+    ).slice(1)
+    clean = pa.array([[7, -3], [], [0, 11]], pa.list_(pa.int64()))
+    want = _minhash_band_rows(clean, perm, band, 4)
+    got = _minhash_band_rows(hs, perm, band, 4)
+    assert np.array_equal(got, want)
+    assert got[1].tolist() == [
+        int(np.uint64(b).view(np.int64)) for b in band
+    ]
+
+
 def _brute_triangles(pairs):
     """vertex -> triangle count by direct enumeration."""
     import itertools

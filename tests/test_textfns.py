@@ -3,6 +3,9 @@ shingles/fingerprint determinism, quality-score bounds."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.functions import textfns as TX
@@ -54,6 +57,71 @@ def test_shingles_k3(spark):
 def test_shingles_short_doc_whole_string(spark):
     # docs shorter than k contribute one whole-string shingle
     assert _one(spark, "a b", lambda c: TX.shingles(c, 3)) == ["a b"]
+
+
+# Java's regex \s: the ASCII whitespace class tokens() splits and trims on
+_JAVA_WS = " \t\n\x0b\f\r"
+
+
+def _py_shingles(text, k):
+    """Pure-Python shingles(): trim and split on Java's ``\\s``; fewer
+    than k tokens give one whole-string shingle."""
+    t = (text or "").strip(_JAVA_WS)
+    toks = re.split(f"[{re.escape(_JAVA_WS)}]+", t) if t else []
+    if len(toks) < k:
+        return [" ".join(toks)]
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+SHINGLE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\t\n",
+    "\ta b\n",
+    "a",
+    "a b",
+    "a b c",
+    "a b c d",
+    "x y x y x y",
+    "a  b\t\tc\r\nd",
+    "Grüße aus Köln und Zürich",
+    "naïve\u00a0café au lait",
+]
+
+
+@pytest.mark.parametrize("k", [2, 3])
+def test_shingles_match_python_reference(spark, k):
+    """NULL, empty and whitespace-only text, tab- and newline-bounded
+    text, k-1 / k / k+1 tokens, repeated shingles and non-ASCII text
+    (a no-break space is not Java whitespace, so it stays in a
+    token)."""
+    df = spark.createDataFrame(
+        list(enumerate(SHINGLE_TEXTS)), "i int, text string"
+    )
+    got = {
+        r["i"]: r["s"]
+        for r in df.select(
+            "i", TX.shingles(F.col("text"), k).alias("s")
+        ).collect()
+    }
+    assert got == {
+        i: _py_shingles(t, k) for i, t in enumerate(SHINGLE_TEXTS)
+    }
+
+
+def test_shingles_tokenize_once_per_row(spark):
+    """The token array is bound once per row: the optimized plan of
+    shingles(text, 3) holds ONE split (a captured token column was
+    inlined into every use, 6 splits)."""
+    df = spark.range(3).select(F.col("id").cast("string").alias("text"))
+    plan = (
+        df.select(TX.shingles(F.col("text"), 3).alias("s"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("split(") == 1
 
 
 def test_fingerprint_deterministic_and_order_sensitive(spark):
