@@ -35,8 +35,6 @@ from alternating_least_squares_spark.functions.width import spread_if_narrow
 from alternating_least_squares_spark.operators.graph import _hash_min
 from alternating_least_squares_spark.session import ship_package
 
-HEX_DIGITS = "0123456789abcdef"
-
 
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two (distinct-element) arrays.
@@ -655,12 +653,11 @@ def write_band_index(
     * ``<name>_payload`` ``(_cid, _chs)`` bucketed+sorted by ``_cid``
       — the per-doc shingle-hash payload the verify stage reads.
 
-    Signatures are computed ONCE here (and once per admitted batch in
-    :func:`append_to_band_index`), never re-derived at probe time; at
-    100 TB that one-time bucketed write amortizes across every nightly
-    admission run, and bucketing on the join keys means the corpus
-    side of BOTH the probe join and the verify join ships zero bytes
-    (the small batch broadcasts / shuffles to the buckets)."""
+    Signatures are computed ONCE here, never re-derived at probe time;
+    at 100 TB that one-time bucketed write amortizes across every
+    nightly admission run, and bucketing on the join keys means the
+    corpus side of BOTH the probe join and the verify join ships zero
+    bytes (the small batch broadcasts / shuffles to the buckets)."""
     spark = docs.sparkSession
     sig = lsh_signatures(docs, id_col, text_col, n_hashes, bands, k)
     sig = sig.localCheckpoint(eager=True)  # one signature pass, two sinks
@@ -689,29 +686,6 @@ def write_band_index(
             .mode("overwrite")
             .saveAsTable(tbl)
         )
-
-
-def append_to_band_index(
-    admitted: DataFrame,
-    name: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-) -> None:
-    """Grow the persisted index with an admitted batch: one signature
-    pass, two bucketed appends (``insertInto`` preserves the tables'
-    bucket spec). This is the O(batch) maintenance step that keeps
-    nightly admission from ever re-signing the corpus."""
-    sig = lsh_signatures(admitted, id_col, text_col, n_hashes, bands, k)
-    sig = sig.localCheckpoint(eager=True)
-    sig.select(
-        F.explode("_bands").alias("_bh"), F.col("_id").alias("_cid")
-    ).write.insertInto(f"{name}_bands")
-    sig.select(
-        F.col("_id").alias("_cid"), F.col("_hs").alias("_chs")
-    ).write.insertInto(f"{name}_payload")
 
 
 def admit_with_band_index(

@@ -12455,6 +12455,8 @@ def q_st12_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from alternating_least_squares_spark.streaming import run_available_now
+
     base = _scratch_path(
         "alternating_ls_st12", sf_dir.strip("/").replace("/", "_")
     )
@@ -12505,17 +12507,9 @@ def q_st12_stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch.filter(F.col("doc_id") % 2 == wave).withColumn(
             "wave", F.lit(wave).cast("long")
         ).write.mode("append").parquet(src)
-        q = (
-            spark.readStream.schema(
-                spark.createDataFrame([], schema).schema
-            )
-            .parquet(src)
-            .writeStream.foreachBatch(gate)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        run_available_now(
+            spark.readStream.schema(schema).parquet(src), ckpt, gate
         )
-        q.awaitTermination()
 
     return spark.read.parquet(sink).select(
         "doc_id", "source", "wave", "drift_nano"
@@ -12612,6 +12606,8 @@ def q_st13_stream_budget_admission(
     import os
     import shutil
 
+    from alternating_least_squares_spark.streaming import run_available_now
+
     base = _scratch_path(
         "alternating_ls_st13", sf_dir.strip("/").replace("/", "_")
     )
@@ -12652,17 +12648,9 @@ def q_st13_stream_budget_admission(
         keyed.filter(F.col("doc_id") % 2 == wave).withColumn(
             "wave", F.lit(wave).cast("long")
         ).write.mode("append").parquet(src)
-        q = (
-            spark.readStream.schema(
-                spark.createDataFrame([], schema).schema
-            )
-            .parquet(src)
-            .writeStream.foreachBatch(gate)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        run_available_now(
+            spark.readStream.schema(schema).parquet(src), ckpt, gate
         )
-        q.awaitTermination()
 
     return spark.read.parquet(sink).select(
         "doc_id", "source", "n_tok", "wave"
@@ -12736,6 +12724,8 @@ def q_st14_stream_weighted_sample(
     import os
     import shutil
 
+    from alternating_least_squares_spark.streaming import run_available_now
+
     base = _scratch_path(
         "alternating_ls_st14", sf_dir.strip("/").replace("/", "_")
     )
@@ -12758,15 +12748,11 @@ def q_st14_stream_weighted_sample(
         docs.filter(F.col("doc_id") % 2 == wave).write.mode(
             "append"
         ).parquet(src)
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(src)
-            .writeStream.foreachBatch(gate)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        run_available_now(
+            spark.readStream.schema("doc_id long, text string").parquet(src),
+            ckpt,
+            gate,
         )
-        q.awaitTermination()
 
     return (
         spark.read.parquet(sink)
@@ -13150,8 +13136,8 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
 
 
 def q_st17_streaming_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming GDPR erasure feed (VERDICT r16 #6;
-    streaming/events.stream_erase_keys_from_snapshot) — the two
+    """The streaming GDPR erasure feed
+    (streaming/events.stream_erase_keys_from_snapshot) — the two
     newest subsystems composed: erasure-request files stream in
     (three waves, maxFilesPerTrigger=1 forcing three micro-batches)
     and foreachBatch applies each batch's key set to the snapshot
@@ -13210,7 +13196,6 @@ def q_st17_streaming_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpt,
         table,
         T.StructType([T.StructField("o_orderkey", T.LongType())]),
-        max_files_per_trigger=1,
     )
     versions = SN._list_versions(table)
     if n != 3 or versions != [0, 1, 2, 3]:
@@ -13246,8 +13231,8 @@ WHERE NOT (o_custkey % 13 = 5)
 
 
 def q_st18_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming replication feed (VERDICT r17 #4;
-    streaming/events.stream_cdc_apply_to_snapshot) — CDC APPLY, the
+    """The streaming replication feed
+    (streaming/events.stream_cdc_apply_to_snapshot) — CDC APPLY, the
     lakehouse streaming composition ac08+ac09 left open: the source
     table's change feeds (``diff_versions`` per commit, materialized
     as one file per wave with PINNED names and mtimes so the file
@@ -13332,7 +13317,6 @@ def q_st18_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 T.StructField("price", T.DoubleType()),
             ]
         ),
-        max_files_per_trigger=1,
     )
     versions = SN._list_versions(replica)
     if n != 3 or versions != [0, 1, 2, 3, 4, 5]:
@@ -14836,12 +14820,7 @@ def q_st11_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-identical to the JVM's) and emits ewma RAW; rounding
     happens HERE, Spark-side, after replay, so stream and batch
     round identically. Oracle: the SAME SQL as w08 — replay to
-    completion must equal the batch window op exactly.
-
-    VERDICT r7 #8 named this on transformWithState; that API still
-    needs the protobuf wire dep absent from this runtime
-    (stateful.tws_available() == False), so the twin rides
-    applyInPandasWithState — same state-store execution model."""
+    completion must equal the batch window op exactly."""
     from alternating_least_squares_spark.streaming import (
         ewma_stream,
         read_events_stream,
@@ -16645,184 +16624,16 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
 
 
 # ---------------------------------------------------------------------------
-# Ordering: the driver's correctness run checks a bounded PREFIX of the
-# registry (50 entries, verified rounds 2-15), so the order below is
-# chosen — not incidental.  ROTATION, round 16 (VERDICT r15 #1):
-# execute the write-ahead R16 plan recorded here last round, verbatim
-# — LEAD with the 19 remaining r10-stale rows (j08_scd2_intersect,
-# mm01_media_features, mm05_resize_nearest, q03_quantile_gate,
-# rc02_node_depth — the five displaced in r15 — then s01, s03, s04,
-# s05, s06, st11, w08, x10, x11, x12, x18, x19, x20, x21), then fill
-# the remaining 31 slots from the 50-entry r11 cohort head,
-# alphabetical (a16_ipf_step … m04_market_basket).  After this round
-# the r10 cohort is fully retired; the stale tail is the 19 r11
-# leftovers + the r12 cohort, which head the R17 plan below.  New r16
-# entries displace the r11 fill from the END of the list
-# (m04_market_basket first, then j07_abandoned_clicks,
-# ipf_cost_per_visit_fixed, h21_sole_returning_supplier, ...) —
-# displaced rows LEAD the r17 plan; new code must be driver-certified
-# the round it lands, and VERDICT r15 #2 throttles new entries to <=6
-# this round so the rotation keeps catching up.
-# (Historical R16 plan text, preserved for the judge's arithmetic
-# check — this round executes it exactly:)
-# R16 PREFIX PLAN (write-ahead, VERDICT r14 #8; computed from the
-# CORRECTNESS_r01..r14 union with this round's FINAL prefix marked
-# r15 — i.e. AFTER the five new r15 entries (w13, mm08, st15, v06,
-# v07) displaced rc02_node_depth, q03_quantile_gate,
-# mm05_resize_nearest, mm01_media_features, and j08_scd2_intersect
-# from the r10 fill): oldest-first by (round, name). LEAD with the
-# 19 remaining r10-stale rows — j08_scd2_intersect,
-# mm01_media_features, mm05_resize_nearest, q03_quantile_gate,
-# rc02_node_depth (the five displaced this round), then
-# s01_lsh_topk, s03_ivf_topk, s04_mllib_euclidean, s05_pca_topk,
-# s06_pq_topk, st11_stream_ewma, w08_ewma, x10_partition_pruning,
-# x11_table_profile, x12_salted_join, x18_runtime_bloom_filter,
-# x19_epoch_shuffle, x20_aqe_skew_join, x21_cbo_stats_broadcast
-# (the fourteen youngest-by-name r10 rows) — then fill the
-# remaining 31 slots from the 50-entry r11 cohort head,
-# alphabetical: a16_ipf_step, a17_converge, a22_rake3,
-# ac08_change_feed, ac09_replicate_via_feed, b04_orc_roundtrip,
-# b07_binaryfile_source, b08_text_roundtrip, c16_scd2,
-# d07_incremental_dedup, d08_containment_pairs,
-# d09_incremental_near_dup, d10_indexed_admission,
-# d11_neardup_keep_one, e03_sessionize, e07_cohort_retention,
-# e10_inter_event_gaps, e17_locf_fill, g02_cube, g06_histogram,
-# gr02_degree_profile, h01_pricing_summary, h15_top_supplier,
-# h16_supplier_part_counts, h17_small_qty_revenue,
-# h18_important_parts, h19_min_cost_supplier,
-# h21_sole_returning_supplier, ipf_cost_per_visit_fixed,
-# j07_abandoned_clicks, m04_market_basket — exactly 50. The
-# remaining 19 r11 rows (m05_pinned_scoring, mm03_arrow_features,
-# mm04_resize_stride, p04_drift_gated_admission, q04_psi_drift, ...)
-# head the r17 plan with the r12 cohort. New r16 entries displace
-# the r11 fill from the END as always (m04_market_basket first,
-# then j07_abandoned_clicks, ipf_cost_per_visit_fixed, ...).
-# Rows-only-by-design entries (m01–m03, g04, ipf_cost_per_visit)
-# stay out of the prefix — their slots would record err:no_oracle
-# and their evidence is the pytest floors (each has a hash-green
-# oracle-adjacent twin where one is possible: ipf_fixed, g04b,
-# m04/m05).
-#
-# R17 PREFIX PLAN (write-ahead, VERDICT r15 #8; computed from the
-# CORRECTNESS_r01..r15 union with this round's FINAL prefix marked
-# r16 — i.e. AFTER the six new r16 entries (st16, ac13, mm09, gr11,
-# ac14, p06 — the <=6 throttle exactly) displaced
-# m04_market_basket, j07_abandoned_clicks, ipf_cost_per_visit_fixed,
-# h21_sole_returning_supplier, h19_min_cost_supplier, and
-# h18_important_parts from the r11 fill): oldest-first by (round,
-# displaced-first, name). The stale tail is exactly 25 r11 rows +
-# the 50-entry r12 cohort, so the plan is all 25 r11 rows + the
-# 25-entry r12 cohort head. LEAD with the six displaced rows —
-# m04_market_basket, j07_abandoned_clicks, ipf_cost_per_visit_fixed,
-# h21_sole_returning_supplier, h19_min_cost_supplier,
-# h18_important_parts — then the 19 r11 leftovers, alphabetical:
-# m05_pinned_scoring, mm03_arrow_features, mm04_resize_stride,
-# p04_drift_gated_admission, q04_psi_drift, rc01_subtree_rollup,
-# rc03_bom_effective_qty, rc05_recursive_cte, sql03_sql_udf,
-# sql04_lateral_topk, st12_stream_drift_gate, t07_top_bigrams,
-# t24_ngram_decontaminate, v04_binary_hamming_topk,
-# w03_time_range_avg, w04_distribution_funcs, w05_tumbling_batch,
-# x04_pandas_udaf_geomean, x07_python_datasource — then fill the
-# remaining 25 slots from the 50-entry r12 cohort head,
-# alphabetical: a01_cmap, a02_dot, a03_diff_vector, a04_l2_norm,
-# a05_rmse, a06_transpose, a07_sum_rows, a08_sum_cols,
-# ac10_snapshot_tag, e09_activity_streaks, e12_daily_top_type,
-# e13_rfm_segments, e14_cumulative_users, e18_linear_interpolate,
-# e19_interval_coalesce, g07_weighted_mean, g08_exact_corr,
-# gr08_connected_components, j01_asof_join, j05_asof_nearest,
-# j06_point_in_time, m06_pinned_recommend, m07_pinned_ranking,
-# p03_training_pipeline, q02_referential_integrity — exactly
-# 6 + 19 + 25 = 50. After r17 the r11 cohort is fully retired and
-# the stale tail is the 25 r12 leftovers (q05_schema_drift,
-# rc04_materialized_path, sql02_shared_windows, st01_stream_hourly,
-# st10_stream_admission, ...) + the r13 cohort, which head the r18
-# plan. New r17 entries displace the r12 fill from the END as
-# always (q02_referential_integrity first, then
-# p03_training_pipeline, m07_pinned_ranking, ...).
-# R18 PREFIX PLAN (write-ahead, VERDICT r16 #8; computed from the
-# CORRECTNESS_r01..r16 union with this round's FINAL prefix marked
-# r17 — i.e. AFTER the five new r17 entries (mm10, ac15, st17, t26,
-# mm11 — under the <=6 throttle) displaced q02_referential_integrity,
-# p03_training_pipeline, m07_pinned_ranking, m06_pinned_recommend,
-# and j06_point_in_time from the r12 fill): oldest-first by (round,
-# displaced-first, name). The stale tail is exactly 30 r12 rows (the
-# 5 displaced + 25 leftovers) + the 50-entry r13 cohort, so the plan
-# is all 30 r12 rows + the 20-entry r13 cohort head. LEAD with the
-# five displaced rows in displacement order —
-# q02_referential_integrity, p03_training_pipeline,
-# m07_pinned_ranking, m06_pinned_recommend, j06_point_in_time —
-# then the 25 r12 leftovers, alphabetical: q05_schema_drift,
-# rc04_materialized_path, sql02_shared_windows, st01_stream_hourly,
-# st10_stream_admission, st13_stream_budget_admission,
-# t13_sequence_packing, t15_sentence_split, t16_normalized_dupes,
-# t17_edit_distance_pairs, t18_unigram_logprob, t19_bigram_logprob,
-# t20_line_dedup, t21_repeated_spans, t22_bpe_merge_pairs,
-# t23_span_scrub, t25_hashed_decontaminate,
-# w07_native_session_window, w09_rolling_slope,
-# x13_dynamic_partition_pruning, x14_incremental_mv,
-# x15_temperature_mix, x16_training_shuffle, x17_dsir_weights,
-# x22_token_budget_mix — then fill the remaining 20 slots from the
-# 50-entry r13 cohort head, alphabetical: a09_laplace_smooth,
-# a10_weight_matrix, a11_apply_weights, a12_add_labels, a13_mmult,
-# a14_seed_matrix, a15_optimize_marginal, a18_normalize_matrix,
-# a19_error_matrix, a20_matrix_norm, a21_converge_coordinate,
-# ac01_snapshot_merge, ac02_time_travel, ac03_zorder_code,
-# b01_b02_csv_roundtrip, b03_symmetric_diff, c01_sorted_scan,
-# c02_filter_nonzero, c04_micros_to_currency, c05_anti_join —
-# exactly 5 + 25 + 20 = 50. After r18 the r12 cohort is fully
-# retired and the stale tail is the 30 r13 leftovers (c06_zero_pad,
-# c08_pivot, c08_unpivot, c10_safe_divide, ...) + the r14 cohort,
-# which head the r19 plan. New r18 entries displace the r13 fill
-# from the END as always (c05_anti_join first, then
-# c04_micros_to_currency, c02_filter_nonzero, ...).
-# R19 PREFIX PLAN (write-ahead, VERDICT r17 #9; computed from the
-# CORRECTNESS_r01..r17 union with this round's FINAL prefix marked
-# r18 — i.e. AFTER the six new r18 entries (mm12, st18, ac16, t27,
-# mm13, st19 — closing AT the <=6 throttle) displaced c05_anti_join,
-# c04_micros_to_currency, c02_filter_nonzero, c01_sorted_scan,
-# b03_symmetric_diff, and b01_b02_csv_roundtrip from the r13 fill):
-# oldest-first by (round, displaced-first, name). The stale tail is
-# exactly 36 r13 rows (the 6 displaced + 30 leftovers) + the
-# 50-entry r14 cohort, so the plan is all 36 r13 rows + the 14-entry
-# r14 cohort head. LEAD with the six displaced rows in displacement
-# order — c05_anti_join, c04_micros_to_currency, c02_filter_nonzero,
-# c01_sorted_scan, b03_symmetric_diff, b01_b02_csv_roundtrip —
-# then the 30 r13 leftovers, alphabetical: c06_zero_pad, c08_pivot,
-# c08_unpivot, c10_safe_divide, c11_upsert, c12_set_ops,
-# c13_try_arithmetic, c14_nullsafe_join, c15_explode_outer,
-# d01_simhash, d04_dedup_components, d12_threshold_near_dup,
-# d13_simhash_near_dup, e01_hourly_value, e02_json_extract,
-# e04_resample_gapfill, e05_variant_json, g05_grouping_sets,
-# gr09_label_propagation, sql05_shared_pivot, t01_token_stats,
-# t02_quality_score, t03_lang_id, t04_fingerprint,
-# t05_exact_dup_groups, t06_tfidf, v01_cosine_pairs,
-# v02_topk_cosine, v03_quantize_int8, w10_rolling_median — then
-# fill the remaining 14 slots from the 50-entry r14 cohort head,
-# alphabetical: ac04_compact_files, ac05_vacuum,
-# ac06_schema_evolution, ac11_cluster_optimize, ac12_restore,
-# b06_corrupt_records, c03_projection, c07_sort_by_key,
-# c09_ones_matrix, d02_jaccard_pairs, d06_keep_one, d14_url_dedup,
-# d15_threshold_collapse, e08_ohlc_bars —
-# exactly 6 + 30 + 14 = 50. After r19 the r13 cohort is fully
-# retired and the stale tail is the 36 r14 leftovers
-# (e20_last_touch_attribution, e21_retention_cohorts,
-# g04b_sketch_exact_regime, ...) + the r15 cohort, which head the
-# r20 plan. New r19 entries displace the r14 fill from the END as
-# always (e08_ohlc_bars first, then d15_threshold_collapse,
-# d14_url_dedup, ...).
-# Rows-only-by-design entries (m01–m03, g04, ipf_cost_per_visit)
-# stay out of the prefix as ever.
+# Ordering: the driver's correctness run checks the first 50 entries
+# of REGISTRY, and _PREFIX chooses them. Entries checked on rows only
+# (no oracle: m01-m03, g04, ipf_cost_per_visit) stay out of it;
+# ipf_cost_per_visit leads the tail, then definition order.
 _PREFIX = [
-    # ROUND 18 ROTATION (executes the write-ahead plan above verbatim,
-    # VERDICT r17 #1).  LEAD with the five rows displaced by r17's new
-    # entries, displacement order per the rule.
     "q02_referential_integrity",
     "p03_training_pipeline",
     "m07_pinned_ranking",
     "m06_pinned_recommend",
     "j06_point_in_time",
-    # ... then the 25 r12-cohort leftovers, alphabetical (after this
-    # round the r12 cohort is fully retired).
     "q05_schema_drift",
     "rc04_materialized_path",
     "sql02_shared_windows",
@@ -16848,9 +16659,6 @@ _PREFIX = [
     "x16_training_shuffle",
     "x17_dsir_weights",
     "x22_token_budget_mix",
-    # ... then the 20-entry alphabetical head of the 50-entry r13
-    # cohort; new r18 entries displace from the END (c05_anti_join
-    # first, then c04_micros_to_currency, c02_filter_nonzero, ...).
     "a09_laplace_smooth",
     "a10_weight_matrix",
     "a11_apply_weights",
@@ -16865,12 +16673,6 @@ _PREFIX = [
     "ac01_snapshot_merge",
     "ac02_time_travel",
     "ac03_zorder_code",
-    # new in round 18 (each displaces one r13-cohort fill slot from
-    # the END per the rule above: c05_anti_join is displaced by mm12,
-    # c04_micros_to_currency by st18, c02_filter_nonzero by ac16,
-    # c01_sorted_scan by t27, b03_symmetric_diff by mm13,
-    # b01_b02_csv_roundtrip by st19 — displaced rows LEAD the r19
-    # plan; the round's new-entry count closes AT the <=6 throttle)
     "mm12_jpeg_decode",
     "st18_streaming_cdc_apply",
     "ac16_dv_debt_gauge",

@@ -7,6 +7,7 @@ from alternating_least_squares_spark.streaming.events import (  # noqa: F401
     hopping_value_stream,
     hourly_value_stream,
     read_events_stream,
+    run_available_now,
     run_stream_to_batch,
     sessionize_stream,
     stream_cdc_apply_to_snapshot,
@@ -17,5 +18,4 @@ from alternating_least_squares_spark.streaming.events import (  # noqa: F401
 from alternating_least_squares_spark.streaming.stateful import (  # noqa: F401
     ewma_stream,
     user_profile_stream,
-    user_profile_stream_tws,
 )

@@ -32,6 +32,9 @@ from pyspark.sql import types as T
 from alternating_least_squares_spark.functions.dedup import (
     incremental_near_dup_admission,
 )
+from alternating_least_squares_spark.streaming.events import (
+    run_available_now,
+)
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -71,11 +74,5 @@ def admit_stream_run(
         admitted_counts.append(admitted.count())
 
     stream = spark.readStream.schema(DOCS_SCHEMA).parquet(src_dir)
-    query = (
-        stream.writeStream.foreachBatch(_admit)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    query.awaitTermination()
+    run_available_now(stream, checkpoint_dir, _admit)
     return sum(admitted_counts)

@@ -36,23 +36,16 @@ from pyspark.sql import types as T
 from ..sources.catalog import events_read_schema, normalize_events
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table with the catalog's column
     contract: ``ts`` (micros TimestampType) + ``ts_ns`` (raw long), read
-    with the batch catalog's schema (``events_read_schema``).
-
-    ``maxFilesPerTrigger`` paces ingestion for a live run; the
-    registry's replay path leaves it unset and uses AvailableNow.
-    """
+    with the batch catalog's schema (``events_read_schema``)."""
     schema = events_read_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    reader = spark.readStream.schema(schema).option(
-        "pathGlobFilter", "events.parquet"
+    return normalize_events(
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return normalize_events(reader.parquet(sf_dir))
 
 
 def hourly_value_stream(
@@ -201,158 +194,170 @@ def attribution_join_stream(
     )
 
 
+def run_available_now(
+    stream: DataFrame, checkpoint_dir: str, on_batch
+) -> None:
+    """Run ``on_batch(batch_df, batch_id)`` over every batch ``stream``
+    holds that the checkpoint has not seen (``Trigger.AvailableNow``),
+    then return. The package's one foreachBatch query."""
+    (
+        stream.writeStream.foreachBatch(on_batch)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+        .awaitTermination()
+    )
+
+
+# (feed_key, id_key) stamp of each ledgered snapshot sink
+_PROFILE_STAMP = ("profile_feed", "batch_id")
+_ERASURE_STAMP = ("erasure_feed", "erasure_batch_id")
+_CDC_STAMP = ("cdc_feed", "cdc_batch_id")
+
+
+class _FeedLedger:
+    """Exactly-once batch ledger of one feed on one snapshot table.
+
+    foreachBatch is at-least-once, so each commit carries
+    :meth:`stamp` — ``{feed_key: feed_id, id_key: batch_id}``, Delta's
+    ``(txnAppId, txnVersion)`` — and :meth:`applied` skips a batch id
+    at or below the feed's newest stamp. The feed id is the
+    checkpoint's query id, so a new checkpoint (batch ids restart at 0)
+    re-applies instead of being compared to another feed's stamps.
+
+    The walk goes newest-first, and the feed's own stamp anywhere in it
+    wins. Without one, only the NEWEST bare ``id_key`` stamp (no
+    ``feed_key``: the pre-feed format) counts, and only on equality: a
+    continuing legacy checkpoint can redeliver exactly that id.
+    ``last`` (the feed's newest stamp, once seen or recorded) makes
+    the steady state zero manifest reads; ``floor`` (newest version
+    walked without a stamp) holds the cold walk to once per run."""
+
+    def __init__(
+        self, table_path: str, feed_key: str, id_key: str, feed_id: str
+    ) -> None:
+        self.table_path = table_path
+        self.feed_key, self.id_key, self.feed_id = feed_key, id_key, feed_id
+        self.last: int | None = None
+        self.floor = -1
+
+    def applied(self, batch_id: int) -> bool:
+        from ..sources import snapshot as SN
+
+        if self.last is not None:
+            return batch_id <= self.last
+        versions = SN._list_versions(self.table_path)
+        legacy_skip = None
+        feed_key, id_key = self.feed_key, self.id_key
+        for v in reversed(versions):
+            if v <= self.floor:
+                break
+            m = SN._read_manifest(self.table_path, v)
+            if m.get(feed_key) == self.feed_id:
+                self.last = m[id_key]
+                return batch_id <= self.last
+            if legacy_skip is None and feed_key not in m and id_key in m:
+                legacy_skip = batch_id == m[id_key]
+        if legacy_skip is not None:
+            return legacy_skip
+        self.floor = versions[-1] if versions else -1
+        return False
+
+    def stamp(self, batch_id: int) -> dict:
+        return {self.feed_key: self.feed_id, self.id_key: batch_id}
+
+    def record(self, batch_id: int) -> None:
+        self.last = batch_id
+
+
+def _checkpoint_feed_id(checkpoint_dir: str) -> str:
+    """The checkpoint's query id: Spark writes it to
+    ``<checkpoint>/metadata`` when the stream first starts and keeps it
+    for the checkpoint's lifetime. ``file:`` URIs are accepted."""
+    import json
+
+    from ..sources.snapshot import _local_path
+
+    with open(os.path.join(_local_path(checkpoint_dir), "metadata")) as fh:
+        return json.load(fh)["id"]
+
+
+def _run_ledgered(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    table_path: str,
+    keys: tuple[str, str],
+    apply,
+) -> list[int]:
+    """:func:`run_available_now` with ``apply(batch_df, batch_id,
+    ledger)`` per batch; returns the ids of the batches it committed.
+    The ledger is built on the first batch, once Spark has written the
+    checkpoint's metadata."""
+    ledger: _FeedLedger | None = None
+    applied: list[int] = []
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal ledger
+        if ledger is None:
+            ledger = _FeedLedger(
+                table_path, *keys, _checkpoint_feed_id(checkpoint_dir)
+            )
+        if apply(batch_df, batch_id, ledger):
+            applied.append(batch_id)
+
+    run_available_now(stream, checkpoint_dir, on_batch)
+    return applied
+
+
+def _one_file_per_batch(
+    spark: SparkSession, schema: T.StructType, src_dir: str
+) -> DataFrame:
+    """A file-source stream that makes each file its own micro-batch,
+    so each arriving wave commits on its own."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+
 def stream_upsert_profiles_to_snapshot(
     events: DataFrame, path: str
 ) -> DataFrame:
     """Stream → versioned snapshot table: per-user profile rows
-    (n_events, total_value) maintained by an incremental MERGE per
-    micro-batch — the lakehouse streaming-upsert sink (Delta's
-    ``foreachBatch`` + ``MERGE`` pattern) wired to
-    :mod:`..sources.snapshot`.
+    (n_events, total_value) kept by one ledgered MERGE per micro-batch
+    (:func:`_apply_profile_batch`), so the table history is one
+    snapshot per batch and time travel reads any batch boundary. State
+    lives in the table, not the streaming state store.
 
-    Each batch aggregates ONLY its own rows, combines them with the
-    current table state for the touched keys (sum of counts/values),
-    and commits one MERGE version — so the table history is one
-    snapshot per micro-batch, each a consistent prefix of the stream,
-    and time travel reads any batch boundary. State lives in the
-    TABLE, not the streaming state store: the aggregation inside a
-    batch is bounded by batch size, and the merge is file-pruned by
-    the snapshot manifest — O(touched files), not O(table).
-
-    Returns the final profiles (latest snapshot) after an
-    AvailableNow replay. Decimal accumulation end-to-end so the result
-    is independent of batch boundaries (replay == batch is asserted in
-    tests/test_streaming.py with a forced multi-batch run)."""
+    Returns the final profiles after an AvailableNow replay. Decimal
+    accumulation makes the result independent of batch boundaries."""
     from ..sources import snapshot as SN
 
-    spark = events.sparkSession
-    ckpt = os.path.join(path, "_stream_checkpoint")
-    memo: dict = {}
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # the checkpoint's query id is immutable for its lifetime —
-        # read it once per run, not per micro-batch (review r17)
-        if "feed" not in memo:
-            memo["feed"] = _checkpoint_feed_id(ckpt)
-        _apply_profile_batch(batch_df, batch_id, path, memo["feed"], memo)
-
-    query = (
-        events.writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _run_ledgered(
+        events,
+        os.path.join(path, "_stream_checkpoint"),
+        path,
+        _PROFILE_STAMP,
+        _apply_profile_batch,
     )
-    query.awaitTermination()
-    return SN.read_snapshot(spark, path).select(
+    return SN.read_snapshot(events.sparkSession, path).select(
         "user_id",
         "n_events",
         F.round(F.col("total_value").cast("double"), 6).alias("total_value"),
     )
 
 
-def _ledger_already_applied(
-    table_path: str,
-    feed_key: str,
-    id_key: str,
-    feed_id: str,
-    batch_id: int,
-    memo: dict | None = None,
-) -> bool:
-    """Shared txn-ledger check for every foreachBatch snapshot sink
-    (profile MERGE, erasure DV, CDC apply): True iff ``batch_id`` was
-    already committed FOR THIS FEED, by walking manifests newest-first
-    until this feed's ``(feed_key, id_key)`` stamp.
-
-    Migration fallback (ADVICE r17): a manifest carrying the bare
-    ``id_key`` with NO ``feed_key`` is a pre-feed-scope stamp (the
-    pre-r17 sink format). The only id a CONTINUING legacy checkpoint
-    can redeliver is exactly the stamped one — foreachBatch redelivers
-    only the last batch whose checkpoint write didn't land; every
-    earlier id is behind the committed offset and every later id is
-    new work — so equality, and only equality, skips; only the
-    NEWEST legacy stamp participates (deeper ones are older lineage
-    history), and the feed's OWN scoped stamp anywhere in the walk
-    takes precedence over a legacy stamp above it (review r18: a
-    mixed-version deployment interleaves both, and stopping at the
-    first bare stamp would shadow the scoped ledger and double-apply
-    a redelivered summing batch). A FRESH checkpoint's batch 0
-    against a legacy table therefore re-applies (the compliance-safe
-    direction for erasure; for the summing profile sink the one
-    ambiguous case — a new feed whose batch 0 meets a legacy stamp of
-    exactly 0 — re-applies too, matching the documented
-    new-feed-re-ingests contract).
-
-    Scan bound (ADVICE r17 / VERDICT r17 #8): ``memo`` (per-run
-    dict, shared with the caller's feed-id cache) caps the walk.
-    ``_ledger_last`` caches the newest stamp once found — steady
-    state is ZERO manifest reads after the feed's first commit of the
-    run (callers record their own commits there too). ``_ledger_floor``
-    records the highest version already scanned WITHOUT a stamp, so a
-    fresh feed over a deep table history pays the O(versions) cold
-    scan at most once per run, not per micro-batch."""
-    from ..sources import snapshot as SN
-
-    if memo is None:
-        memo = {}
-    last = memo.get("_ledger_last")
-    if last is not None:
-        return batch_id <= last
-    versions = SN._list_versions(table_path)
-    floor = memo.get("_ledger_floor", -1)
-    legacy_skip = None
-    for v in reversed(versions):
-        if v <= floor:
-            break
-        m = SN._read_manifest(table_path, v)
-        if m.get(feed_key) == feed_id:
-            # this feed's own stamp wins even when a legacy (or other
-            # writer's) commit sits ABOVE it — the walk must not stop
-            # at the first bare stamp or a mixed-version deployment
-            # (upgraded sink + not-yet-upgraded writer) would shadow
-            # the scoped ledger and double-apply (review r18)
-            memo["_ledger_last"] = m[id_key]
-            return batch_id <= m[id_key]
-        if legacy_skip is None and feed_key not in m and id_key in m:
-            # NEWEST legacy bare stamp only: equality-only fallback
-            # (see above). Deeper legacy stamps are older lineage
-            # history — matching them would wrongly skip fresh work.
-            # Recorded, not returned: the feed's own stamp deeper in
-            # the history still takes precedence. Not memoized — the
-            # feed's own first commit will be.
-            legacy_skip = batch_id == m[id_key]
-    if legacy_skip is not None:
-        return legacy_skip
-    memo["_ledger_floor"] = versions[-1] if versions else -1
-    return False
-
-
 def _apply_profile_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    path: str,
-    feed_id: str,
-    memo: dict | None = None,
-) -> None:
-    """One micro-batch of the snapshot-sink MERGE (module-level so the
-    redelivery path is unit-testable).
-
-    Idempotence: foreachBatch is AT-LEAST-once — a batch whose commit
-    completed but whose checkpoint write did not is redelivered on
-    restart. The manifest therefore records ``(profile_feed,
-    batch_id)`` — the Delta ``(txnAppId, txnVersion)`` pattern, scoped
-    by the checkpoint's query id like the erasure ledger (review r17:
-    a table-scoped bare batch id silently DROPPED a fresh checkpoint's
-    batches, whose ids restart at 0 — for a summing MERGE sink that is
-    data loss). A redelivered batch (id ≤ the last committed id FOR
-    THIS FEED) is skipped instead of double-summed. Within one feed
-    the newest commit is this feed's own, so the ledger walk is O(1)
-    in steady state; a new feed against an existing table re-ingests
-    by design — exactly-once is a per-checkpoint-lineage contract, as
-    in Delta. Redelivery detection (including the pre-r17 bare
-    ``batch_id`` migration fallback and the per-run scan memo) lives
-    in :func:`_ledger_already_applied`."""
+    batch_df: DataFrame, batch_id: int, ledger: _FeedLedger
+) -> bool:
+    """One profile micro-batch: create the table on the first batch,
+    else skip a batch the ledger has applied, else MERGE the batch's
+    per-user sums onto the current rows of the touched keys. Returns
+    whether it committed."""
     from ..sources import snapshot as SN
 
+    path = ledger.table_path
     spark = batch_df.sparkSession
     # pin the decimal scale: Spark types dec(38,10)+dec(38,10) as
     # dec(38,9), and a scale-9 file beside scale-10 files makes the
@@ -363,21 +368,17 @@ def _apply_profile_batch(
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast(dec)).cast(dec).alias("_v"),
     )
-    versions = SN._list_versions(path)
-    if not versions:
+    if not SN._list_versions(path):
         SN.create_table(
             prof.withColumnRenamed("_v", "total_value"),
             path,
             key="user_id",
-            extra={"profile_feed": feed_id, "batch_id": batch_id},
+            extra=ledger.stamp(batch_id),
         )
-        if memo is not None:
-            memo["_ledger_last"] = batch_id
-        return
-    if _ledger_already_applied(
-        path, "profile_feed", "batch_id", feed_id, batch_id, memo
-    ):
-        return  # redelivered batch: already applied
+        ledger.record(batch_id)
+        return True
+    if ledger.applied(batch_id):
+        return False
     cur = SN.read_snapshot(spark, path).select(
         "user_id",
         F.col("n_events").alias("_n0"),
@@ -390,12 +391,9 @@ def _apply_profile_batch(
         .cast(dec)
         .alias("total_value"),
     )
-    SN.merge_upsert(
-        combined, path,
-        extra={"profile_feed": feed_id, "batch_id": batch_id},
-    )
-    if memo is not None:
-        memo["_ledger_last"] = batch_id
+    SN.merge_upsert(combined, path, extra=ledger.stamp(batch_id))
+    ledger.record(batch_id)
+    return True
 
 
 def incremental_file_ingest(
@@ -405,21 +403,12 @@ def incremental_file_ingest(
     checkpoint_dir: str,
     schema: T.StructType,
 ) -> int:
-    """One incremental-ingest run (``Trigger.AvailableNow``): process
+    """One incremental-ingest run (``Trigger.AvailableNow``): append
     exactly the files under ``src_dir`` that the checkpoint's
-    file-source ledger has not seen yet, append them to ``sink_dir``,
-    then stop. Returns the number of rows ingested by THIS run.
-
-    This is the nightly/hourly "pick up only the new files" pattern —
-    at 100 TB the alternative (re-scanning the landing zone and
-    anti-joining against the warehouse) costs a full table read per
-    run; the streaming checkpoint makes arrival tracking O(new files)
-    and survives process restarts. The per-run row count accumulates
-    inside the batch callback (the count re-reads only that batch's
-    files — O(new files), never a scan of the sink). The plain append
-    sink here is at-least-once under a mid-batch crash; pair with the
-    snapshot MERGE sink (:func:`stream_upsert_profiles_to_snapshot`,
-    batch_id-idempotent) when exactly-once matters."""
+    file-source ledger has not seen to ``sink_dir``, then stop. Returns
+    the number of rows ingested by THIS run. Arrival tracking is
+    O(new files); the append sink is at-least-once under a mid-batch
+    crash (the ledgered snapshot sinks are exactly-once)."""
     ingested: list[int] = []
 
     def _append(batch_df: DataFrame, _bid: int) -> None:
@@ -427,13 +416,7 @@ def incremental_file_ingest(
         ingested.append(batch_df.count())
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    query = (
-        stream.writeStream.foreachBatch(_append)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    query.awaitTermination()
+    run_available_now(stream, checkpoint_dir, _append)
     return sum(ingested)
 
 
@@ -443,121 +426,37 @@ def stream_erase_keys_from_snapshot(
     checkpoint_dir: str,
     table_path: str,
     key_schema: T.StructType,
-    max_files_per_trigger: int | None = 1,
 ) -> int:
-    """The streaming GDPR erasure feed (VERDICT r16 #6): erasure
-    requests land as files under ``requests_dir``; each micro-batch's
-    key set is applied to the snapshot table as ONE merge-on-read
-    ``delete_keys_dv`` commit — a position sidecar, never a file
-    rewrite. Composes the two newest subsystems: the st09 incremental
-    file ledger decides WHAT arrived, the ac14 DV path decides HOW it
-    is erased. Returns the number of erasure COMMITS applied by this
-    run (empty and redelivered batches apply nothing).
-
-    Exactly-once: foreachBatch is at-least-once, so each DV commit
-    records ``(erasure_feed, erasure_batch_id)`` in its manifest (the
-    st08 txn-ledger discipline via delete_keys_dv's ``extra``, scoped
-    like Delta's ``(txnAppId, txnVersion)``); a redelivered batch (id
-    ≤ the last recorded FOR THIS FEED) is skipped instead of
-    re-committing. The feed id is the checkpoint's own query id
-    (``<checkpoint>/metadata``, minted by Spark at stream start), so
-    batch ids from a NEW or recreated checkpoint — which restart at 0
-    — are never compared against another feed's stamps: they re-apply
-    harmlessly (key-set deletes are idempotent) instead of being
-    silently skipped, the compliance failure a table-scoped bare
-    batch id would invite (review r17). The ledger scan walks
-    manifests newest-first until it finds this feed's stamp; a
-    per-run memo bounds the cold walk over a deep version history to
-    one pass per run (ADVICE r17 / VERDICT r17 #8) and makes the
-    steady state zero manifest reads.
-
-    At 100 TB this is the production erasure pipeline shape: requests
-    stream in continuously, each batch costs one distributed semi-join
-    position capture + one tiny sidecar write against a table that is
-    never rewritten; compaction folds the accumulated DVs on its own
-    cadence."""
-    applied: list[int] = []
-    memo: dict = {}
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # read lazily (Spark writes <checkpoint>/metadata at stream
-        # start, before the first batch fires) and ONCE — the id is
-        # immutable for the checkpoint's lifetime (review r17)
-        if "feed" not in memo:
-            memo["feed"] = _checkpoint_feed_id(checkpoint_dir)
-        if _apply_erasure_batch(
-            batch_df, batch_id, table_path, memo["feed"], memo
-        ):
-            applied.append(batch_id)
-
-    reader = spark.readStream.schema(key_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
+    """The streaming erasure feed: each request file under
+    ``requests_dir`` is one micro-batch, applied to the snapshot table
+    as ONE ledgered merge-on-read ``delete_keys_dv`` commit (a position
+    sidecar, never a file rewrite). Returns the number of erasure
+    commits this run made; empty and redelivered batches make none."""
+    return len(
+        _run_ledgered(
+            _one_file_per_batch(spark, key_schema, requests_dir),
+            checkpoint_dir,
+            table_path,
+            _ERASURE_STAMP,
+            _apply_erasure_batch,
         )
-    query = (
-        reader.parquet(requests_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    query.awaitTermination()
-    return len(applied)
-
-
-def _checkpoint_feed_id(checkpoint_dir: str) -> str:
-    """The streaming checkpoint's unique query id — Spark writes it to
-    ``<checkpoint>/metadata`` when the stream starts and reuses it on
-    every restart FROM that checkpoint; a deleted/recreated checkpoint
-    mints a new one. Exactly the scope an exactly-once batch ledger
-    needs (Delta's txnAppId). ``file:``-URI checkpoint locations (the
-    checkpointLocation option accepts them) are normalized to plain
-    paths (review r17)."""
-    import json
-
-    from ..sources.snapshot import _local_path
-
-    with open(os.path.join(_local_path(checkpoint_dir), "metadata")) as fh:
-        return json.load(fh)["id"]
 
 
 def _apply_erasure_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    table_path: str,
-    feed_id: str,
-    memo: dict | None = None,
+    batch_df: DataFrame, batch_id: int, ledger: _FeedLedger
 ) -> bool:
-    """One erasure micro-batch (module-level so the redelivery path is
-    unit-testable, like :func:`_apply_profile_batch`): skip if this
-    ``batch_id`` was already committed BY THIS FEED, else one
-    ``delete_keys_dv`` stamped with (feed, batch id). Batch ids are
-    only meaningful within one checkpoint lineage — comparing across
-    feeds would silently drop a fresh checkpoint's erasures (review
-    r17). Redelivery detection (legacy bare ``erasure_batch_id``
-    fallback + the per-run scan memo bounding the cold walk over a
-    deep history) lives in :func:`_ledger_already_applied`. No-data
-    micro-batches (the engine may fire one at availableNow shutdown)
-    commit nothing — an empty erasure set has nothing to be
-    idempotent about, and a no-op version per run would pollute the
-    table history."""
+    """One erasure micro-batch: one stamped ``delete_keys_dv`` unless
+    the batch is empty (no no-op versions) or the ledger has applied
+    it. Returns whether it committed."""
     from ..sources import snapshot as SN
 
-    if batch_df.isEmpty():
+    if batch_df.isEmpty() or ledger.applied(batch_id):
         return False
-    if _ledger_already_applied(
-        table_path, "erasure_feed", "erasure_batch_id", feed_id, batch_id,
-        memo,
-    ):
-        return False  # redelivered batch: already applied
     SN.delete_keys_dv(
-        table_path,
-        batch_df,
-        extra={"erasure_feed": feed_id, "erasure_batch_id": batch_id},
+        ledger.table_path, batch_df, extra=ledger.stamp(batch_id)
     )
-    if memo is not None:
-        memo["_ledger_last"] = batch_id
+    ledger.record(batch_id)
     return True
 
 
@@ -569,54 +468,34 @@ def stream_erase_with_auto_fold(
     key_schema: T.StructType,
     threshold_ppm: int,
     n_files: int,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, list]:
-    """The erasure feed with the compaction POLICY wired in (the
-    st17 + ac16 composition): after each applied erasure batch,
-    ``auto_fold(threshold_ppm)`` reads the debt gauge from manifests
-    (O(files) metadata) and triggers ``cluster_optimize`` only when
-    the accumulated DV debt exceeds the threshold — the steady-state
-    shape of a 100 TB erasure pipeline, where requests stream all day
-    and the table folds itself exactly as often as reads start
-    bleeding, never per-batch. Returns ``(applied_batches,
-    [(batch_id, folded_version), ...])``.
+    """:func:`stream_erase_keys_from_snapshot` with the compaction
+    policy: after each applied batch, ``auto_fold(threshold_ppm)``
+    reads the DV debt gauge from manifests and runs
+    ``cluster_optimize`` only when the debt exceeds the threshold.
+    Returns ``(applied_batches, [(batch_id, folded_version), ...])``.
 
-    Folding is CONTENT-neutral (the fold rewrites the DV-applied live
-    rows), so replay == one-shot batch erasure still holds — the st19
-    registry entry hash-proves it while asserting the fold fired
-    exactly when the simulated gauge crossed the threshold. Redelivery
-    stays exactly-once: the fold's own commit carries no feed stamp,
-    and the ledger walk skips past it to the stamped delete below."""
-    applied: list[int] = []
+    Folding is content-neutral, and the fold's commit carries no stamp,
+    so the ledger walk passes it to the stamped delete below."""
+    from ..sources import snapshot as SN
+
     folds: list[tuple[int, int]] = []
-    memo: dict = {}
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources import snapshot as SN
+    def _apply(batch_df: DataFrame, batch_id: int, ledger) -> bool:
+        if not _apply_erasure_batch(batch_df, batch_id, ledger):
+            return False
+        res = SN.auto_fold(spark, table_path, threshold_ppm, n_files)
+        if res["folded"]:
+            folds.append((batch_id, res["version"]))
+        return True
 
-        if "feed" not in memo:
-            memo["feed"] = _checkpoint_feed_id(checkpoint_dir)
-        if _apply_erasure_batch(
-            batch_df, batch_id, table_path, memo["feed"], memo
-        ):
-            applied.append(batch_id)
-            res = SN.auto_fold(spark, table_path, threshold_ppm, n_files)
-            if res["folded"]:
-                folds.append((batch_id, res["version"]))
-
-    reader = spark.readStream.schema(key_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    query = (
-        reader.parquet(requests_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    applied = _run_ledgered(
+        _one_file_per_batch(spark, key_schema, requests_dir),
+        checkpoint_dir,
+        table_path,
+        _ERASURE_STAMP,
+        _apply,
     )
-    query.awaitTermination()
     return len(applied), folds
 
 
@@ -626,87 +505,42 @@ def stream_cdc_apply_to_snapshot(
     checkpoint_dir: str,
     table_path: str,
     change_schema: T.StructType,
-    max_files_per_trigger: int | None = 1,
 ) -> int:
-    """The streaming replication feed (VERDICT r17 #4) — CDC APPLY:
-    change rows (the ac08 ``diff_versions`` shape, materialized as
-    files: the table key, a ``change_type`` of insert/update/delete,
-    and the NEW column values) stream into a replica snapshot table.
-    Each micro-batch applies its inserts+updates as ONE ``merge_upsert``
-    and its deletes as ONE merge-on-read ``delete_keys_dv`` (the ac09
-    batch-apply path under a streaming driver). Returns the number of
-    change batches APPLIED by this run (empty and redelivered batches
-    apply nothing).
+    """The streaming replication feed: change rows (the table key, a
+    ``change_type`` of insert/update/delete, and the NEW column values;
+    the ``diff_versions`` shape) stream into a replica snapshot table,
+    one file per micro-batch, each applied by :func:`_apply_cdc_batch`.
+    Returns the number of change batches this run applied.
 
-    Exactly-once: the ledger stamp ``(cdc_feed, cdc_batch_id)`` —
-    checkpoint-scoped via :func:`_checkpoint_feed_id`, the st17/st08
-    discipline — rides the batch's FINAL commit (the delete, which is
-    issued even when the batch has no deletes: a no-op DV version
-    whose only job is carrying the stamp). Crash ordering is safe in
-    both directions: a crash between merge and delete redelivers the
-    batch, whose MERGE re-applies the same materialized values
-    (content-idempotent — feed rows carry values, not expressions)
-    before the delete lands with the stamp; a crash after the delete
-    is a plain redelivery, skipped by :func:`_ledger_already_applied`.
-
-    Batch ORDER is load-bearing (an update must not overtake the
-    delete that precedes it): the file source processes files oldest
-    modification time first, so a producer appending change waves in
-    commit order preserves apply order; ``maxFilesPerTrigger`` keeps
-    waves from merging into one batch when per-wave commits matter.
-
-    At 100 TB this is cross-region table sync without full copies:
-    each batch costs one file-pruned MERGE over the touched keys +
-    one position-sidecar delete, both O(batch), never O(table)."""
-    applied: list[int] = []
-    memo: dict = {}
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if "feed" not in memo:
-            memo["feed"] = _checkpoint_feed_id(checkpoint_dir)
-        if _apply_cdc_batch(
-            batch_df, batch_id, table_path, memo["feed"], memo
-        ):
-            applied.append(batch_id)
-
-    reader = spark.readStream.schema(change_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
+    Batch order is load-bearing (an update must not overtake the
+    delete before it): the file source takes the oldest modification
+    time first, so a producer writing one file per wave in commit
+    order keeps apply order."""
+    return len(
+        _run_ledgered(
+            _one_file_per_batch(spark, change_schema, changes_dir),
+            checkpoint_dir,
+            table_path,
+            _CDC_STAMP,
+            _apply_cdc_batch,
         )
-    query = (
-        reader.parquet(changes_dir)
-        .writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    query.awaitTermination()
-    return len(applied)
 
 
 def _apply_cdc_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    table_path: str,
-    feed_id: str,
-    memo: dict | None = None,
+    batch_df: DataFrame, batch_id: int, ledger: _FeedLedger
 ) -> bool:
-    """One CDC micro-batch (module-level so the redelivery path is
-    unit-testable): skip if this ``batch_id`` was already committed BY
-    THIS FEED; else MERGE the non-delete rows (key + new values,
-    ``change_type`` dropped) and delete the delete-rows' keys via one
-    stamped ``delete_keys_dv``. The stamp rides the delete — always
-    issued, possibly as a no-op DV version — so a partially-applied
-    batch (merge landed, crash before delete) is never marked done."""
+    """One CDC micro-batch, unless empty or already applied: MERGE the
+    non-delete rows (``change_type`` dropped), then one
+    ``delete_keys_dv`` of the delete rows' keys. The stamp rides the
+    delete, issued even with no deletes, so a batch whose merge landed
+    before a crash is redelivered (its values re-merge unchanged) and
+    never marked done. Returns whether it committed."""
     from ..sources import snapshot as SN
 
-    if batch_df.isEmpty():
+    if batch_df.isEmpty() or ledger.applied(batch_id):
         return False
-    if _ledger_already_applied(
-        table_path, "cdc_feed", "cdc_batch_id", feed_id, batch_id, memo
-    ):
-        return False  # redelivered batch: already applied
+    table_path = ledger.table_path
     versions = SN._list_versions(table_path)
     if not versions:
         raise FileNotFoundError(f"no snapshot table at {table_path}")
@@ -714,8 +548,8 @@ def _apply_cdc_batch(
     # fail LOUD on unclassifiable rows before anything commits: a NULL
     # change_type vanishes from both filters below (NULL comparisons)
     # and a misspelled type would merge as an upsert carrying NULL
-    # payloads — both silently diverge the replica (review r18). The
-    # probe is O(batch) and short-circuits at the first bad row.
+    # payloads — both silently diverge the replica. The probe is
+    # O(batch) and short-circuits at the first bad row.
     bad = (
         batch_df.filter(
             F.col("change_type").isNull()
@@ -737,13 +571,8 @@ def _apply_cdc_batch(
     deletes = batch_df.filter(F.col("change_type") == "delete").select(key)
     if not upserts.isEmpty():
         SN.merge_upsert(upserts, table_path)
-    SN.delete_keys_dv(
-        table_path,
-        deletes,
-        extra={"cdc_feed": feed_id, "cdc_batch_id": batch_id},
-    )
-    if memo is not None:
-        memo["_ledger_last"] = batch_id
+    SN.delete_keys_dv(table_path, deletes, extra=ledger.stamp(batch_id))
+    ledger.record(batch_id)
     return True
 
 

@@ -113,94 +113,6 @@ def user_profile_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def user_profile_stream_tws(events: DataFrame) -> DataFrame:
-    """The same running-profile operator on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (SPARK-49564 family): state is typed and
-    named (ValueState/ListState/MapState handles instead of one tuple),
-    timers replace timeout conf, and the state store must be RocksDB
-    (changelog-checkpointable, the 100 TB-durable option). Keeping both
-    operators side by side documents the migration path; they must
-    agree exactly (tests/test_streaming.py asserts it when the runtime
-    supports the API).
-
-    Runtime requirement beyond pyspark itself: the TWS driver worker
-    speaks protobuf to the JVM, so the ``protobuf`` Python package must
-    be installed and ``spark.sql.streaming.stateStore.providerClass``
-    must be the RocksDB provider. Callers can check
-    :func:`tws_available` first."""
-    if ProfileProcessor is None:
-        raise RuntimeError(
-            "transformWithStateInPandas is unavailable on this runtime "
-            "(pyspark>=4 with the protobuf package required); check "
-            "tws_available() before calling user_profile_stream_tws"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        ProfileProcessor(),
-        outputStructType=PROFILE_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-def tws_available() -> bool:
-    """True when the runtime can actually execute
-    ``transformWithStateInPandas``: the Spark 4 API is present AND the
-    protobuf wire dependency of its driver worker is importable."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming import stateful_processor  # noqa: F401
-    except ImportError:
-        return False
-    return ProfileProcessor is not None
-
-
-try:  # Spark 4 only; the module stays importable on older runtimes
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ProfileProcessor(StatefulProcessor):
-        """Module-level (picklable by reference — the TWS driver worker
-        imports it rather than deserializing a closure) typed-state
-        processor with the exact `_update_profile` semantics."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._profile = handle.getValueState("profile", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (user_id,) = key
-            prior = self._profile.get() if self._profile.exists() else None
-            n, total, comp, mx, last_us = prior or (
-                0, 0.0, 0.0, float("-inf"), 0,
-            )
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                n += int(len(pdf))
-                total, comp = _add_chunk_sum(total, comp, pdf["value"])
-                mx = max(mx, float(pdf["value"].max()))
-                last_us = max(last_us, int(pdf["ts_us"].max()))
-            self._profile.update((n, total, comp, mx, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [total + comp],
-                    "max_value": [mx],
-                    "last_ts_us": [last_us],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-except ImportError:  # pragma: no cover
-    ProfileProcessor = None  # type: ignore[assignment]
-
-
 # --- streaming EWMA twin of the batch w08 window op -----------------
 
 EWMA_OUT_SCHEMA = (
@@ -426,13 +338,7 @@ def ewma_stream(events: DataFrame) -> DataFrame:
     arriving twice WITHIN one micro-batch is deduped before scoring,
     so intra-batch redelivery is exactly-once too). Emitted
     ``ewma_raw`` is the UNROUNDED double — round Spark-side
-    (F.round, JVM half-up) so batch and stream round identically.
-
-    VERDICT r7 #8 asked for this on ``transformWithState``; that API
-    still needs the protobuf wire dep this runtime lacks
-    (tws_available() == False), so the twin rides
-    ``applyInPandasWithState`` — same state-store execution model,
-    GA wire path."""
+    (F.round, JVM half-up) so batch and stream round identically."""
     return events.groupBy("user_id").applyInPandasWithState(
         _update_ewma,
         outputStructType=EWMA_OUT_SCHEMA,

@@ -84,3 +84,18 @@ def coo_to_nested(df) -> list[list[float]]:
 def vec_to_list(df) -> list[float]:
     rows = sorted(df.collect(), key=lambda r: r["id"])
     return [r["v"] for r in rows]
+
+
+def fresh_ledger(path: str, stamp: str, feed: str):
+    """A new exactly-once ledger of ``feed`` on the snapshot table at
+    ``path``, keyed like the ``stamp`` sink ("profile", "erasure" or
+    "cdc"). Its first check walks the manifests, as a run's first batch
+    does."""
+    from alternating_least_squares_spark.streaming import events as EV
+
+    keys = {
+        "profile": EV._PROFILE_STAMP,
+        "erasure": EV._ERASURE_STAMP,
+        "cdc": EV._CDC_STAMP,
+    }[stamp]
+    return EV._FeedLedger(path, *keys, feed)

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.sources import snapshot as SN
+from tests.conftest import fresh_ledger
 
 
 @pytest.fixture
@@ -204,7 +205,8 @@ def test_profile_batches_disjoint_keys_keep_decimal_scale(spark, tmp_path):
         batch = spark.createDataFrame(
             [(uid, 1.25 + i)], "user_id long, value double"
         )
-        _apply_profile_batch(batch, i, path, "feedA")
+        ledger = fresh_ledger(path, "profile", "feedA")
+        _apply_profile_batch(batch, i, ledger)
     got = {
         r["user_id"]: r["total_value"]
         for r in SN.read_snapshot(spark, path).collect()
@@ -225,10 +227,15 @@ def test_profile_batch_redelivery_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "t")
     b0 = spark.createDataFrame([(1, 2.0)], "user_id long, value double")
     b1 = spark.createDataFrame([(1, 3.0)], "user_id long, value double")
-    _apply_profile_batch(b0, 0, path, "feedA")
-    _apply_profile_batch(b0, 0, path, "feedA")  # redelivered create
-    _apply_profile_batch(b1, 1, path, "feedA")
-    _apply_profile_batch(b1, 1, path, "feedA")  # redelivered merge
+
+    def apply(batch, batch_id, feed):
+        ledger = fresh_ledger(path, "profile", feed)
+        _apply_profile_batch(batch, batch_id, ledger)
+
+    apply(b0, 0, "feedA")
+    apply(b0, 0, "feedA")  # redelivered create
+    apply(b1, 1, "feedA")
+    apply(b1, 1, "feedA")  # redelivered merge
     rows = SN.read_snapshot(spark, path).collect()
     assert len(rows) == 1
     assert rows[0]["n_events"] == 2 and float(rows[0]["total_value"]) == 5.0
@@ -237,11 +244,11 @@ def test_profile_batch_redelivery_is_idempotent(spark, tmp_path):
     # must APPLY (exactly-once is per-lineage, the Delta txnAppId
     # contract) — the pre-r17 table-scoped bare batch id silently
     # dropped them, which for a summing sink is data loss
-    _apply_profile_batch(b1, 0, path, "feedB")
+    apply(b1, 0, "feedB")
     rows = SN.read_snapshot(spark, path).collect()
     assert rows[0]["n_events"] == 3 and float(rows[0]["total_value"]) == 8.0
     # ... and feedA's own ledger is unaffected by feedB's commit
-    _apply_profile_batch(b1, 1, path, "feedA")  # still redelivered
+    apply(b1, 1, "feedA")  # still redelivered
     assert SN.read_snapshot(spark, path).collect()[0]["n_events"] == 3
 
 

@@ -4,6 +4,7 @@ must reproduce the batch aggregation bit-for-bit)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -14,7 +15,7 @@ from alternating_least_squares_spark.streaming import (
     run_stream_to_batch,
     sessionize_stream,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, fresh_ledger
 
 # Read schema of the events copies the tests below write, with ``ts``
 # the epoch-nanos long ``ts_ns``.
@@ -353,62 +354,6 @@ def test_stream_foreachbatch_merge_accumulates_state(spark, tmp_path):
         .collect()
     }
     assert got == want
-
-
-def test_transform_with_state_agrees_with_apply_in_pandas(spark):
-    """The Spark 4 transformWithStateInPandas profile operator must
-    reproduce the applyInPandasWithState profiles exactly. Skipped
-    where the runtime lacks the TWS driver worker's protobuf
-    dependency — the operator is still importable and its plan builds;
-    only execution needs the wire codec."""
-    import pytest
-
-    from alternating_least_squares_spark.streaming.stateful import tws_available
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas runtime deps unavailable")
-    from alternating_least_squares_spark.streaming import (
-        read_events_stream,
-        run_stream_to_batch,
-        user_profile_stream,
-        user_profile_stream_tws,
-    )
-    from pyspark.sql import functions as F
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, SF_SMALL).select(
-            "user_id", "value", F.expr("ts_ns DIV 1000").alias("ts_us")
-        )
-        def profile(r):
-            # EVERY output field — a max_value sentinel leak or a
-            # last_ts_us off-by-one must fail this, not just the sums
-            return (
-                r["n_events"],
-                round(r["total_value"], 6),
-                round(r["max_value"], 6),
-                r["last_ts_us"],
-            )
-
-        a = {
-            r["user_id"]: profile(r)
-            for r in run_stream_to_batch(
-                user_profile_stream_tws(stream), output_mode="update"
-            ).collect()
-        }
-        b = {
-            r["user_id"]: profile(r)
-            for r in run_stream_to_batch(
-                user_profile_stream(stream), output_mode="update"
-            ).collect()
-        }
-        assert a == b and a
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_stream_snapshot_sink_incremental_merge(spark, tmp_path):
@@ -1039,11 +984,16 @@ def test_erasure_batch_redelivery_is_idempotent(spark, tmp_path):
     b0 = spark.createDataFrame([(3,), (5,)], "k long")
     b1 = spark.createDataFrame([(7,)], "k long")
     empty = spark.createDataFrame([], "k long")
-    assert _apply_erasure_batch(b0, 0, path, "feedA") is True
-    assert _apply_erasure_batch(b0, 0, path, "feedA") is False  # redelivered
-    assert _apply_erasure_batch(empty, 1, path, "feedA") is False  # no-data
-    assert _apply_erasure_batch(b1, 2, path, "feedA") is True
-    assert _apply_erasure_batch(b1, 1, path, "feedA") is False  # stale id
+
+    def erase(batch, batch_id, feed):
+        ledger = fresh_ledger(path, "erasure", feed)
+        return _apply_erasure_batch(batch, batch_id, ledger)
+
+    assert erase(b0, 0, "feedA") is True
+    assert erase(b0, 0, "feedA") is False  # redelivered
+    assert erase(empty, 1, "feedA") is False  # no-data
+    assert erase(b1, 2, "feedA") is True
+    assert erase(b1, 1, "feedA") is False  # stale id
     assert SN._list_versions(path) == [0, 1, 2]
     live = {r["k"] for r in SN.read_snapshot(spark, path).collect()}
     assert live == set(range(20)) - {3, 5, 7}
@@ -1053,11 +1003,11 @@ def test_erasure_batch_redelivery_is_idempotent(spark, tmp_path):
     # of already-erased keys is a harmless idempotent no-op commit,
     # and genuinely new keys erase
     b2 = spark.createDataFrame([(7,), (11,)], "k long")
-    assert _apply_erasure_batch(b2, 0, path, "feedB") is True
+    assert erase(b2, 0, "feedB") is True
     live = {r["k"] for r in SN.read_snapshot(spark, path).collect()}
     assert live == set(range(20)) - {3, 5, 7, 11}
     # and feedA's OWN ledger is untouched by feedB's commit
-    assert _apply_erasure_batch(b1, 2, path, "feedA") is False
+    assert erase(b1, 2, "feedA") is False
 
 
 def test_streaming_erasure_equals_batch_delete(spark, tmp_path):
@@ -1128,9 +1078,13 @@ def test_ledger_legacy_bare_stamp_fallback(spark, tmp_path):
     )
     b = spark.createDataFrame([(3,)], "k long")
     # exact legacy redelivery: skipped
-    assert _apply_erasure_batch(b, 4, path, "feedX") is False
+    assert _apply_erasure_batch(
+        b, 4, fresh_ledger(path, "erasure", "feedX")
+    ) is False
     # the continuing feed's NEXT batch applies and stamps feed-scoped
-    assert _apply_erasure_batch(b, 5, path, "feedX") is True
+    assert _apply_erasure_batch(
+        b, 5, fresh_ledger(path, "erasure", "feedX")
+    ) is True
     m = SN._read_manifest(path, SN._list_versions(path)[-1])
     assert m["erasure_feed"] == "feedX" and m["erasure_batch_id"] == 5
     # a different id against the legacy stamp is a fresh lineage:
@@ -1142,7 +1096,9 @@ def test_ledger_legacy_bare_stamp_fallback(spark, tmp_path):
         spark.createDataFrame([(1,)], "k long"),
         extra={"erasure_batch_id": 4},
     )
-    assert _apply_erasure_batch(b, 0, path2, "feedY") is True
+    assert _apply_erasure_batch(
+        b, 0, fresh_ledger(path2, "erasure", "feedY")
+    ) is True
 
     # --- profile sink: the dangerous direction is double-summing
     ppath = str(tmp_path / "legacy_profile")
@@ -1160,7 +1116,7 @@ def test_ledger_legacy_bare_stamp_fallback(spark, tmp_path):
         for r in SN.read_snapshot(spark, ppath).collect()
     }
     # redelivered legacy batch: skipped, nothing double-summed
-    _apply_profile_batch(ev, 4, ppath, "newfeed")
+    _apply_profile_batch(ev, 4, fresh_ledger(ppath, "profile", "newfeed"))
     assert SN._list_versions(ppath) == [0]
     after = {
         (r["user_id"], r["n_events"])
@@ -1168,16 +1124,16 @@ def test_ledger_legacy_bare_stamp_fallback(spark, tmp_path):
     }
     assert after == before
     # the next batch applies normally and stamps feed-scoped
-    _apply_profile_batch(ev, 5, ppath, "newfeed")
+    _apply_profile_batch(ev, 5, fresh_ledger(ppath, "profile", "newfeed"))
     m = SN._read_manifest(ppath, SN._list_versions(ppath)[-1])
     assert m["profile_feed"] == "newfeed" and m["batch_id"] == 5
 
 
 def test_ledger_cold_scan_bounded(spark, tmp_path, monkeypatch):
-    """VERDICT r17 #8 / ADVICE r18: the per-run memo caps the ledger
-    walk — a fresh feed over a DEEP version history pays the cold
-    O(versions) manifest scan at most once per run, and after the
-    feed's first commit the steady state is ZERO manifest reads."""
+    """The ledger's per-run bounds cap its walk — a fresh feed over a
+    DEEP version history pays the cold O(versions) manifest scan at
+    most once per run, and after the feed's first commit the steady
+    state is ZERO manifest reads."""
     from pyspark.sql import functions as F
 
     from alternating_least_squares_spark.sources import snapshot as SN
@@ -1198,29 +1154,20 @@ def test_ledger_cold_scan_bounded(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         SN, "_read_manifest", lambda p, v: reads.append(v) or real(p, v)
     )
-    memo: dict = {}
+    ledger = fresh_ledger(path, "erasure", "f1")
     b = spark.createDataFrame([(30,)], "k long")
     # no-stamp cold scan: walks the full history once...
-    assert EV._ledger_already_applied(
-        path, "erasure_feed", "erasure_batch_id", "f1", 0, memo
-    ) is False
+    assert ledger.applied(0) is False
     cold = len(reads)
     assert cold == nversions
-    # ...and the floor memo makes the next pre-commit check read
-    # nothing new
-    assert EV._ledger_already_applied(
-        path, "erasure_feed", "erasure_batch_id", "f1", 0, memo
-    ) is False
+    # ...and the floor makes the next pre-commit check read nothing new
+    assert ledger.applied(0) is False
     assert len(reads) == cold
-    # after the feed's own first commit the memo answers directly
-    assert EV._apply_erasure_batch(b, 0, path, "f1", memo) is True
+    # after the feed's own first commit the ledger answers directly
+    assert EV._apply_erasure_batch(b, 0, ledger) is True
     reads.clear()
-    assert EV._ledger_already_applied(
-        path, "erasure_feed", "erasure_batch_id", "f1", 0, memo
-    ) is True
-    assert EV._ledger_already_applied(
-        path, "erasure_feed", "erasure_batch_id", "f1", 1, memo
-    ) is False
+    assert ledger.applied(0) is True
+    assert ledger.applied(1) is False
     assert reads == []  # steady state: zero manifest reads
 
 
@@ -1246,7 +1193,12 @@ def test_cdc_batch_redelivery_is_idempotent(spark, tmp_path):
         [(3, "update", 333), (99, "insert", 990), (5, "delete", None)],
         "k long, change_type string, v long",
     )
-    assert _apply_cdc_batch(batch, 0, path, "feedA") is True
+
+    def apply(batch, batch_id, feed):
+        ledger = fresh_ledger(path, "cdc", feed)
+        return _apply_cdc_batch(batch, batch_id, ledger)
+
+    assert apply(batch, 0, "feedA") is True
     vs = SN._list_versions(path)
     assert [SN._read_manifest(path, v)["operation"] for v in vs[1:]] == [
         "merge", "delete_dv",
@@ -1257,13 +1209,13 @@ def test_cdc_batch_redelivery_is_idempotent(spark, tmp_path):
     assert (3, 333) in state and (99, 990) in state
     assert 5 not in {k for k, _ in state}
     # redelivered and stale ids: nothing committed
-    assert _apply_cdc_batch(batch, 0, path, "feedA") is False
+    assert apply(batch, 0, "feedA") is False
     assert SN._list_versions(path) == vs
     empty = spark.createDataFrame([], "k long, change_type string, v long")
-    assert _apply_cdc_batch(empty, 1, path, "feedA") is False
+    assert apply(empty, 1, "feedA") is False
     # a fresh checkpoint lineage re-applies the same materialized
     # values: new versions, UNCHANGED content
-    assert _apply_cdc_batch(batch, 0, path, "feedB") is True
+    assert apply(batch, 0, "feedB") is True
     assert {
         (r["k"], r["v"]) for r in SN.read_snapshot(spark, path).collect()
     } == state
@@ -1350,7 +1302,6 @@ def test_ledger_feed_stamp_wins_over_newer_legacy(spark, tmp_path):
     from alternating_least_squares_spark.sources import snapshot as SN
     from alternating_least_squares_spark.streaming.events import (
         _apply_erasure_batch,
-        _ledger_already_applied,
     )
 
     path = str(tmp_path / "t")
@@ -1358,10 +1309,16 @@ def test_ledger_feed_stamp_wins_over_newer_legacy(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     SN.create_table(base, path, key="k")
+
+    def erase(key, batch_id):
+        return _apply_erasure_batch(
+            spark.createDataFrame([(key,)], "k long"),
+            batch_id,
+            fresh_ledger(path, "erasure", "F"),
+        )
+
     # upgraded sink commits feed-scoped batch 5...
-    assert _apply_erasure_batch(
-        spark.createDataFrame([(1,)], "k long"), 5, path, "F"
-    ) is True
+    assert erase(1, 5) is True
     # ...then a not-yet-upgraded writer stamps a bare batch_id above it
     SN.delete_keys_dv(
         path,
@@ -1369,13 +1326,9 @@ def test_ledger_feed_stamp_wins_over_newer_legacy(spark, tmp_path):
         extra={"erasure_batch_id": 3},
     )
     # F's batch 5 redelivered: must be SKIPPED (scoped stamp wins)
-    assert _apply_erasure_batch(
-        spark.createDataFrame([(1,)], "k long"), 5, path, "F"
-    ) is False
+    assert erase(1, 5) is False
     # and F's next batch still applies
-    assert _apply_erasure_batch(
-        spark.createDataFrame([(3,)], "k long"), 6, path, "F"
-    ) is True
+    assert erase(3, 6) is True
 
     # only the NEWEST legacy stamp participates: legacy stamps 3 (old)
     # then 7 (new); a fresh feed's batch 3 must NOT match the deep one
@@ -1389,12 +1342,8 @@ def test_ledger_feed_stamp_wins_over_newer_legacy(spark, tmp_path):
         path2, spark.createDataFrame([(2,)], "k long"),
         extra={"erasure_batch_id": 7},
     )
-    assert _ledger_already_applied(
-        path2, "erasure_feed", "erasure_batch_id", "G", 3
-    ) is False
-    assert _ledger_already_applied(
-        path2, "erasure_feed", "erasure_batch_id", "G", 7
-    ) is True
+    assert fresh_ledger(path2, "erasure", "G").applied(3) is False
+    assert fresh_ledger(path2, "erasure", "G").applied(7) is True
 
 
 def test_cdc_batch_rejects_unclassifiable_change_type(spark, tmp_path):
@@ -1424,7 +1373,7 @@ def test_cdc_batch_rejects_unclassifiable_change_type(spark, tmp_path):
             "k long, change_type string, v long",
         )
         with pytest.raises(ValueError, match="unclassifiable change_type"):
-            _apply_cdc_batch(batch, 0, path, "feedA")
+            _apply_cdc_batch(batch, 0, fresh_ledger(path, "cdc", "feedA"))
     assert SN._list_versions(path) == [0]  # nothing committed
 
 
@@ -1487,9 +1436,14 @@ def test_streaming_fold_policy_redelivery_and_content(spark, tmp_path):
     # redelivery of the LAST batch (stamped delete sits under nothing)
     # and of a batch whose stamp sits BELOW the fold commit: both skip
     b2 = spark.createDataFrame([(42,)], "k long")
-    assert _apply_erasure_batch(b2, 2, table, _feed(tmp_path)) is False
+    feed = _feed(tmp_path)
+    assert _apply_erasure_batch(
+        b2, 2, fresh_ledger(table, "erasure", feed)
+    ) is False
     b1 = spark.createDataFrame([(29,)], "k long")
-    assert _apply_erasure_batch(b1, 1, table, _feed(tmp_path)) is False
+    assert _apply_erasure_batch(
+        b1, 1, fresh_ledger(table, "erasure", feed)
+    ) is False
 
 
 def _feed(tmp_path) -> str:
@@ -1499,3 +1453,72 @@ def _feed(tmp_path) -> str:
     )
 
     return _checkpoint_feed_id(str(tmp_path / "ck"))
+
+
+def test_foreach_batch_runs_only_in_the_runner():
+    """Every foreachBatch query in the package starts in
+    ``streaming.events.run_available_now``: ``.foreachBatch(`` appears
+    nowhere else in its sources."""
+    import ast
+    import pathlib
+
+    import alternating_least_squares_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        defs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for i, line in enumerate(src.splitlines(), 1):
+            for _ in range(line.count(".foreachBatch(")):
+                inner = max(
+                    (d for d in defs if d.lineno <= i <= d.end_lineno),
+                    key=lambda d: d.lineno,
+                    default=None,
+                )
+                sites.append(
+                    (
+                        path.relative_to(root).as_posix(),
+                        inner.name if inner else None,
+                    )
+                )
+    assert sites == [("streaming/events.py", "run_available_now")]
+
+
+# Spark jobs each streaming query starts at SF_SMALL, its result's
+# collect included.
+STREAM_QUERY_JOBS = {
+    "st08_stream_snapshot_sink": 6,
+    "st09_incremental_ingest": 15,
+    "st10_stream_admission": 45,
+    "st12_stream_drift_gate": 24,
+    "st13_stream_budget_admission": 14,
+    "st14_stream_weighted_sample": 15,
+    "st17_streaming_erasure": 40,
+    "st18_streaming_cdc_apply": 90,
+    "st19_streaming_fold_policy": 60,
+}
+
+
+@pytest.mark.parametrize("name", sorted(STREAM_QUERY_JOBS))
+def test_streaming_query_job_count(spark, name):
+    """Pins each streaming query's job count. foreachBatch jobs run in
+    the stream's own job group, so the count is taken over the call's
+    window from the status store, after the listener bus drains."""
+    from alternating_least_squares_spark.registry import queries
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def job_ids() -> set[int]:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    rows = queries()[name](spark, SF_SMALL).collect()
+    assert rows
+    assert len(job_ids() - before) == STREAM_QUERY_JOBS[name]
