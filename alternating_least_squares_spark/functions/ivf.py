@@ -34,10 +34,14 @@ from __future__ import annotations
 
 from pyspark.ml.clustering import KMeans, KMeansModel
 from pyspark.ml.functions import array_to_vector
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from alternating_least_squares_spark.functions.similarity import cosine
+from alternating_least_squares_spark.functions.similarity import (
+    pair_cosine,
+    rank_topk,
+    vec_norm,
+)
 
 
 def train_centroids(
@@ -98,49 +102,38 @@ def ivf_topk(
     n_probe: int = 4,
     seed: int = 42,
     model: KMeansModel | None = None,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-Flat top-k: probe the n_probe nearest lists, exact-cosine
     rerank, per-query window top-k. Returns
-    (query_id, neighbor_id, cosine, rank).
-
-    ``centroids`` (plain nested lists) bypasses the MLlib fit — pass
-    pq.train_coarse_centroids' driver-side bounded-sample Lloyd output
-    when the vocabulary does not need a distributed fit (a coarse
-    quantizer never does: "KMeans itself trains on a sample", this
-    module's own 100 TB posture; FAISS trains IVF vocabularies the
-    same way). Assignment/probing are identical literal-argmin
-    expressions either way."""
+    (query_id, neighbor_id, cosine, rank)."""
     from alternating_least_squares_spark.functions.pq import (
         assign_lists_lit,
         probe_lists_lit,
     )
 
-    if centroids is not None:
-        cents = [[float(x) for x in c] for c in centroids]
-    else:
-        if model is None:
-            model = train_centroids(emb, vec_col, n_centroids, seed)
-        cents = extract_centroids(model)
+    if model is None:
+        model = train_centroids(emb, vec_col, n_centroids, seed)
+    cents = extract_centroids(model)
     corpus = assign_lists_lit(
         emb.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_e")
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("_e"),
+            vec_norm(F.col(vec_col)).alias("_nn"),
         ),
         cents,
         "_e",
     )
-    probes = probe_lists_lit(queries, cents, id_col, vec_col, n_probe)
+    probes = probe_lists_lit(
+        queries, cents, id_col, vec_col, n_probe
+    ).withColumn("_nq", vec_norm(F.col("_q")))
     cand = probes.join(corpus, "list_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("_q"), F.col("_e")), 6).alias("cosine"),
+        pair_cosine(
+            F.col("_q"), F.col("_e"), F.col("_nq"), F.col("_nn")
+        ).alias("cosine"),
     ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k)

@@ -48,7 +48,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from alternating_least_squares_spark.functions.similarity import cosine
+from alternating_least_squares_spark.functions.similarity import (
+    pair_cosine,
+    rank_topk,
+    vec_norm,
+)
 
 Codebooks = list[list[list[float]]]  # [m][k_sub][dim/m]
 
@@ -390,7 +394,9 @@ def ivf_pq_topk(
     )
 
     full = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_e")
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("_e"),
+        vec_norm(F.col(vec_col)).alias("_nn"),
     )
     corpus = assign_lists_lit(full, coarse, "_e")
     # The candidate stream carries ONLY (list_id, neighbor_id, codes),
@@ -424,7 +430,9 @@ def ivf_pq_topk(
     )
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_q")
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_q"),
+        vec_norm(F.col(vec_col)).alias("_nq"),
     )
     scored = (
         survivors.select("query_id", "neighbor_id")
@@ -433,12 +441,9 @@ def ivf_pq_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("_q"), F.col("_e")), 6).alias("cosine"),
+            pair_cosine(
+                F.col("_q"), F.col("_e"), F.col("_nq"), F.col("_nn")
+            ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
+    return rank_topk(scored, k)

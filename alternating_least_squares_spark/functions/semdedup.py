@@ -73,12 +73,13 @@ def _pandas_cluster_pairs(
     ``round(dot(v_a, v_b) / (n_a · n_b), 6) ≥ threshold``, scored per
     cluster with NumPy behind ``applyInPandas``.
 
-    The cosines are bit-identical to Spark's ``round(_safe_ratio(
-    vec_dot(...), n_a * n_b), 6)``: the dot accumulates over k in
-    ascending order as ``acc = acc + (a_k · b_k)`` with one rounding
-    per multiply and per add (the fold order of ``vec_dot``'s
-    ``aggregate(zip_with(...))``), the denominator is the same single
-    ``n_a · n_b`` multiply, and rounding is Spark's ``round(x, 6)``:
+    The cosines are bit-identical to the Spark spelling every other
+    vector search scores with, ``similarity.pair_cosine(v_a, v_b, n_a,
+    n_b)``: the dot accumulates over k in ascending order as
+    ``acc = acc + (a_k · b_k)`` with one rounding per multiply and per
+    add (the fold order of ``vec_dot``'s ``aggregate(zip_with(...))``),
+    the denominator is the same single ``n_a · n_b`` multiply, and
+    rounding is Spark's ``round(x, 6)``:
     HALF_UP (away from zero) on the decimal of ``Double.toString(x)``.
     Zero-norm and NULL vectors emit no pairs; rows with a NULL
     cluster are dropped; a duplicated ``_id`` never pairs with

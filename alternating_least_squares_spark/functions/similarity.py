@@ -1,19 +1,21 @@
-"""Approximate nearest-neighbor search over embedding columns.
+"""Cosine nearest-neighbor search over embedding columns.
 
-Two paths:
+One scoring contract serves every vector search in the package
+(LSH and PCA top-k here, :mod:`.ivf`, :mod:`.pq`, the v-family
+registry queries): a candidate pair scores :func:`pair_cosine`, the
+exact cosine from the two vectors and their per-row norms, rounded to
+6 decimals and NULL when a norm is 0; a top-k search keeps
+:func:`rank_topk`'s rows, ranked by (cosine desc, neighbor_id asc).
+The searches differ only in how they generate candidate pairs.
 
-* **exact brute force** (baseline, oracle-checkable): crossJoin +
-  per-row cosine + window top-k. Correct at any scale but O(Q·N) —
-  only for small query sets.
-* **random-hyperplane LSH** (the 100 TB path, Charikar 2002 /
-  Indyk–Motwani 1998): T hash tables × p planes; a vector's bucket in
-  a table is the sign pattern of its projections onto that table's
-  planes. Neighbors collide in ≥1 table with probability
-  1 − (1 − (1 − θ/π)^p)^T. The planes are DETERMINISTIC literals
-  (seeded ±1 Rademacher components derived from md5 in Python at plan
-  build time), so results are reproducible and the whole pipeline
-  stays in JVM codegen — no Python UDFs, no randomness at runtime.
-
+The candidate generator here is **random-hyperplane LSH** (the 100 TB
+path, Charikar 2002 / Indyk–Motwani 1998): T hash tables × p planes; a
+vector's bucket in a table is the sign pattern of its projections onto
+that table's planes. Neighbors collide in ≥1 table with probability
+1 − (1 − (1 − θ/π)^p)^T. The planes are DETERMINISTIC literals
+(seeded ±1 Rademacher components derived from md5 in Python at plan
+build time), so results are reproducible and the whole pipeline
+stays in JVM codegen — no Python UDFs, no randomness at runtime.
 The candidate join is an equi-join on (table, bucket) — never an
 all-pairs crossJoin of the corpus.
 """
@@ -55,8 +57,57 @@ def _safe_ratio(num: Column, den: Column) -> Column:
     return F.when(den != 0, num / den)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _safe_ratio(vec_dot(a, b), vec_norm(a) * vec_norm(b))
+def pair_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The pair score of every vector search: cosine of vectors ``a``
+    and ``b`` from their norms ``na``/``nb`` (:func:`vec_norm`, taken
+    once per row, not once per candidate pair), rounded to 6 decimals,
+    NULL when a norm is 0."""
+    return F.round(_safe_ratio(vec_dot(a, b), na * nb), 6)
+
+
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` (``query_id``,
+    ``neighbor_id``, ``cosine``), with their ``rank``: cosine
+    descending, NULL last, ties to the lowest neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.col("neighbor_id")
+    )
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast("long")
+    ).filter(F.col("rank") <= k)
+
+
+def _normed_sides(
+    queries: DataFrame, emb: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(query_id, _eq, _nq)`` and ``(neighbor_id, _en, _nn)``: each
+    vector with its norm as a per-ROW scalar, so pair scoring is a
+    single dot traversal instead of dot + two norm aggregates —
+    interpreted HOF cost is per array element, and candidate pairs
+    outnumber rows by orders of magnitude."""
+    return (
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("_eq"),
+            vec_norm(F.col(vec_col)).alias("_nq"),
+        ),
+        emb.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("_en"),
+            vec_norm(F.col(vec_col)).alias("_nn"),
+        ),
+    )
+
+
+def _score_sides(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine) of :func:`_normed_sides` pairs."""
+    return cand.select(
+        "query_id",
+        "neighbor_id",
+        pair_cosine(
+            F.col("_eq"), F.col("_en"), F.col("_nq"), F.col("_nn")
+        ).alias("cosine"),
+    )
 
 
 def rademacher_planes(
@@ -218,47 +269,18 @@ def lsh_topk(
     that is what :func:`embedding_near_dup_pairs` uses. Measured on
     the sf0.001 testdata (weakly-similar random-ish vectors):
     recall@1 = 9/10 at p=2/t=6, 7/10 at p=3/t=4, 1/10 at p=6/t=3."""
-    # Norms ride the join as per-ROW scalars (computed once per vector,
-    # not once per candidate pair): pair scoring is then a single dot
-    # traversal instead of dot + two norm aggregates — interpreted HOF
-    # cost is per array element, and candidate pairs outnumber rows by
-    # orders of magnitude.
-    qb = with_lsh_buckets(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_eq"),
-            vec_norm(F.col(vec_col)).alias("_nq"),
-        ),
-        "_eq", n_tables, n_planes, dim, seed,
+    q, corpus = _normed_sides(queries, emb, id_col, vec_col)
+    qb = with_lsh_buckets(q, "_eq", n_tables, n_planes, dim, seed)
+    cb = with_lsh_buckets(
+        spread_if_narrow(corpus), "_en", n_tables, n_planes, dim, seed
     )
-    corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_en"),
-        vec_norm(F.col(vec_col)).alias("_nn"),
-    )
-    corpus = spread_if_narrow(corpus)
-    cb = with_lsh_buckets(corpus, "_en", n_tables, n_planes, dim, seed)
     cand = (
         qb.join(cb, ["table", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "_eq", "_en", "_nq", "_nn")
         .distinct()
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _safe_ratio(
-                vec_dot(F.col("_eq"), F.col("_en")),
-                F.col("_nq") * F.col("_nn"),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
+    return rank_topk(_score_sides(cand), k)
 
 
 def pca_topk(
@@ -278,11 +300,11 @@ def pca_topk(
     in the reduced space — the per-pair dot cost drops
     dim/n_components× (64→16 = 4×) at a small recall cost.
 
-    Candidate generation is LSH-bucketed **in the reduced space** by
-    default (shallow buckets: few planes, many tables — the generic
-    top-k tuning from :func:`lsh_topk`), so the default path is a
-    bucket equi-join and never Q×N, even if a caller hands the whole
-    corpus as the query set. ``exhaustive=True`` opts into the
+    By default the reduced vectors go to :func:`lsh_topk` with
+    ``dim=n_components`` (shallow buckets: few planes, many tables —
+    the generic top-k tuning), so the default path is a bucket
+    equi-join and never Q×N, even if a caller hands the whole corpus
+    as the query set. ``exhaustive=True`` opts into the
     crossJoin rerank — exact in the reduced space, affordable only for
     explicit bounded query sets.
 
@@ -297,61 +319,29 @@ def pca_topk(
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        array_to_vector(_vec_double(F.col(vec_col))).alias("_f"),
-    )
-    model = PCA(k=n_components, inputCol="_f", outputCol="_p").fit(corpus)
-    red_c = model.transform(corpus).select(
-        "neighbor_id", vector_to_array(F.col("_p")).alias("_en")
-    )
-    red_q = model.transform(
-        queries.select(
-            F.col(id_col).alias("query_id"),
+    def features(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col),
             array_to_vector(_vec_double(F.col(vec_col))).alias("_f"),
         )
-    ).select("query_id", vector_to_array(F.col("_p")).alias("_eq"))
-    # norms ride as per-ROW scalars (the lsh_topk pattern): candidate
-    # pairs outnumber rows by orders of magnitude, so per-pair scoring
-    # must be ONE dot traversal, not dot + two norm aggregates
-    red_q = red_q.withColumn("_nq", vec_norm(F.col("_eq")))
-    red_c = red_c.withColumn("_nn", vec_norm(F.col("_en")))
-    cols = ["query_id", "neighbor_id", "_eq", "_en", "_nq", "_nn"]
-    if exhaustive:
-        cand = (
-            red_q.crossJoin(red_c)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(*cols)
+
+    corpus = features(emb)
+    model = PCA(k=n_components, inputCol="_f", outputCol="_p").fit(corpus)
+
+    def project(df: DataFrame) -> DataFrame:
+        return model.transform(df).select(
+            id_col, vector_to_array(F.col("_p")).alias(vec_col)
         )
-    else:
-        qb = with_lsh_buckets(
-            red_q, "_eq", n_tables, n_planes, n_components, seed
-        )
-        cb = with_lsh_buckets(
-            spread_if_narrow(red_c), "_en", n_tables, n_planes,
+
+    red_c, red_q = project(corpus), project(features(queries))
+    if not exhaustive:
+        return lsh_topk(
+            red_c, red_q, id_col, vec_col, k, n_tables, n_planes,
             n_components, seed,
         )
-        cand = (
-            qb.join(cb, ["table", "bucket"])
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(*cols)
-            .distinct()
-        )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _safe_ratio(
-                vec_dot(F.col("_eq"), F.col("_en")),
-                F.col("_nq") * F.col("_nn"),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
+    q, c = _normed_sides(red_q, red_c, id_col, vec_col)
+    cand = q.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
+    return rank_topk(_score_sides(cand), k)
 
 
 def embedding_near_dup_pairs(
@@ -388,16 +378,11 @@ def embedding_near_dup_pairs(
         )
         .distinct()
     )
-    # per-pair: one dot traversal; norms are per-row scalars from above
     return pairs.select(
         "id_a",
         "id_b",
-        F.round(
-            _safe_ratio(
-                vec_dot(F.col("_ea"), F.col("_eb")),
-                F.col("_na") * F.col("_nb"),
-            ),
-            6,
+        pair_cosine(
+            F.col("_ea"), F.col("_eb"), F.col("_na"), F.col("_nb")
         ).alias("cosine"),
     ).filter(F.col("cosine") >= threshold)
 
@@ -508,18 +493,9 @@ def exact_cosine_threshold_join(
     theta = math.acos(t_num / t_den)
     margin = 2.0 * theta + 1e-9
 
-    qd = F.transform(F.col("_q"), lambda x: x.cast("double"))
     lit_c = F.array(
         *[F.array(*[F.lit(float(v)) for v in c]) for c in cents]
     )
-
-    def _zipdot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     angles = F.transform(
         lit_c,
         lambda c: F.acos(
@@ -527,10 +503,10 @@ def exact_cosine_threshold_join(
                 F.lit(1.0),
                 F.greatest(
                     F.lit(-1.0),
-                    _zipdot(qd, c)
+                    vec_dot(F.col("_q"), c)
                     / (
                         F.sqrt(F.col("_n2").cast("double"))
-                        * F.sqrt(_zipdot(c, c))
+                        * F.sqrt(vec_dot(c, c))
                     ),
                 ),
             )

@@ -3036,8 +3036,7 @@ def q_s03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic orderBy-sample pays an extra pass over the md5-
     # derived fixture expressions. sm01 keeps the swap — there the
     # vocabulary is the only distributed fit and the measurement reads
-    # positive. ivf_topk's centroids= input remains for callers whose
-    # vocabulary is already driver-side.)
+    # positive.)
     model = train_centroids(
         emb, n_centroids=16, init_mode="random"
     )
@@ -3785,24 +3784,24 @@ NORM_SQL = (
 
 def q_v01_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alternating_least_squares_spark.functions.similarity import (
-        vec_dot,
+        pair_cosine,
         vec_norm,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     a = emb.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea")
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("ea"),
+        vec_norm(F.col("embedding")).alias("na"),
     )
     b = emb.select(
         (F.col("vec_id") - 1).alias("id_a"),
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("eb"),
+        vec_norm(F.col("embedding")).alias("nb"),
     )
-    joined = a.join(b, "id_a")
-    cos = vec_dot(F.col("ea"), F.col("eb")) / (
-        vec_norm(F.col("ea")) * vec_norm(F.col("eb"))
-    )
-    return joined.select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
+    cos = pair_cosine(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
+    return a.join(b, "id_a").select("id_a", "id_b", cos.alias("cosine"))
 
 
 SQL_V01 = f"""
@@ -3820,28 +3819,26 @@ def q_v02_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic across engines. The LSH-bucketed variant for scale is
     ``functions/similarity.py`` (rows-only check)."""
     from alternating_least_squares_spark.functions.similarity import (
-        vec_dot,
+        pair_cosine,
+        rank_topk,
         vec_norm,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq")
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("eq"),
+        vec_norm(F.col("embedding")).alias("nq"),
     )
-    n = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("en"))
+    n = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("en"),
+        vec_norm(F.col("embedding")).alias("nn"),
+    )
     pairs = q.crossJoin(n).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = vec_dot(F.col("eq"), F.col("en")) / (
-        vec_norm(F.col("eq")) * vec_norm(F.col("en"))
-    )
-    scored = pairs.select(
-        "query_id", "neighbor_id", F.round(cos, 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
+    cos = pair_cosine(F.col("eq"), F.col("en"), F.col("nq"), F.col("nn"))
+    return rank_topk(
+        pairs.select("query_id", "neighbor_id", cos.alias("cosine")), 5
     )
 
 

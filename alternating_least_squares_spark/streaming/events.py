@@ -538,38 +538,38 @@ def _apply_cdc_batch(
     never marked done. Returns whether it committed."""
     from ..sources import snapshot as SN
 
-    if batch_df.isEmpty() or ledger.applied(batch_id):
+    # one pass over the batch answers every question asked before the
+    # commits: a NULL change_type vanishes from both filters below
+    # (NULL comparisons) and a misspelled type would merge as an upsert
+    # carrying NULL payloads, so either must fail LOUD before anything
+    # commits instead of silently diverging the replica
+    bad_type = F.col("change_type").isNull() | ~F.col("change_type").isin(
+        "insert", "update", "delete"
+    )
+    n_rows, n_bad, bad_sample, n_upserts = batch_df.agg(
+        F.count(F.lit(1)),
+        F.count_if(bad_type),
+        F.first(F.when(bad_type, F.struct("change_type")), ignorenulls=True),
+        F.count_if(F.col("change_type") != "delete"),
+    ).first()
+    if n_rows == 0 or ledger.applied(batch_id):
         return False
     table_path = ledger.table_path
     versions = SN._list_versions(table_path)
     if not versions:
         raise FileNotFoundError(f"no snapshot table at {table_path}")
     key = SN._read_manifest(table_path, versions[-1])["key"]
-    # fail LOUD on unclassifiable rows before anything commits: a NULL
-    # change_type vanishes from both filters below (NULL comparisons)
-    # and a misspelled type would merge as an upsert carrying NULL
-    # payloads — both silently diverge the replica. The probe is
-    # O(batch) and short-circuits at the first bad row.
-    bad = (
-        batch_df.filter(
-            F.col("change_type").isNull()
-            | ~F.col("change_type").isin("insert", "update", "delete")
-        )
-        .select("change_type")
-        .limit(1)
-        .collect()
-    )
-    if bad:
+    if n_bad:
         raise ValueError(
             f"cdc apply: unclassifiable change_type "
-            f"{bad[0]['change_type']!r} in batch {batch_id} (expected "
+            f"{bad_sample['change_type']!r} in batch {batch_id} (expected "
             "insert/update/delete)"
         )
     upserts = batch_df.filter(F.col("change_type") != "delete").drop(
         "change_type"
     )
     deletes = batch_df.filter(F.col("change_type") == "delete").select(key)
-    if not upserts.isEmpty():
+    if n_upserts:
         SN.merge_upsert(upserts, table_path)
     SN.delete_keys_dv(table_path, deletes, extra=ledger.stamp(batch_id))
     ledger.record(batch_id)

@@ -5,7 +5,9 @@ Production computes MinHash band signatures in NumPy behind
 cosines in NumPy behind ``applyInPandas``
 (``semdedup._pandas_cluster_pairs``). The spellings here compute the
 same values with plain Spark expressions and joins; the parity tests
-require the production paths to match them bit for bit.
+require the production paths to match them bit for bit. :func:`cosine`
+is the per-pair spelling of ``similarity.pair_cosine`` (norms taken
+per pair, not rounded) that the exact-ranking tests score with.
 """
 
 from __future__ import annotations
@@ -118,6 +120,11 @@ def string_jaccard(
             F.round(jaccard(F.col("_v_a"), F.col("_v_b")), 6).alias("jaccard"),
         )
     )
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine of two vector columns, NULL when a norm is 0."""
+    return _safe_ratio(vec_dot(a, b), vec_norm(a) * vec_norm(b))
 
 
 def semantic_dup_pairs(

@@ -69,7 +69,7 @@ def test_ivf_pq_scores_exact_and_recall_floor(spark):
         emb, queries, k=5, n_centroids=16, n_probe=8, m=4, k_sub=16, rerank=96
     )
 
-    from alternating_least_squares_spark.functions.similarity import cosine
+    from tests.pair_references import cosine
 
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))

@@ -4,15 +4,18 @@ cosine — and (b) reach a sane recall of the true top-1 on testdata."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from alternating_least_squares_spark.functions.ivf import ivf_topk
+from alternating_least_squares_spark.functions.pq import ivf_pq_topk
 from alternating_least_squares_spark.functions.similarity import (
-    cosine,
     lsh_topk,
+    pca_topk,
 )
 from alternating_least_squares_spark.sources import load_table
 from tests.conftest import SF_SMALL
+from tests.pair_references import cosine
 
 
 def _exact_top1(spark, emb, queries):
@@ -114,7 +117,6 @@ def test_mllib_euclidean_matches_cosine_near_dups(spark):
     from alternating_least_squares_spark.functions.mllib_lsh import (
         mllib_euclidean_neighbors,
     )
-    from alternating_least_squares_spark.functions.similarity import cosine
     from alternating_least_squares_spark.sources import load_table
     from pyspark.sql import functions as F2
 
@@ -247,20 +249,102 @@ def test_zero_norm_vectors_score_null_not_crash(spark):
     from pyspark.sql import functions as F
 
     from alternating_least_squares_spark.functions.similarity import (
-        cosine,
-        lsh_topk,
+        pair_cosine,
+        vec_norm,
     )
 
     rows = [(1, [0.0] * 64), (2, [1.0] * 64), (3, [0.5] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = lsh_topk(df, df.filter("vec_id = 2"), k=2)
     assert got.count() >= 1  # no SparkArithmeticException
+    a, b = F.lit([0.0] * 3), F.lit([1.0, 2.0, 3.0])
     assert (
         df.select(
-            cosine(F.lit([0.0] * 3), F.lit([1.0, 2.0, 3.0])).alias("c")
+            pair_cosine(a, b, vec_norm(a), vec_norm(b)).alias("c")
         ).first()["c"]
         is None
     )
+
+
+# Planted fixture of the scoring contract. Query 0 is V; 2, 5 and 9
+# are V scaled (each cosine rounds to 1.0, a tie broken by
+# neighbor_id), 1 is V + W (W alternates ±2) at a lower cosine, and 4
+# is the zero vector (cosine NULL). One plane per LSH table puts every
+# scaled copy in V's bucket of every table and the zero vector (all
+# projections 0, so all bits 1) in V's bucket wherever V projects
+# >= 0; 16 tables make that some table.
+_V = [1.0 + d % 3 for d in range(64)]
+_NEAR = [x + 2.0 * (-1) ** d for d, x in enumerate(_V)]
+_PLANTED = [
+    (9, [0.5 * x for x in _V]),
+    (4, [0.0] * 64),
+    (0, _V),
+    (5, [3.0 * x for x in _V]),
+    (1, _NEAR),
+    (2, [2.0 * x for x in _V]),
+]
+_ONE_PLANE = {"n_tables": 16, "n_planes": 1}
+_PLANTED_TOPK = {
+    "lsh_topk": lambda e, q: lsh_topk(e, q, k=5, **_ONE_PLANE),
+    # V and W span the corpus, so 2 components keep every cosine
+    "pca_topk": lambda e, q: pca_topk(
+        e, q, k=5, n_components=2, **_ONE_PLANE
+    ),
+    "pca_topk_exhaustive": lambda e, q: pca_topk(
+        e, q, k=5, n_components=2, exhaustive=True
+    ),
+    # every list probed: the candidates are the whole corpus
+    "ivf_topk": lambda e, q: ivf_topk(e, q, k=5, n_centroids=2, n_probe=2),
+    "ivf_pq_topk": lambda e, q: ivf_pq_topk(
+        e, q, k=5, n_centroids=2, n_probe=2, rerank=8
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_PLANTED_TOPK))
+def test_topk_scoring_contract_ties_and_zero_vector(spark, name):
+    """Every top-k search ranks by (rounded cosine desc, neighbor_id
+    asc) and scores a zero vector NULL, ranked last, without an ANSI
+    divide error."""
+    import math
+
+    emb = spark.createDataFrame(
+        _PLANTED, "vec_id long, embedding array<double>"
+    )
+    got = _PLANTED_TOPK[name](emb, emb.filter("vec_id = 0")).collect()
+    ranked = sorted((r["rank"], r["neighbor_id"], r["cosine"]) for r in got)
+    dot = sum(x * y for x, y in zip(_V, _NEAR))
+    near = dot / math.hypot(*_V) / math.hypot(*_NEAR)
+    assert [(rk, nid) for rk, nid, _ in ranked] == [
+        (1, 2), (2, 5), (3, 9), (4, 1), (5, 4)
+    ]
+    assert [c for _, _, c in ranked[:3]] == [1.0, 1.0, 1.0]
+    assert abs(ranked[3][2] - near) < 2e-6 and near < 0.95
+    assert ranked[4][2] is None
+
+
+def test_near_dup_pairs_scoring_contract_ties_and_zero_vector(spark):
+    """embedding_near_dup_pairs scores with the same contract: the
+    scaled copies pair at cosine 1.0, and the zero vector, a candidate
+    of V under the same buckets as the lsh_topk case above, scores
+    NULL and fails the threshold instead of raising."""
+    from alternating_least_squares_spark.functions.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    emb = spark.createDataFrame(
+        _PLANTED, "vec_id long, embedding array<double>"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in embedding_near_dup_pairs(
+            emb, threshold=0.95, **_ONE_PLANE
+        ).collect()
+    }
+    copies = [0, 2, 5, 9]
+    assert got == {
+        (a, b): 1.0 for i, a in enumerate(copies) for b in copies[i + 1:]
+    }
 
 
 def test_binary_hamming_topk_matches_python_reference(spark):

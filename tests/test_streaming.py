@@ -1372,7 +1372,9 @@ def test_cdc_batch_rejects_unclassifiable_change_type(spark, tmp_path):
             [(1, "update", 11), (2, bad_type, 22)],
             "k long, change_type string, v long",
         )
-        with pytest.raises(ValueError, match="unclassifiable change_type"):
+        with pytest.raises(
+            ValueError, match=f"unclassifiable change_type {bad_type!r} "
+        ):
             _apply_cdc_batch(batch, 0, fresh_ledger(path, "cdc", "feedA"))
     assert SN._list_versions(path) == [0]  # nothing committed
 
@@ -1489,6 +1491,35 @@ def test_foreach_batch_runs_only_in_the_runner():
     assert sites == [("streaming/events.py", "run_available_now")]
 
 
+def test_pair_scoring_lives_only_in_similarity():
+    """Every vector search scores pairs through
+    ``similarity.pair_cosine``: no other package module calls
+    ``vec_dot``, and no per-pair-norm ``cosine`` is defined."""
+    import ast
+    import pathlib
+
+    import alternating_least_squares_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    dot_calls, cosine_defs = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if name == "vec_dot" and rel != "functions/similarity.py":
+                    dot_calls.append((rel, node.lineno))
+            elif (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name == "cosine"
+            ):
+                cosine_defs.append((rel, node.lineno))
+    assert dot_calls == [] and cosine_defs == []
+
+
 # Spark jobs each streaming query starts at SF_SMALL, its result's
 # collect included.
 STREAM_QUERY_JOBS = {
@@ -1499,7 +1530,7 @@ STREAM_QUERY_JOBS = {
     "st13_stream_budget_admission": 14,
     "st14_stream_weighted_sample": 15,
     "st17_streaming_erasure": 40,
-    "st18_streaming_cdc_apply": 90,
+    "st18_streaming_cdc_apply": 87,
     "st19_streaming_fold_policy": 60,
 }
 
