@@ -126,6 +126,9 @@ def ivf_topk(
     probes = probe_lists_lit(
         queries, cents, id_col, vec_col, n_probe
     ).withColumn("_nq", vec_norm(F.col("_q")))
+    # (query_id, neighbor_id) pairs are unique when vec_id is: each
+    # corpus vector lives in ONE list and each (query, list) is probed
+    # once, so no dedup (as in pq.ivf_pq_topk)
     cand = probes.join(corpus, "list_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -135,5 +138,5 @@ def ivf_topk(
         pair_cosine(
             F.col("_q"), F.col("_e"), F.col("_nq"), F.col("_nn")
         ).alias("cosine"),
-    ).distinct()
+    )
     return rank_topk(scored, k)

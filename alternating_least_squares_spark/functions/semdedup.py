@@ -29,7 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from alternating_least_squares_spark.functions.similarity import vec_norm
+from alternating_least_squares_spark.functions.similarity import (
+    np_pair_cosine,
+    seq_dot,
+    vec_norm,
+)
 from alternating_least_squares_spark.session import ship_package
 
 
@@ -75,14 +79,13 @@ def _pandas_cluster_pairs(
 
     The cosines are bit-identical to the Spark spelling every other
     vector search scores with, ``similarity.pair_cosine(v_a, v_b, n_a,
-    n_b)``: the dot accumulates over k in ascending order as
-    ``acc = acc + (a_k · b_k)`` with one rounding per multiply and per
-    add (the fold order of ``vec_dot``'s ``aggregate(zip_with(...))``),
-    the denominator is the same single ``n_a · n_b`` multiply, and
-    rounding is Spark's ``round(x, 6)``:
-    HALF_UP (away from zero) on the decimal of ``Double.toString(x)``.
-    Zero-norm and NULL vectors emit no pairs; rows with a NULL
-    cluster are dropped; a duplicated ``_id`` never pairs with
+    n_b)``: they come from the package's one NumPy spelling of it,
+    ``similarity.seq_dot`` (the dot folded over k ascending, as
+    ``vec_dot`` folds it) and ``similarity.np_pair_cosine`` (one
+    ``n_a · n_b`` multiply, then Spark's ``round(x, 6)`` as
+    ``similarity.round6``), which the LSH searches' driver path also
+    scores with. Zero-norm and NULL vectors emit no pairs; rows with a
+    NULL cluster are dropped; a duplicated ``_id`` never pairs with
     itself. ``tests/pair_references.py`` holds the self-join spelling
     the parity tests compare against.
 
@@ -91,24 +94,6 @@ def _pandas_cluster_pairs(
     (block × |cluster|) score matrix, never |cluster|² at once."""
     import numpy as np
     import pandas as pd
-
-    def round6(x: "np.ndarray") -> "np.ndarray":
-        # sign·⌊|x|·1e6 + 0.5⌋/1e6 agrees with Spark except within a
-        # few ulps of a .5 boundary, where the binary product can land
-        # on the wrong side (0.0005045·1e6 = 504.49999999999994);
-        # re-round those from the shortest repr, the string Spark's
-        # BigDecimal.valueOf reads
-        from decimal import ROUND_HALF_UP, Decimal
-
-        s = np.abs(x) * 1e6
-        out = np.sign(x) * np.floor(s + 0.5) / 1e6
-        for i in np.flatnonzero(np.abs(s - np.floor(s) - 0.5) < 1e-6):
-            out.flat[i] = float(
-                Decimal(repr(float(x.flat[i]))).quantize(
-                    Decimal("1e-6"), ROUND_HALF_UP
-                )
-            )
-        return out
 
     def pairs_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         # NULL vectors can never pair (their cosine is NULL); drop
@@ -125,24 +110,19 @@ def _pandas_cluster_pairs(
                 }
             )
         ids = pdf["_id"].to_numpy(dtype=np.int64)
-        V = np.stack(pdf["_v"].to_numpy())
+        VT = np.ascontiguousarray(np.stack(pdf["_v"].to_numpy()).T)
         norms = pdf["_n"].to_numpy(dtype=np.float64)
         cluster = np.int32(pdf["cluster"].iloc[0])
-        dim = V.shape[1]
         out_a, out_b, out_c = [], [], []
         block = max(1, (1 << 22) // m)
         for i0 in range(0, m, block):
             i1 = min(m, i0 + block)
-            # sequential-k accumulation == vec_dot's fold order: one
-            # rounded multiply + one rounded add per element, k asc.
-            C = np.zeros((i1 - i0, m))
-            for k in range(dim):
-                C += V[i0:i1, k, None] * V[None, :, k]
-            denom = norms[i0:i1, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = C / denom
-            cos = round6(cos)
-            ok = (denom != 0) & (cos >= threshold)
+            cos, ok = np_pair_cosine(
+                seq_dot(VT[:, i0:i1, None], VT[:, None, :]),
+                norms[i0:i1, None],
+                norms[None, :],
+            )
+            ok &= cos >= threshold
             # unordered index pairs only (j > global i), and never a
             # duplicated id with itself
             cols = np.arange(m)[None, :]
@@ -242,11 +222,22 @@ def semantic_dedup(
 ) -> DataFrame:
     """Keep-one semantic dedup: drop every row that semantically
     duplicates (cosine ≥ threshold, same cluster) a lower-id row.
-    Returns the kept rows with all original columns. One anti-join on
-    the pair set — same survivor convention as dedup.keep_one_filter.
-    """
+    Returns the kept rows with all original columns: the rows whose id
+    is no pair's ``id_b`` — same survivor convention as
+    dedup.keep_one_filter.
+
+    The filter is a left join on the distinct losers plus an IS NULL
+    test, not a ``left_anti`` join: the optimizer pushes an anti join
+    into each branch of a union input (sm01's corpus plus its planted
+    copies), and each branch then scored the pairs again."""
     pairs = semantic_dup_pairs(
         emb, id_col, vec_col, n_centroids, threshold, seed, centroids
     )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return emb.join(losers, id_col, "left_anti")
+    losers = pairs.select(
+        F.col("id_b").alias(id_col), F.lit(True).alias("_loser")
+    ).distinct()
+    return (
+        emb.join(losers, id_col, "left")
+        .filter(F.col("_loser").isNull())
+        .drop("_loser")
+    )

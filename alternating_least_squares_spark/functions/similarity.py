@@ -2,11 +2,13 @@
 
 One scoring contract serves every vector search in the package
 (LSH and PCA top-k here, :mod:`.ivf`, :mod:`.pq`, the v-family
-registry queries): a candidate pair scores :func:`pair_cosine`, the
-exact cosine from the two vectors and their per-row norms, rounded to
-6 decimals and NULL when a norm is 0; a top-k search keeps
-:func:`rank_topk`'s rows, ranked by (cosine desc, neighbor_id asc).
-The searches differ only in how they generate candidate pairs.
+registry queries, :mod:`.semdedup`): a candidate pair scores
+:func:`pair_cosine`, the exact cosine from the two vectors and their
+per-row norms, rounded to 6 decimals and NULL when a norm is 0; a
+top-k search keeps :func:`rank_topk`'s rows, ranked by (cosine desc,
+neighbor_id asc). The searches differ only in how they generate
+candidate pairs. :func:`seq_dot` and :func:`round6` spell the same
+arithmetic in NumPy, bit for bit.
 
 The candidate generator here is **random-hyperplane LSH** (the 100 TB
 path, Charikar 2002 / Indyk–Motwani 1998): T hash tables × p planes; a
@@ -14,18 +16,36 @@ vector's bucket in a table is the sign pattern of its projections onto
 that table's planes. Neighbors collide in ≥1 table with probability
 1 − (1 − (1 − θ/π)^p)^T. The planes are DETERMINISTIC literals
 (seeded ±1 Rademacher components derived from md5 in Python at plan
-build time), so results are reproducible and the whole pipeline
-stays in JVM codegen — no Python UDFs, no randomness at runtime.
-The candidate join is an equi-join on (table, bucket) — never an
-all-pairs crossJoin of the corpus.
+build time), so results are reproducible with no randomness at
+runtime. The candidate join is an equi-join on (table, bucket) —
+never an all-pairs crossJoin of the corpus.
+
+:func:`lsh_topk` and :func:`embedding_near_dup_pairs` run on one of
+two paths with the same rows:
+
+* **driver**, when the input holds at most :data:`MAX_DRIVER_VECTORS`
+  vectors with integer ids and at most :data:`MAX_DRIVER_PAIRS`
+  bucket collisions: one bounded Arrow collect, then projections,
+  buckets, candidate pairs, scores and the rank or threshold in NumPy
+  (:func:`_lsh_search_driver`); the result is an Arrow-built frame.
+  A small search's Spark plan spends its time in planning, codegen
+  and scheduling, not in compute.
+* **Spark**, otherwise: two narrow bucket passes in JVM codegen (no
+  Python UDFs), the (table, bucket) equi-join, :func:`pair_cosine`
+  and :func:`rank_topk` or the threshold filter.
 """
 
 from __future__ import annotations
 
 import hashlib
+from decimal import ROUND_HALF_UP, Decimal
+from functools import reduce
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from alternating_least_squares_spark.functions.width import spread_if_narrow
 
@@ -75,6 +95,304 @@ def rank_topk(scored: DataFrame, k: int) -> DataFrame:
     return scored.withColumn(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
+
+
+def seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``Σ_k a[k]·b[k]`` over the FIRST axis, folded in ascending k as
+    ``acc + a_k·b_k`` with one rounding per multiply and per add: the
+    fold order of :func:`vec_dot`'s ``aggregate(zip_with(...))``, so
+    the doubles are Spark's. ``a[k]`` and ``b[k]`` broadcast, so
+    ``(d, n)`` against ``(d, n)`` gives n pair dots and ``(d, m, 1)``
+    against ``(d, 1, n)`` an m × n block."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for k in range(a.shape[0]):
+        acc += a[k] * b[k]
+    return acc
+
+
+def round6(x: np.ndarray) -> np.ndarray:
+    """Spark's ``round(x, 6)`` on doubles: HALF_UP (away from zero) on
+    the decimal of ``Double.toString(x)``, NaN and ±inf unchanged, and
+    never a negative zero.
+
+    sign·⌊|x|·1e6 + 0.5⌋/1e6 agrees with Spark except within a few ulps
+    of a .5 boundary, where the binary product can land on the wrong
+    side (0.0005045·1e6 = 504.49999999999994); those are re-rounded
+    from the shortest repr, the string Spark's BigDecimal reads."""
+    x = np.asarray(x, dtype=np.float64)
+    s = np.abs(x) * 1e6
+    with np.errstate(invalid="ignore"):
+        out = np.sign(x) * np.floor(s + 0.5) / 1e6 + 0.0
+        ties = np.flatnonzero(np.abs(s - np.floor(s) - 0.5) < 1e-6)
+    for i in ties:
+        out.flat[i] = float(
+            Decimal(repr(float(x.flat[i]))).quantize(
+                Decimal("1e-6"), ROUND_HALF_UP
+            )
+        )
+    return out
+
+
+def np_pair_cosine(
+    dot: np.ndarray, na: np.ndarray, nb: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`pair_cosine` from :func:`seq_dot` dots and per-row norms:
+    ``(cosine, defined)``, where ``defined`` is false where Spark's
+    cosine is NULL (a zero norm product)."""
+    den = na * nb
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return round6(dot / den), den != 0
+
+
+# Largest number of vectors (query rows plus corpus rows) whose LSH
+# search runs on the driver. This is a driver-memory bound, not a speed
+# crossover. lsh_topk with 20 queries against a random corpus of dim 64
+# (4 vCPUs, `local[4]`, a 1 GB driver heap, the default 4 tables x 3
+# planes; CPU seconds of the driver process plus the JVM, least of 3
+# runs, collect included; peak RSS of each process, Python's above the
+# idle session's 139 MB):
+#     vectors   driver CPU   Spark CPU   Python RSS   JVM RSS, driver / Spark
+#     1k        1.0          3.3         +16 MB       501 / 745 MB
+#     10k       1.5          6.5         +90 MB       642 / 1,085 MB
+#     100k      3.0          31.4        +223 MB      1,150 / 1,551 MB
+#     200k      5.1          60.4        +373 MB      1,647 / 1,632 MB
+#     400k      out of heap  not run     -            -
+#     1M        out of heap  395, 1 run  -            - / 1,905 MB
+# The collect ends in one task that returns every vector as one result,
+# so at 400k the 1 GB heap ran out; the gate sits 4x below that. s01,
+# s02 and s05 hold about 500 vectors at every testdata scale.
+MAX_DRIVER_VECTORS = 100_000
+
+# Largest number of (table, bucket) collisions, before deduplication,
+# that the driver path scores: each costs ~60 bytes of index and score
+# arrays. More collisions (a corpus-sized query set against shallow
+# buckets) send the search to Spark after the collect.
+MAX_DRIVER_PAIRS = 4_000_000
+
+# Pairs per scoring block on the driver: two (dim x block) gathers.
+_PAIR_BLOCK = 1 << 16
+
+
+def _collect_vectors(
+    sides: list[DataFrame], id_col: str, vec_col: str, dim: int
+) -> pa.Table | None:
+    """``(_side, _id, _v)`` of every row of ``sides`` (tagged 0, 1, …)
+    in one bounded Arrow collect, the vectors cast to double element by
+    element as :func:`_vec_double` casts them. The gate holds
+    ``MAX_DRIVER_VECTORS`` vectors of 64 components; ``dim``-wide ones
+    count ``dim / 64`` each. None when an id is not an integer or the
+    rows exceed the gate."""
+    if not all(
+        isinstance(df.schema[id_col].dataType, T.IntegralType)
+        for df in sides
+    ):
+        return None
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(
+                F.lit(i).alias("_side"),
+                F.col(id_col).cast("long").alias("_id"),
+                F.col(vec_col).cast("array<double>").alias("_v"),
+            )
+            for i, df in enumerate(sides)
+        ],
+    )
+    gate = MAX_DRIVER_VECTORS * 64 // max(dim, 64)
+    t = tagged.limit(gate + 1).toArrow()
+    return t if t.num_rows <= gate else None
+
+
+def _vector_matrix(
+    v: pa.ChunkedArray, width: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """``(X, lengths, vnull, enull)`` of a ``list<double>`` column:
+    ``X`` is (max(width, longest), n), vector i zero-padded down column
+    i with NULL elements read as 0; ``vnull`` marks a NULL vector and
+    ``enull`` a vector holding a NULL element."""
+    arr = v.combine_chunks()
+    n = len(arr)
+    vnull = arr.is_null().to_numpy(zero_copy_only=False)
+    lengths = arr.value_lengths().fill_null(0).to_numpy().astype(np.int64)
+    flat = arr.flatten()
+    enull = np.zeros(n, dtype=bool)
+    if flat.null_count:
+        np.logical_or.at(
+            enull,
+            np.repeat(np.arange(n), lengths),
+            flat.is_null().to_numpy(zero_copy_only=False),
+        )
+        flat = flat.fill_null(0.0)
+    X = np.zeros((max(width, int(lengths.max(initial=0))), n))
+    # a boolean mask fills in row-major order of the (n, width) view,
+    # the order of the flattened lists
+    X.T[np.arange(X.shape[0]) < lengths[:, None]] = flat.to_numpy()
+    return X, lengths, vnull, enull
+
+
+def _lsh_buckets_np(
+    X: np.ndarray,
+    vnull: np.ndarray,
+    n_tables: int,
+    n_planes: int,
+    dim: int,
+    seed: int,
+) -> np.ndarray:
+    """(n, n_tables) buckets of :func:`with_lsh_buckets` for the
+    columns of :func:`_vector_matrix`'s ``X``: projections folded over
+    d ascending as ``acc + (±x_d)``, then ``acc*2 + (proj >= 0)`` per
+    plane, with Spark's NaN ≥ 0. Up to 64 dims only the first ``dim``
+    components project (a NULL vector projects 0, all bits 1); past 64
+    the literal-plane path zero-pads the shorter of plane and vector
+    (a NULL vector projects NULL, all bits 0)."""
+    planes = np.array(rademacher_planes(n_tables, n_planes, dim, seed))
+    S = planes.reshape(n_tables * n_planes, dim)
+    if dim <= 64:
+        X = X[:dim]
+    else:
+        S = np.pad(S, ((0, 0), (0, X.shape[0] - dim)))
+    proj = seq_dot(X[:, None, :], S.T[:, :, None])
+    bits = (proj >= 0) | np.isnan(proj)
+    if dim > 64:
+        bits[:, vnull] = False
+    buckets = np.zeros((n_tables, X.shape[1]), dtype=np.int64)
+    for p in range(n_planes):
+        buckets = buckets * 2 + bits[p::n_planes]
+    return buckets.T
+
+
+def _bucket_pairs(
+    qb: np.ndarray, cb: np.ndarray
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Distinct (query row, corpus row) index pairs that share a bucket
+    in some table; None past :data:`MAX_DRIVER_PAIRS` collisions."""
+    per_table = []
+    total = 0
+    for t in range(qb.shape[1]):
+        order = np.argsort(cb[:, t], kind="stable")
+        sorted_cb = cb[order, t]
+        lo = np.searchsorted(sorted_cb, qb[:, t], "left")
+        cnt = np.searchsorted(sorted_cb, qb[:, t], "right") - lo
+        total += int(cnt.sum())
+        if total > MAX_DRIVER_PAIRS:
+            return None
+        qi = np.repeat(np.arange(len(qb)), cnt)
+        offs = np.arange(len(qi)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        per_table.append(qi * len(cb) + order[np.repeat(lo, cnt) + offs])
+    key = np.unique(np.concatenate(per_table, dtype=np.int64))
+    return key // max(len(cb), 1), key % max(len(cb), 1)
+
+
+def _distinct_rows(
+    rows: np.ndarray, ids: np.ndarray, vectors: pa.ChunkedArray
+) -> np.ndarray:
+    """``rows`` less repeats of an equal (id, vector) row, as the Spark
+    path's ``.distinct()`` over the candidate pairs collapses them:
+    NULLs group together, as do NaNs and ±0.0. Only rows whose id
+    repeats are compared."""
+    ids_r = ids[rows]
+    uniq, counts = np.unique(ids_r, return_counts=True)
+    dup = np.isin(ids_r, uniq[counts > 1])
+    if not dup.any():
+        return rows
+
+    def element(x: float | None) -> object:
+        return x if x is None else "NaN" if x != x else x + 0.0
+
+    seen, keep = set(), np.ones(len(rows), dtype=bool)
+    for i in np.flatnonzero(dup):
+        v = vectors[int(rows[i])].as_py()
+        key = (int(ids_r[i]), v if v is None else tuple(map(element, v)))
+        keep[i] = key not in seen
+        seen.add(key)
+    return rows[keep]
+
+
+def _lsh_search_driver(
+    t: pa.Table,
+    k: int | None,
+    threshold: float | None,
+    n_tables: int,
+    n_planes: int,
+    dim: int,
+    seed: int,
+) -> pa.Table | None:
+    """The driver path of :func:`lsh_topk` (``k``: rows tagged 0 are
+    queries, 1 the corpus) and of :func:`embedding_near_dup_pairs`
+    (``threshold``: one side, paired with itself, ``id_a < id_b``), on
+    :func:`_collect_vectors`' table. Each step keeps the Spark path's
+    order of operations, so the cosines are the same doubles: the
+    (table, bucket) candidates, deduplicated per distinct (id, vector)
+    row; :func:`seq_dot` and :func:`np_pair_cosine`, NULL where either
+    vector is NULL, holds a NULL element or the lengths differ (Spark's
+    zip_with pads with NULL); then ``rank_topk``'s order (cosine desc,
+    NaN first as Spark orders it, NULL last, then neighbor_id) or
+    ``cosine >= threshold`` (NaN passes, NULL fails). Returns the
+    result's columns, or None past :data:`MAX_DRIVER_PAIRS`."""
+    side = t["_side"].to_numpy()
+    id_null = t["_id"].is_null().to_numpy(zero_copy_only=False)
+    ids = t["_id"].fill_null(0).to_numpy()
+    X, lengths, vnull, enull = _vector_matrix(t["_v"], dim)
+    buckets = _lsh_buckets_np(X, vnull, n_tables, n_planes, dim, seed)
+
+    # a NULL id fails both the != and the < pair filter
+    def side_rows(tag: int) -> np.ndarray:
+        return _distinct_rows(
+            np.flatnonzero((side == tag) & ~id_null), ids, t["_v"]
+        )
+
+    q = side_rows(0)
+    c = q if threshold is not None else side_rows(1)
+    pairs = _bucket_pairs(buckets[q], buckets[c])
+    if pairs is None:
+        return None
+    a, b = q[pairs[0]], c[pairs[1]]
+    keep = ids[a] < ids[b] if threshold is not None else ids[a] != ids[b]
+    a, b = a[keep], b[keep]
+    norms = np.sqrt(seq_dot(X, X))
+    cos = np.empty(len(a))
+    defined = np.empty(len(a), dtype=bool)
+    for i in range(0, len(a), _PAIR_BLOCK):
+        ab, bb = a[i : i + _PAIR_BLOCK], b[i : i + _PAIR_BLOCK]
+        # np.take keeps each gathered component row contiguous
+        cos[i : i + len(ab)], defined[i : i + len(ab)] = np_pair_cosine(
+            seq_dot(np.take(X, ab, axis=1), np.take(X, bb, axis=1)),
+            norms[ab],
+            norms[bb],
+        )
+    bad = vnull | enull
+    defined &= ~bad[a] & ~bad[b] & (lengths[a] == lengths[b])
+    if threshold is not None:
+        keep = defined & ((cos >= threshold) | np.isnan(cos))
+        return pa.table(
+            {"id_a": ids[a[keep]], "id_b": ids[b[keep]], "cosine": cos[keep]}
+        )
+    # class 0 = NaN (Spark's largest double), 1 = a number, 2 = NULL
+    cls = np.where(~defined, 2, np.where(np.isnan(cos), 0, 1))
+    order = np.lexsort(
+        (ids[b], np.where(cls == 1, -cos, 0.0), cls, ids[a])
+    )
+    qid = ids[a[order]]
+    start = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    rank = np.arange(len(qid)) + 1 - np.repeat(
+        start, np.diff(np.r_[start, len(qid)])
+    )
+    top = order[rank <= k]
+    return pa.table(
+        {
+            "query_id": ids[a[top]],
+            "neighbor_id": ids[b[top]],
+            "cosine": pa.array(cos[top], mask=~defined[top]),
+            "rank": rank[rank <= k],
+        }
+    )
+
+
+def _id_field(name: str, df: DataFrame, id_col: str) -> T.StructField:
+    """``df``'s ``id_col`` field as ``name``, with the type and
+    nullability the Spark path's join gives it."""
+    f = df.schema[id_col]
+    return T.StructField(name, f.dataType, f.nullable)
 
 
 def _normed_sides(
@@ -268,7 +586,25 @@ def lsh_topk(
     DEEP buckets (more planes) only when hunting near-duplicates —
     that is what :func:`embedding_near_dup_pairs` uses. Measured on
     the sf0.001 testdata (weakly-similar random-ish vectors):
-    recall@1 = 9/10 at p=2/t=6, 7/10 at p=3/t=4, 1/10 at p=6/t=3."""
+    recall@1 = 9/10 at p=2/t=6, 7/10 at p=3/t=4, 1/10 at p=6/t=3.
+
+    A small search runs on the driver (module docstring) with the same
+    rows."""
+    t = _collect_vectors([queries, emb], id_col, vec_col, dim)
+    if t is not None:
+        out = _lsh_search_driver(t, k, None, n_tables, n_planes, dim, seed)
+        if out is not None:
+            return emb.sparkSession.createDataFrame(
+                out,
+                T.StructType(
+                    [
+                        _id_field("query_id", queries, id_col),
+                        _id_field("neighbor_id", emb, id_col),
+                        T.StructField("cosine", T.DoubleType()),
+                        T.StructField("rank", T.LongType(), False),
+                    ]
+                ),
+            )
     q, corpus = _normed_sides(queries, emb, id_col, vec_col)
     qb = with_lsh_buckets(q, "_eq", n_tables, n_planes, dim, seed)
     cb = with_lsh_buckets(
@@ -356,7 +692,24 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup detection: LSH bucket collisions →
     exact cosine ≥ threshold, id_a < id_b. Same scalable join shape as
-    the MinHash text dedup."""
+    the MinHash text dedup. A small input runs on the driver (module
+    docstring) with the same rows."""
+    t = _collect_vectors([emb], id_col, vec_col, dim)
+    if t is not None:
+        out = _lsh_search_driver(
+            t, None, threshold, n_tables, n_planes, dim, seed
+        )
+        if out is not None:
+            return emb.sparkSession.createDataFrame(
+                out,
+                T.StructType(
+                    [
+                        _id_field("id_a", emb, id_col),
+                        _id_field("id_b", emb, id_col),
+                        T.StructField("cosine", T.DoubleType()),
+                    ]
+                ),
+            )
     base = emb.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_e"),

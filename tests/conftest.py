@@ -42,6 +42,31 @@ def hash_min_paths(monkeypatch):
     yield "distributed"
 
 
+def lsh_paths(monkeypatch):
+    """Yield each path of ``similarity.lsh_topk`` and
+    ``embedding_near_dup_pairs`` in turn: the driver path (the default
+    for an input under ``MAX_DRIVER_VECTORS``) and then the Spark one,
+    forced by a zero vector gate. Fails if a search of the first pass
+    did not run on the driver, or one of the second pass did."""
+    from alternating_least_squares_spark.functions import similarity
+
+    ran = []
+    kernel = similarity._lsh_search_driver
+
+    def counted(*args):
+        out = kernel(*args)
+        ran.append(out is not None)
+        return out
+
+    monkeypatch.setattr(similarity, "_lsh_search_driver", counted)
+    yield "driver"
+    assert ran and all(ran), "a search left the driver path"
+    ran.clear()
+    monkeypatch.setattr(similarity, "MAX_DRIVER_VECTORS", 0)
+    yield "spark"
+    assert not ran, "a search ran on the driver under a zero gate"
+
+
 @pytest.fixture
 def make_matrix(spark):
     """Nested-list literal → COO DataFrame (r, c, v), like the

@@ -627,24 +627,50 @@ def test_dedup_components_distributed_runs_no_count_jobs(spark, monkeypatch):
     assert jobs == 5 + 5 * 5
 
 
+def _query_jobs(spark, name: str) -> int:
+    """Spark jobs the registry query ``name`` starts at SF_SMALL, its
+    result's collect included."""
+    from alternating_least_squares_spark.registry import queries
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    group = f"jobs-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = queries()[name](spark, SF_SMALL).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_d11_job_count(spark):
     """d11 at SF_SMALL runs its hash-min rounds on the driver, so its
     jobs no longer grow with the rounds: 11 (25 when every round ran
     as Spark jobs)."""
-    from alternating_least_squares_spark.registry import (
-        q_d11_neardup_keep_one,
-    )
-    from tests.conftest import SF_SMALL
+    assert _query_jobs(spark, "d11_neardup_keep_one") == 11
 
-    sc = spark.sparkContext
-    group = "test_d11_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        rows = q_d11_neardup_keep_one(spark, SF_SMALL).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+
+def test_s01_job_count(spark):
+    """s01's 520 vectors are under ``similarity.MAX_DRIVER_VECTORS``:
+    one Arrow collect, and the result is an Arrow-built frame whose
+    collect starts no job (5 jobs on the Spark path). It sets no
+    session conf."""
+    conf = dict(spark.conf.getAll)
+    assert _query_jobs(spark, "s01_lsh_topk") == 1
+    assert dict(spark.conf.getAll) == conf
+
+
+def test_s03_job_count(spark):
+    """s03 scores each probed pair once, with no dedup aggregate over
+    the scored rows (11 jobs with it)."""
+    assert _query_jobs(spark, "s03_ivf_topk") == 10
+
+
+def test_sm01_job_count(spark):
+    """sm01 scores its pairs in one pandas pass (see
+    ``test_semdedup.test_semantic_dedup_scores_pairs_once``): 5 jobs."""
+    assert _query_jobs(spark, "sm01_semantic_dedup") == 5
 
 
 def test_d15_collapse_matches_brute_force_at_sf0001(spark):

@@ -25,10 +25,16 @@ def _plan(spark, name: str) -> str:
         "d03_minhash_near_dup",
     ],
 )
-def test_candidate_generation_is_never_all_pairs(spark, name):
+def test_candidate_generation_is_never_all_pairs(spark, monkeypatch, name):
     """LSH/MinHash candidate joins must be bucket equi-joins — a
-    cartesian/nested-loop corpus×corpus join would be quadratic."""
+    cartesian/nested-loop corpus×corpus join would be quadratic. The
+    LSH searches are forced onto their Spark path: below the vector
+    gate they run on the driver and their plan holds no join."""
+    from alternating_least_squares_spark.functions import similarity
+
+    monkeypatch.setattr(similarity, "MAX_DRIVER_VECTORS", 0)
     plan = _plan(spark, name)
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan, name
     assert "CartesianProduct" not in plan, name
     assert "BroadcastNestedLoopJoin" not in plan, name
 

@@ -167,3 +167,21 @@ def test_trained_centroids_path_recall_floor(spark):
     )
     assert 100 not in kept and 110 not in kept
     assert set(kept) >= {0, 10}
+
+
+def test_semantic_dedup_scores_pairs_once(spark):
+    """The keep-one filter must not copy the pair pass into each branch
+    of a union input (an anti join is pushed through a union; sm01's
+    corpus plus planted copies is one): the plan holds ONE
+    FlatMapGroupsInPandas."""
+    base = _corpus(spark)
+    copies = base.filter(F.col("vec_id").isin(0, 10)).select(
+        (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
+    )
+    kept = semantic_dedup(
+        base.unionByName(copies), threshold=0.999, centroids=[C0, C1]
+    )
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    # 1 and 11 duplicate 0 and 10, as do the copies 1000 and 1010
+    assert {r["vec_id"] for r in kept.collect()} == {0, 2, 10, 12, 20}

@@ -14,7 +14,7 @@ from alternating_least_squares_spark.functions.similarity import (
     pca_topk,
 )
 from alternating_least_squares_spark.sources import load_table
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, lsh_paths
 from tests.pair_references import cosine
 
 
@@ -37,18 +37,23 @@ def _exact_top1(spark, emb, queries):
     }
 
 
-def test_lsh_and_ivf_scores_are_exact_and_recall_is_sane(spark):
+def test_lsh_and_ivf_scores_are_exact_and_recall_is_sane(spark, monkeypatch):
     emb = load_table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     exact1 = _exact_top1(spark, emb, queries)
 
     # recall floors measured empirically on this fixture (lsh 7/10,
     # ivf 10/10); asserted with slack for hash-family drift
-    for name, floor, res in [
-        ("lsh", 0.5, lsh_topk(emb, queries, k=3)),
-        ("ivf", 0.8, ivf_topk(emb, queries, k=3, n_centroids=8, n_probe=3)),
+    for name, floor, rows in [
+        (f"lsh-{path}", 0.5, lsh_topk(emb, queries, k=3).collect())
+        for path in lsh_paths(monkeypatch)
+    ] + [
+        (
+            "ivf",
+            0.8,
+            ivf_topk(emb, queries, k=3, n_centroids=8, n_probe=3).collect(),
+        ),
     ]:
-        rows = res.collect()
         assert rows, name
         # reported score == exact cosine (approximation may miss
         # neighbors but must never misscore one)
@@ -140,12 +145,13 @@ def test_mllib_euclidean_matches_cosine_near_dups(spark):
         assert dot / (na * nb) >= 0.33, r
 
 
-def test_pca_full_rank_reproduces_exact_ranking(spark):
+def test_pca_full_rank_reproduces_exact_ranking(spark, monkeypatch):
     """PCA at full rank is an orthonormal rotation; cosine is rotation-
     invariant, so the reduced-space top-k must equal the exact brute-
     force top-k pair-for-pair. This validates the whole PCA plumbing
     (vector conversion, projection, rerank) independent of the data's
-    spectrum."""
+    spectrum. The default (LSH) path gets the same top-k on both of
+    its paths when 16 one-plane tables make every pair a candidate."""
     from alternating_least_squares_spark.functions.similarity import pca_topk
 
     emb = load_table(spark, SF_SMALL, "embeddings")
@@ -175,6 +181,14 @@ def test_pca_full_rank_reproduces_exact_ranking(spark):
         ).collect()
     }
     assert full == exact
+    for path in lsh_paths(monkeypatch):
+        lsh = {
+            (r["query_id"], r["neighbor_id"])
+            for r in pca_topk(
+                emb, queries, k=5, n_components=64, **_ONE_PLANE
+            ).collect()
+        }
+        assert lsh == exact, path
 
 
 def test_pca_reduced_recall_floor(spark):
@@ -219,30 +233,52 @@ def test_int8_quantization_roundtrip_error_bound(spark):
             assert abs(xi - qi * step) <= step / 2 + 1e-9, (r["vec_id"], xi, qi)
 
 
+def _buckets(df, path, **kw):
+    """{(vec_id, table): bucket} of ``with_lsh_buckets`` (the Spark
+    path) or of the driver path's NumPy buckets on the same rows."""
+    from alternating_least_squares_spark.functions import similarity as S
+
+    if path == "spark":
+        return {
+            (r["vec_id"], r["table"]): r["bucket"]
+            for r in S.with_lsh_buckets(df, **kw).collect()
+        }
+    fam = dict(n_tables=3, n_planes=6, dim=64, seed=42) | kw
+    t = S._collect_vectors([df], "vec_id", "embedding", fam["dim"])
+    X, _, vnull, _ = S._vector_matrix(t["_v"], fam["dim"])
+    b = S._lsh_buckets_np(X, vnull, **fam)
+    return {
+        (i, tb): int(b[row, tb])
+        for row, i in enumerate(t["_id"].to_pylist())
+        for tb in range(fam["n_tables"])
+    }
+
+
 def test_lsh_buckets_wide_dims_and_short_vectors(spark):
     """The bit-packed plane path holds ≤64 dims; >64 must fall back to
     sign-array planes (same math), and vectors SHORTER than dim must
     read as zero-padded on both paths instead of raising ANSI
-    INVALID_ARRAY_INDEX."""
-    from alternating_least_squares_spark.functions.similarity import (
-        with_lsh_buckets,
-    )
-
+    INVALID_ARRAY_INDEX. The driver path's NumPy buckets equal
+    ``with_lsh_buckets``' on every row."""
     rows = [(1, [float(i % 7) - 3.0 for i in range(80)]), (2, [1.0, -2.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    wide = with_lsh_buckets(df, dim=80, n_tables=2, n_planes=4)
-    assert wide.count() == 4  # 2 rows x 2 tables, nothing raises
-    narrow = with_lsh_buckets(df, dim=64, n_tables=2, n_planes=4)
-    assert narrow.count() == 4
-    # zero-padding means a short vector buckets identically whether the
-    # family is declared at its own length or wider (projections equal)
     short = spark.createDataFrame(rows[1:], "vec_id long, embedding array<double>")
-    a = {r["table"]: r["bucket"] for r in with_lsh_buckets(short, dim=2).collect()}
-    b = {r["table"]: r["bucket"] for r in with_lsh_buckets(short, dim=2, n_tables=3).collect()}
-    assert a[0] == b[0]
+    got = {}
+    for path in ("driver", "spark"):
+        wide = _buckets(df, path, dim=80, n_tables=2, n_planes=4)
+        assert len(wide) == 4, path  # 2 rows x 2 tables, nothing raises
+        narrow = _buckets(df, path, dim=64, n_tables=2, n_planes=4)
+        assert len(narrow) == 4, path
+        # zero-padding means a short vector buckets identically whether
+        # the family is declared at its own length or wider
+        a = _buckets(short, path, dim=2)
+        b = _buckets(short, path, dim=2, n_tables=3)
+        assert a[(2, 0)] == b[(2, 0)], path
+        got[path] = (wide, narrow, a, b)
+    assert got["driver"] == got["spark"]
 
 
-def test_zero_norm_vectors_score_null_not_crash(spark):
+def test_zero_norm_vectors_score_null_not_crash(spark, monkeypatch):
     """One all-zero embedding must not abort scoring queries with ANSI
     DIVIDE_BY_ZERO: its cosine is NULL (undefined), it sorts last, and
     threshold filters drop it."""
@@ -255,8 +291,9 @@ def test_zero_norm_vectors_score_null_not_crash(spark):
 
     rows = [(1, [0.0] * 64), (2, [1.0] * 64), (3, [0.5] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = lsh_topk(df, df.filter("vec_id = 2"), k=2)
-    assert got.count() >= 1  # no SparkArithmeticException
+    for path in lsh_paths(monkeypatch):
+        got = lsh_topk(df, df.filter("vec_id = 2"), k=2)
+        assert got.count() >= 1, path  # no SparkArithmeticException
     a, b = F.lit([0.0] * 3), F.lit([1.0, 2.0, 3.0])
     assert (
         df.select(
@@ -302,32 +339,41 @@ _PLANTED_TOPK = {
 
 
 @pytest.mark.parametrize("name", list(_PLANTED_TOPK))
-def test_topk_scoring_contract_ties_and_zero_vector(spark, name):
+def test_topk_scoring_contract_ties_and_zero_vector(spark, monkeypatch, name):
     """Every top-k search ranks by (rounded cosine desc, neighbor_id
     asc) and scores a zero vector NULL, ranked last, without an ANSI
-    divide error."""
+    divide error; the LSH searches on both of their paths."""
     import math
 
     emb = spark.createDataFrame(
         _PLANTED, "vec_id long, embedding array<double>"
     )
-    got = _PLANTED_TOPK[name](emb, emb.filter("vec_id = 0")).collect()
-    ranked = sorted((r["rank"], r["neighbor_id"], r["cosine"]) for r in got)
     dot = sum(x * y for x, y in zip(_V, _NEAR))
     near = dot / math.hypot(*_V) / math.hypot(*_NEAR)
-    assert [(rk, nid) for rk, nid, _ in ranked] == [
-        (1, 2), (2, 5), (3, 9), (4, 1), (5, 4)
-    ]
-    assert [c for _, _, c in ranked[:3]] == [1.0, 1.0, 1.0]
-    assert abs(ranked[3][2] - near) < 2e-6 and near < 0.95
-    assert ranked[4][2] is None
+    paths = (
+        lsh_paths(monkeypatch) if name in ("lsh_topk", "pca_topk") else ["-"]
+    )
+    for path in paths:
+        got = _PLANTED_TOPK[name](emb, emb.filter("vec_id = 0")).collect()
+        ranked = sorted(
+            (r["rank"], r["neighbor_id"], r["cosine"]) for r in got
+        )
+        assert [(rk, nid) for rk, nid, _ in ranked] == [
+            (1, 2), (2, 5), (3, 9), (4, 1), (5, 4)
+        ], path
+        assert [c for _, _, c in ranked[:3]] == [1.0, 1.0, 1.0], path
+        assert abs(ranked[3][2] - near) < 2e-6 and near < 0.95, path
+        assert ranked[4][2] is None, path
 
 
-def test_near_dup_pairs_scoring_contract_ties_and_zero_vector(spark):
-    """embedding_near_dup_pairs scores with the same contract: the
-    scaled copies pair at cosine 1.0, and the zero vector, a candidate
-    of V under the same buckets as the lsh_topk case above, scores
-    NULL and fails the threshold instead of raising."""
+def test_near_dup_pairs_scoring_contract_ties_and_zero_vector(
+    spark, monkeypatch
+):
+    """embedding_near_dup_pairs scores with the same contract on both
+    of its paths: the scaled copies pair at cosine 1.0, and the zero
+    vector, a candidate of V under the same buckets as the lsh_topk
+    case above, scores NULL and fails the threshold instead of
+    raising."""
     from alternating_least_squares_spark.functions.similarity import (
         embedding_near_dup_pairs,
     )
@@ -335,16 +381,17 @@ def test_near_dup_pairs_scoring_contract_ties_and_zero_vector(spark):
     emb = spark.createDataFrame(
         _PLANTED, "vec_id long, embedding array<double>"
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_dup_pairs(
-            emb, threshold=0.95, **_ONE_PLANE
-        ).collect()
-    }
     copies = [0, 2, 5, 9]
-    assert got == {
-        (a, b): 1.0 for i, a in enumerate(copies) for b in copies[i + 1:]
-    }
+    for path in lsh_paths(monkeypatch):
+        got = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in embedding_near_dup_pairs(
+                emb, threshold=0.95, **_ONE_PLANE
+            ).collect()
+        }
+        assert got == {
+            (a, b): 1.0 for i, a in enumerate(copies) for b in copies[i + 1:]
+        }, path
 
 
 def test_binary_hamming_topk_matches_python_reference(spark):
@@ -613,3 +660,165 @@ def test_v07_clusters_match_fixpoint_replay_and_families_cohere(spark):
         m0, m1, m2 = (gidx + o for o in
                       (1_000_000, 2_000_000, 3_000_000))
         assert got[m0] == got[m1] == got[m2]  # the family coheres
+
+
+def _exact_rows(df) -> list[tuple]:
+    """``df``'s rows with every double as its hex spelling (so -0.0,
+    NaN and the last bit count), sorted."""
+    return sorted(
+        (
+            tuple(v.hex() if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        ),
+        key=repr,
+    )
+
+
+def test_lsh_driver_path_matches_spark_rows_bit_for_bit(spark, monkeypatch):
+    """On the real-valued sf0.001 embeddings both paths of lsh_topk
+    (20 queries; the whole corpus as queries) and of
+    embedding_near_dup_pairs (every candidate pair, threshold -1) give
+    the same schema and the same rows, cosine bits and ranks
+    included."""
+    from alternating_least_squares_spark.functions.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    got = {}
+    for path in lsh_paths(monkeypatch):
+        runs = [
+            lsh_topk(emb, emb.filter(F.col("vec_id") < 20), k=5),
+            lsh_topk(emb, emb, k=3, n_tables=6, n_planes=2),
+            embedding_near_dup_pairs(emb, threshold=-1.0),
+        ]
+        got[path] = [(df.schema, _exact_rows(df)) for df in runs]
+    assert got["driver"] == got["spark"]
+    assert [len(rows) for _, rows in got["driver"]][:2] == [100, 1500]
+    assert len(got["driver"][2][1]) > 1000
+
+
+# Planted boundary rows for the two LSH paths (see the test below).
+_TIE = 0.0005045  # a cosine on a 6th-decimal .5 tie
+_W = [1.0 + d % 5 for d in range(64)]
+_BOUNDARY = [
+    (0, _V),
+    (1, [2.0 * x for x in _V]),
+    (2, None),                                   # NULL vector
+    (3, _V[:10] + [None] + _V[11:]),             # NULL element
+    (4, _V[:5] + [float("nan")] + _V[6:]),       # NaN element
+    (5, [0.0] * 64),                             # zero vector
+    (6, _V[:40]),                                # shorter than dim
+    (7, _V + [1.0, -1.0]),                       # longer than dim
+    (8, _NEAR),                                  # duplicate id, identical
+    (8, _NEAR),
+    (9, [-x for x in _V]),                       # duplicate id, differing
+    (9, [0.5 * x for x in _W]),
+    (11, [1.0] + [0.0] * 63),                    # the .5 tie pair
+    (12, [_TIE, (1.0 - _TIE * _TIE) ** 0.5] + [0.0] * 62),
+    (13, [0.0] + _W[1:]),                        # duplicate id, ±0.0
+    (13, [-0.0] + _W[1:]),
+    (14, [1.0 - 2.0 * (d % 2) for d in range(90)]),  # longer than 80
+    (15, [None, 0.0] + _W[2:]),                  # duplicate id, NULL
+    (15, [0.0, None] + _W[2:]),                  # elements apart
+    (None, _W),                                  # NULL id
+]
+
+
+def test_lsh_paths_agree_on_planted_boundary_rows(spark, monkeypatch):
+    """Both LSH paths give the same rows, bit for bit, on NULL vectors
+    and elements, a NaN element (Spark orders NaN above every double,
+    so its projections set every bit, its cosine ranks first and passes
+    any threshold), a zero vector, vectors shorter and longer than
+    ``dim`` (a length mismatch scores NULL), ``dim > 64`` (the
+    literal-plane fallback, where a NULL vector sets no bit), duplicate
+    ids (identical rows count once, differing rows each score, and
+    NULL elements in different places differ), a NULL
+    id (never paired), an empty query set and a 6th-decimal .5 tie
+    (HALF_UP on the decimal: 0.000505)."""
+    from alternating_least_squares_spark.functions.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    emb = spark.createDataFrame(
+        _BOUNDARY, "vec_id long, embedding array<double>"
+    )
+    got = {}
+    for path in lsh_paths(monkeypatch):
+        runs = [
+            lsh_topk(emb, emb, k=20, **_ONE_PLANE),
+            lsh_topk(emb, emb, k=2, **_ONE_PLANE),
+            lsh_topk(emb, emb, k=20, dim=80, **_ONE_PLANE),
+            lsh_topk(emb, emb.filter("vec_id < 0"), k=5),
+            embedding_near_dup_pairs(emb, threshold=_TIE, **_ONE_PLANE),
+            embedding_near_dup_pairs(
+                emb, threshold=-1.0, dim=80, **_ONE_PLANE
+            ),
+        ]
+        got[path] = [(df.schema, _exact_rows(df)) for df in runs]
+    assert got["driver"] == got["spark"]
+    topk, _, _, empty, pairs, _ = (rows for _, rows in got["driver"])
+    assert empty == []
+    first = {(q, rk): (n, c) for q, n, c, rk in topk}
+    assert first[(0, 1)] == (4, "nan")  # NaN ranks above cosine 1.0
+    assert first[(0, 2)] == (1, (1.0).hex())
+    assert all(c is None for q, n, c, rk in topk if 3 in (q, n))
+    assert (11, 12, (0.000505).hex()) in pairs
+    assert all(None not in (q, n) for q, n, _, _ in topk)
+
+
+def test_ivf_searches_keep_every_copy_of_a_duplicate_vec_id(spark):
+    """Neither IVF search deduplicates its candidates: with vec_id
+    unique its pairs are unique by construction. A corpus id held by c
+    rows is scored against each copy's own vector, never collapsed:
+    ivf_topk gives one row per copy; ivf_pq_topk re-joins its
+    survivors to the vectors by id, so each of its c surviving copies
+    pairs with all c vectors (c² rows)."""
+    from collections import Counter
+
+    emb = spark.createDataFrame(
+        _PLANTED + [(1, _NEAR), (2, [-x for x in _V])],
+        "vec_id long, embedding array<double>",
+    )
+    searches = {
+        "ivf_topk": lambda e, q: ivf_topk(
+            e, q, k=20, n_centroids=2, n_probe=2
+        ),
+        "ivf_pq_topk": lambda e, q: ivf_pq_topk(
+            e, q, k=20, n_centroids=2, n_probe=2, rerank=20
+        ),
+    }
+    rows = {
+        name: Counter(
+            (r["neighbor_id"], r["cosine"])
+            for r in search(emb, emb.filter("vec_id = 0")).collect()
+        )
+        for name, search in searches.items()
+    }
+    near = next(c for (n, c) in rows["ivf_topk"] if n == 1)
+    per_copy = {(2, 1.0): 1, (2, -1.0): 1, (1, near): 2}
+    assert {key: rows["ivf_topk"][key] for key in per_copy} == per_copy
+    assert {key: rows["ivf_pq_topk"][key] for key in per_copy} == {
+        key: 2 * n for key, n in per_copy.items()
+    }
+    for name in rows:
+        assert rows[name][(5, 1.0)] == rows[name][(9, 1.0)] == 1, name
+
+
+def test_lsh_search_past_the_pair_gate_runs_on_spark(spark, monkeypatch):
+    """More (table, bucket) collisions than ``MAX_DRIVER_PAIRS`` send a
+    search to its Spark plan after the collect, with the same rows."""
+    from alternating_least_squares_spark.functions import similarity
+
+    emb = spark.createDataFrame(
+        _PLANTED, "vec_id long, embedding array<double>"
+    )
+    small = lsh_topk(emb, emb, k=5, **_ONE_PLANE)
+    monkeypatch.setattr(similarity, "MAX_DRIVER_PAIRS", 10)
+    big = lsh_topk(emb, emb, k=5, **_ONE_PLANE)
+    plans = [
+        df._jdf.queryExecution().executedPlan().toString()
+        for df in (small, big)
+    ]
+    assert ["Window" in p for p in plans] == [False, True]
+    assert _exact_rows(big) == _exact_rows(small)

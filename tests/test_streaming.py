@@ -4,6 +4,8 @@ must reproduce the batch aggregation bit-for-bit)."""
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1491,33 +1493,52 @@ def test_foreach_batch_runs_only_in_the_runner():
     assert sites == [("streaming/events.py", "run_available_now")]
 
 
+def _sequential_dot(loop: ast.For) -> bool:
+    """A ``for`` loop that accumulates ``acc += x[...] * y[...]``: a
+    NumPy dot folded one k at a time."""
+    return any(
+        isinstance(n, ast.AugAssign)
+        and isinstance(n.op, ast.Add)
+        and isinstance(n.value, ast.BinOp)
+        and isinstance(n.value.op, ast.Mult)
+        and isinstance(n.value.left, ast.Subscript)
+        and isinstance(n.value.right, ast.Subscript)
+        for n in ast.walk(loop)
+    )
+
+
 def test_pair_scoring_lives_only_in_similarity():
-    """Every vector search scores pairs through
-    ``similarity.pair_cosine``: no other package module calls
-    ``vec_dot``, and no per-pair-norm ``cosine`` is defined."""
-    import ast
+    """Every vector search scores pairs through ``similarity``: no
+    other package module calls ``vec_dot``, defines ``round6`` or folds
+    a sequential-k NumPy dot (``similarity.seq_dot`` is the one), and
+    no per-pair-norm ``cosine`` is defined."""
     import pathlib
 
     import alternating_least_squares_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    dot_calls, cosine_defs = [], []
+    dot_calls, cosine_defs, numpy_spellings = [], [], []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
+        home = rel == "functions/similarity.py"
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.Call):
                 f = node.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(
                     f, "id", None
                 )
-                if name == "vec_dot" and rel != "functions/similarity.py":
+                if name == "vec_dot" and not home:
                     dot_calls.append((rel, node.lineno))
-            elif (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and node.name == "cosine"
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if node.name == "cosine":
+                    cosine_defs.append((rel, node.lineno))
+                elif node.name == "round6" and not home:
+                    numpy_spellings.append((rel, node.lineno))
+            elif isinstance(node, ast.For) and not home and _sequential_dot(
+                node
             ):
-                cosine_defs.append((rel, node.lineno))
-    assert dot_calls == [] and cosine_defs == []
+                numpy_spellings.append((rel, node.lineno))
+    assert dot_calls == [] and cosine_defs == [] and numpy_spellings == []
 
 
 # Spark jobs each streaming query starts at SF_SMALL, its result's
