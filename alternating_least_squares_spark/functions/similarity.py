@@ -23,16 +23,19 @@ never an all-pairs crossJoin of the corpus.
 :func:`lsh_topk` and :func:`embedding_near_dup_pairs` run on one of
 two paths with the same rows:
 
-* **driver**, when the input holds at most :data:`MAX_DRIVER_VECTORS`
-  vectors with integer ids and at most :data:`MAX_DRIVER_PAIRS`
-  bucket collisions: one bounded Arrow collect, then projections,
-  buckets, candidate pairs, scores and the rank or threshold in NumPy
-  (:func:`_lsh_search_driver`); the result is an Arrow-built frame.
-  A small search's Spark plan spends its time in planning, codegen
-  and scheduling, not in compute.
+* **driver**, when the input fits :data:`MAX_DRIVER_VECTORS` vectors
+  of up to ``max(dim, 64)`` components with integer ids and at most
+  :data:`MAX_DRIVER_PAIRS` bucket collisions: one bounded Arrow
+  collect, then projections, buckets, candidate pairs, scores and the
+  rank or threshold in NumPy (:func:`_lsh_search_driver`). The search
+  runs when it is called and returns an Arrow-built frame of its rows.
+  A small search's Spark plan spends its time in planning, codegen and
+  scheduling, not in compute.
 * **Spark**, otherwise: two narrow bucket passes in JVM codegen (no
   Python UDFs), the (table, bucket) equi-join, :func:`pair_cosine`
-  and :func:`rank_topk` or the threshold filter.
+  and :func:`rank_topk` or the threshold filter, as a lazy plan. An
+  input whose plan Spark estimates larger than the driver collect
+  holds, or cannot estimate, goes here without running a job.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -159,8 +163,11 @@ def np_pair_cosine(
 #     400k      out of heap  not run     -            -
 #     1M        out of heap  395, 1 run  -            - / 1,905 MB
 # The collect ends in one task that returns every vector as one result,
-# so at 400k the 1 GB heap ran out; the gate sits 4x below that. s01,
-# s02 and s05 hold about 500 vectors at every testdata scale.
+# so at 400k the 1 GB heap ran out; the gate sits 4x below that. It
+# bounds components, not rows: a search collects at most
+# MAX_DRIVER_VECTORS * 64 // max(dim, 64) rows, and a vector longer than
+# max(dim, 64) components sends it to Spark. s01, s02 and s05 hold at
+# most 2,100 vectors of 64 components at every testdata scale.
 MAX_DRIVER_VECTORS = 100_000
 
 # Largest number of (table, bucket) collisions, before deduplication,
@@ -173,34 +180,53 @@ MAX_DRIVER_PAIRS = 4_000_000
 _PAIR_BLOCK = 1 << 16
 
 
+def _estimated_bytes(df: DataFrame) -> int:
+    """Spark's size estimate of ``df``'s optimized plan: file bytes
+    scaled by column widths for a scan, sums and products above it,
+    and ``spark.sql.defaultSizeInBytes`` (Long.MaxValue) when a source,
+    such as a frame built from a Python list, has no estimate. Planning
+    only; no job runs."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def _collect_vectors(
     sides: list[DataFrame], id_col: str, vec_col: str, dim: int
 ) -> pa.Table | None:
     """``(_side, _id, _v)`` of every row of ``sides`` (tagged 0, 1, …)
     in one bounded Arrow collect, the vectors cast to double element by
-    element as :func:`_vec_double` casts them. The gate holds
-    ``MAX_DRIVER_VECTORS`` vectors of 64 components; ``dim``-wide ones
-    count ``dim / 64`` each. None when an id is not an integer or the
-    rows exceed the gate."""
+    element as :func:`_vec_double` casts them. The collect holds at
+    most ``MAX_DRIVER_VECTORS * 64`` components: rows of up to ``width
+    = max(dim, 64)`` components, each vector cut at ``width + 1``.
+
+    None, with no job run, when an id is not an integer or Spark
+    estimates the input larger than that bound (an unknown estimate
+    counts as larger, as it does for a broadcast); None after the
+    collect when there are more rows or a longer vector."""
     if not all(
         isinstance(df.schema[id_col].dataType, T.IntegralType)
         for df in sides
     ):
         return None
+    width = max(dim, 64)
+    gate = MAX_DRIVER_VECTORS * 64 // width
     tagged = reduce(
         DataFrame.unionByName,
         [
             df.select(
                 F.lit(i).alias("_side"),
                 F.col(id_col).cast("long").alias("_id"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
+                F.slice(F.col(vec_col), 1, width + 1)
+                .cast("array<double>")
+                .alias("_v"),
             )
             for i, df in enumerate(sides)
         ],
     )
-    gate = MAX_DRIVER_VECTORS * 64 // max(dim, 64)
+    if _estimated_bytes(tagged) > 8 * gate * width:
+        return None
     t = tagged.limit(gate + 1).toArrow()
-    return t if t.num_rows <= gate else None
+    longest = pc.max(pc.list_value_length(t["_v"])).as_py() or 0
+    return t if t.num_rows <= gate and longest <= width else None
 
 
 def _vector_matrix(
@@ -243,14 +269,13 @@ def _lsh_buckets_np(
     d ascending as ``acc + (±x_d)``, then ``acc*2 + (proj >= 0)`` per
     plane, with Spark's NaN ≥ 0. Up to 64 dims only the first ``dim``
     components project (a NULL vector projects 0, all bits 1); past 64
-    the literal-plane path zero-pads the shorter of plane and vector
-    (a NULL vector projects NULL, all bits 0)."""
+    ``X`` holds ``dim`` rows, a shorter vector zero-padded as the
+    literal-plane path pads it (a NULL vector projects NULL, all bits
+    0)."""
     planes = np.array(rademacher_planes(n_tables, n_planes, dim, seed))
     S = planes.reshape(n_tables * n_planes, dim)
     if dim <= 64:
         X = X[:dim]
-    else:
-        S = np.pad(S, ((0, 0), (0, X.shape[0] - dim)))
     proj = seq_dot(X[:, None, :], S.T[:, :, None])
     bits = (proj >= 0) | np.isnan(proj)
     if dim > 64:
@@ -388,11 +413,39 @@ def _lsh_search_driver(
     )
 
 
-def _id_field(name: str, df: DataFrame, id_col: str) -> T.StructField:
-    """``df``'s ``id_col`` field as ``name``, with the type and
-    nullability the Spark path's join gives it."""
-    f = df.schema[id_col]
-    return T.StructField(name, f.dataType, f.nullable)
+def _driver_search(
+    sides: list[DataFrame],
+    names: tuple[str, str],
+    id_col: str,
+    vec_col: str,
+    k: int | None,
+    threshold: float | None,
+    n_tables: int,
+    n_planes: int,
+    dim: int,
+    seed: int,
+) -> DataFrame | None:
+    """The driver path's rows of :func:`lsh_topk` (``sides`` = queries,
+    corpus; ``k``) or :func:`embedding_near_dup_pairs` (``sides`` =
+    the corpus; ``threshold``), run now, as an Arrow-built frame whose
+    id columns ``names``, ``cosine`` and, for a top-k, ``rank`` have
+    the Spark path's types and nullability. None when the search does
+    not fit the driver."""
+    t = _collect_vectors(sides, id_col, vec_col, dim)
+    out = (
+        None
+        if t is None
+        else _lsh_search_driver(t, k, threshold, n_tables, n_planes, dim, seed)
+    )
+    if out is None:
+        return None
+    fields = [
+        T.StructField(name, f.dataType, f.nullable)
+        for name, f in zip(names, (df.schema[id_col] for df in sides * 2))
+    ] + [T.StructField("cosine", T.DoubleType())]
+    if k is not None:
+        fields.append(T.StructField("rank", T.LongType(), False))
+    return sides[0].sparkSession.createDataFrame(out, T.StructType(fields))
 
 
 def _normed_sides(
@@ -576,9 +629,13 @@ def lsh_topk(
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: candidates = bucket collisions in any table,
-    scored with exact cosine, ranked per query. Plan: two narrow
-    bucket passes + one equi-join on (table, bucket) + window top-k.
-    No corpus×corpus crossJoin anywhere.
+    scored with exact cosine, ranked per query. No corpus×corpus
+    crossJoin anywhere.
+
+    A small search runs on the driver when called and returns its rows
+    as a materialized frame (module docstring); a larger one returns
+    the lazy Spark plan: two narrow bucket passes + one equi-join on
+    (table, bucket) + window top-k. Both give the same rows.
 
     Tuning: collision prob per table is (1 − θ/π)^n_planes. SHALLOW
     buckets (few planes, more tables — the defaults) for generic
@@ -586,25 +643,13 @@ def lsh_topk(
     DEEP buckets (more planes) only when hunting near-duplicates —
     that is what :func:`embedding_near_dup_pairs` uses. Measured on
     the sf0.001 testdata (weakly-similar random-ish vectors):
-    recall@1 = 9/10 at p=2/t=6, 7/10 at p=3/t=4, 1/10 at p=6/t=3.
-
-    A small search runs on the driver (module docstring) with the same
-    rows."""
-    t = _collect_vectors([queries, emb], id_col, vec_col, dim)
-    if t is not None:
-        out = _lsh_search_driver(t, k, None, n_tables, n_planes, dim, seed)
-        if out is not None:
-            return emb.sparkSession.createDataFrame(
-                out,
-                T.StructType(
-                    [
-                        _id_field("query_id", queries, id_col),
-                        _id_field("neighbor_id", emb, id_col),
-                        T.StructField("cosine", T.DoubleType()),
-                        T.StructField("rank", T.LongType(), False),
-                    ]
-                ),
-            )
+    recall@1 = 9/10 at p=2/t=6, 7/10 at p=3/t=4, 1/10 at p=6/t=3."""
+    found = _driver_search(
+        [queries, emb], ("query_id", "neighbor_id"), id_col, vec_col,
+        k, None, n_tables, n_planes, dim, seed,
+    )
+    if found is not None:
+        return found
     q, corpus = _normed_sides(queries, emb, id_col, vec_col)
     qb = with_lsh_buckets(q, "_eq", n_tables, n_planes, dim, seed)
     cb = with_lsh_buckets(
@@ -692,24 +737,16 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup detection: LSH bucket collisions →
     exact cosine ≥ threshold, id_a < id_b. Same scalable join shape as
-    the MinHash text dedup. A small input runs on the driver (module
-    docstring) with the same rows."""
-    t = _collect_vectors([emb], id_col, vec_col, dim)
-    if t is not None:
-        out = _lsh_search_driver(
-            t, None, threshold, n_tables, n_planes, dim, seed
-        )
-        if out is not None:
-            return emb.sparkSession.createDataFrame(
-                out,
-                T.StructType(
-                    [
-                        _id_field("id_a", emb, id_col),
-                        _id_field("id_b", emb, id_col),
-                        T.StructField("cosine", T.DoubleType()),
-                    ]
-                ),
-            )
+    the MinHash text dedup. A small input runs on the driver when
+    called and returns its rows as a materialized frame (module
+    docstring); a larger one returns the lazy Spark plan. Both give
+    the same rows."""
+    found = _driver_search(
+        [emb], ("id_a", "id_b"), id_col, vec_col,
+        None, threshold, n_tables, n_planes, dim, seed,
+    )
+    if found is not None:
+        return found
     base = emb.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_e"),

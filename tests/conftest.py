@@ -51,20 +51,39 @@ def lsh_paths(monkeypatch):
     from alternating_least_squares_spark.functions import similarity
 
     ran = []
-    kernel = similarity._lsh_search_driver
+    search = similarity._driver_search
 
     def counted(*args):
-        out = kernel(*args)
+        out = search(*args)
         ran.append(out is not None)
         return out
 
-    monkeypatch.setattr(similarity, "_lsh_search_driver", counted)
+    monkeypatch.setattr(similarity, "_driver_search", counted)
     yield "driver"
     assert ran and all(ran), "a search left the driver path"
     ran.clear()
     monkeypatch.setattr(similarity, "MAX_DRIVER_VECTORS", 0)
     yield "spark"
-    assert not ran, "a search ran on the driver under a zero gate"
+    assert not any(ran), "a search ran on the driver under a zero gate"
+
+
+def vectors_frame(spark, rows):
+    """``(vec_id, embedding)`` rows as a ``vec_id long, embedding
+    array<double>`` frame built from Arrow, so its plan carries the
+    size estimate an LSH search reads to take the driver path (a frame
+    built from a Python list has none)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+                "embedding": pa.array(
+                    [r[1] for r in rows], pa.list_(pa.float64())
+                ),
+            }
+        )
+    )
 
 
 @pytest.fixture

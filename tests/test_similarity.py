@@ -14,7 +14,7 @@ from alternating_least_squares_spark.functions.similarity import (
     pca_topk,
 )
 from alternating_least_squares_spark.sources import load_table
-from tests.conftest import SF_SMALL, lsh_paths
+from tests.conftest import SF_SMALL, lsh_paths, vectors_frame
 from tests.pair_references import cosine
 
 
@@ -244,7 +244,10 @@ def _buckets(df, path, **kw):
             for r in S.with_lsh_buckets(df, **kw).collect()
         }
     fam = dict(n_tables=3, n_planes=6, dim=64, seed=42) | kw
-    t = S._collect_vectors([df], "vec_id", "embedding", fam["dim"])
+    t = df.select(
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
+    ).toArrow()
     X, _, vnull, _ = S._vector_matrix(t["_v"], fam["dim"])
     b = S._lsh_buckets_np(X, vnull, **fam)
     return {
@@ -290,7 +293,7 @@ def test_zero_norm_vectors_score_null_not_crash(spark, monkeypatch):
     )
 
     rows = [(1, [0.0] * 64), (2, [1.0] * 64), (3, [0.5] * 64)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    df = vectors_frame(spark, rows)
     for path in lsh_paths(monkeypatch):
         got = lsh_topk(df, df.filter("vec_id = 2"), k=2)
         assert got.count() >= 1, path  # no SparkArithmeticException
@@ -345,9 +348,7 @@ def test_topk_scoring_contract_ties_and_zero_vector(spark, monkeypatch, name):
     divide error; the LSH searches on both of their paths."""
     import math
 
-    emb = spark.createDataFrame(
-        _PLANTED, "vec_id long, embedding array<double>"
-    )
+    emb = vectors_frame(spark, _PLANTED)
     dot = sum(x * y for x, y in zip(_V, _NEAR))
     near = dot / math.hypot(*_V) / math.hypot(*_NEAR)
     paths = (
@@ -378,9 +379,7 @@ def test_near_dup_pairs_scoring_contract_ties_and_zero_vector(
         embedding_near_dup_pairs,
     )
 
-    emb = spark.createDataFrame(
-        _PLANTED, "vec_id long, embedding array<double>"
-    )
+    emb = vectors_frame(spark, _PLANTED)
     copies = [0, 2, 5, 9]
     for path in lsh_paths(monkeypatch):
         got = {
@@ -709,7 +708,6 @@ _BOUNDARY = [
     (4, _V[:5] + [float("nan")] + _V[6:]),       # NaN element
     (5, [0.0] * 64),                             # zero vector
     (6, _V[:40]),                                # shorter than dim
-    (7, _V + [1.0, -1.0]),                       # longer than dim
     (8, _NEAR),                                  # duplicate id, identical
     (8, _NEAR),
     (9, [-x for x in _V]),                       # duplicate id, differing
@@ -718,10 +716,14 @@ _BOUNDARY = [
     (12, [_TIE, (1.0 - _TIE * _TIE) ** 0.5] + [0.0] * 62),
     (13, [0.0] + _W[1:]),                        # duplicate id, ±0.0
     (13, [-0.0] + _W[1:]),
-    (14, [1.0 - 2.0 * (d % 2) for d in range(90)]),  # longer than 80
     (15, [None, 0.0] + _W[2:]),                  # duplicate id, NULL
     (15, [0.0, None] + _W[2:]),                  # elements apart
     (None, _W),                                  # NULL id
+]
+# Vectors longer than max(dim, 64) components, at dim 64 and dim 80.
+_WIDE = [
+    (7, _V + [1.0, -1.0]),
+    (14, [1.0 - 2.0 * (d % 2) for d in range(90)]),
 ]
 
 
@@ -730,7 +732,8 @@ def test_lsh_paths_agree_on_planted_boundary_rows(spark, monkeypatch):
     and elements, a NaN element (Spark orders NaN above every double,
     so its projections set every bit, its cosine ranks first and passes
     any threshold), a zero vector, vectors shorter and longer than
-    ``dim`` (a length mismatch scores NULL), ``dim > 64`` (the
+    ``dim`` (dim 48 against 64 components; a length mismatch scores
+    NULL), ``dim > 64`` (the
     literal-plane fallback, where a NULL vector sets no bit), duplicate
     ids (identical rows count once, differing rows each score, and
     NULL elements in different places differ), a NULL
@@ -740,9 +743,7 @@ def test_lsh_paths_agree_on_planted_boundary_rows(spark, monkeypatch):
         embedding_near_dup_pairs,
     )
 
-    emb = spark.createDataFrame(
-        _BOUNDARY, "vec_id long, embedding array<double>"
-    )
+    emb = vectors_frame(spark, _BOUNDARY)
     got = {}
     for path in lsh_paths(monkeypatch):
         runs = [
@@ -754,10 +755,14 @@ def test_lsh_paths_agree_on_planted_boundary_rows(spark, monkeypatch):
             embedding_near_dup_pairs(
                 emb, threshold=-1.0, dim=80, **_ONE_PLANE
             ),
+            lsh_topk(emb, emb, k=20, dim=48, **_ONE_PLANE),
+            embedding_near_dup_pairs(
+                emb, threshold=-1.0, dim=48, **_ONE_PLANE
+            ),
         ]
         got[path] = [(df.schema, _exact_rows(df)) for df in runs]
     assert got["driver"] == got["spark"]
-    topk, _, _, empty, pairs, _ = (rows for _, rows in got["driver"])
+    topk, _, _, empty, pairs, *_ = (rows for _, rows in got["driver"])
     assert empty == []
     first = {(q, rk): (n, c) for q, n, c, rk in topk}
     assert first[(0, 1)] == (4, "nan")  # NaN ranks above cosine 1.0
@@ -765,6 +770,69 @@ def test_lsh_paths_agree_on_planted_boundary_rows(spark, monkeypatch):
     assert all(c is None for q, n, c, rk in topk if 3 in (q, n))
     assert (11, 12, (0.000505).hex()) in pairs
     assert all(None not in (q, n) for q, n, _, _ in topk)
+
+
+def test_lsh_vectors_wider_than_the_gate_run_on_spark(spark, monkeypatch):
+    """The driver collect holds vectors of at most ``max(dim, 64)``
+    components: one longer vector (66 components at dim 64, 90 at dim
+    80) sends the search to its Spark plan, which scores it NULL
+    against every vector of another length."""
+    from alternating_least_squares_spark.functions import similarity
+
+    emb = vectors_frame(spark, _BOUNDARY + _WIDE)
+    found = []
+    search = similarity._driver_search
+
+    def counted(*args):
+        found.append(search(*args))
+        return found[-1]
+
+    monkeypatch.setattr(similarity, "_driver_search", counted)
+    runs = [
+        lsh_topk(emb, emb, k=20, **_ONE_PLANE),
+        lsh_topk(emb, emb, k=20, dim=80, **_ONE_PLANE),
+        similarity.embedding_near_dup_pairs(
+            emb, threshold=-1.0, dim=80, **_ONE_PLANE
+        ),
+    ]
+    assert found == [None] * 3
+    for df in runs:
+        assert "Join" in df._jdf.queryExecution().executedPlan().toString()
+    wide = {
+        r["cosine"] for r in runs[0].collect() if r["query_id"] in (7, 14)
+    }
+    assert wide == {None}
+
+
+def test_lsh_search_over_the_size_estimate_runs_no_job(spark):
+    """An input Spark estimates larger than the driver collect holds
+    (a billion-row range) or cannot estimate (a frame built from a
+    Python list) gets its Spark plan without a job: building the
+    searches runs nothing."""
+    from alternating_least_squares_spark.functions.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    big = spark.range(10**9).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat(F.col("id").cast("double"), 64).alias("embedding"),
+    )
+    listed = spark.createDataFrame(
+        _PLANTED, "vec_id long, embedding array<double>"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-estimate", "lsh-estimate")
+    try:
+        built = [
+            lsh_topk(big, big.limit(20)),
+            embedding_near_dup_pairs(big),
+            lsh_topk(listed, listed),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("lsh-estimate")) == []
+    for df in built:
+        assert "Join" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_ivf_searches_keep_every_copy_of_a_duplicate_vec_id(spark):
@@ -810,9 +878,7 @@ def test_lsh_search_past_the_pair_gate_runs_on_spark(spark, monkeypatch):
     search to its Spark plan after the collect, with the same rows."""
     from alternating_least_squares_spark.functions import similarity
 
-    emb = spark.createDataFrame(
-        _PLANTED, "vec_id long, embedding array<double>"
-    )
+    emb = vectors_frame(spark, _PLANTED)
     small = lsh_topk(emb, emb, k=5, **_ONE_PLANE)
     monkeypatch.setattr(similarity, "MAX_DRIVER_PAIRS", 10)
     big = lsh_topk(emb, emb, k=5, **_ONE_PLANE)
