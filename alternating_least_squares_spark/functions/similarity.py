@@ -439,6 +439,7 @@ def _driver_search(
     )
     if out is None:
         return None
+    # a self-join's two id columns both come from its one side
     fields = [
         T.StructField(name, f.dataType, f.nullable)
         for name, f in zip(names, (df.schema[id_col] for df in sides * 2))
